@@ -16,13 +16,15 @@ Layout:
     operators/  relational operator library (SURVEY.md §2)
     sources/    file-format readers/writers (CSV with \\N sentinels, parquet)
     functions/  scalar/text/vector expression helpers
+    extraction  HTML → clean-text extraction (boilerplate removal)
     dedup/      exact + near-duplicate detection
     similarity/ embedding similarity search
     multimodal/ binary-column (image/audio) plumbing
     ml/         classification pipeline surface (SURVEY.md §2.14)
     pipeline/   the reference-equivalent end-to-end flow (SURVEY.md §3)
+    queries/    the named query registry, each with a DuckDB oracle
     streaming/  Structured Streaming extension over the events table
-    plans/      physical-plan inspection helpers
+    plancapture physical-plan capture and inspection helpers
 """
 
 __version__ = "0.1.0"

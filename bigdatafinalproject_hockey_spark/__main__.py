@@ -12,8 +12,9 @@ Differences from the reference, by design:
 - The 83-entry team-name map is USER DATA, not engine code — supply it
   as a JSON file (name → code); unmapped names fall back to the same
   strip-non-letters rule the reference uses.
-- CSVs are read with explicit header + \\N null handling; types are
-  pinned by the pipeline's casts (no double inference scan).
+- CSVs are read with header + \\N null handling and schema inference
+  (one eager inference scan per file); the pipeline's casts then pin
+  the types it consumes.
 - Evaluation is single-pass (one groupBy job, not six).
 - Paths may be local, gs://, s3a://, hdfs:// — whatever the session's
   Hadoop conf supports.
@@ -70,6 +71,20 @@ def main(argv: list[str] | None = None, spark=None) -> dict:
     own_session = spark is None
     if own_session:
         spark = get_session(app_name="hockey_pipeline")
+    persisted: list = []
+    try:
+        return _run(spark, args, persisted)
+    finally:
+        # Release every frame this run cached, dependents first (Spark
+        # re-plans a still-cached frame whose input is uncached under
+        # it), and an owned session, on success and on failure alike.
+        for df in reversed(persisted):
+            df.unpersist()
+        if own_session:
+            spark.stop()
+
+
+def _run(spark, args: argparse.Namespace, persisted: list) -> dict:
     team_map = {}
     if args.team_map:
         with open(args.team_map) as f:
@@ -85,6 +100,7 @@ def main(argv: list[str] | None = None, spark=None) -> dict:
         lookback=args.lookback,
     )
     out = run_pipeline(results, events, cfg)
+    persisted += [out["game_data"], out["matchups"]]
     n_game_rows = out["game_data"].count()
     n_matchups = out["matchups"].count()
     print(f"game-team rows: {n_game_rows}")
@@ -118,7 +134,9 @@ def main(argv: list[str] | None = None, spark=None) -> dict:
     if n_train and n_test and "label" in train.columns:
         for kind in [m.strip() for m in args.models.split(",") if m.strip()]:
             model = train_pipeline(train, feats, kind)
-            m = evaluate_binary(model.transform(test).persist())
+            scored = model.transform(test).persist()
+            persisted.append(scored)
+            m = evaluate_binary(scored)
             print(
                 f"[{kind}] acc={m.accuracy:.4f} auc={m.auc:.4f} "
                 f"prec={m.precision:.4f} rec={m.recall:.4f} f1={m.f1:.4f} "
@@ -140,8 +158,6 @@ def main(argv: list[str] | None = None, spark=None) -> dict:
     else:
         print("skipping model training (empty split or no label)", file=sys.stderr)
     print(f"wall: {time.time() - t0:.1f}s")
-    if own_session:
-        spark.stop()
     return summary
 
 

@@ -8,7 +8,7 @@ verifies the parquet footer schema against it at load.
 
 Tables (TESTDATA.md): region nation customer supplier part orders
 lineitem events documents embeddings — one parquet file per table in
-``$SPARK_GRAFT_SF_DIR``-style directories.
+a scale-factor directory (``sf_dir``).
 """
 
 from __future__ import annotations
@@ -21,8 +21,6 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 SCHEMAS: dict[str, T.StructType] = {
     "region": T.StructType(
@@ -211,7 +209,7 @@ def verify_contract(name: str, path: str) -> None:
                 )
 
 
-def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:
+def load_table(spark: SparkSession, name: str, sf_dir: str) -> DataFrame:
     """Load one synthetic table as a DataFrame.
 
     Parquet scans carry their own schema; we don't force ours on the
@@ -244,13 +242,3 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
     return spark.read.parquet(path)
-
-
-def load_all(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
-    return {name: load_table(spark, name, sf_dir) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
-    """Register every table as a temp view for the SQL API."""
-    for name in TABLES:
-        load_table(spark, name, sf_dir).createOrReplaceTempView(name)

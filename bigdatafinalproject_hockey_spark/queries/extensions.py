@@ -290,12 +290,11 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     (dedup/jaccard.py), whose cost is Σ|posting list|² within a
     block — correct for narrow blocks (lang × length-bucket ×
     source, the config its docstring prescribes) but quadratic on a
-    heavy block: on the bench's amplified corpora a ubiquitous token's
-    posting list spans a whole copy and the join explodes (measured:
-    the docs_x100 attempt exhausted shuffle-spill disk). The 100 TB
-    configuration is ``dedup_keep_best_minhash`` below — identical
-    keep-best semantics over the sub-quadratic MinHash+LSH candidate
-    stage — which carries the probe records. Output: one row per
+    heavy block: on an amplified corpus a ubiquitous token's posting
+    list spans a whole copy and the join explodes (measured: a 100×
+    corpus exhausted shuffle-spill disk). The 100 TB configuration is
+    ``dedup_keep_best_minhash`` below — identical keep-best semantics
+    over the sub-quadratic MinHash+LSH candidate stage. Output: one row per
     component (component_id, kept_doc_id, n_tokens)."""
     docs = load_table(spark, "documents", sf_dir)
     pairs = jaccard_pairs(docs, "text", "doc_id", block_col="lang", threshold=0.8)

@@ -505,9 +505,8 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     Σ|cell|² — never |corpus|² — and every stage is an equi-join on
     ``cell``; the CODEBOOK is the caller's scale lever (C ∝ n keeps
     cells bounded at the cost of a larger assignment pass — real
-    deployments fit a KMeans codebook sized to the corpus). The
-    bench's embeddings_x10 probe measures this square law with the
-    driver-SF codebook held fixed (~20× at 10×, as predicted); the
+    deployments fit a KMeans codebook sized to the corpus). With the
+    codebook held fixed, a 10× corpus costs ~20× (the square law); the
     scale-safe twin is `dedup_semantic_scaled` below (corpus-scaled
     codebook + LSH-bucketed assignment, round 7), and the banded
     alternative is `dedup_embedding_cosine` (sign-projection LSH,
@@ -524,7 +523,7 @@ def _parquet_num_rows(path: str) -> int:
     the statistic a table catalog carries for free at 100 TB, and the
     input `dedup_semantic_autokey` sizes its key width from at plan
     time. Handles both a single file and a Spark-written directory of
-    part files (the bench's amplified corpora)."""
+    part files (an amplified corpus)."""
     import glob
 
     import pyarrow.parquet as pq
@@ -637,8 +636,8 @@ def q_dedup_semantic_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosines at 200k vectors) — quadratic regime. Linearity requires
     bits to grow ~log2 C; `dedup_semantic_autokey` below registers
     exactly that (similarity.computed_bits_per_band), is bit-identical
-    to this query at driver SFs (the rule floors at 8 bits), and is
-    the configuration the bench's emb_x100 linearity gate runs.
+    to this query at driver SFs (the rule floors at 8 bits), and
+    stays linear as the corpus grows.
     `dedup_semantic` above is the fixed-CODEBOOK twin recording the
     other law (cells grow when C is capped)."""
     keys = _emb_signkeys_bucketed(spark, sf_dir)
@@ -676,12 +675,11 @@ def q_dedup_semantic_autokey(spark: SparkSession, sf_dir: str) -> DataFrame:
     At every driver SF the rule lands on the 8-bit floor (C ≤ 40), so
     this query is BIT-IDENTICAL to `dedup_semantic_scaled` there —
     same sidecar, same oracle family, pinned by
-    tests/test_similarity_scale.py's equality test — while at the
-    bench's 100× corpus (200k vectors, C = 4000) it computes 12-bit
-    keys (~8 candidates/vector), the configuration measured at the
-    linear extrapolation of the 1× pair-scan cost (official r7 prose
-    27.1 s vs 165.8× for fixed 8-bit; BENCH_FULL's emb_x100 entry for
-    this query is the standing artifact)."""
+    tests/test_similarity_scale.py's equality test — while at a
+    100× corpus (200k vectors, C = 4000) it computes 12-bit keys
+    (~8 candidates/vector), the configuration measured at the linear
+    extrapolation of the 1× pair-scan cost (27.1 s, vs 165.8× for
+    fixed 8-bit)."""
     n = _parquet_num_rows(os.path.join(sf_dir, "embeddings.parquet"))
     bits = computed_bits_per_band(max(n // 50, 1))
     keys = _emb_signkeys_bucketed(spark, sf_dir, bits_per_band=bits)
@@ -1273,8 +1271,7 @@ def q_ann_recall_eval_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     This follows the package-wide convention
     (`semantic_dedup_from_assignment` is the precedent): persisted
     intermediates live until the caller's per-tier
-    ``spark.catalog.clearCache()`` — which both the bench harness and
-    the driver invoke between tiers — reclaims them."""
+    ``spark.catalog.clearCache()`` reclaims them."""
     from pyspark import StorageLevel
 
     emb = load_table(spark, "embeddings", sf_dir)

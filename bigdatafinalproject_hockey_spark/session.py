@@ -54,11 +54,8 @@ def get_session(
         # (measured: events_anomaly_mad 1.01 s -> 0.60 s at sf0.1
         # with a 128k floor). At production shuffle sizes the floor
         # never binds — the advisory partition size governs — so the
-        # 100 TB plan shape is unchanged; override via
-        # SPARK_GRAFT_MIN_PARTITION_SIZE for other hardware.
-        "spark.sql.adaptive.coalescePartitions.minPartitionSize": os.environ.get(
-            "SPARK_GRAFT_MIN_PARTITION_SIZE", "128k"
-        ),
+        # 100 TB plan shape is unchanged.
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize": "128k",
         # Deterministic cross-engine comparison (DuckDB is UTC-naive).
         "spark.sql.session.timeZone": "UTC",
         # Arrow for pandas_udf / toPandas / createDataFrame paths.

@@ -837,7 +837,7 @@ def bucketed_ivf_assign_cte_autokey(
     the computed-key-width path (round 9 — ADVICE r8 medium): the
     static ``bucketed_ivf_assign_cte`` pins one ``bits_per_band``, so
     registering it as `dedup_semantic_autokey`'s oracle left every
-    >8-bit configuration — the one the emb_x100 linearity gate times —
+    >8-bit configuration — the one large corpora use —
     verification-blind, and would spuriously fail on any corpus with
     C > 256 (n ≳ 13k at stride 50).
 

@@ -9,6 +9,8 @@ DuckDB recomputation of the same intermediate.
 
 from __future__ import annotations
 
+import csv
+import json
 import random
 
 import duckdb
@@ -177,6 +179,39 @@ def test_cli_on_reference_sample_csvs(spark):
     assert summary["matchups"] * 2 <= summary["game_team_rows"] + 1
     assert summary["train"] + summary["test"] == summary["matchups"]
     assert "lr" in summary["models"]
+
+
+def test_cli_releases_its_cache(spark, tmp_path):
+    """The CLI runs the fixture end to end from CSVs (\\N sentinels,
+    messy names, a JSON team map) and leaves nothing cached behind."""
+    from bigdatafinalproject_hockey_spark.__main__ import main
+
+    results_rows, events_rows = _gen_fixture()
+    paths = {}
+    for name, cols, rows in (
+        ("results", RESULTS_COLS, results_rows),
+        ("events", EVENTS_COLS, events_rows),
+    ):
+        paths[name] = str(tmp_path / f"{name}.csv")
+        with open(paths[name], "w", newline="", encoding="utf-8") as f:
+            w = csv.writer(f)
+            w.writerow(cols)
+            w.writerows([r"\N" if v is None else v for v in row] for row in rows)
+    team_map = tmp_path / "teams.json"
+    team_map.write_text(json.dumps(TEAM_MAP))
+
+    spark.catalog.clearCache()
+    summary = main(
+        ["--events", paths["events"], "--results", paths["results"],
+         "--team-map", str(team_map), "--models", ""],
+        spark=spark,
+    )
+    n_games = len(results_rows) // 2
+    assert summary["game_team_rows"] == 2 * n_games
+    assert summary["matchups"] == n_games
+    assert summary["train"] + summary["test"] == n_games
+    assert summary["test"] > 0
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_window_frames_match_duckdb(pipeline_out):

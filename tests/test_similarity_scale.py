@@ -19,13 +19,13 @@ SF_DRIVER = "/root/testdata/sf0.01"
 def test_width_rule_landing_points():
     """The rule is bits = max(8, ceil(log2 C)) at num_bands == target:
     every driver SF floors at 8 (bit-identical to the static oracle
-    family); the bench's x10 corpus crosses to 9; the 100× corpus
+    family); a 10× corpus crosses to 9; the 100× corpus
     lands on the 12-bit configuration measured linear in round 7."""
     assert computed_bits_per_band(1) == 8
     assert computed_bits_per_band(10) == 8      # sf0.001/sf0.01 (n=500)
     assert computed_bits_per_band(40) == 8      # sf0.1 (n=2000)
-    assert computed_bits_per_band(400) == 9     # emb_x10 (n=20k)
-    assert computed_bits_per_band(4000) == 12   # emb_x100 (n=200k)
+    assert computed_bits_per_band(400) == 9     # 10× corpus (n=20k)
+    assert computed_bits_per_band(4000) == 12   # 100× corpus (n=200k)
 
 
 def test_width_rule_is_monotone_and_bounds_candidates():
@@ -67,7 +67,7 @@ def test_autokey_bit_identical_to_static_twin_at_driver_scale(spark):
 
 # --- width-adaptive oracle (round 9, ADVICE r8 medium) ----------------------
 # The static `bucketed_ivf_assign_cte` pins bits=8, so until round 9 the
-# >8-bit configurations — the ones the emb_x100 linearity gate times — had
+# >8-bit configurations — the ones large corpora use — had
 # no output verification. The registered oracle is now the width-ADAPTIVE
 # CTE (recomputes the query's own width rule in SQL and CASE-selects the
 # matching hyperplane family); these tests pin (a) its equality with the
