@@ -12,9 +12,14 @@ Differences from the reference, by design:
 - The 83-entry team-name map is USER DATA, not engine code — supply it
   as a JSON file (name → code); unmapped names fall back to the same
   strip-non-letters rule the reference uses.
-- CSVs are read with header + \\N null handling and schema inference
-  (one eager inference scan per file); the pipeline's casts then pin
-  the types it consumes.
+- CSVs are read with header + \\N null handling and no schema
+  inference: one small job per file reads its header, and the scan
+  then types the columns the pipeline consumes by name (everything
+  else stays a string). A malformed number reads as NULL instead of
+  failing the job.
+- The row counts and baselines come from the one statistics collect
+  that also picks the train/test split (``run_pipeline``'s
+  ``counts``), not from a job per count.
 - Evaluation is single-pass (one groupBy job, not six).
 - Paths may be local, gs://, s3a://, hdfs:// — whatever the session's
   Hadoop conf supports.
@@ -27,16 +32,19 @@ import json
 import sys
 import time
 
-from pyspark.sql import functions as F
-
 from bigdatafinalproject_hockey_spark.ml import (
-    baselines,
+    baselines_from_counts,
     evaluate_binary,
     train_pipeline,
 )
-from bigdatafinalproject_hockey_spark.pipeline import PipelineConfig, run_pipeline
+from bigdatafinalproject_hockey_spark.pipeline import (
+    PipelineConfig,
+    events_types,
+    results_types,
+    run_pipeline,
+)
 from bigdatafinalproject_hockey_spark.session import get_session
-from bigdatafinalproject_hockey_spark.sources.csv import scan_csv_infer
+from bigdatafinalproject_hockey_spark.sources.csv import scan_csv_named
 
 
 def _parse_args(argv: list[str] | None = None) -> argparse.Namespace:
@@ -91,18 +99,18 @@ def _run(spark, args: argparse.Namespace, persisted: list) -> dict:
             team_map = json.load(f)
 
     t0 = time.time()
-    results = scan_csv_infer(spark, args.results)
-    events = scan_csv_infer(spark, args.events)
     cfg = PipelineConfig(
         team_map=team_map,
         min_season=args.min_season,
         min_game=args.min_game,
         lookback=args.lookback,
     )
+    results = scan_csv_named(spark, args.results, results_types(cfg))
+    events = scan_csv_named(spark, args.events, events_types(cfg))
     out = run_pipeline(results, events, cfg)
     persisted += [out["game_data"], out["matchups"]]
-    n_game_rows = out["game_data"].count()
-    n_matchups = out["matchups"].count()
+    counts = out["counts"]
+    n_game_rows, n_matchups = counts["game_team_rows"], counts["matchups"]
     print(f"game-team rows: {n_game_rows}")
     print(f"matchups: {n_matchups}")
 
@@ -116,7 +124,7 @@ def _run(spark, args: argparse.Namespace, persisted: list) -> dict:
         out["matchups"].orderBy("GameID").show(args.show)
 
     train, test = out["train"], out["test"]
-    n_train, n_test = train.count(), test.count()
+    n_train, n_test = counts["train"], counts["test"]
     print(f"train/test: {n_train}/{n_test}")
 
     summary: dict = {
@@ -149,7 +157,7 @@ def _run(spark, args: argparse.Namespace, persisted: list) -> dict:
                 "recall": m.recall,
                 "f1": m.f1,
             }
-        base = baselines(test)
+        base = baselines_from_counts(n_test, counts["test_positives"])
         print(
             f"[baselines] majority={base['majority']:.4f} "
             f"coin={base['coin_flip']:.4f} weighted={base['weighted_random']:.4f}"

@@ -280,7 +280,12 @@ def baselines(test: DataFrame, label_col: str = "label") -> dict[str, float]:
         F.count(F.lit(1)).alias("n"),
         F.count(F.when(F.col(label_col) == 1, 1)).alias("pos"),
     ).first()
-    n, pos = row["n"], row["pos"]
+    return baselines_from_counts(row["n"], row["pos"])
+
+
+def baselines_from_counts(n: int, pos: int) -> dict[str, float]:
+    """``baselines`` from an already-collected class balance: ``n``
+    test rows, ``pos`` of them positive."""
     if not n:
         return {"majority": 0.0, "coin_flip": 0.5, "weighted_random": 0.0}
     p = pos / n

@@ -125,7 +125,14 @@ def split_temporal(
     """Train = strictly before the max period, test = the max period —
     the reference's leakage-free split (code/experiment.py:564-567).
     One collect of one scalar; both halves stay lazy."""
-    max_val = collect_scalar(agg_global_max(df, time_col))
+    return split_at(df, time_col, collect_scalar(agg_global_max(df, time_col)))
+
+
+def split_at(
+    df: DataFrame, time_col: str, max_val: object
+) -> tuple[DataFrame, DataFrame]:
+    """``split_temporal`` for a caller that already knows the max
+    period. A NULL max (empty input) leaves both halves empty."""
     train = df.filter(F.col(time_col) < F.lit(max_val))
     test = df.filter(F.col(time_col) == F.lit(max_val))
     return train, test

@@ -11,6 +11,7 @@ from collections.abc import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType
 
 
 def rename_cols(df: DataFrame, mapping: Mapping[str, str]) -> DataFrame:
@@ -19,11 +20,12 @@ def rename_cols(df: DataFrame, mapping: Mapping[str, str]) -> DataFrame:
     return df.withColumnsRenamed(dict(mapping))
 
 
-def cast_types(df: DataFrame, casts: Mapping[str, str]) -> DataFrame:
+def cast_types(df: DataFrame, casts: Mapping[str, str | DataType]) -> DataFrame:
     """Cast columns to target types, e.g. {'Season': 'int', 'GameID': 'long'}
     (reference code/experiment.py:290-297, 328-338). Invalid values → NULL
-    (ANSI off), matching the reference's `\\N`-sentinel behavior."""
-    return df.withColumns({c: F.col(c).cast(t) for c, t in casts.items()})
+    (``try_cast``, whatever the session's ANSI setting), matching the
+    reference's `\\N`-sentinel behavior."""
+    return df.withColumns({c: F.col(c).try_cast(t) for c, t in casts.items()})
 
 
 def parse_date(df: DataFrame, col: str, pattern: str = "M/d/yyyy", out: str | None = None) -> DataFrame:

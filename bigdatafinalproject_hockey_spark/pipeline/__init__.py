@@ -12,7 +12,8 @@ Mirrors SURVEY.md §3.1 / reference code/experiment.py flow:
     averages (frame -N..-1)                          [§2.7]
   → per-column league-average defaults (coalesce)    [fill_default]
   → home ⋈ away self-join into matchups + differential features
-  → temporal train/test split on max season
+  → temporal train/test split on max season, with the row counts
+    from the same single collect
 
 The pipeline is generic: any (results-like, events-like) pair of
 DataFrames with the column roles declared in PipelineConfig works —
@@ -32,6 +33,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from bigdatafinalproject_hockey_spark.operators import (
     aggregates as agg_ops,
@@ -77,6 +79,44 @@ class PipelineConfig:
     date_format: str = "M/d/yyyy"
 
 
+# The reference results file's name for the game key; clean_results
+# renames it to ``PipelineConfig.game_col``.
+GAME_ID_ALIAS = "Game Id"
+
+
+def results_types(cfg: PipelineConfig) -> dict[str, T.DataType]:
+    """Types of the results columns the pipeline consumes, the game
+    key under both of its names. The CLI reads its CSV with them;
+    ``clean_results`` casts whichever still lack them."""
+    return {
+        GAME_ID_ALIAS: T.LongType(),
+        cfg.game_col: T.LongType(),
+        cfg.season_col: T.IntegerType(),
+        cfg.home_col: T.IntegerType(),
+        **{c: T.DoubleType() for c in cfg.result_feature_cols},
+    }
+
+
+def events_types(cfg: PipelineConfig) -> dict[str, T.DataType]:
+    """Types of the events columns the pipeline consumes (see
+    ``results_types``)."""
+    return {
+        cfg.game_col: T.LongType(),
+        cfg.season_col: T.IntegerType(),
+        **{c: T.DoubleType() for c in (*cfg.event_sum_cols, *cfg.event_avg_cols)},
+    }
+
+
+def _cast_untyped(df: DataFrame, types: dict[str, T.DataType]) -> DataFrame:
+    """Cast the columns that do not have their type yet; a typed read
+    leaves none. Absent columns (the game key's other name) are left
+    to fail where they are used."""
+    have = {f.name: f.dataType for f in df.schema.fields}
+    return scalar_ops.cast_types(
+        df, {c: t for c, t in types.items() if have.get(c, t) != t}
+    )
+
+
 def _team_code_expr(cfg: PipelineConfig, raw: str) -> F.Column:
     """Literal-map lookup with whitespace-normalize + strip-charset
     fallback (reference code/experiment.py:305-316)."""
@@ -90,17 +130,9 @@ def _team_code_expr(cfg: PipelineConfig, raw: str) -> F.Column:
 def clean_results(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """Rename/cast/date-parse/filter/normalize the results table
     (reference code/experiment.py:286-316)."""
-    if "Game Id" in df.columns:
-        df = scalar_ops.rename_cols(df, {"Game Id": cfg.game_col})
-    df = scalar_ops.cast_types(
-        df,
-        {
-            cfg.game_col: "long",
-            cfg.season_col: "int",
-            cfg.home_col: "int",
-            **{c: "double" for c in cfg.result_feature_cols},
-        },
-    )
+    if GAME_ID_ALIAS in df.columns:
+        df = scalar_ops.rename_cols(df, {GAME_ID_ALIAS: cfg.game_col})
+    df = _cast_untyped(df, results_types(cfg))
     if dict(df.dtypes).get(cfg.date_col) != "date":
         df = scalar_ops.parse_date(df, cfg.date_col, cfg.date_format)
     bounds = {}
@@ -116,14 +148,7 @@ def clean_results(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
 def clean_events(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """Cast/filter/normalize the events table
     (reference code/experiment.py:328-356)."""
-    df = scalar_ops.cast_types(
-        df,
-        {
-            cfg.game_col: "long",
-            cfg.season_col: "int",
-            **{c: "double" for c in (*cfg.event_sum_cols, *cfg.event_avg_cols)},
-        },
-    )
+    df = _cast_untyped(df, events_types(cfg))
     bounds = {}
     if cfg.min_season is not None:
         bounds[cfg.season_col] = cfg.min_season
@@ -226,20 +251,74 @@ def build_matchups(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     return matched
 
 
+def collect_counts(
+    game_data: DataFrame, matchups: DataFrame, cfg: PipelineConfig
+) -> tuple[object, dict[str, int | None]]:
+    """The max period and the row counts of the split, from ONE
+    collect: matchups rows (and positive labels) per period, plus the
+    game_data row count. Returns ``(max_period, counts)``; counts has
+    ``game_team_rows``, ``matchups``, ``train``, ``test`` and
+    ``test_positives`` (None without test rows or a ``label``
+    column). The max period is None on empty matchups."""
+    pos = (
+        F.count(F.when(F.col("label") == 1, 1))
+        if "label" in matchups.columns
+        else F.lit(None).cast("long")
+    )
+
+    def tally(df: DataFrame, frame: str, period: F.Column, positives: F.Column):
+        return df.groupBy(F.lit(frame).alias("frame"), period.alias("period")).agg(
+            F.count(F.lit(1)).alias("n"), positives.alias("pos")
+        )
+
+    rows = (
+        tally(matchups, "matchups", F.col(cfg.season_col), pos)
+        .unionByName(
+            tally(game_data, "game_data", F.lit(None), F.lit(None).cast("long"))
+        )
+        .collect()
+    )
+    periods = {r["period"]: r for r in rows if r["frame"] == "matchups"}
+    # Matchup periods are never NULL (build_game_data drops NULL keys),
+    # so every matchup row not in the max period is a train row.
+    max_period = max(periods, default=None)
+    last = periods.get(max_period)
+    n_matchups = sum(r["n"] for r in periods.values())
+    n_test = last["n"] if last else 0
+    return max_period, {
+        "game_team_rows": sum(r["n"] for r in rows if r["frame"] == "game_data"),
+        "matchups": n_matchups,
+        "train": n_matchups - n_test,
+        "test": n_test,
+        "test_positives": last["pos"] if last else None,
+    }
+
+
 def run_pipeline(
     results: DataFrame, events: DataFrame, cfg: PipelineConfig
-) -> dict[str, DataFrame]:
-    """Full flow; returns every materialization point. The two
-    reusable intermediates are persisted, mirroring the reference's
-    cache() points (code/experiment.py:405, 558)."""
+) -> dict:
+    """Full flow; returns every materialization point plus ``counts``
+    (see ``collect_counts``). The two reusable intermediates are
+    persisted, mirroring the reference's cache() points
+    (code/experiment.py:405, 558), and filled by the one statistics
+    collect that also picks the split period; train and test stay
+    lazy filters of the cached matchups. If that collect fails, both
+    are unpersisted before the error propagates."""
     game_data = build_game_data(results, events, cfg).persist()
     featured = add_window_features(game_data, cfg)
     matchups = build_matchups(featured, cfg).persist()
-    train, test = sample_ops.split_temporal(matchups, cfg.season_col)
+    try:
+        max_period, counts = collect_counts(game_data, matchups, cfg)
+    except BaseException:
+        matchups.unpersist()
+        game_data.unpersist()
+        raise
+    train, test = sample_ops.split_at(matchups, cfg.season_col, max_period)
     return {
         "game_data": game_data,
         "featured": featured,
         "matchups": matchups,
         "train": train,
         "test": test,
+        "counts": counts,
     }

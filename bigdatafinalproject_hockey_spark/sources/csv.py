@@ -4,9 +4,12 @@ The reference reads its CSVs with header + inferSchema
 (reference code/experiment.py:281-284, 322-326) and then re-casts;
 its events file uses MySQL-style ``\\N`` null sentinels alongside
 empty strings (data/Sample_NHL_EventData.csv:2). Inference costs an
-extra full scan and mis-types sentinel columns — our reader takes an
+extra full scan and mis-types sentinel columns — ``scan_csv`` takes an
 explicit StructType and maps both sentinel forms to real NULLs in one
-pass.
+pass, and ``scan_csv_named`` builds that StructType from the file's
+header and a name → type map, for files whose column order is not
+fixed (the CLI reads both of its inputs this way). ``scan_csv_infer``
+is the reference-parity reader, kept for exploration.
 
 Scale notes: CSV is a row format — no pushdown, no pruning, no
 vectorized read. It's supported as an INGEST format; convert to
@@ -16,6 +19,8 @@ file scan splits big CSVs by byte ranges automatically.
 """
 
 from __future__ import annotations
+
+from collections.abc import Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -47,10 +52,29 @@ def scan_csv(
     )
 
 
+def scan_csv_named(
+    spark: SparkSession, path: str, types: Mapping[str, T.DataType]
+) -> DataFrame:
+    """Typed scan of a headed CSV whose column order is not known up
+    front. One small job reads the header line (no inference); columns
+    named in ``types`` get those types, every other column is a string.
+    Spark applies a CSV schema by position, which is why the header is
+    read first. A field that does not parse as its type reads as NULL
+    (``scan_csv``'s PERMISSIVE mode) instead of failing the job."""
+    columns = spark.read.option("header", "true").csv(path).columns
+    schema = T.StructType(
+        [T.StructField(c, types.get(c, T.StringType())) for c in columns]
+    )
+    return scan_csv(spark, path, schema)
+
+
 def scan_csv_infer(spark: SparkSession, path: str, header: bool = True) -> DataFrame:
     """Inference-based scan for exploration only — parity with the
-    reference's loader (code/experiment.py:281-284); do not use in
-    pipelines (extra scan, fragile types)."""
+    reference's loader (code/experiment.py:281-284). It runs an eager
+    inference scan per file and types a column by its values, so one
+    malformed cell turns a numeric column into strings; the CLI reads
+    with ``scan_csv_named`` instead. perfbench's traced run still
+    patches this function by name."""
     return (
         spark.read.option("header", str(header).lower())
         .option("inferSchema", "true")

@@ -16,7 +16,12 @@ from bigdatafinalproject_hockey_spark.dedup.simhash import (
     hamming_expr,
     simhash_fingerprints,
 )
-from bigdatafinalproject_hockey_spark.ml import BinaryMetrics, baselines, evaluate_binary
+from bigdatafinalproject_hockey_spark.ml import (
+    BinaryMetrics,
+    baselines,
+    baselines_from_counts,
+    evaluate_binary,
+)
 from bigdatafinalproject_hockey_spark.multimodal import (
     attach_binary_payload,
     extract_features_batched,
@@ -51,6 +56,30 @@ def test_scan_csv_null_sentinels(spark, tmp_path):
     assert rows[3] == (None, None)
 
 
+def test_cast_types_invalid_values_become_null(spark):
+    """Cells that do not parse as the target type cast to NULL under
+    the session's ANSI mode instead of failing the job."""
+    from bigdatafinalproject_hockey_spark.operators.scalar import cast_types
+
+    df = spark.createDataFrame([(0, "1"), (1, "abc"), (2, "2.5")], ["i", "v"])
+    out = cast_types(df.withColumn("d", F.col("v")), {"d": "double", "v": "int"})
+    rows = [(r["d"], r["v"]) for r in out.orderBy("i").collect()]
+    assert rows == [(1.0, 1), (None, None), (2.5, None)]
+
+
+def test_scan_csv_named_types_columns_by_header(spark, tmp_path):
+    """Named columns get their types wherever the header puts them, the
+    rest stay strings, and a malformed number reads as NULL."""
+    from bigdatafinalproject_hockey_spark.sources.csv import scan_csv_named
+
+    p = tmp_path / "named.csv"
+    p.write_text("note,score,id\nx,3.5,1\ny,n/a,2\nz,\\N,3\n")
+    df = scan_csv_named(spark, str(p), {"id": T.LongType(), "score": T.DoubleType()})
+    assert df.dtypes == [("note", "string"), ("score", "double"), ("id", "bigint")]
+    rows = [tuple(r) for r in df.orderBy("id").collect()]
+    assert rows == [("x", 3.5, 1), ("y", None, 2), ("z", None, 3)]
+
+
 def test_evaluate_binary_single_pass(spark):
     rows = (
         [(1.0, 1.0)] * 10  # tp
@@ -78,6 +107,7 @@ def test_baselines_math(spark):
     b = baselines(df)
     assert abs(b["majority"] - 0.6) < 1e-12
     assert abs(b["weighted_random"] - (0.36 + 0.16)) < 1e-12
+    assert b == baselines_from_counts(10, 6)
 
 
 def test_simhash_identical_docs_distance_zero(spark):

@@ -181,37 +181,121 @@ def test_cli_on_reference_sample_csvs(spark):
     assert "lr" in summary["models"]
 
 
+def _write_cli_inputs(tmp_path, messy: bool = False) -> list[str]:
+    """Write the fixture rows as CSVs (\\N for NULL) and the team map;
+    return the CLI argv that reads them. ``messy`` reorders the results
+    columns, puts an unconsumed string column between consumed ones in
+    both files, and sets one events measure cell to ``n/a``."""
+    results_rows, events_rows = _gen_fixture()
+    tables = {
+        "results": (RESULTS_COLS, results_rows),
+        "events": (EVENTS_COLS, events_rows),
+    }
+    if messy:
+        cols, rows = tables["results"]
+        tables["results"] = _with_note(cols[::-1], [r[::-1] for r in rows], 2)
+        cols, rows = _with_note(*tables["events"], 4)
+        at = cols.index("ShotDistance")
+        rows[0] = (*rows[0][:at], "n/a", *rows[0][at + 1:])
+        tables["events"] = (cols, rows)
+    argv = []
+    for name, (cols, rows) in tables.items():
+        path = str(tmp_path / f"{name}.csv")
+        with open(path, "w", newline="", encoding="utf-8") as f:
+            w = csv.writer(f)
+            w.writerow(cols)
+            w.writerows([r"\N" if v is None else v for v in row] for row in rows)
+        argv += [f"--{name}", path]
+    team_map = tmp_path / "teams.json"
+    team_map.write_text(json.dumps(TEAM_MAP))
+    return argv + ["--team-map", str(team_map), "--models", ""]
+
+
+def _with_note(cols: list[str], rows: list[tuple], at: int):
+    """Insert an unconsumed string column ``Note`` at position ``at``."""
+    return (
+        [*cols[:at], "Note", *cols[at:]],
+        [(*r[:at], f"note {i}", *r[at:]) for i, r in enumerate(rows)],
+    )
+
+
+def _fixture_counts() -> dict[str, int]:
+    """The CLI's row counts on the fixture, derived from its rows: the
+    later season is the test split."""
+    results_rows, _ = _gen_fixture()
+    games = {r[0]: r[1] for r in results_rows}
+    last = max(games.values())
+    n_test = sum(1 for s in games.values() if s == last)
+    return {
+        "game_team_rows": len(results_rows),
+        "matchups": len(games),
+        "train": len(games) - n_test,
+        "test": n_test,
+    }
+
+
+def _summary_counts(summary: dict) -> dict[str, int]:
+    return {k: summary[k] for k in ("game_team_rows", "matchups", "train", "test")}
+
+
 def test_cli_releases_its_cache(spark, tmp_path):
     """The CLI runs the fixture end to end from CSVs (\\N sentinels,
     messy names, a JSON team map) and leaves nothing cached behind."""
     from bigdatafinalproject_hockey_spark.__main__ import main
 
-    results_rows, events_rows = _gen_fixture()
-    paths = {}
-    for name, cols, rows in (
-        ("results", RESULTS_COLS, results_rows),
-        ("events", EVENTS_COLS, events_rows),
-    ):
-        paths[name] = str(tmp_path / f"{name}.csv")
-        with open(paths[name], "w", newline="", encoding="utf-8") as f:
-            w = csv.writer(f)
-            w.writerow(cols)
-            w.writerows([r"\N" if v is None else v for v in row] for row in rows)
-    team_map = tmp_path / "teams.json"
-    team_map.write_text(json.dumps(TEAM_MAP))
+    spark.catalog.clearCache()
+    summary = main(_write_cli_inputs(tmp_path), spark=spark)
+    counts = _summary_counts(summary)
+    assert counts == _fixture_counts()
+    assert counts["test"] > 0
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_cli_reads_messy_csvs_typed(spark, tmp_path):
+    """Column order, an unconsumed column and a malformed number do not
+    change what the CLI reads: the typed scan matches columns by
+    header name and turns ``n/a`` into NULL instead of failing."""
+    from bigdatafinalproject_hockey_spark.__main__ import main
 
     spark.catalog.clearCache()
-    summary = main(
-        ["--events", paths["events"], "--results", paths["results"],
-         "--team-map", str(team_map), "--models", ""],
-        spark=spark,
-    )
-    n_games = len(results_rows) // 2
-    assert summary["game_team_rows"] == 2 * n_games
-    assert summary["matchups"] == n_games
-    assert summary["train"] + summary["test"] == n_games
-    assert summary["test"] > 0
+    summary = main(_write_cli_inputs(tmp_path, messy=True), spark=spark)
+    assert _summary_counts(summary) == _fixture_counts()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+# Spark jobs one CLI run on the fixture takes: two header reads and the
+# statistics collect's query stages (AQE runs each as its own job).
+CLI_JOB_BUDGET = 13
+
+
+def test_cli_job_budget(spark, tmp_path):
+    """One CLI run launches no more Spark jobs than its result needs."""
+    from bigdatafinalproject_hockey_spark.__main__ import main
+
+    argv = _write_cli_inputs(tmp_path)
+    sc = spark.sparkContext
+    sc.setJobGroup("cli", "CLI job budget")
+    try:
+        main(argv, spark=spark)
+    finally:
+        sc._jsc.clearJobGroup()
+    jobs = sc.statusTracker().getJobIdsForGroup("cli")
+    assert 0 < len(jobs) <= CLI_JOB_BUDGET, sorted(jobs)
+
+
+def test_run_pipeline_counts_match_frames(pipeline_out):
+    """``counts`` comes from one collect and must agree with counting
+    each returned frame, baselines included."""
+    from bigdatafinalproject_hockey_spark.ml import baselines, baselines_from_counts
+
+    c = pipeline_out["counts"]
+    assert c["game_team_rows"] == pipeline_out["game_data"].count()
+    assert c["matchups"] == pipeline_out["matchups"].count()
+    assert c["train"] == pipeline_out["train"].count()
+    assert c["test"] == pipeline_out["test"].count()
+    assert c["test"] > 0 and c["train"] > 0
+    test = pipeline_out["test"]
+    assert baselines_from_counts(c["test"], c["test_positives"]) == baselines(test)
 
 
 def test_window_frames_match_duckdb(pipeline_out):
