@@ -13,10 +13,10 @@ Differences from the reference, by design:
   as a JSON file (name → code); unmapped names fall back to the same
   strip-non-letters rule the reference uses.
 - CSVs are read with header + \\N null handling and no schema
-  inference: one small job per file reads its header, and the scan
-  then types the columns the pipeline consumes by name (everything
-  else stays a string). A malformed number reads as NULL instead of
-  failing the job.
+  inference: each file's header line is read through the Hadoop
+  FileSystem without a Spark job, and the scan then types the columns
+  the pipeline consumes by name (everything else stays a string). A
+  malformed number reads as NULL instead of failing the job.
 - The row counts and baselines come from the one statistics collect
   that also picks the train/test split (``run_pipeline``'s
   ``counts``), not from a job per count.

@@ -52,20 +52,19 @@ def join_self_matchup(
     matchup builder (code/experiment.py:502-541), one output row per
     key group.
 
-    All non-key columns are re-projected with side prefixes, resolving
-    the self-join ambiguity the reference handles with a 31-line
-    aliased select.
+    All non-key columns get side prefixes, resolving the self-join
+    ambiguity the reference handles with a 31-line aliased select. Each
+    side is renamed by one whole-frame ``toDF``, not a per-column alias.
     """
-    value_cols = [c for c in df.columns if c not in keys and c != split_col]
-    left = df.filter(F.col(split_col) == F.lit(left_value)).select(
-        *[F.col(k) for k in keys],
-        *[F.col(c).alias(f"{left_prefix}{c}") for c in value_cols],
+    rest = [c for c in df.columns if c != split_col]
+
+    def side(value: object, prefix: str) -> DataFrame:
+        names = [c if c in keys else f"{prefix}{c}" for c in rest]
+        return df.filter(F.col(split_col) == F.lit(value)).drop(split_col).toDF(*names)
+
+    return side(left_value, left_prefix).join(
+        side(right_value, right_prefix), list(keys), "inner"
     )
-    right = df.filter(F.col(split_col) == F.lit(right_value)).select(
-        *[F.col(k) for k in keys],
-        *[F.col(c).alias(f"{right_prefix}{c}") for c in value_cols],
-    )
-    return left.join(right, list(keys), "inner")
 
 
 def semi_join_keys(df: DataFrame, keys_df: DataFrame, on: Sequence[str]) -> DataFrame:

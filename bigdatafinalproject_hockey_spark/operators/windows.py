@@ -18,7 +18,7 @@ fixed-width time buckets before the window.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
@@ -48,8 +48,57 @@ def win_row_number(
     return df.withColumn(out, F.row_number().over(w))
 
 
-def _framed(agg: Column, w: WindowSpec, start: int, end: int) -> Column:
-    return agg.over(w.rowsBetween(start, end))
+def _framed(
+    w: WindowSpec,
+    measures: dict[str, Column],
+    start: int,
+    end: int,
+    defaults: Mapping[str, object] | None,
+) -> dict[str, Column]:
+    """Output name → measure over ``w`` framed ROWS ``start..end``. An
+    output named in ``defaults`` reads that value (a literal or a
+    Column) where its frame is empty or all-NULL."""
+    defaults = defaults or {}
+    frame = w.rowsBetween(start, end)
+    out = {}
+    for name, agg in measures.items():
+        col = agg.over(frame)
+        if name in defaults:
+            col = F.coalesce(col, F.lit(defaults[name]))
+        out[name] = col
+    return out
+
+
+def expanding_columns(
+    partition_by: Sequence[str],
+    order_by: Sequence[str],
+    measures: dict[str, Column],
+    include_current: bool = False,
+    defaults: Mapping[str, object] | None = None,
+) -> dict[str, Column]:
+    """``win_expanding``'s output columns by name, for a caller that
+    adds them in one projection with other columns. An output named in
+    ``defaults`` (output name → literal or Column) reads that value
+    where its frame is empty — the reference's per-feature defaults
+    (code/experiment.py:476-494) without a second projection."""
+    w = ordered_window(partition_by, order_by)
+    end = 0 if include_current else -1
+    return _framed(w, measures, Window.unboundedPreceding, end, defaults)
+
+
+def sliding_columns(
+    partition_by: Sequence[str],
+    order_by: Sequence[str],
+    measures: dict[str, Column],
+    lookback: int = 5,
+    include_current: bool = False,
+    defaults: Mapping[str, object] | None = None,
+) -> dict[str, Column]:
+    """``win_sliding``'s output columns by name (see
+    ``expanding_columns``)."""
+    w = ordered_window(partition_by, order_by)
+    end = 0 if include_current else -1
+    return _framed(w, measures, -lookback, end, defaults)
 
 
 def win_expanding(
@@ -63,19 +112,15 @@ def win_expanding(
 
     Frame = ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
     (reference code/experiment.py:416-420, 432-458). First row of each
-    partition → NULL (empty frame); pair with scalar.fill_default.
+    partition → NULL (empty frame); to default it in the same
+    projection, add ``expanding_columns`` with ``defaults``.
     """
-    w = ordered_window(partition_by, order_by)
-    end = 0 if include_current else -1
-    # "*" keeps every input column without re-resolving names — robust
-    # to raw-CSV columns containing dots/spaces (reference results file
-    # has "Market_Prob.", "American Odds", FIXTURES.md §A2)
-    return df.select(
-        "*",
-        *[
-            _framed(agg, w, Window.unboundedPreceding, end).alias(name)
-            for name, agg in measures.items()
-        ],
+    # withColumns appends to the input's attributes without
+    # re-resolving their names — robust to raw-CSV columns containing
+    # dots/spaces (reference results file has "Market_Prob.",
+    # "American Odds", FIXTURES.md §A2)
+    return df.withColumns(
+        expanding_columns(partition_by, order_by, measures, include_current)
     )
 
 
@@ -90,16 +135,11 @@ def win_sliding(
     """Sliding last-N-rows aggregates, current row excluded by default.
 
     Frame = ROWS BETWEEN -N AND -1, exactly as the reference's
-    last-5-games form features (code/experiment.py:461-472).
+    last-5-games form features (code/experiment.py:461-472). An empty
+    frame reads NULL (see ``sliding_columns`` for defaults).
     """
-    w = ordered_window(partition_by, order_by)
-    end = 0 if include_current else -1
-    return df.select(
-        "*",
-        *[
-            _framed(agg, w, -lookback, end).alias(name)
-            for name, agg in measures.items()
-        ],
+    return df.withColumns(
+        sliding_columns(partition_by, order_by, measures, lookback, include_current)
     )
 
 

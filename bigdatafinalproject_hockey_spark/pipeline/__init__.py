@@ -7,10 +7,10 @@ Mirrors SURVEY.md §3.1 / reference code/experiment.py flow:
   entity-name normalization via literal map + regex fallback)
   → aggregate events per (game, season, team)        [§2.5]
   → inner 3-key equi-join results ⋈ aggregates       [§2.6]
-  → leakage-free window features: game number, expanding season-to-
-    date averages (frame unboundedPreceding..-1), last-N sliding
-    averages (frame -N..-1)                          [§2.7]
-  → per-column league-average defaults (coalesce)    [fill_default]
+  → leakage-free window features in one projection: game number,
+    expanding season-to-date averages (frame unboundedPreceding..-1)
+    and last-N sliding averages (frame -N..-1), each coalesced to its
+    per-column league-average default               [§2.7]
   → home ⋈ away self-join into matchups + differential features
   → temporal train/test split on max season, with the row counts
     from the same single collect
@@ -195,43 +195,48 @@ def add_window_features(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """Leakage-free expanding + sliding features per (team, season)
     ordered by (date, game) — the reference's signature operators
     (code/experiment.py:416-472) with the exact frames
-    (unboundedPreceding,-1) and (-N,-1), then per-column defaults
-    (476-494)."""
+    (unboundedPreceding,-1) and (-N,-1), each defaulted per column
+    where its frame is empty (476-494). The game number, both frames
+    and the defaults are one projection: every DataFrame call is
+    analyzed eagerly, so each extra projection re-analyzes the plan."""
     part = [cfg.team_col, cfg.season_col]
     order = [cfg.date_col, cfg.game_col]
-    df = win_ops.win_row_number(df, part, order, out="game_num")
     measures = feature_cols(cfg)
-    df = win_ops.win_expanding(
-        df, part, order, {f"hist_{c}": F.avg(c) for c in measures}
+    # Both frames share each measure's aggregate and default Column.
+    avg = {c: F.avg(c) for c in measures}
+    default = {c: F.lit(cfg.feature_defaults.get(c, 0.0)) for c in measures}
+    return df.withColumns(
+        {
+            "game_num": F.row_number().over(win_ops.ordered_window(part, order)),
+            **win_ops.expanding_columns(
+                part,
+                order,
+                {f"hist_{c}": a for c, a in avg.items()},
+                defaults={f"hist_{c}": d for c, d in default.items()},
+            ),
+            **win_ops.sliding_columns(
+                part,
+                order,
+                {f"recent_{c}": a for c, a in avg.items()},
+                lookback=cfg.lookback,
+                defaults={f"recent_{c}": d for c, d in default.items()},
+            ),
+        }
     )
-    df = win_ops.win_sliding(
-        df,
-        part,
-        order,
-        {f"recent_{c}": F.avg(c) for c in measures},
-        lookback=cfg.lookback,
-    )
-    defaults = {}
-    for c in measures:
-        d = cfg.feature_defaults.get(c, 0.0)
-        defaults[f"hist_{c}"] = d
-        defaults[f"recent_{c}"] = d
-    return scalar_ops.fill_default(df, defaults)
 
 
 def build_matchups(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """Home ⋈ away self-join into one row per game, with differential
-    features home-minus-away (reference code/experiment.py:502-552)."""
+    features home-minus-away and the label in one projection after the
+    join (reference code/experiment.py:502-552)."""
     keys = [cfg.game_col, cfg.season_col]
     hist_cols = [c for c in df.columns if c.startswith(("hist_", "recent_"))]
     keep = keys + [cfg.home_col, cfg.team_col, cfg.date_col, "game_num", *hist_cols]
-    label_col = None
-    if "Win" in df.columns:
-        label_col = "Win"
+    has_label = "Win" in df.columns
+    if has_label:
         keep.append("Win")
-    slim = df.select(*dict.fromkeys(keep))
     matched = join_ops.join_self_matchup(
-        slim,
+        df.select(*dict.fromkeys(keep)),
         keys=keys,
         split_col=cfg.home_col,
         left_value=1,
@@ -239,16 +244,12 @@ def build_matchups(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
         left_prefix="home_",
         right_prefix="away_",
     )
-    diffs = {
-        f"diff_{c}": F.col(f"home_{c}") - F.col(f"away_{c}") for c in hist_cols
+    derived = {
+        f"diff_{c}": matched[f"home_{c}"] - matched[f"away_{c}"] for c in hist_cols
     }
-    matched = scalar_ops.derive_arith(matched, diffs)
-    if label_col:
-        matched = matched.withColumn(
-            "label",
-            F.when(F.col(f"home_{label_col}") == 1, F.lit(1.0)).otherwise(F.lit(0.0)),
-        )
-    return matched
+    if has_label:
+        derived["label"] = F.when(matched["home_Win"] == 1, 1.0).otherwise(0.0)
+    return scalar_ops.derive_arith(matched, derived)
 
 
 def collect_counts(

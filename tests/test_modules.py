@@ -80,6 +80,49 @@ def test_scan_csv_named_types_columns_by_header(spark, tmp_path):
     assert rows == [("x", 3.5, 1), ("y", None, 2), ("z", None, 3)]
 
 
+def _write_header_case(spark, tmp_path, case: str) -> str:
+    """A headed CSV input of one kind; returns the path to read."""
+    import gzip
+
+    if case == "names":
+        p = tmp_path / "names.csv"
+        p.write_text('a,,a,"x,y", b ,A\n1,2,3,4,5,6\n')
+    elif case == "bom":
+        p = tmp_path / "bom.csv"
+        p.write_text("\ufeffid,Name\n1,x\n", encoding="utf-8")
+    elif case == "gzip":
+        p = tmp_path / "packed.csv.gz"
+        with gzip.open(p, "wt", encoding="utf-8") as f:
+            f.write("k,v,K\n1,2,3\n")
+    else:
+        p = tmp_path / "written"
+        df = spark.createDataFrame([(i, f"n{i}") for i in range(6)], ["id", "Name"])
+        df.repartition(3).write.option("header", True).csv(str(p))
+    return str(p)
+
+
+@pytest.mark.parametrize("case", ["names", "bom", "gzip", "directory"])
+def test_read_header_matches_spark(spark, tmp_path, case):
+    """The job-free header reader names columns exactly as Spark's
+    header inference does: quotes, BOM, ``_c<i>`` for empty names,
+    index suffixes on case-insensitive duplicates, compressed files
+    and directories of part files."""
+    from bigdatafinalproject_hockey_spark.sources.csv import read_header
+
+    path = _write_header_case(spark, tmp_path, case)
+    expected = spark.read.option("header", "true").csv(path).columns
+    assert read_header(spark, path) == expected
+
+
+def test_read_header_empty_file_raises(spark, tmp_path):
+    from bigdatafinalproject_hockey_spark.sources.csv import read_header
+
+    p = tmp_path / "empty.csv"
+    p.write_text("")
+    with pytest.raises(ValueError, match="no header line"):
+        read_header(spark, str(p))
+
+
 def test_evaluate_binary_single_pass(spark):
     rows = (
         [(1.0, 1.0)] * 10  # tp
