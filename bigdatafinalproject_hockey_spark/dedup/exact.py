@@ -26,19 +26,6 @@ def dedup_exact_groups(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def dedup_exact_keep_first(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """Return the deduplicated table itself (survivor rows only).
-
-    Implemented as a min-id semi-join rather than dropDuplicates so the
-    survivor choice is deterministic (dropDuplicates keeps an arbitrary
-    row per key under parallel execution).
-    """
-    keep = dedup_exact_groups(df, text_col, id_col).select(
-        F.col("keep_id").alias(id_col)
-    )
-    return df.join(keep, [id_col], "left_semi")
-
-
 def dedup_incremental(
     delta: DataFrame, base_fps: DataFrame, text_col: str, id_col: str
 ) -> DataFrame:

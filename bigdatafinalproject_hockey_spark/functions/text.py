@@ -80,14 +80,6 @@ def avg_token_len_expr(col: Column | str) -> Column:
     )
 
 
-def punct_ratio_expr(col: Column | str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    n_punct = F.length(c) - F.length(F.regexp_replace(c, r"[^\w\s]", ""))
-    return F.when(F.length(c) > 0, n_punct.cast("double") / F.length(c)).otherwise(
-        F.lit(0.0)
-    )
-
-
 def digit_ratio_expr(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     n_digit = F.length(c) - F.length(F.regexp_replace(c, r"[0-9]", ""))

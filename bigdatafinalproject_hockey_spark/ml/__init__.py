@@ -2,22 +2,19 @@
 
 The reference trains 4 Spark-ML binary classifiers over the matchup
 features and evaluates AUC + confusion-matrix metrics
-(reference code/experiment.py:581-852). Re-expressed here with two
-deliberate fixes:
-
-- **Single-pass evaluation**: the reference runs SIX jobs over the
-  predictions (1 evaluator + 4 filtered counts + 1 display groupBy,
-  code/experiment.py:642-680; SURVEY.md §3.3). ``evaluate_binary``
-  computes the confusion matrix in ONE groupBy job and derives
-  accuracy/precision/recall/F1 from the four cells on the driver.
-- Baselines (majority/coin-flip/weighted) come from the same single
-  class-balance aggregate instead of separate counts
-  (code/experiment.py:793-823).
+(reference code/experiment.py:581-852). Its evaluation runs SIX jobs
+over the predictions (1 evaluator + 4 filtered counts + 1 display
+groupBy, code/experiment.py:642-680; SURVEY.md §3.3) plus separate
+baseline counts (793-823). Here every model is evaluated by one
+relational aggregate, ``evaluate_binary_df``: confusion cells,
+accuracy/precision/recall/F1, a tie-aware rank-sum AUC and the
+majority/coin-flip/weighted baselines in one row.
+``evaluate_model`` scores a fitted pipeline on ``rawPrediction[1]``,
+the value MLlib's areaUnderROC evaluator ranks, so its AUC is the
+reference's.
 """
 
 from __future__ import annotations
-
-from dataclasses import dataclass
 
 from pyspark.ml import Pipeline
 from pyspark.ml.classification import (
@@ -26,9 +23,9 @@ from pyspark.ml.classification import (
     MultilayerPerceptronClassifier,
     RandomForestClassifier,
 )
-from pyspark.ml.evaluation import BinaryClassificationEvaluator
 from pyspark.ml.feature import VectorAssembler
-from pyspark.sql import DataFrame, Window
+from pyspark.ml.functions import vector_to_array
+from pyspark.sql import DataFrame, Row, Window
 from pyspark.sql import functions as F
 
 
@@ -85,65 +82,6 @@ def train_pipeline(
     return Pipeline(stages=stages).fit(train)
 
 
-@dataclass
-class BinaryMetrics:
-    tp: int
-    tn: int
-    fp: int
-    fn: int
-    auc: float | None = None
-
-    @property
-    def n(self) -> int:
-        return self.tp + self.tn + self.fp + self.fn
-
-    @property
-    def accuracy(self) -> float:
-        return (self.tp + self.tn) / self.n if self.n else 0.0
-
-    @property
-    def precision(self) -> float:
-        d = self.tp + self.fp
-        return self.tp / d if d else 0.0
-
-    @property
-    def recall(self) -> float:
-        d = self.tp + self.fn
-        return self.tp / d if d else 0.0
-
-    @property
-    def f1(self) -> float:
-        p, r = self.precision, self.recall
-        return 2 * p * r / (p + r) if (p + r) else 0.0
-
-
-def evaluate_binary(
-    predictions: DataFrame,
-    label_col: str = "label",
-    prediction_col: str = "prediction",
-    with_auc: bool = True,
-) -> BinaryMetrics:
-    """Confusion matrix + derived metrics in ONE aggregation job
-    (vs the reference's 4 filter+count jobs, code/experiment.py:645-656)."""
-    lbl = F.col(label_col)
-    prd = F.col(prediction_col)
-    cells = predictions.agg(
-        F.count(F.when((prd == 1) & (lbl == 1), 1)).alias("tp"),
-        F.count(F.when((prd == 0) & (lbl == 0), 1)).alias("tn"),
-        F.count(F.when((prd == 1) & (lbl == 0), 1)).alias("fp"),
-        F.count(F.when((prd == 0) & (lbl == 1), 1)).alias("fn"),
-    ).first()
-    auc = None
-    if with_auc:
-        auc = BinaryClassificationEvaluator(
-            labelCol=label_col, rawPredictionCol="rawPrediction",
-            metricName="areaUnderROC",
-        ).evaluate(predictions)
-    return BinaryMetrics(
-        tp=cells["tp"], tn=cells["tn"], fp=cells["fp"], fn=cells["fn"], auc=auc
-    )
-
-
 def evaluate_binary_df(
     predictions: DataFrame,
     label_col: str = "label",
@@ -151,13 +89,12 @@ def evaluate_binary_df(
     score_col: str | None = None,
     round_dp: int = 6,
 ) -> DataFrame:
-    """Fully-distributed twin of ``evaluate_binary`` + ``baselines``:
-    the reference's entire evaluation surface (confusion matrix +
+    """The reference's entire evaluation surface (confusion matrix +
     accuracy/precision/recall/F1, reference code/experiment.py:617-688;
     AUC, 636-642; majority/coin-flip/weighted baselines, 793-823) as
-    ONE aggregation job returning a 1-row DataFrame — nothing is
-    collected to the driver, vs the reference's six jobs + driver math
-    (SURVEY.md §3.3).
+    ONE aggregation returning a 1-row DataFrame, vs the reference's six
+    jobs + driver math (SURVEY.md §3.3). Metrics are rounded to
+    ``round_dp``.
 
     AUC uses the tie-aware Mann-Whitney rank-sum identity
     ``AUC = (R_pos - npos(npos+1)/2) / (npos * nneg)`` with midranks
@@ -187,6 +124,18 @@ def evaluate_binary_df(
         round_dp=round_dp,
         include_baselines=True,
     )
+
+
+def evaluate_model(model, test: DataFrame) -> Row:
+    """Score ``test`` with a fitted pipeline and collect its
+    ``evaluate_binary_df`` row. The AUC ranks ``rawPrediction[1]``, the
+    score MLlib's areaUnderROC evaluator reads; ranking
+    ``probability[1]`` instead changes the AUC of gbt and mlp, whose
+    saturated probabilities tie."""
+    scored = model.transform(test).select(
+        "label", "prediction", vector_to_array("rawPrediction")[1].alias("score")
+    )
+    return evaluate_binary_df(scored, score_col="score").first()
 
 
 def _binary_eval(

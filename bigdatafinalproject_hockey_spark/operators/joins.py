@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -96,13 +96,6 @@ def join_star(
         d = F.broadcast(dim) if broadcast_dims else dim
         out = out.join(d, list(keys), "inner")
     return out
-
-
-def join_expr(
-    left: DataFrame, right: DataFrame, cond: Column, how: str = "inner"
-) -> DataFrame:
-    """General boolean-expression join for non-same-named keys."""
-    return left.join(right, cond, how)
 
 
 def join_salted(

@@ -1,7 +1,7 @@
 """Set operations (SURVEY.md §2.9).
 
 The reference only concatenates chunk results (pd.concat,
-create_subsample.py:90); we provide the full family.
+create_subsample.py:90); ``union_all`` is that operation.
 """
 
 from __future__ import annotations
@@ -15,15 +15,3 @@ def union_all(*dfs: DataFrame) -> DataFrame:
     """Positional-safe UNION ALL by column NAME (pd.concat analog).
     unionByName, not union: column order must not silently matter."""
     return reduce(lambda a, b: a.unionByName(b), dfs)
-
-
-def union_distinct(*dfs: DataFrame) -> DataFrame:
-    return union_all(*dfs).distinct()
-
-
-def intersect_all(a: DataFrame, b: DataFrame) -> DataFrame:
-    return a.intersectAll(b)
-
-
-def except_all(a: DataFrame, b: DataFrame) -> DataFrame:
-    return a.exceptAll(b)

@@ -16,9 +16,8 @@ from pyspark.sql import functions as F
 from bigdatafinalproject_hockey_spark.catalog import SCHEMAS, load_table
 from bigdatafinalproject_hockey_spark.functions.numeric import cents_expr
 from bigdatafinalproject_hockey_spark.ml import (
-    baselines,
-    evaluate_binary,
     evaluate_binary_df,
+    evaluate_model,
     feature_importances_topk,
     train_pipeline,
 )
@@ -239,10 +238,12 @@ def _ml_train_eval(spark: SparkSession, sf_dir: str, kind: str) -> DataFrame:
     """Shared body for the four classifier queries: features from the
     star schema, temporal split, train with the reference's
     hyperparameters (ml.classifier / ml.mlp_classifier,
-    reference code/experiment.py:697-785), SINGLE-PASS confusion-matrix
-    evaluation + baselines (vs the reference's six jobs, SURVEY.md
-    §3.3). Tree ensembles also report their top feature importance
-    (reference code/experiment.py:39-54). Returns one metrics row."""
+    reference code/experiment.py:697-785), then one collect of
+    ``ml.evaluate_model``'s row for the metrics, AUC and baselines (vs
+    the reference's six jobs, SURVEY.md §3.3). Tree ensembles also
+    report their top feature importance (reference
+    code/experiment.py:39-54). Returns one metrics row built on the
+    driver, so its plan has no exchange."""
     orders = load_table(spark, "orders", sf_dir)
     li = load_table(spark, "lineitem", sf_dir)
     per_order = li.groupBy("l_orderkey").agg(
@@ -260,19 +261,17 @@ def _ml_train_eval(spark: SparkSession, sf_dir: str, kind: str) -> DataFrame:
     train, test = split_temporal(data, "order_year")
     feats = ["f_qty", "f_disc", "f_price", "f_lines"]
     model = train_pipeline(train, feats, kind)
-    preds = model.transform(test).cache()
-    m = evaluate_binary(preds)
-    base = baselines(test)
+    m = evaluate_model(model, test)
     row = {
         "model": kind,
-        "n_test": float(m.n),
-        "accuracy": m.accuracy,
-        "precision": m.precision,
-        "recall": m.recall,
-        "f1": m.f1,
-        "auc": float(m.auc or 0.0),
-        "baseline_majority": base["majority"],
-        "baseline_weighted": base["weighted_random"],
+        "n_test": float(m.n_test),
+        **{
+            k: m[k]
+            for k in (
+                "accuracy", "precision", "recall", "f1", "auc",
+                "baseline_majority", "baseline_weighted",
+            )
+        },
     }
     if kind in ("rf", "gbt"):
         imp, name = feature_importances_topk(model, feats, k=1)[0]

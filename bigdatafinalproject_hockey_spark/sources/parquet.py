@@ -1,8 +1,7 @@
-"""Parquet sink/scan with the two physical layouts that matter at
-100 TB: hive-style partition directories (partition PRUNING — a
-filter on the partition key skips whole directories at planning time)
-and bucketed tables (co-located joins — two tables bucketed on the
-same key by the same bucket count join with ZERO shuffle).
+"""Parquet sink/scan with hive-style partition directories (partition
+PRUNING — a filter on the partition key skips whole directories at
+planning time) and small-files compaction. Bucketed tables (co-located
+joins with ZERO shuffle) are written by operators.bucketing.write_bucketed.
 
 The reference has no parquet sink (it prints to stdout); these are
 the sinks its pipeline would need in production.
@@ -27,26 +26,6 @@ def sink_parquet(
 
 def scan_parquet(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
-
-
-def sink_bucketed_table(
-    df: DataFrame,
-    table: str,
-    bucket_by: list[str],
-    n_buckets: int,
-    sort_by: list[str] | None = None,
-) -> None:
-    """Persist as a bucketed managed table: rows are hash-distributed
-    into ``n_buckets`` files per partition by ``bucket_by``. A join of
-    two tables bucketed on the same key with the same bucket count
-    needs no exchange on either side — the payoff is a shuffle-free
-    big⋈big join, the single biggest cost at 100 TB. Requires a
-    catalog (saveAsTable), not a bare path. Thin managed-table wrapper
-    over operators.bucketing.write_bucketed (single implementation).
-    """
-    from bigdatafinalproject_hockey_spark.operators.bucketing import write_bucketed
-
-    write_bucketed(df, table, bucket_by, n_buckets, sort_cols=sort_by)
 
 
 def compact_parquet(

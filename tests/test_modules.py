@@ -11,17 +11,11 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from bigdatafinalproject_hockey_spark.dedup.exact import dedup_exact_keep_first
 from bigdatafinalproject_hockey_spark.dedup.simhash import (
     hamming_expr,
     simhash_fingerprints,
 )
-from bigdatafinalproject_hockey_spark.ml import (
-    BinaryMetrics,
-    baselines,
-    baselines_from_counts,
-    evaluate_binary,
-)
+from bigdatafinalproject_hockey_spark.ml import baselines, baselines_from_counts
 from bigdatafinalproject_hockey_spark.multimodal import (
     attach_binary_payload,
     extract_features_batched,
@@ -123,28 +117,6 @@ def test_read_header_empty_file_raises(spark, tmp_path):
         read_header(spark, str(p))
 
 
-def test_evaluate_binary_single_pass(spark):
-    rows = (
-        [(1.0, 1.0)] * 10  # tp
-        + [(0.0, 0.0)] * 20  # tn
-        + [(0.0, 1.0)] * 5  # fp (pred 1, label 0)
-        + [(1.0, 0.0)] * 15  # fn (pred 0, label 1)
-    )
-    df = spark.createDataFrame(
-        [(lbl, prd) for lbl, prd in rows], ["label", "prediction"]
-    )
-    m = evaluate_binary(df, with_auc=False)
-    assert (m.tp, m.tn, m.fp, m.fn) == (10, 20, 5, 15)
-    assert abs(m.accuracy - 30 / 50) < 1e-12
-    assert abs(m.precision - 10 / 15) < 1e-12
-    assert abs(m.recall - 10 / 25) < 1e-12
-
-
-def test_binary_metrics_degenerate():
-    m = BinaryMetrics(tp=0, tn=0, fp=0, fn=0)
-    assert m.accuracy == 0.0 and m.precision == 0.0 and m.f1 == 0.0
-
-
 def test_baselines_math(spark):
     df = spark.createDataFrame([(1.0,)] * 6 + [(0.0,)] * 4, ["label"])
     b = baselines(df)
@@ -205,17 +177,6 @@ def test_multimodal_resize_shapes(spark):
     assert out[1]["width"] == 4 and out[1]["height"] == 2
 
 
-def test_dedup_keep_first_deterministic(spark):
-    df = spark.createDataFrame(
-        [(5, "same text"), (2, "same text"), (9, "other"), (7, "Same  text ")],
-        ["doc_id", "text"],
-    )
-    kept = dedup_exact_keep_first(df, "text", "doc_id")
-    ids = sorted(r["doc_id"] for r in kept.collect())
-    # "Same  text " normalizes differently from "same text" (case kept)
-    assert ids == [2, 7, 9]
-
-
 def test_agg_approx_error_bounds(spark, sf_dir):
     """Sketch aggregates must land near the exact answers: HLL distinct
     within its 5% rsd (generously 3x), GK quantiles within the rank
@@ -274,7 +235,7 @@ def test_bucketed_join_has_no_shuffle(spark, sf_dir):
     """Two tables bucketed on the join key with equal bucket counts
     must sort-merge join with ZERO exchanges — the co-located join
     layout for repeated big⋈big joins."""
-    from bigdatafinalproject_hockey_spark.sources.parquet import sink_bucketed_table
+    from bigdatafinalproject_hockey_spark.operators.bucketing import write_bucketed
 
     import shutil
 
@@ -283,8 +244,8 @@ def test_bucketed_join_has_no_shuffle(spark, sf_dir):
     for t in ("b_orders", "b_lineitem"):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
         shutil.rmtree(f"/root/repo/spark-warehouse/{t}", ignore_errors=True)
-    sink_bucketed_table(orders, "b_orders", ["o_orderkey"], 4, sort_by=["o_orderkey"])
-    sink_bucketed_table(li, "b_lineitem", ["l_orderkey"], 4, sort_by=["l_orderkey"])
+    write_bucketed(orders, "b_orders", ["o_orderkey"], 4, sort_cols=["o_orderkey"])
+    write_bucketed(li, "b_lineitem", ["l_orderkey"], 4, sort_cols=["l_orderkey"])
     # force the sort-merge path: at test scale the planner would rather
     # broadcast the small side (which ignores bucketing entirely)
     saved = {
@@ -400,10 +361,15 @@ import pytest as _pt
 @_pt.mark.parametrize("kind", ["rf", "lr", "gbt", "mlp"])
 def test_ml_all_classifiers_train_and_beat_chance(spark, kind):
     """All four reference model configs (SURVEY.md §2.14) must train,
-    predict, and separate an easy synthetic signal."""
+    predict, and separate an easy synthetic signal. The single-job
+    evaluator scores on rawPrediction[1], so its AUC equals MLlib's
+    BinaryClassificationEvaluator (the reference's, kept here as the
+    oracle) for every kind, and it runs in at most two Spark jobs."""
     import random
 
-    from bigdatafinalproject_hockey_spark.ml import evaluate_binary, train_pipeline
+    from pyspark.ml.evaluation import BinaryClassificationEvaluator
+
+    from bigdatafinalproject_hockey_spark.ml import evaluate_model, train_pipeline
 
     rng = random.Random(42)
     rows = []
@@ -414,10 +380,21 @@ def test_ml_all_classifiers_train_and_beat_chance(spark, kind):
     df = spark.createDataFrame(rows, ["label", "f1", "f2", "noise"])
     train, test = df.randomSplit([0.75, 0.25], seed=42)
     model = train_pipeline(train, ["f1", "f2", "noise"], kind)
-    m = evaluate_binary(model.transform(test))
-    assert m.n > 50
+    sc = spark.sparkContext
+    group = f"eval-{kind}"
+    sc.setJobGroup(group, "single-job evaluation")
+    try:
+        m = evaluate_model(model, test)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+    assert m.n_test > 50
     assert m.accuracy > 0.7, f"{kind}: accuracy {m.accuracy}"
-    assert m.auc is not None and m.auc > 0.75, f"{kind}: auc {m.auc}"
+    assert m.auc > 0.75, f"{kind}: auc {m.auc}"
+    mllib_auc = BinaryClassificationEvaluator(
+        rawPredictionCol="rawPrediction", metricName="areaUnderROC"
+    ).evaluate(model.transform(test))
+    assert abs(m.auc - mllib_auc) <= 5e-7, (kind, m.auc, mllib_auc)
 
 
 def test_feature_importances_topk(spark):
@@ -1086,10 +1063,13 @@ def test_ml_variants_emit_reference_metric_schema(spark):
     emit the reference's metric row schema (VERDICT r2 item 8: the
     _rf/_gbt/_mlp variants had never been externally run). Model
     internals stay rows-only by nature; this pins the contract:
-    schema, model tag, metric ranges, and that tree ensembles report
-    a feature importance while lr/mlp report NULL."""
+    schema, model tag, metric ranges, that tree ensembles report
+    a feature importance while lr/mlp report NULL, and that no call
+    leaves a cached plan behind."""
     from bigdatafinalproject_hockey_spark.queries import QUERIES
 
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
     want_cols = [
         "model", "n_test", "accuracy", "precision", "recall", "f1",
         "auc", "baseline_majority", "baseline_weighted",
@@ -1102,6 +1082,7 @@ def test_ml_variants_emit_reference_metric_schema(spark):
         ("ml_train_eval_mlp", "mlp"),
     ]:
         df = QUERIES[name](spark, "/root/testdata/sf0.001")
+        assert cache.isEmpty(), name
         assert df.columns == want_cols, (name, df.columns)
         [row] = df.collect()
         assert row["model"] == kind
@@ -1188,43 +1169,53 @@ def test_stateful_user_totals_tws_matches_batch(spark):
 
 
 def test_evaluate_binary_df_matches_driver_math(spark):
-    """The distributed single-job evaluator must reproduce the
-    driver-math original (evaluate_binary + baselines) cell for cell
-    and metric for metric, including the rank-sum AUC identity, on a
-    frame with ties, both classes, and both prediction values."""
-    import math
+    """The single-job evaluator must reproduce hand-computed cells,
+    metrics, baselines and tie-aware rank-sum AUC on frames with ties,
+    both classes, and both prediction values."""
+    from bigdatafinalproject_hockey_spark.ml import evaluate_binary_df
 
-    from bigdatafinalproject_hockey_spark.ml import (
-        baselines,
-        evaluate_binary,
-        evaluate_binary_df,
-    )
-
-    rows = [
-        # (label, prediction, score) — score ties across labels on 2.0
+    # (label, prediction, score) — score ties across labels on 2.0.
+    # Midranks over sorted scores [-1, .5, .5, 1, 2, 2, 2, 3]:
+    # pos scores 3.0→8, 2.0→6, 2.0→6, 0.5→2.5 ⇒ R+ = 22.5,
+    # AUC = (22.5 - 4·5/2) / (4·4) = 0.78125.
+    eight = [
         (1, 1, 3.0), (1, 1, 2.0), (1, 0, 2.0), (1, 0, 0.5),
         (0, 1, 2.0), (0, 0, 1.0), (0, 0, 0.5), (0, 0, -1.0),
     ]
-    df = spark.createDataFrame(rows, "label int, prediction int, score double")
-    [got] = evaluate_binary_df(df, score_col="score").collect()
-
-    m = evaluate_binary(df, with_auc=False)
-    assert (got["tp"], got["tn"], got["fp"], got["fn"]) == (m.tp, m.tn, m.fp, m.fn)
-    assert got["n_test"] == m.n
-    assert got["accuracy"] == round(m.accuracy, 6)
-    assert got["precision"] == round(m.precision, 6)
-    assert got["recall"] == round(m.recall, 6)
-    assert math.isclose(got["f1"], m.f1, abs_tol=1e-6)
-    b = baselines(df)
-    assert got["baseline_majority"] == round(b["majority"], 6)
-    assert got["baseline_coin"] == 0.5
-    assert math.isclose(got["baseline_weighted"], b["weighted_random"], abs_tol=1e-6)
-    # tie-aware Mann-Whitney AUC by hand: midranks over
-    # sorted scores [-1, .5, .5, 1, 2, 2, 2, 3]
-    # pos scores: 3.0→rank 8; 2.0→midrank 6; 2.0→6; 0.5→2.5 ⇒ R+=22.5
-    npos, nneg = 4, 4
-    want_auc = (22.5 - npos * (npos + 1) / 2) / (npos * nneg)
-    assert got["auc"] == round(want_auc, 6)
+    # 50 rows scored by their prediction: 35 rows tie at 0 (midrank
+    # 18), 15 at 1 (midrank 43); pos = 15 fn + 10 tp ⇒ R+ = 700,
+    # AUC = (700 - 25·26/2) / (25·25) = 0.6 (the trapezoid through
+    # FPR 0.2, TPR 0.4 gives the same).
+    fifty = (
+        [(1, 1, 1.0)] * 10  # tp
+        + [(0, 0, 0.0)] * 20  # tn
+        + [(0, 1, 1.0)] * 5  # fp
+        + [(1, 0, 0.0)] * 15  # fn
+    )
+    cases = [
+        # rows, (tp, tn, fp, fn), positives, AUC
+        (eight, (2, 3, 1, 2), 4, 0.78125),
+        (fifty, (10, 20, 5, 15), 25, 0.6),
+    ]
+    for rows, (tp, tn, fp, fn), npos, auc in cases:
+        df = spark.createDataFrame(rows, "label int, prediction int, score double")
+        [got] = evaluate_binary_df(df, score_col="score").collect()
+        n = len(rows)
+        nneg = n - npos
+        assert (got["tp"], got["tn"], got["fp"], got["fn"]) == (tp, tn, fp, fn)
+        assert got["n_test"] == n
+        want = {
+            "accuracy": (tp + tn) / n,
+            "precision": tp / (tp + fp),
+            "recall": tp / (tp + fn),
+            "f1": 2 * tp / (2 * tp + fp + fn),
+            "baseline_majority": max(npos, nneg) / n,
+            "baseline_coin": 0.5,
+            "baseline_weighted": (npos / n) ** 2 + (nneg / n) ** 2,
+            "auc": auc,
+        }
+        for k, v in want.items():
+            assert got[k] == pytest.approx(round(v, 6), abs=1e-12), (n, k, got[k])
 
 
 def test_evaluate_binary_df_degenerate_classes(spark):

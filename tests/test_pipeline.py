@@ -182,11 +182,12 @@ def test_cli_on_reference_sample_csvs(spark):
     assert "lr" in summary["models"]
 
 
-def _write_cli_inputs(tmp_path, messy: bool = False) -> list[str]:
+def _write_cli_inputs(tmp_path, messy: bool = False, models: str = "") -> list[str]:
     """Write the fixture rows as CSVs (\\N for NULL) and the team map;
-    return the CLI argv that reads them. ``messy`` reorders the results
-    columns, puts an unconsumed string column between consumed ones in
-    both files, and sets one events measure cell to ``n/a``."""
+    return the CLI argv that reads them and fits ``models``. ``messy``
+    reorders the results columns, puts an unconsumed string column
+    between consumed ones in both files, and sets one events measure
+    cell to ``n/a``."""
     results_rows, events_rows = _gen_fixture()
     tables = {
         "results": (RESULTS_COLS, results_rows),
@@ -209,7 +210,7 @@ def _write_cli_inputs(tmp_path, messy: bool = False) -> list[str]:
         argv += [f"--{name}", path]
     team_map = tmp_path / "teams.json"
     team_map.write_text(json.dumps(TEAM_MAP))
-    return argv + ["--team-map", str(team_map), "--models", ""]
+    return argv + ["--team-map", str(team_map), "--models", models]
 
 
 def _with_note(cols: list[str], rows: list[tuple], at: int):
@@ -239,17 +240,23 @@ def _summary_counts(summary: dict) -> dict[str, int]:
     return {k: summary[k] for k in ("game_team_rows", "matchups", "train", "test")}
 
 
-def test_cli_releases_its_cache(spark, tmp_path):
+@pytest.mark.parametrize("models", [pytest.param("", id="none"), "lr"])
+def test_cli_releases_its_cache(spark, tmp_path, models):
     """The CLI runs the fixture end to end from CSVs (\\N sentinels,
-    messy names, a JSON team map) and leaves nothing cached behind."""
+    messy names, a JSON team map), fitting and evaluating ``models``,
+    and leaves nothing cached behind."""
     from bigdatafinalproject_hockey_spark.__main__ import main
 
     spark.catalog.clearCache()
-    summary = main(_write_cli_inputs(tmp_path), spark=spark)
+    summary = main(_write_cli_inputs(tmp_path, models=models), spark=spark)
     counts = _summary_counts(summary)
     assert counts == _fixture_counts()
     assert counts["test"] > 0
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert list(summary["models"]) == ([models] if models else [])
+    for metrics in summary["models"].values():
+        assert sorted(metrics) == ["accuracy", "auc", "f1", "precision", "recall"]
+        assert all(0.0 <= v <= 1.0 for v in metrics.values()), metrics
 
 
 def test_cli_reads_messy_csvs_typed(spark, tmp_path):
