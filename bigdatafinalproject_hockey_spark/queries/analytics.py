@@ -24,8 +24,6 @@ from bigdatafinalproject_hockey_spark.functions.numeric import (
 )
 from bigdatafinalproject_hockey_spark.queries.base import register
 
-TMP_DIR = "/root/repo/.tmp"
-
 _EVENT_TYPES = ["click", "view", "purchase", "signup", "error"]
 
 
@@ -848,19 +846,14 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: per iteration one join keyed on the edge source and
     one aggregate keyed on the destination — the standard Pregel-as-
     dataflow layout. The degree-annotated edge table ``(s1, s2, d)``
-    is a bucketed INGEST (VERDICT r4 item 6): derived once per
-    lineitem source version, written sorted+bucketed on ``s1``
-    (operators/bucketing), so each of the three iterations joins the
+    is a bucketed INGEST: derived once per lineitem source version,
+    written sorted+bucketed on ``s1`` to the sidecar store
+    (operators/bucketing.cached_bucketed), so each of the three iterations joins the
     rank vector against co-partitioned edge files with NO edge-side
     Exchange and no re-derivation — only the small rank/contribution
     frames move per step. Deep iteration counts additionally
     localCheckpoint every ~10 steps to truncate lineage, as
     dedup/components.py does."""
-    tag = "".join(
-        c if c.isalnum() else "_" for c in sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    )
-    table = f"graph_supplier_edges_{tag}"
-    st = os.stat(os.path.join(sf_dir, "lineitem.parquet"))
     li = load_table(spark, "lineitem", sf_dir).select("l_orderkey", "l_suppkey")
     a = li.alias("a")
     b = li.alias("b")
@@ -874,16 +867,16 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     outdeg = edges.groupBy("s1").agg(F.count(F.lit(1)).alias("d"))
     # the ingest job (lineitem self-join + degree join) executes
-    # inside write_bucketed — surface its plan to the audit
+    # inside the sidecar build — surface its plan to the audit
     capture("edges_ingest", edges.join(outdeg, "s1"))
-    bucket_ops.write_bucketed(
+    table = bucket_ops.cached_bucketed(
         edges.join(outdeg, "s1"),
-        table,
+        "graph_supplier_edges",
+        [os.path.join(sf_dir, "lineitem.parquet")],
+        "v1",
         ["s1"],
         16,
-        path=os.path.join(TMP_DIR, table),
         sort_cols=["s1"],
-        source_token=f"{st.st_size}:{st.st_mtime_ns}",
     )
     edges_d = spark.table(table)
     nodes = load_table(spark, "supplier", sf_dir).select(

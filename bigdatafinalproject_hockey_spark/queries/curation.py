@@ -17,6 +17,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from bigdatafinalproject_hockey_spark import sidecar
 from bigdatafinalproject_hockey_spark.catalog import SCHEMAS, load_table
 from bigdatafinalproject_hockey_spark.dedup.exact import dedup_incremental
 from bigdatafinalproject_hockey_spark.dedup.minhash import shingles_expr
@@ -38,8 +39,6 @@ from bigdatafinalproject_hockey_spark.queries.base import register
 _SQL_TOKS = (
     "list_filter(string_split_regex(lower({c}), '[^a-z0-9]+'), x -> x <> '')"
 )
-
-TMP_DIR = "/root/repo/.tmp"
 
 
 # ---------------------------------------------------------------------------
@@ -1807,7 +1806,7 @@ def q_stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     return foreach_batch_upsert(
         spark,
         stream.select("event_id", "ts", "user_id", "event_type", "value"),
-        sink_path=os.path.join(TMP_DIR, "upsert_sink_events"),
+        sink_path=os.path.join(sidecar.scratch("upsert_events"), "sink"),
         key_cols=["event_id"],
     )
 
@@ -1832,8 +1831,8 @@ def q_sink_parquet_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     untouched; the file-count collapse is asserted in unit tests."""
     from bigdatafinalproject_hockey_spark.sources.parquet import compact_parquet
 
-    src = os.path.join(TMP_DIR, "compact_src_documents")
-    dst = os.path.join(TMP_DIR, "compact_dst_documents")
+    work = sidecar.scratch("compact_documents")
+    src, dst = os.path.join(work, "src"), os.path.join(work, "dst")
     docs = load_table(spark, "documents", sf_dir)
     docs.repartition(64).write.mode("overwrite").parquet(src)
     return compact_parquet(spark, src, dst, target_file_bytes=128 * 1024 * 1024)
@@ -1852,7 +1851,7 @@ def q_scan_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     must survive losslessly against the parquet original."""
     from bigdatafinalproject_hockey_spark.sources.orc import scan_orc, sink_orc
 
-    path = os.path.join(TMP_DIR, "orc_roundtrip_documents")
+    path = sidecar.scratch("orc_roundtrip_documents")
     df = load_table(spark, "documents", sf_dir)
     sink_orc(df, path)
     return scan_orc(spark, path, SCHEMAS["documents"])

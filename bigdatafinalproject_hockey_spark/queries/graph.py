@@ -26,8 +26,6 @@ from bigdatafinalproject_hockey_spark.operators import bucketing as bucket_ops
 from bigdatafinalproject_hockey_spark.plancapture import capture
 from bigdatafinalproject_hockey_spark.queries.base import register
 
-TMP_DIR = "/root/repo/.tmp"
-
 # Shared CTE head: canonical (p1 < p2) part co-purchase edges with
 # >= 2 co-occurring LINE-ITEM PAIRS, exactly mirroring
 # _copurchase_edges below. (COUNT(*) counts lineitem pairs, not
@@ -71,41 +69,35 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def undirected_edges_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The UNDIRECTED co-purchase edge table ``(s, d)`` as a bucketed
-    INGEST (VERDICT r4 item 6): the lineitem self-join + pair
-    aggregate runs once per lineitem source version and lands as a
-    parquet table bucketed (and sorted) on ``s`` — every graph query
-    after that reads materialized edges instead of re-deriving them,
-    and every join or aggregate keyed on ``s`` rides the bucket
-    layout with NO edge-side Exchange (plan-locked in
-    tests/test_plans.py::test_graph_edges_bucketed_ingest).
+    INGEST: the lineitem self-join + pair aggregate runs once per
+    lineitem source version and lands as a parquet table bucketed (and
+    sorted) on ``s`` — every graph query after that reads materialized
+    edges instead of re-deriving them, and every join or aggregate
+    keyed on ``s`` rides the bucket layout with NO edge-side Exchange
+    (plan-locked in tests/test_plans.py::test_graph_edges_bucketed_ingest).
 
-    This is the deployment shape the round-4 docstrings promised: at
-    100 TB the edge derivation is the expensive pass (a fact-table
+    At 100 TB the edge derivation is the expensive pass (a fact-table
     self-join), so it must be paid at ingest and amortized across
     pagerank iterations, BFS rounds, and triangle wedge joins — not
-    per query. Idempotent across sessions via the size+mtime source
-    token (operators/bucketing.write_bucketed); a refreshed lineitem
-    re-ingests, an unchanged one re-declares the existing files."""
-    tag = "".join(
-        c if c.isalnum() else "_" for c in sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    )
-    table = f"graph_copurchase_und_{tag}"
-    st = os.stat(os.path.join(sf_dir, "lineitem.parquet"))
+    per query. The files live in the sidecar store
+    (operators/bucketing.cached_bucketed), reused across sessions; a
+    refreshed lineitem re-ingests, an unchanged one re-declares the
+    existing files."""
     edges = _copurchase_edges(spark, sf_dir)
     und = edges.select(F.col("p1").alias("s"), F.col("p2").alias("d")).unionByName(
         edges.select(F.col("p2").alias("s"), F.col("p1").alias("d"))
     )
     # the ingest job's plan never reaches the returned DataFrame (it
-    # executes inside write_bucketed) — surface it to the audit
+    # executes inside the sidecar build) — surface it to the audit
     capture("edges_ingest", und)
-    bucket_ops.write_bucketed(
+    table = bucket_ops.cached_bucketed(
         und,
-        table,
+        "graph_copurchase_und",
+        [os.path.join(sf_dir, "lineitem.parquet")],
+        "v1",
         ["s"],
         16,
-        path=os.path.join(TMP_DIR, table),
         sort_cols=["s"],
-        source_token=f"{st.st_size}:{st.st_mtime_ns}",
     )
     return spark.table(table)
 

@@ -20,58 +20,26 @@ correctness one.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def _source_fingerprint(parquet_path: str) -> str:
-    """size+mtime fingerprint of the source parquet (file or dir of
-    part files) — cheap, and changes whenever the driver regenerates
-    testdata in place."""
-    paths = []
-    if os.path.isdir(parquet_path):
-        for root, _dirs, files in os.walk(parquet_path):
-            paths += [os.path.join(root, f) for f in files if f.endswith(".parquet")]
-    else:
-        paths = [parquet_path]
-    parts = []
-    for q in sorted(paths):
-        st = os.stat(q)
-        parts.append(f"{os.path.basename(q)}:{st.st_size}:{st.st_mtime_ns}")
-    return "|".join(parts)
-
-
 def stage_payload_files(parquet_path: str, out_dir: str) -> None:
-    """Materialize each document's utf-8 text as ``doc_<id>.bin``
-    (once, atomically via a done-marker): the on-disk stand-in for a
-    media directory, derived from the documents fixture so the scan
-    can be value-checked against the table it came from.
-
-    The done-marker records a size+mtime fingerprint of the source
-    parquet (ADVICE r4): a regenerated documents table at the same
-    path invalidates the staging instead of silently serving stale
-    blobs against fresh oracle data."""
+    """Write each document's utf-8 text as ``doc_<id>.bin`` into the
+    empty directory ``out_dir``: the on-disk stand-in for a media
+    directory, derived from the documents fixture so the scan can be
+    value-checked against the table it came from. Callers build it
+    through the sidecar store, which keys the directory on the source
+    files, so a regenerated documents table gets fresh blobs."""
     import pyarrow.parquet as pq
 
-    done = os.path.join(out_dir, "_STAGED")
-    fingerprint = _source_fingerprint(parquet_path)
-    if os.path.exists(done):
-        with open(done) as f:
-            if f.read() == fingerprint:
-                return
-    if os.path.isdir(out_dir):
-        shutil.rmtree(out_dir)
-    os.makedirs(out_dir)
     tbl = pq.read_table(parquet_path, columns=["doc_id", "text"])
     for doc_id, text in zip(
         tbl.column("doc_id").to_pylist(), tbl.column("text").to_pylist()
     ):
         with open(os.path.join(out_dir, f"doc_{doc_id}.bin"), "wb") as f:
             f.write(text.encode("utf-8"))
-    with open(done, "w") as f:
-        f.write(fingerprint)
 
 
 def scan_binary_files(spark: SparkSession, dir_path: str) -> DataFrame:

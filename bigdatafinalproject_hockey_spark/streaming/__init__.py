@@ -28,16 +28,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from bigdatafinalproject_hockey_spark.catalog import events_ts_encoding
+from bigdatafinalproject_hockey_spark import sidecar
+from bigdatafinalproject_hockey_spark.catalog import _footer_paths, events_ts_encoding
 from bigdatafinalproject_hockey_spark.functions.numeric import cents_expr
 
 
 def _events_stream_source(spark: SparkSession, sf_dir: str):
     """(schema, decode) for streaming events.parquet, derived from the
     actual parquet footer — the ts encoding has drifted across testdata
-    generations (round 1: int64 nanos; round 2+: timestamp[us]), and a
-    pinned schema silently mis-scales event times when it drifts
-    (VERDICT r2 item 2). FileStreamSource requires an explicit schema,
+    generations (first int64 nanos, later timestamp[us]), and a pinned
+    schema silently mis-scales event times when it drifts.
+    FileStreamSource requires an explicit schema,
     so build it to match the footer and pair it with the matching
     decode step."""
     enc = events_ts_encoding(os.path.join(sf_dir, "events.parquet"))
@@ -70,51 +71,26 @@ def _events_stream_source(spark: SparkSession, sf_dir: str):
     return schema, decode
 
 
-_TMP = "/root/repo/.tmp"
-
-
-def _symlink_fresh(src: str, link: str) -> None:
-    """(Re)point a staging symlink. ``os.path.exists`` is False for a
-    DANGLING symlink (stale .tmp after its target moved), which would
-    make a bare create raise FileExistsError — check lexists and
-    re-link instead."""
-    if os.path.lexists(link):
-        if os.path.exists(link) and os.path.realpath(link) == os.path.realpath(src):
-            return
-        os.unlink(link)
-    os.symlink(src, link)
-
-
 def _stage_source_links(stage: str, sources: dict[str, str]) -> None:
-    """Make ``stage`` contain EXACTLY the symlinks for ``sources``
-    ({link-prefix: table path}), flat — FileStreamSource monitors a
-    directory without recursing, and a source may be a single file
-    (driver testdata) or a directory of part files (any
-    engine-written table). Stale symlinks from an earlier staging
-    layout are removed (a leftover link would double-ingest the
-    data); regular files (e.g. a staged flush batch) are kept."""
-    from bigdatafinalproject_hockey_spark.catalog import _footer_paths
-
-    os.makedirs(stage, exist_ok=True)
-    expected = {}
+    """Fill the empty directory ``stage`` with one symlink per part
+    file of each source ({link-prefix: table path}), flat —
+    FileStreamSource monitors a directory without recursing, and a
+    source may be a single file (driver testdata) or a directory of
+    part files (any engine-written table). No data is copied."""
     for prefix, src in sources.items():
         for i, part in enumerate(_footer_paths(src)):
-            expected[f"{prefix}_{i:05d}.parquet"] = part
-    for name in os.listdir(stage):
-        p = os.path.join(stage, name)
-        if os.path.islink(p) and name not in expected:
-            os.unlink(p)
-    for name, part in expected.items():
-        _symlink_fresh(part, os.path.join(stage, name))
+            os.symlink(
+                os.path.abspath(part), os.path.join(stage, f"{prefix}_{i:05d}.parquet")
+            )
 
 
 def _stage_stream_dir(sf_dir: str) -> str:
     """FileStreamSource wants a DIRECTORY to monitor; stage the events
-    table's file(s) as symlinks (no copy)."""
-    tag = sf_dir.rstrip("/").replace("/", "_").strip("_")
-    stage = f"{_TMP}/stream_src_{tag}"
-    _stage_source_links(stage, {"events": os.path.join(sf_dir, "events.parquet")})
-    return stage
+    table's file(s) as symlinks in the sidecar store."""
+    src = os.path.join(sf_dir, "events.parquet")
+    return sidecar.cached(
+        "stream_src", [src], "v1", lambda d: _stage_source_links(d, {"events": src})
+    )
 
 
 def read_events_stream(
@@ -415,10 +391,13 @@ def read_events_stream_replayed(
     re-delivers whole partitions (a rewound kafka offset, a re-run
     ingest job)."""
     schema, decode = _events_stream_source(spark, sf_dir)
-    tag = sf_dir.rstrip("/").replace("/", "_").strip("_")
-    stage = f"{_TMP}/stream_replay{copies}_{tag}"
     src = os.path.join(sf_dir, "events.parquet")
-    _stage_source_links(stage, {f"events_{i}": src for i in range(copies)})
+    stage = sidecar.cached(
+        f"stream_replay{copies}",
+        [src],
+        "v1",
+        lambda d: _stage_source_links(d, {f"events_{i}": src for i in range(copies)}),
+    )
     raw = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -868,25 +847,14 @@ def read_events_stream_with_flush(
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from bigdatafinalproject_hockey_spark.catalog import (
-        _footer_paths,
-        events_ts_encoding,
-    )
-
     src = os.path.join(sf_dir, "events.parquet")
-    tag = sf_dir.rstrip("/").replace("/", "_").strip("_")
-    # The stage is keyed by the source's ts ENCODING as well as its
-    # path: a testdata regeneration that flips the encoding must get a
-    # fresh stage (data links AND flush file), or the persisted flush
-    # file's physical type would no longer match the forced schema.
-    stage = f"{_TMP}/stream_flush_{tag}_{events_ts_encoding(src)}"
-    _stage_source_links(stage, {"events": src})
-    flush = os.path.join(stage, "zz_flush.parquet")
-    if not os.path.exists(flush):
+
+    def build(stage: str) -> None:
+        _stage_source_links(stage, {"events": src})
         schema = pq.read_schema(_footer_paths(src)[0])
         far = datetime.datetime(2035, 1, 1)
         ts_field = schema.field("ts")
-        if pa.types.is_integer(ts_field.type):  # round-1 nanos encoding
+        if pa.types.is_integer(ts_field.type):  # int64 nanos encoding
             ts_vals: list = [int(far.timestamp()) * 1_000_000_000] * 2
         else:
             ts_vals = [far, far]
@@ -901,13 +869,15 @@ def read_events_stream_with_flush(
             },
             schema=schema,
         )
-        pq.write_table(table, flush + ".tmp")
-        os.replace(flush + ".tmp", flush)
-    # FileStreamSource batches oldest-mtime-first: the flush file is
-    # written after the (pre-existing) testdata file, but pin it far
-    # in the future so re-staging after a testdata refresh can never
-    # reorder it ahead of the data.
-    os.utime(flush, (4102444800, 4102444800))  # 2100-01-01
+        flush = os.path.join(stage, "zz_flush.parquet")
+        pq.write_table(table, flush)
+        # FileStreamSource batches oldest-mtime-first: pin the flush
+        # file far in the future so it always follows the data.
+        os.utime(flush, (4102444800, 4102444800))  # 2100-01-01
+
+    # The flush file copies the source's ts encoding; the input
+    # fingerprint gives a regenerated source a fresh stage.
+    stage = sidecar.cached("stream_flush", [src], "v1", build)
     schema_spark, decode = _events_stream_source(spark, sf_dir)
     raw = (
         spark.readStream.schema(schema_spark)

@@ -115,7 +115,7 @@ def test_training_mix_quota_is_binding(spark, monkeypatch):
     assert total > quota - 100  # within one doc of the boundary
 
 
-def test_compaction_collapses_small_files(spark):
+def test_compaction_collapses_small_files(spark, tmp_path):
     """64 scattered files must compact into ~ceil(bytes/target) files
     (here: 1), preserving every row."""
     import glob
@@ -124,8 +124,8 @@ def test_compaction_collapses_small_files(spark):
     from bigdatafinalproject_hockey_spark.sources.parquet import compact_parquet
 
     docs = load_table(spark, "documents", "/root/testdata/sf0.001")
-    src = "/root/repo/.tmp/compact_unit_src"
-    dst = "/root/repo/.tmp/compact_unit_dst"
+    src = str(tmp_path / "compact_unit_src")
+    dst = str(tmp_path / "compact_unit_dst")
     docs.repartition(64).write.mode("overwrite").parquet(src)
     assert len(glob.glob(f"{src}/*.parquet")) == 64
     out = compact_parquet(spark, src, dst, target_file_bytes=128 * 1024 * 1024)
@@ -133,7 +133,7 @@ def test_compaction_collapses_small_files(spark):
     assert out.count() == docs.count()
 
 
-def test_foreach_batch_upsert_replay_invariant(spark):
+def test_foreach_batch_upsert_replay_invariant(spark, tmp_path):
     """3× replay must land the same table as 2× replay: the anti-join
     makes re-delivery a no-op regardless of how often the source
     rewinds."""
@@ -150,7 +150,7 @@ def test_foreach_batch_upsert_replay_invariant(spark):
         t = foreach_batch_upsert(
             spark,
             s,
-            sink_path=f"/root/repo/.tmp/upsert_replay{copies}",
+            sink_path=str(tmp_path / f"upsert_replay{copies}"),
             key_cols=["event_id"],
         )
         out[copies] = t.count()

@@ -23,14 +23,11 @@ from bigdatafinalproject_hockey_spark.multimodal import (
 from bigdatafinalproject_hockey_spark.operators.sampling import sample_by_key
 from bigdatafinalproject_hockey_spark.sources.csv import scan_csv
 
-TMP = "/root/repo/.tmp"
-
 
 def test_scan_csv_null_sentinels(spark, tmp_path):
     """\\N and empty fields must both land as real NULLs with explicit
     schema (the reference's events-file quirk, FIXTURES.md §A1)."""
-    p = os.path.join(TMP, "null_sentinel.csv")
-    os.makedirs(TMP, exist_ok=True)
+    p = os.path.join(tmp_path, "null_sentinel.csv")
     with open(p, "w") as f:
         f.write("id,name,score\n")
         f.write("1,alice,3.5\n")
@@ -206,7 +203,7 @@ def test_agg_approx_error_bounds(spark, sf_dir):
             assert abs(got - want) <= 0.05 * abs(want) + 1e-9
 
 
-def test_partitioned_sink_prunes(spark, sf_dir):
+def test_partitioned_sink_prunes(spark, sf_dir, tmp_path):
     """A filter on the hive partition key must reach the scan as a
     PartitionFilter (planning-time directory pruning), not a data
     filter."""
@@ -215,7 +212,7 @@ def test_partitioned_sink_prunes(spark, sf_dir):
         sink_parquet,
     )
 
-    path = os.path.join(TMP, "prune_check")
+    path = os.path.join(tmp_path, "prune_check")
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet").withColumn(
         "order_year", F.year("o_orderdate")
     )
@@ -231,21 +228,20 @@ def test_partitioned_sink_prunes(spark, sf_dir):
     assert "order_year" in plan.split("PartitionFilters")[1].split("]")[0]
 
 
-def test_bucketed_join_has_no_shuffle(spark, sf_dir):
+def test_bucketed_join_has_no_shuffle(spark, sf_dir, tmp_path):
     """Two tables bucketed on the join key with equal bucket counts
     must sort-merge join with ZERO exchanges — the co-located join
     layout for repeated big⋈big joins."""
     from bigdatafinalproject_hockey_spark.operators.bucketing import write_bucketed
 
-    import shutil
-
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    for t in ("b_orders", "b_lineitem"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(f"/root/repo/spark-warehouse/{t}", ignore_errors=True)
-    write_bucketed(orders, "b_orders", ["o_orderkey"], 4, sort_cols=["o_orderkey"])
-    write_bucketed(li, "b_lineitem", ["l_orderkey"], 4, sort_cols=["l_orderkey"])
+    write_bucketed(
+        orders, "b_orders", ["o_orderkey"], 4, str(tmp_path / "b_orders"), ["o_orderkey"]
+    )
+    write_bucketed(
+        li, "b_lineitem", ["l_orderkey"], 4, str(tmp_path / "b_lineitem"), ["l_orderkey"]
+    )
     # force the sort-merge path: at test scale the planner would rather
     # broadcast the small side (which ignores bucketing entirely)
     saved = {
@@ -1307,6 +1303,7 @@ def test_manifest_pruned_scan_opens_fewer_files(spark):
     scan's (pruning is sound, never semantic)."""
     from bigdatafinalproject_hockey_spark.operators import manifest as mf
     from bigdatafinalproject_hockey_spark.queries.scale import (
+        _orders_clustered,
         q_scan_files_pruned,
     )
 
@@ -1316,14 +1313,15 @@ def test_manifest_pruned_scan_opens_fewer_files(spark):
         (r.o_orderstatus, r.n_orders, r.revenue)
         for r in q_scan_files_pruned(spark, sf_dir).collect()
     }
-    manifest = spark.read.parquet("/root/repo/.tmp/orders_manifest_sf0_001")
+    data_path, man_path = _orders_clustered(spark, sf_dir)  # store hit
+    manifest = spark.read.parquet(man_path)
     n_total = manifest.count()
     lo = F.lit("1999-01-01").cast("timestamp")
     hi = F.lit("1999-06-30").cast("timestamp")
     _pruned, n_read = mf.scan_pruned(spark, manifest, "o_orderdate", lo, hi)
     assert n_total == 16
     assert n_read <= 6, f"pruning ineffective: {n_read}/{n_total} files"
-    full = spark.read.parquet("/root/repo/.tmp/orders_clustered_sf0_001")
+    full = spark.read.parquet(data_path)
     expect = {
         (r.o_orderstatus, r.n_orders, r.revenue)
         for r in (
@@ -1941,20 +1939,13 @@ def test_mv_join_view_store_is_contribution_log(spark):
     O(history) rewrite is a rebuild wearing an incremental costume).
     Pins: step dirs partition the view (sum of step rows == view
     rows, no overlap) and no single step dir holds the whole view."""
-    import glob as _glob
-    import os as _os
-
     from bigdatafinalproject_hockey_spark.queries import QUERIES
-    from bigdatafinalproject_hockey_spark.queries.scale import TMP_DIR
 
     sf_dir = "/root/testdata/sf0.001"
     view = QUERIES["mv_incremental_join"](spark, sf_dir)
     n_view = view.count()
     assert n_view > 0
-    tag = "".join(
-        c if c.isalnum() else "_" for c in sf_dir.rstrip("/").rsplit("/", 1)[-1]
-    )
-    step_dirs = sorted(_glob.glob(_os.path.join(TMP_DIR, f"mv_join_view_{tag}_s*")))
+    step_dirs = sorted({os.path.dirname(f) for f in view.inputFiles()})
     assert len(step_dirs) == 4  # steps 1..4 contribute; step 0 has no B side
     per_step = [spark.read.parquet(d).count() for d in step_dirs]
     assert sum(per_step) == n_view

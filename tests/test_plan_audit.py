@@ -25,7 +25,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # Eager-stage plans the audit must see (qname#label). Keep in sync
 # with the capture() call sites — this is the anti-rot lock.
 EXPECTED_CAPTURE_KEYS = {
-    # bucketed edge ingests (executed inside write_bucketed)
+    # bucketed ingests (executed inside the sidecar build)
     "dedup_semantic_scaled#keys_ingest",
     # row-group-clustered layout ingest (round 8)
     "scan_rowgroups_pruned#rowgroup_ingest",

@@ -80,10 +80,8 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 from bigdatafinalproject_hockey_spark.queries import ORACLE_SQL
-from bigdatafinalproject_hockey_spark.queries.scale import (
-    TMP_DIR,
-    _emb_signkeys_bucketed,
-)
+from bigdatafinalproject_hockey_spark import sidecar
+from bigdatafinalproject_hockey_spark.queries.scale import _emb_signkeys_bucketed
 from bigdatafinalproject_hockey_spark.similarity import (
     bucketed_ivf_assign_cte,
     bucketed_ivf_assign_cte_autokey,
@@ -134,13 +132,12 @@ def _midsize_fixture_dir() -> str:
     """A DETERMINISTIC ~16k-vector corpus (32 rotated disjoint-id
     copies of the sf0.01 embeddings) — big enough that the width rule
     leaves the 8-bit floor (C = 320 -> 9 bits). Content is a pure
-    function of the source table, built once under TMP_DIR so the key
-    sidecar ingest stays idempotent across test runs."""
-    d = os.path.join(TMP_DIR, "fixture_embmid")
-    path = os.path.join(d, "embeddings.parquet")
-    if not os.path.exists(path):
-        os.makedirs(d, exist_ok=True)
-        src = pq.read_table(os.path.join(SF_DRIVER, "embeddings.parquet"))
+    function of the source table, built once in the sidecar store so
+    the key sidecar ingest stays idempotent across test runs."""
+    src_path = os.path.join(SF_DRIVER, "embeddings.parquet")
+
+    def build(d: str) -> None:
+        src = pq.read_table(src_path)
         vec = src.column("vec_id").to_pylist()
         emb = src.column("embedding").to_pylist()
         lab = src.column("label").to_pylist()
@@ -160,10 +157,9 @@ def _midsize_fixture_dir() -> str:
                 "label": pa.array(labs, pa.int32()),
             }
         )
-        tmp = path + ".tmp"
-        pq.write_table(t, tmp)
-        os.replace(tmp, path)
-    return d
+        pq.write_table(t, os.path.join(d, "embeddings.parquet"))
+
+    return sidecar.cached("fixture_embmid", [src_path], "v1", build)
 
 
 def test_autokey_above_floor_matches_registered_oracle(spark):

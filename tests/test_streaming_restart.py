@@ -83,27 +83,41 @@ def test_left_outer_flush_rerun_idempotent(spark):
     assert all(r[0] >= 0 for r in a), "flush sentinel leaked into output"
 
 
-def test_stage_source_links_owns_directory(tmp_path):
-    """_stage_source_links must leave the stage dir with EXACTLY the
-    expected data links: stale symlinks from an older staging layout
-    are removed (a leftover would double-ingest every event), dangling
-    links are re-pointed instead of crashing, and regular files (the
-    staged flush batch) are preserved."""
-    from bigdatafinalproject_hockey_spark.streaming import _stage_source_links
+def test_stage_source_links_owns_directory(tmp_path, monkeypatch):
+    """A stream stage is a sidecar-store entry holding EXACTLY one flat
+    symlink per source part file (FileStreamSource does not recurse,
+    and an extra link would double-ingest every event): a single-file
+    source gives one link, a directory of part files one link per
+    part. A second call reuses the published entry."""
+    import shutil
 
-    src = "/root/testdata/sf0.001/events.parquet"
-    stage = str(tmp_path / "stage")
-    os.makedirs(stage)
-    os.symlink(src, os.path.join(stage, "events.parquet"))  # old layout
-    os.symlink("/nonexistent/x.parquet", os.path.join(stage, "events_00000.parquet"))
-    with open(os.path.join(stage, "zz_flush.parquet"), "wb") as f:
-        f.write(b"keep me")
-    _stage_source_links(stage, {"events": src})
-    names = sorted(os.listdir(stage))
-    assert names == ["events_00000.parquet", "zz_flush.parquet"]
+    from bigdatafinalproject_hockey_spark import sidecar
+    from bigdatafinalproject_hockey_spark.streaming import (
+        _stage_source_links,
+        _stage_stream_dir,
+    )
+
+    monkeypatch.setattr(sidecar, "ROOT", str(tmp_path / "store"))
+    src = os.path.join(SF_DIR, "events.parquet")
+    stage = _stage_stream_dir(SF_DIR)
+    assert sorted(os.listdir(stage)) == ["events_00000.parquet"]
     assert os.path.realpath(os.path.join(stage, "events_00000.parquet")) == src
-    with open(os.path.join(stage, "zz_flush.parquet"), "rb") as f:
-        assert f.read() == b"keep me"
+    assert _stage_stream_dir(SF_DIR) == stage
+    assert os.listdir(sidecar.ROOT) == [os.path.basename(stage)]
+
+    table = tmp_path / "events_dir.parquet"
+    table.mkdir()
+    for i in range(2):
+        shutil.copyfile(src, table / f"part-{i}.parquet")
+    multi = tmp_path / "multi"
+    multi.mkdir()
+    _stage_source_links(str(multi), {"a": str(table), "b": src})
+    assert sorted(os.listdir(multi)) == [
+        "a_00000.parquet",
+        "a_00001.parquet",
+        "b_00000.parquet",
+    ]
+    assert os.path.realpath(multi / "a_00001.parquet") == str(table / "part-1.parquet")
 
 
 def test_upsert_crash_between_writes_then_replay(spark, tmp_path):
