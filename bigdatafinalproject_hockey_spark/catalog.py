@@ -3,8 +3,10 @@
 The reference reads its CSVs with ``inferSchema=true`` and then
 re-casts every consumed column (reference code/experiment.py:281-298,
 322-338). Inference costs an extra scan and is fragile at scale, so
-this engine pins every table to an explicit ``StructType`` and
-verifies the parquet footer schema against it at load.
+this engine pins every table to an explicit ``StructType``;
+``verify_contract`` checks a table's parquet footers against it.
+This module is the only one that knows how ``events.ts`` is encoded
+(``events_source``).
 
 Tables (TESTDATA.md): region nation customer supplier part orders
 lineitem events documents embeddings — one parquet file per table in
@@ -21,6 +23,8 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from bigdatafinalproject_hockey_spark.session import pin
 
 SCHEMAS: dict[str, T.StructType] = {
     "region": T.StructType(
@@ -142,8 +146,8 @@ def events_ts_encoding(path: str) -> str:
     (nanos-as-int64 in round 1, timestamp[us] in round 2); the loader
     branches on the footer instead of hard-coding either. Returns
     ``"nanos"`` (int64 raw nanos, or timestamp[ns] backed by int64 —
-    read via nanosAsLong) or ``"timestamp"`` (us/ms-precision
-    timestamp, or legacy INT96 — both read natively as TIMESTAMP).
+    read as a long) or ``"timestamp"`` (us/ms-precision timestamp, or
+    legacy INT96 — both read natively as a timestamp).
     """
     pf = pq.ParquetFile(_footer_paths(path)[0])
     t = pf.schema_arrow.field("ts").type
@@ -153,9 +157,8 @@ def events_ts_encoding(path: str) -> str:
         if t.unit != "ns":
             return "timestamp"
         # Arrow reports BOTH int64-nanos and legacy INT96 timestamps
-        # as timestamp[ns]; Spark's nanosAsLong applies only to the
-        # former (an INT96 file read with nanosAsLong=true still
-        # yields TIMESTAMP, and the nanos decode would then crash).
+        # as timestamp[ns]; only the former reads as a long (an INT96
+        # file read under a long schema fails).
         # Disambiguate on the parquet PHYSICAL type — Spark writes
         # INT96 by default, so any Spark-written events table lands
         # here.
@@ -172,10 +175,10 @@ def verify_contract(name: str, path: str) -> None:
     match ``SCHEMAS[name]`` column-for-column, with an explicit
     allowance for the known events.ts encoding variants. A future
     silent encoding drift — including drift between part files of one
-    table, which a first-part-only check would miss (ADVICE r3
-    item 3) — fails here, loudly, instead of deep inside 20 queries
-    (VERDICT r2 item 6). Integer widths are checked exactly
-    (IntegerType ⇒ int32), not by parquet integer family."""
+    table, which a first-part-only check would miss — fails here,
+    loudly, instead of deep inside 20 queries. Integer widths are
+    checked exactly (IntegerType ⇒ int32), not by parquet integer
+    family."""
     expect = SCHEMAS[name]
     want_names = [f.name for f in expect.fields]
     for part in _footer_paths(path):
@@ -209,36 +212,55 @@ def verify_contract(name: str, path: str) -> None:
                 )
 
 
+def events_source(path: str):
+    """(read schema, decode) for the events table at ``path``.
+
+    ``events.ts`` is encoded differently across testdata generations
+    (int64 nanos, then timestamp[us] NTZ), so the schema's ``ts``
+    follows the footer: a long for ``"nanos"``, ``timestamp_ntz`` for
+    ``"timestamp"``. ``decode`` turns either into a session-TZ (UTC)
+    timestamp with the same wall-clock values DuckDB reads. Batch and
+    stream readers both read with the schema and then decode; the
+    explicit schema also spares the reader a footer inference."""
+    if events_ts_encoding(path) == "nanos":
+        ts_type: T.DataType = T.LongType()
+
+        def decode(df: DataFrame) -> DataFrame:
+            return df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+
+    else:
+        ts_type = T.TimestampNTZType()
+
+        def decode(df: DataFrame) -> DataFrame:
+            return df.withColumn("ts", F.col("ts").cast("timestamp"))
+
+    schema = T.StructType(
+        [
+            T.StructField(f.name, ts_type) if f.name == "ts" else f
+            for f in SCHEMAS["events"].fields
+        ]
+    )
+    return schema, decode
+
+
 def load_table(spark: SparkSession, name: str, sf_dir: str) -> DataFrame:
     """Load one synthetic table as a DataFrame.
 
-    Parquet scans carry their own schema; we don't force ours on the
-    reader (that would break vectorized reads on mismatch) but the
-    parquet schema is expected to equal ``SCHEMAS[name]`` up to
-    timestamp precision. Column pruning + predicate pushdown come free
-    from expressing queries declaratively downstream.
+    ``events`` is read with ``events_source``'s schema and decoded.
+    Every other table carries its schema in the parquet footer, which
+    is expected to equal ``SCHEMAS[name]`` up to timestamp precision;
+    forcing ours on the reader would break vectorized reads on a
+    mismatch. Column pruning + predicate pushdown come free from
+    expressing queries declaratively downstream.
     """
     if name not in SCHEMAS:
         raise KeyError(f"unknown table {name!r}; have {sorted(SCHEMAS)}")
     # The caller may hand us an externally-built session (the driver
     # does); pin the session timezone so timestamp formatting/compare
     # is stable regardless of host TZ.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    pin(spark)
     path = f"{sf_dir}/{name}.parquet"
     if name == "events":
-        # events.ts encoding drifts across testdata generations —
-        # branch on the footer (round 1: int64 nanos; round 2+:
-        # timestamp[us]). Match DuckDB's reader in both cases.
-        if events_ts_encoding(path) == "nanos":
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            df = spark.read.parquet(path)
-            return df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
-        df = spark.read.parquet(path)
-        if isinstance(df.schema["ts"].dataType, T.TimestampNTZType):
-            # tz-naive micros: same wall-clock values DuckDB reads;
-            # cast to session-TZ (UTC) timestamp so downstream window
-            # / watermark ops and the oracle agree on instants.
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        return df
+        schema, decode = events_source(path)
+        return decode(spark.read.schema(schema).parquet(path))
     return spark.read.parquet(path)

@@ -42,29 +42,6 @@ def connected_components(
     component_id) where component_id is the minimum node id reachable.
     Deterministic — oracle-checkable against a recursive-CTE closure.
     """
-    # The loop persists each round's labels, and by default AQE may not
-    # re-partition cached plans — so every round would shuffle at the
-    # static spark.sql.shuffle.partitions even when the label table is
-    # tiny. Allowing cached-plan repartitioning lets AQE coalesce each
-    # round's shuffles to the data's actual size. Restored to its prior
-    # value after the loop — a shared session's other plans must not
-    # inherit it.
-    conf = edges.sparkSession.conf
-    conf_key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-    prior = conf.get(conf_key, None)
-    conf.set(conf_key, "true")
-    try:
-        return _propagate_min_labels(edges, src, dst, max_iter)
-    finally:
-        if prior is None:
-            conf.unset(conf_key)
-        else:
-            conf.set(conf_key, prior)
-
-
-def _propagate_min_labels(
-    edges: DataFrame, src: str, dst: str, max_iter: int
-) -> DataFrame:
     from bigdatafinalproject_hockey_spark.plancapture import capture
 
     fwd = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))

@@ -803,20 +803,8 @@ def q_stream_late_data_accounting(spark: SparkSession, sf_dir: str) -> DataFrame
     stage = sidecar.cached(
         "late_acct_src", [os.path.join(sf_dir, "events.parquet")], "v1", build
     )
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
     stream = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(SCHEMAS["events"])
         .option("maxFilesPerTrigger", 1)
         .parquet(stage)
     )

@@ -30,6 +30,7 @@ from bigdatafinalproject_hockey_spark.operators import (
 from bigdatafinalproject_hockey_spark import plancapture, sidecar
 from bigdatafinalproject_hockey_spark.plancapture import capture
 from bigdatafinalproject_hockey_spark.queries.base import register
+from bigdatafinalproject_hockey_spark.session import with_conf
 from bigdatafinalproject_hockey_spark.functions.vectors import (
     as_double_array,
     cosine_expr,
@@ -1856,27 +1857,20 @@ def _register_stream_stateful_totals_tws() -> None:
         streaming.stateful_user_totals_tws for the full method);
         registered only where the environment can start the TWS
         worker (``tws_available``). Requires the RocksDB state store
-        provider, set for the stream's run and restored after."""
+        provider, which the stream gets in a cloned session."""
         from bigdatafinalproject_hockey_spark.streaming import (
             stateful_user_totals_tws,
         )
 
-        key = "spark.sql.streaming.stateStore.providerClass"
-        old = spark.conf.get(key, None)
-        spark.conf.set(
-            key,
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
+        totals = stateful_user_totals_tws(read_events_stream(spark, sf_dir))
+        rocksdb = {
+            "spark.sql.streaming.stateStore.providerClass":
+                "org.apache.spark.sql.execution.streaming.state."
+                "RocksDBStateStoreProvider",
+        }
+        return run_stream_to_table(
+            spark, with_conf(totals, rocksdb), output_mode="update"
         )
-        try:
-            stream = read_events_stream(spark, sf_dir)
-            totals = stateful_user_totals_tws(stream)
-            return run_stream_to_table(spark, totals, output_mode="update")
-        finally:
-            if old is not None:
-                spark.conf.set(key, old)
-            else:
-                spark.conf.unset(key)
 
 
 _register_stream_stateful_totals_tws()

@@ -7,6 +7,11 @@ replacement for a hand-tuned partition count), pin the session
 timezone to UTC (so results are comparable against UTC-naive engines
 like DuckDB), and enable Arrow for any pandas exchange.
 
+This is the only module that writes session conf. ``pin`` brings a
+session built elsewhere (the driver's plain one) to ``PINNED_CONF``;
+``with_conf`` runs a frame under extra conf in a clone of its session,
+so the caller's session is never written at call time.
+
 At cluster scale the same builder works unchanged: ``master`` is left
 to spark-submit/cluster config unless explicitly given.
 """
@@ -15,9 +20,13 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+# Conf every result depends on. Deterministic cross-engine comparison:
+# DuckDB is UTC-naive.
+PINNED_CONF = {"spark.sql.session.timeZone": "UTC"}
 
 
 def get_session(
@@ -45,19 +54,17 @@ def get_session(
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
-        # Round 13 (guide §2.2/§2.5): AQE's coalescing floor decides
-        # the smallest partition worth a task. The 1 MB default
-        # assumes scan-cheap rows; this engine's window/agg stages
-        # are EXPRESSION-heavy (a 1 MB compressed shuffle slice can
-        # be seconds of single-core compute), so the default floor
-        # serialized small-but-expensive stages onto one core
-        # (measured: events_anomaly_mad 1.01 s -> 0.60 s at sf0.1
-        # with a 128k floor). At production shuffle sizes the floor
+        # AQE's coalescing floor decides the smallest partition worth
+        # a task. The 1 MB default assumes scan-cheap rows; this
+        # engine's window/agg stages are EXPRESSION-heavy (a 1 MB
+        # compressed shuffle slice can be seconds of single-core
+        # compute), so the default floor serialized small-but-expensive
+        # stages onto one core (measured: events_anomaly_mad 1.01 s ->
+        # 0.60 s at sf0.1 with a 128k floor). At production shuffle sizes the floor
         # never binds — the advisory partition size governs — so the
         # 100 TB plan shape is unchanged.
         "spark.sql.adaptive.coalescePartitions.minPartitionSize": "128k",
-        # Deterministic cross-engine comparison (DuckDB is UTC-naive).
-        "spark.sql.session.timeZone": "UTC",
+        **PINNED_CONF,
         # Arrow for pandas_udf / toPandas / createDataFrame paths.
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         # Write micros, not legacy INT96: other readers (arrow, duckdb)
@@ -75,3 +82,32 @@ def get_session(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def pin(spark: SparkSession) -> None:
+    """Set each ``PINNED_CONF`` entry the session does not already
+    hold. A ``get_session`` session is never written; any other is
+    written once, always to the same values."""
+    for key, value in PINNED_CONF.items():
+        if spark.conf.get(key, None) != value:
+            spark.conf.set(key, value)
+
+
+def with_conf(df: DataFrame, conf: dict[str, str]) -> DataFrame:
+    """``df``'s plan bound to a clone of its session that also holds
+    ``conf``; ``df``'s own session is left as it was.
+
+    The clone copies the session's runtime conf, temp views and
+    functions, and shares its SparkContext and cache, so a cached
+    input is still read from the cache. Work derived from the result,
+    including a stream started from it, runs in the clone.
+    """
+    parent = df.sparkSession
+    jclone = parent._jsparkSession.cloneSession()
+    clone = SparkSession(parent.sparkContext, jclone)
+    for key, value in conf.items():
+        clone.conf.set(key, value)
+    jdf = parent._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        jclone, df._jdf.logicalPlan()
+    )
+    return DataFrame(jdf, clone)

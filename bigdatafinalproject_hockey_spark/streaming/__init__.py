@@ -29,46 +29,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from bigdatafinalproject_hockey_spark import sidecar
-from bigdatafinalproject_hockey_spark.catalog import _footer_paths, events_ts_encoding
+from bigdatafinalproject_hockey_spark.catalog import _footer_paths, events_source
 from bigdatafinalproject_hockey_spark.functions.numeric import cents_expr
-
-
-def _events_stream_source(spark: SparkSession, sf_dir: str):
-    """(schema, decode) for streaming events.parquet, derived from the
-    actual parquet footer — the ts encoding has drifted across testdata
-    generations (first int64 nanos, later timestamp[us]), and a pinned
-    schema silently mis-scales event times when it drifts.
-    FileStreamSource requires an explicit schema,
-    so build it to match the footer and pair it with the matching
-    decode step."""
-    enc = events_ts_encoding(os.path.join(sf_dir, "events.parquet"))
-    if enc == "nanos":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        ts_type: T.DataType = T.LongType()
-
-        def decode(df: DataFrame) -> DataFrame:
-            return df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-
-    else:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
-        ts_type = T.TimestampNTZType()
-
-        def decode(df: DataFrame) -> DataFrame:
-            # tz-naive micros → session-TZ (UTC) timestamp, matching
-            # catalog.load_table and the DuckDB oracle.
-            return df.withColumn("ts", F.col("ts").cast("timestamp"))
-
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", ts_type),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-    return schema, decode
+from bigdatafinalproject_hockey_spark.session import with_conf
 
 
 def _stage_source_links(stage: str, sources: dict[str, str]) -> None:
@@ -97,7 +60,7 @@ def read_events_stream(
     spark: SparkSession, sf_dir: str, max_files_per_trigger: int = 1
 ) -> DataFrame:
     """File-stream over the events parquet (kafka stand-in)."""
-    schema, decode = _events_stream_source(spark, sf_dir)
+    schema, decode = events_source(os.path.join(sf_dir, "events.parquet"))
     raw = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)
@@ -159,7 +122,6 @@ def run_stream_to_table(
     spark: SparkSession,
     streaming_df: DataFrame,
     output_mode: str = "complete",
-    state_partitions: int | None = None,
 ) -> DataFrame:
     """Drive a streaming frame to completion into a memory sink and
     return the materialized result (finite-replay semantics).
@@ -167,31 +129,27 @@ def run_stream_to_table(
     Stateful operators allocate one state store per shuffle partition
     for the query's whole lifetime — on an untuned session (200
     partitions) that is 200 state stores for kilobytes of state. The
-    partition count is pinned to the session's core count while the
-    query starts (it is baked into the query at start), then restored.
+    stream therefore runs in a clone of the session with the partition
+    count set to the core count; the caller's session is not written.
+    The result is read from the clone, which holds the sink's view.
     """
-    n = state_partitions or spark.sparkContext.defaultParallelism
-    old = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    rebound = with_conf(
+        streaming_df,
+        {"spark.sql.shuffle.partitions": str(spark.sparkContext.defaultParallelism)},
+    )
     name = f"stream_out_{uuid.uuid4().hex[:8]}"
+    q = (
+        rebound.writeStream.outputMode(output_mode)
+        .format("memory")
+        .queryName(name)
+        .trigger(availableNow=True)
+        .start()
+    )
     try:
-        q = (
-            streaming_df.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        q.processAllAvailable()
     finally:
-        if old is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", old)
-        else:
-            spark.conf.unset("spark.sql.shuffle.partitions")
-    return spark.table(name)
+        q.stop()
+    return rebound.sparkSession.table(name)
 
 
 def stream_dedup(events: DataFrame, watermark_delay: str = "1 hour") -> DataFrame:
@@ -390,8 +348,8 @@ def read_events_stream_replayed(
     its own micro-batch, modeling an at-least-once source that
     re-delivers whole partitions (a rewound kafka offset, a re-run
     ingest job)."""
-    schema, decode = _events_stream_source(spark, sf_dir)
     src = os.path.join(sf_dir, "events.parquet")
+    schema, decode = events_source(src)
     stage = sidecar.cached(
         f"stream_replay{copies}",
         [src],
@@ -878,9 +836,9 @@ def read_events_stream_with_flush(
     # The flush file copies the source's ts encoding; the input
     # fingerprint gives a regenerated source a fresh stage.
     stage = sidecar.cached("stream_flush", [src], "v1", build)
-    schema_spark, decode = _events_stream_source(spark, sf_dir)
+    schema, decode = events_source(src)
     raw = (
-        spark.readStream.schema(schema_spark)
+        spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(stage)
     )

@@ -74,12 +74,12 @@ def test_events_encoding_detected():
 
 
 def test_streaming_schema_follows_footer(spark):
-    """The stream source schema derives from the footer, mirroring the
-    batch loader — a pinned LongType schema against micros data is the
-    exact shape of the round-2 silent corruption."""
-    from bigdatafinalproject_hockey_spark.streaming import _events_stream_source
+    """The events read schema derives from the footer — a pinned
+    LongType schema against micros data is the exact shape of a
+    silent event-time corruption."""
+    from bigdatafinalproject_hockey_spark.catalog import events_source
 
-    schema, _ = _events_stream_source(spark, "/root/testdata/sf0.001")
+    schema, _ = events_source("/root/testdata/sf0.001/events.parquet")
     enc = events_ts_encoding("/root/testdata/sf0.001/events.parquet")
     ts_type = dict((f.name, f.dataType.simpleString()) for f in schema.fields)["ts"]
     if enc == "nanos":
@@ -135,8 +135,8 @@ def test_load_spark_written_events(spark, tmp_path, out_type):
     """Engine-WRITTEN events tables must load back identically under
     both parquet timestamp encodings. The INT96 case is the trap:
     arrow reports INT96 as timestamp[ns] — indistinguishable at the
-    arrow level from int64-nanos, for which the loader must set
-    nanosAsLong — so events_ts_encoding has to branch on the parquet
+    arrow level from int64-nanos, which the loader reads as a long —
+    so events_ts_encoding has to branch on the parquet
     PHYSICAL type (a misbranch crashes the decode on Spark's default
     INT96 output)."""
     src = load_table(spark, "events", "/root/testdata/sf0.001")

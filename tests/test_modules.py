@@ -518,8 +518,8 @@ def test_join_salted_rejects_right_preserving_joins(spark):
 
 def test_connected_components_raises_on_non_convergence(spark):
     """A component with diameter > max_iter must fail loudly, not
-    return silently-wrong labels; the AQE cached-plan conf must be
-    restored either way."""
+    return silently-wrong labels; the caller's AQE cached-plan conf
+    must be left as it was either way."""
     from bigdatafinalproject_hockey_spark.dedup.components import (
         connected_components,
     )

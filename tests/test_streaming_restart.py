@@ -14,14 +14,13 @@ import os
 
 import pytest
 
-from bigdatafinalproject_hockey_spark.catalog import load_table
-from bigdatafinalproject_hockey_spark.streaming import _events_stream_source
+from bigdatafinalproject_hockey_spark.catalog import events_source, load_table
 
 SF_DIR = "/root/testdata/sf0.001"
 
 
 def _run_to_completion(spark, stage: str, checkpoint: str, out: str) -> None:
-    schema, decode = _events_stream_source(spark, SF_DIR)
+    schema, decode = events_source(os.path.join(SF_DIR, "events.parquet"))
     stream = decode(
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
