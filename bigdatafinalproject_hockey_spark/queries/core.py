@@ -51,9 +51,8 @@ from bigdatafinalproject_hockey_spark.queries.base import register
 def q_clean_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Type-clean ETL stage — the composite of the reference's intake
     steps, merged per VERDICT.md round-1 item 5 (was three registry
-    entries: rename_col / cast_types / parse_date, all driver-green in
-    CORRECTNESS_r01.json): parse the M/d/yyyy date string
-    (code/experiment.py:298), rename to engine-friendly names
+    entries: rename_col / cast_types / parse_date): parse the M/d/yyyy
+    date string (code/experiment.py:298), rename to engine-friendly names
     (code/experiment.py:286-288), and pin numeric types
     (code/experiment.py:290-297). Spark double→long cast truncates
     toward zero; the oracle spells FLOOR (values positive, so equal).
@@ -97,9 +96,8 @@ def q_filter_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Row-filter ETL stage — composite of the reference's filter
     shapes, merged per VERDICT.md round-1 item 5 (was five registry
     entries: filter_notnull / drop_nulls_any / filter_range /
-    filter_eq / filter_compound, all driver-green in
-    CORRECTNESS_r01.json): NULL-key drop (code/experiment.py:401-402,
-    555), conjunctive >= bounds (301-302), equality
+    filter_eq / filter_compound): NULL-key drop
+    (code/experiment.py:401-402, 555), conjunctive >= bounds (301-302), equality
     (502-503), and a compound predicate (645-656), applied in
     sequence. Source-column predicates still reach the parquet scan as
     PushedFilters (locked in tests/test_plans.py); the NULLIF-derived
@@ -141,8 +139,8 @@ def q_derive_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Column-derivation ETL stage — composite of the reference's
     feature steps, merged per VERDICT.md round-1 item 5 (was four
     registry entries: project_alias / derive_arith / case_when /
-    fill_default, all driver-green in CORRECTNESS_r01.json): wide
-    aliased re-projection (code/experiment.py:381-397), derived
+    fill_default): wide aliased re-projection
+    (code/experiment.py:381-397), derived
     arithmetic (544-552), label binarization (628-633), and
     literal-default fill (476-494) in one shuffle-free projection
     chain. Per-row double arithmetic is bit-deterministic — no
@@ -196,8 +194,7 @@ def q_derive_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_str_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String-clean ETL stage — composite of the reference's two
     string ops, merged per VERDICT.md round-1 item 5 (was
-    str_normalize_ws + str_strip_charset, both driver-green in
-    CORRECTNESS_r01.json): whitespace collapse + trim
+    str_normalize_ws + str_strip_charset): whitespace collapse + trim
     (code/experiment.py:305-307; padding injected so the op provably
     changes something) and uppercase + strip non-[A-Z]
     (code/experiment.py:311-316), in one scan-side projection."""

@@ -1830,7 +1830,7 @@ def _register_stream_stateful_totals_tws() -> None:
     ``streaming.tws_available()`` gate instead of a hand-maintained
     note: an environment that has protobuf gets the registered driver
     row (same GROUP BY oracle as ``stream_stateful_totals``)
-    automatically. ``scripts/driver_preflight.py`` prints the gate's
+    automatically. ``scripts/oracle_check.py`` prints the gate's
     verdict + reason every run, and tests/test_modules.py asserts the
     registration state matches the gate's condition."""
     from bigdatafinalproject_hockey_spark.streaming import tws_available

@@ -229,7 +229,7 @@ def tws_available() -> tuple[bool, str]:
     reason (round 13, VERDICT r12 item 8): the TWS Python worker
     imports google.protobuf at startup, so its importability IS the
     availability gate — the same condition the in-suite test skips
-    on. Surfaced by ``scripts/driver_preflight.py`` and consulted by
+    on. Surfaced by ``scripts/oracle_check.py`` and consulted by
     the conditional registration in ``queries/scale.py``, so an
     environment that gains protobuf auto-promotes
     ``stateful_user_totals_tws`` to a registered driver row with no
