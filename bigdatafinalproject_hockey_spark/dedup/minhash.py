@@ -14,24 +14,27 @@ posexplode) — no MLlib, no per-pair Python, no UDFs. Compared to
   per candidate pair and runs in Python-free but codegen-free scala
   UDF land.
 
+Two hash families feed ONE dataflow (``_lsh_pairs``): the fast
+xxhash64 family (``minhash_candidate_pairs``) and an engine-portable
+md5/universal-hash family (``minhash_candidate_pairs_portable``).
+Only the signature and band-key expressions differ. The portable
+twin's DuckDB oracle (``minhash_lsh_oracle_sql``) therefore checks the
+shared dataflow; the xxhash expressions are not reproducible in an
+external SQL engine and stay rows-only.
+
 At 100 TB the shuffles are the fingerprint exchange (exact-dup
 collapse, below) and the band-bucket exchange, both keyed on uniform
 hashes; each is materialized ONCE and its second consumer reads the
 same shuffle files via planner exchange reuse — no persist, no cache
-copy of the signature table (round 4; plan-locked in
-tests/test_plans.py). Exact-duplicate clusters are the pathological
-skew case for
-banded LSH — n identical docs share every band hash, putting an
-n²-pair bucket in one task. minhash_candidate_pairs therefore
-COLLAPSES token-identical docs first (64-bit fingerprint of the
-sorted shingle-hash set): copies link to their representative via
-star edges (n-1 rows, jaccard_dist 0) and only representatives enter
-the banded self-join. The emitted pair set is reduced but its
-transitive closure — what dedup components consume — is identical.
-
-Hashes are Spark's xxhash64 (seeded, deterministic per Spark version)
-but not reproducible in an external SQL engine → the driver checks
-this query rows-only.
+copy of the signature table (plan-locked in tests/test_plans.py).
+Exact-duplicate clusters are the pathological skew case for banded
+LSH — n identical docs share every band key, putting an n²-pair
+bucket in one task. The dataflow therefore COLLAPSES token-identical
+docs first (fingerprint of the sorted shingle-hash set): copies link
+to their representative via star edges (n-1 rows, jaccard_dist 0) and
+only representatives enter the banded self-join. The emitted pair set
+is reduced but its transitive closure — what dedup components
+consume — is identical.
 
 Capability parity: sub-quadratic near-dup candidate generation for the
 training-data-pipeline tier (SURVEY.md §2.15a); the reference itself
@@ -40,15 +43,16 @@ has no dedup (reference `code/experiment.py` is dedup-free).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from bigdatafinalproject_hockey_spark.functions.hashing import (
     portable_hash64_expr,
     portable_hash64_sql,
     splitmix64,
 )
-from bigdatafinalproject_hockey_spark.functions.text import tokens_expr
+from bigdatafinalproject_hockey_spark.functions.text import tokens_expr, tokens_sql
 from bigdatafinalproject_hockey_spark.operators.partitioning import ensure_parallelism
 
 # Universal-hash family for the PORTABLE minhash variant:
@@ -62,10 +66,9 @@ def _minhash_coeffs(num_hashes: int) -> tuple[list[int], list[int]]:
     a = [(splitmix64(2 * k + 1) & (_MINHASH_P - 1)) | 1 for k in range(num_hashes)]
     b = [splitmix64(2 * k + 2) % _MINHASH_P for k in range(num_hashes)]
     # (x & (P-1)) | 1 can in principle yield exactly P (≡ 0 mod P),
-    # which would make h_k constant — degenerate (ADVICE r3 item 4).
-    # The shipped 32 coefficients are all in range (pinned by
-    # tests/test_properties.py); fail loudly if a larger family ever
-    # hits the edge rather than silently weakening the signature.
+    # which would make h_k constant — a degenerate slot. The shipped
+    # 32 coefficients are all in range; fail loudly if a larger family
+    # ever hits the edge rather than silently weakening the signature.
     assert all(0 < v < _MINHASH_P for v in a), "degenerate minhash coefficient"
     return a, b
 
@@ -78,9 +81,9 @@ def shingles_expr(col, n: int = 3, distinct: bool = True):
     per-index slice/indexing is ~40× slower: nested HOF indexing
     doesn't codegen and re-evaluates the array per position.)
     n=1 degenerates to the distinct token set. ``distinct=False``
-    (round 12) keeps the POSITIONAL gram array — element i is the
-    gram starting at token position i — for consumers that cut or
-    annotate spans (decontaminate_redact) rather than set-compare.
+    keeps the POSITIONAL gram array — element i is the gram starting
+    at token position i — for consumers that cut or annotate spans
+    (decontaminate_redact) rather than set-compare.
     """
     toks = tokens_expr(col)
     if n <= 1:
@@ -158,6 +161,106 @@ def minhash_signature_expr(hash_array_col, num_hashes: int = 32):
     )
 
 
+def _banded(sig: DataFrame, band_keys: Column) -> DataFrame:
+    """(doc, sig, band_idx, band_key): one row per band of each doc.
+    ``band_keys`` is an array expression over the ``sig`` column.
+    Shingle-less docs (n_sh = 0) get a NULL array, and posexplode of
+    NULL emits no rows — the empty-doc filter without a Filter node
+    (see ``minhash_candidate_pairs`` for why there is none)."""
+    return sig.select(
+        "doc",
+        "sig",
+        F.posexplode(F.when(F.col("n_sh") > 0, band_keys)).alias(
+            "band_idx", "band_key"
+        ),
+    )
+
+
+def _est_dist(sig_a: Column, sig_b: Column, num_hashes: int) -> Column:
+    """Estimated Jaccard distance: 1 - signature-agreement rate,
+    rounded to 6 dp."""
+    matches = F.size(
+        F.filter(F.zip_with(sig_a, sig_b, lambda x, y: x == y), lambda m: m)
+    )
+    return F.round(F.lit(1.0) - matches.cast("double") / F.lit(float(num_hashes)), 6)
+
+
+def _lsh_pairs(
+    sig: DataFrame,
+    band_keys: Column,
+    num_hashes: int,
+    max_jaccard_distance: float,
+) -> DataFrame:
+    """The MinHash+LSH dataflow both hash families share, from a
+    (doc, n_sh, sig, fp) frame and a band-key array expression over
+    ``sig``: exact-dup star collapse → band posexplode → co-partitioned
+    self-join → agreement estimate → dropDuplicates → union."""
+    # Exact-dup collapse: one fingerprint-keyed exchange over the
+    # COMPACT (doc, n_sh, sig, fp) rows — the heavy shingle arrays
+    # never shuffle. Both the star-edge branch and the representative
+    # branch read it, but NOT via persist: the branches' fp-exchange
+    # subtrees are canonically identical, so the planner materializes
+    # the shuffle once and ReusedExchange serves the second consumer
+    # from the same shuffle files (verified in the final adaptive
+    # plan, tests/test_plans.py). Persisting here was pure overhead —
+    # cache materialization of the wide sig rows cost ~0.5-1 s at
+    # bench scale and duplicate storage at 100 TB, for reuse the
+    # shuffle already provides.
+    tagged = sig.withColumn("rep", F.min("doc").over(Window.partitionBy("fp")))
+    # Star edges for exact clusters; empty docs (n_sh=0) share a
+    # fingerprint but are NOT duplicates of each other — excluded, as
+    # they are from banding.
+    exact_edges = tagged.filter(
+        (F.col("n_sh") > 0) & (F.col("doc") != F.col("rep"))
+    ).select(
+        F.col("rep").alias("doc_a"),
+        F.col("doc").alias("doc_b"),
+        F.lit(0.0).alias("jaccard_dist"),
+    )
+    reps = tagged.filter(F.col("doc") == F.col("rep")).select("doc", "n_sh", "sig")
+
+    # The self-join scans the exploded bucket table twice, and
+    # everything upstream (shingle + k×hash) is the expensive narrow
+    # stage. Repartition BY THE JOIN KEYS: both join sides then end at
+    # the SAME canonical band-key exchange, which the engine
+    # materializes once and serves to the second side via
+    # ReusedExchange — co-partitioned join, one band-bucket shuffle
+    # total, no cache. (An explicit persist here bought the same
+    # single-computation guarantee but paid cache materialization on
+    # top of the shuffle files that already exist — measured ~0.5 s
+    # slower at bench scale and double storage at corpus scale.)
+    exploded = _banded(reps, band_keys).repartition("band_idx", "band_key")
+    a, b = exploded.alias("a"), exploded.alias("b")
+    near_pairs = (
+        a.join(b, on=["band_idx", "band_key"], how="inner")
+        .filter(F.col("a.doc") < F.col("b.doc"))
+        .select(
+            F.col("a.doc").alias("doc_a"),
+            F.col("b.doc").alias("doc_b"),
+            _est_dist(F.col("a.sig"), F.col("b.sig"), num_hashes).alias(
+                "jaccard_dist"
+            ),
+        )
+        # A pair colliding in several bands appears once per collision;
+        # the distance is a pure function of the pair, so plain
+        # dropDuplicates (not a groupBy) is enough. The alternative —
+        # keep only the first colliding band's row by recomputing band
+        # keys from the joined signatures, the form dedup/simhash.py and
+        # minhash_incremental_matches use — was measured on the
+        # collision-heavy near-dup x10 corpus: the per-collision-instance
+        # recompute (32 slice hashes + array allocs per row) read 108 s
+        # against ~3 s for this form. The dedup exchange moves only
+        # 24-byte pair rows, so trading it for per-instance expression
+        # work loses exactly where collisions are densest. First-band
+        # pays off only when the recompute is integer-cheap relative to
+        # the row (simhash's shift/mask blocks) or the collision
+        # multiplicity is store-bounded (the incremental matcher).
+        .dropDuplicates(["doc_a", "doc_b"])
+        .filter(F.col("jaccard_dist") <= max_jaccard_distance)
+    )
+    return near_pairs.unionByName(exact_edges)
+
+
 def minhash_candidate_pairs(
     df: DataFrame,
     text_col: str,
@@ -188,6 +291,13 @@ def minhash_candidate_pairs(
     transitively through their representative — with an identical
     transitive closure, which is what dedup_components consumes.
     Empty docs (no shingles) still never pair.
+
+    The fast hash family: xxhash64 token hashes combined into shingle
+    hashes, the xxhash64 minhash family, an xxhash64 fingerprint, and
+    band keys hashed from each band's signature slice. The dataflow
+    after the signatures is ``_lsh_pairs``, shared with
+    ``minhash_candidate_pairs_portable``; only these expressions are
+    unchecked by an oracle.
     """
     assert num_hashes % num_bands == 0, "bands must evenly divide hashes"
     rows_per_band = num_hashes // num_bands
@@ -199,8 +309,8 @@ def minhash_candidate_pairs(
     # a derived column gets predicate-pushed below the exchange with
     # the full shingle expression substituted in — the whole tokenize/
     # shingle pass would then run once more, single-threaded, on the
-    # scan side. Empty docs are instead dropped by the posexplode of an
-    # empty band array below.
+    # scan side. Empty docs are instead dropped by the posexplode of a
+    # NULL band array (``_banded``).
     # Layered projections — tokens, token hashes, shingle hashes,
     # signature — each alias used several times by the next layer.
     # Catalyst's CollapseProject keeps non-cheap aliases with multiple
@@ -224,101 +334,17 @@ def minhash_candidate_pairs(
         # the same risk class as the shingle hashing itself.
         F.xxhash64(F.array_sort("hs")).alias("fp"),
     )
-
-    # Exact-dup collapse: one fingerprint-keyed exchange over the
-    # COMPACT (doc, n_sh, sig, fp) rows — the heavy shingle arrays
-    # never shuffle. Both the star-edge branch and the representative
-    # branch read it, but NOT via persist: the branches' fp-exchange
-    # subtrees are canonically identical, so the planner materializes
-    # the shuffle once and ReusedExchange serves the second consumer
-    # from the same shuffle files (verified in the final adaptive
-    # plan, tests/test_plans.py). Persisting here was pure overhead —
-    # cache materialization of the wide sig rows cost ~0.5-1 s at
-    # bench scale (the r3 +34% headline drift) and duplicate storage
-    # at 100 TB, for reuse the shuffle already provides.
-    from pyspark.sql.window import Window
-
-    tagged = sig.withColumn("rep", F.min("doc").over(Window.partitionBy("fp")))
-    # Star edges for exact clusters; empty docs (n_sh=0) share a
-    # fingerprint but are NOT duplicates of each other — excluded, as
-    # they are from banding.
-    exact_edges = tagged.filter(
-        (F.col("n_sh") > 0) & (F.col("doc") != F.col("rep"))
-    ).select(
-        F.col("rep").alias("doc_a"),
-        F.col("doc").alias("doc_b"),
-        F.lit(0.0).alias("jaccard_dist"),
-    )
-    sig = tagged.filter(F.col("doc") == F.col("rep")).select("doc", "n_sh", "sig")
-
-    # Band hash = hash of the band's signature slice (+ band index so
+    # Band key = hash of the band's signature slice (+ band index so
     # identical slices in different bands don't collide cross-band).
     # Built as one transform over sequence(0, b-1), not b unrolled
     # exprs — same plan-size rationale as the signature above.
-    band_hashes = F.transform(
+    band_keys = F.transform(
         F.sequence(F.lit(0), F.lit(num_bands - 1)),
         lambda b: F.xxhash64(
             F.slice(F.col("sig"), b * rows_per_band + 1, F.lit(rows_per_band)), b
         ),
     )
-    # The self-join scans the exploded bucket table twice, and
-    # everything upstream (shingle + k×hash) is the expensive narrow
-    # stage. Shingle-less docs emit an empty band array → zero
-    # exploded rows (the filter, without a Filter). Repartition BY THE
-    # JOIN KEYS: both join sides then end at the SAME canonical
-    # band-key exchange, which the engine materializes once and serves
-    # to the second side via ReusedExchange — co-partitioned join,
-    # one band-bucket shuffle total, no cache. (An explicit persist
-    # here bought the same single-computation guarantee but paid cache
-    # materialization on top of the shuffle files that already exist —
-    # measured ~0.5 s slower at bench scale and double storage at
-    # corpus scale.)
-    exploded = sig.select(
-        "doc",
-        "sig",
-        F.posexplode(
-            F.when(F.col("n_sh") > 0, band_hashes).otherwise(
-                F.array().cast("array<bigint>")
-            )
-        ).alias("band_idx", "band_hash"),
-    ).repartition("band_idx", "band_hash")
-
-    a, b = exploded.alias("a"), exploded.alias("b")
-    est_matches = F.size(
-        F.filter(
-            F.zip_with(F.col("a.sig"), F.col("b.sig"), lambda x, y: x == y),
-            lambda m: m,
-        )
-    )
-    near_pairs = (
-        a.join(b, on=["band_idx", "band_hash"], how="inner")
-        .filter(F.col("a.doc") < F.col("b.doc"))
-        .select(
-            F.col("a.doc").alias("doc_a"),
-            F.col("b.doc").alias("doc_b"),
-            F.round(
-                F.lit(1.0) - est_matches.cast("double") / F.lit(float(num_hashes)), 6
-            ).alias("jaccard_dist"),
-        )
-        # a pair colliding in several bands appears once per collision;
-        # the distance is a pure function of the pair, so plain
-        # dropDuplicates (not a groupBy) is enough. Round 13 MEASURED
-        # the alternative (keep only the first colliding band's row by
-        # recomputing band hashes from the joined signatures — the
-        # form dedup/simhash.py and the incremental matcher now use)
-        # and REVERTED it here: on the collision-heavy near-dup x10
-        # corpus the per-collision-instance recompute (32 slice
-        # hashes + array allocs per row) read 108 s vs ~3 s for this
-        # form — the dedup exchange moves only 24-byte pair rows, so
-        # trading it for per-instance expression work loses exactly
-        # where collisions are densest. First-band pays off only when
-        # the recompute is integer-cheap relative to the row
-        # (simhash's shift/mask blocks) or the collision multiplicity
-        # is store-bounded (the incremental matcher).
-        .dropDuplicates(["doc_a", "doc_b"])
-        .filter(F.col("jaccard_dist") <= max_jaccard_distance)
-    )
-    return near_pairs.unionByName(exact_edges)
+    return _lsh_pairs(sig, band_keys, num_hashes, max_jaccard_distance)
 
 
 def _portable_signatures(
@@ -378,7 +404,7 @@ def _band_slice_eq(sig_a: str, sig_b: str, num_bands: int, rows_per_band: int):
     """array<boolean>: per band, whether the two signatures' band
     slices are equal — the slice-level truth the string band keys
     render injectively. Used to locate a pair's first colliding band
-    from columns already on the joined row (round 13)."""
+    from columns already on the joined row."""
     return F.array(
         *[
             F.slice(F.col(sig_a), b * rows_per_band + 1, rows_per_band)
@@ -412,12 +438,12 @@ def minhash_candidate_pairs_portable(
     num_bands: int = 16,
     max_jaccard_distance: float = 0.3,
 ) -> DataFrame:
-    """ENGINE-PORTABLE MinHash+LSH candidate pairs — the same dataflow
-    as minhash_candidate_pairs (exact-dup collapse → banded
-    co-partitioned self-join → signature-agreement estimate) with every
-    hash replaced by a cross-engine-reproducible one, so the flagship
-    dedup pipeline gets a full value-hash DuckDB oracle
-    (minhash_lsh_oracle_sql) instead of a rows-only check:
+    """ENGINE-PORTABLE MinHash+LSH candidate pairs: the same
+    ``_lsh_pairs`` dataflow and output contract as
+    minhash_candidate_pairs, fed by cross-engine-reproducible hashes,
+    so the flagship dedup pipeline gets a full value-hash DuckDB
+    oracle (minhash_lsh_oracle_sql) instead of a rows-only check. What
+    differs is only the hash family:
 
     - shingle hash: portable md5-derived 64-bit hash of the n-gram
       string, sign bit masked (63-bit non-negative — identical decimal
@@ -430,93 +456,20 @@ def minhash_candidate_pairs_portable(
 
     Trade-off vs the fast variant: md5 per distinct shingle instead of
     xxhash64 per token (~2-3× the narrow-stage cost), identical shuffle
-    structure and skew hardening. The fast variant remains the
-    100 TB/bench path; this one is the externally-verified semantics
-    pin — same S-curve, same collapse, same output contract.
+    structure and skew hardening.
     """
     assert num_hashes % num_bands == 0, "bands must evenly divide hashes"
-    rows_per_band = num_hashes // num_bands
     sig = _portable_signatures(df, text_col, id_col, shingle_n, num_hashes)
-
-    from pyspark.sql.window import Window
-
-    # Same no-persist reuse structure as the fast variant: the fp
-    # exchange and the band-key exchange are each materialized once
-    # and ReusedExchange feeds their second consumers.
-    tagged = sig.withColumn("rep", F.min("doc").over(Window.partitionBy("fp")))
-    exact_edges = tagged.filter(
-        (F.col("n_sh") > 0) & (F.col("doc") != F.col("rep"))
-    ).select(
-        F.col("rep").alias("doc_a"),
-        F.col("doc").alias("doc_b"),
-        F.lit(0.0).alias("jaccard_dist"),
-    )
-    reps = tagged.filter(F.col("doc") == F.col("rep")).select("doc", "n_sh", "sig")
-
-    band_keys = _band_keys_expr(num_bands, rows_per_band)
-    exploded = reps.select(
-        "doc",
-        "sig",
-        F.posexplode(
-            F.when(F.col("n_sh") > 0, band_keys).otherwise(
-                F.array().cast("array<string>")
-            )
-        ).alias("band_idx", "band_key"),
-    ).repartition("band_idx", "band_key")
-    a, b = exploded.alias("a"), exploded.alias("b")
-    est_matches = F.size(
-        F.filter(
-            F.zip_with(F.col("a.sig"), F.col("b.sig"), lambda x, y: x == y),
-            lambda m: m,
-        )
-    )
-    near_pairs = (
-        a.join(b, on=["band_idx", "band_key"], how="inner")
-        .filter(F.col("a.doc") < F.col("b.doc"))
-        .select(
-            F.col("a.doc").alias("doc_a"),
-            F.col("b.doc").alias("doc_b"),
-            F.round(
-                F.lit(1.0) - est_matches.cast("double") / F.lit(float(num_hashes)), 6
-            ).alias("jaccard_dist"),
-        )
-        # dropDuplicates, NOT a first-band filter — measured trade,
-        # see minhash_candidate_pairs (round 13): per-collision-
-        # instance recompute loses on collision-heavy corpora; the
-        # dedup exchange moves only compact pair rows.
-        .dropDuplicates(["doc_a", "doc_b"])
-        .filter(F.col("jaccard_dist") <= max_jaccard_distance)
-    )
-    return near_pairs.unionByName(exact_edges)
+    band_keys = _band_keys_expr(num_bands, num_hashes // num_bands)
+    return _lsh_pairs(sig, band_keys, num_hashes, max_jaccard_distance)
 
 
-def minhash_lsh_cte_sql(
-    table: str = "documents",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_n: int = 3,
-    num_hashes: int = 32,
-    num_bands: int = 16,
-) -> str:
-    """The portable MinHash+LSH pipeline as a composable CTE chain
-    (round 13) — everything up to the thresholded union: ends with
-    the ``near`` (banded candidates with jaccard_dist) and
-    ``exact_edges`` CTEs. ``minhash_lsh_oracle_sql`` wraps it with
-    the final SELECT; ``dedup_keep_best_minhash``'s oracle chains the
-    recursive component + keep-best CTEs onto it. No leading comma,
-    no WITH keyword."""
-    assert num_hashes % num_bands == 0
-    r = num_hashes // num_bands
-    a_co, b_co = _minhash_coeffs(num_hashes)
-    toks = (
-        f"list_filter(string_split_regex(lower({text_col}), '[^a-z0-9]+'), "
-        "x -> x <> '')"
-    )
+def _shingle_hash_ctes(table: str, text_col: str, id_col: str, shingle_n: int) -> str:
+    """``tok``/``sh``/``hs`` CTEs: the portable 63-bit shingle hashes
+    (``hs``) per document, as ``_portable_signatures`` builds them."""
     gram = " || ' ' || ".join(f"tk[i + {j + 1}]" for j in range(shingle_n))
     h63 = f"CAST(({portable_hash64_sql('s')} & 9223372036854775807) AS BIGINT)"
-    a_list = "[" + ",".join(str(v) for v in a_co) + "]"
-    b_list = "[" + ",".join(str(v) for v in b_co) + "]"
-    return f"""tok AS (SELECT {id_col}, {toks} AS tk FROM {table}),
+    return f"""tok AS (SELECT {id_col}, {tokens_sql(text_col)} AS tk FROM {table}),
     sh AS (
       SELECT {id_col},
              list_distinct(
@@ -528,7 +481,63 @@ def minhash_lsh_cte_sql(
     ),
     hs AS (
       SELECT {id_col}, list_transform(shs, s -> {h63}) AS hs FROM sh
+    )"""
+
+
+def _band_ctes(src: str, id_col: str, num_hashes: int, num_bands: int) -> str:
+    """``hk``/``sigs``/``banded`` CTEs over the ``hs`` column of CTE
+    ``src``: the universal-hash signature and its string band keys.
+    Signature mins are computed relationally (shingle-hash rows × a
+    k-table, GROUP BY) rather than as a k-slot fold — equivalent
+    values, saner SQL."""
+    assert num_hashes % num_bands == 0, "bands must evenly divide hashes"
+    r = num_hashes // num_bands
+    a_co, b_co = _minhash_coeffs(num_hashes)
+    a_list = "[" + ",".join(str(v) for v in a_co) + "]"
+    b_list = "[" + ",".join(str(v) for v in b_co) + "]"
+    return f"""hk AS (
+      SELECT {id_col}, k.i AS k,
+             MIN(({a_list}[k.i + 1] * (h >> 32) + {b_list}[k.i + 1])
+                 % {_MINHASH_P}) AS mh
+      FROM (SELECT {id_col}, unnest(hs) AS h FROM {src}), range({num_hashes}) k(i)
+      GROUP BY 1, 2
     ),
+    sigs AS (
+      SELECT {id_col}, list(mh ORDER BY k) AS sig FROM hk GROUP BY {id_col}
+    ),
+    banded AS (
+      SELECT s.{id_col}, s.sig, b.i AS band_idx,
+             array_to_string(s.sig[b.i * {r} + 1 : b.i * {r} + {r}], ':')
+               AS band_key
+      FROM sigs s, range({num_bands}) b(i)
+    )"""
+
+
+def _est_dist_sql(a: str, b: str, num_hashes: int) -> str:
+    """DuckDB twin of ``_est_dist`` over the ``sig`` columns of table
+    aliases ``a`` and ``b``."""
+    return (
+        f"ROUND(1.0 - CAST(len(list_filter(range({num_hashes}), "
+        f"i -> {a}.sig[i + 1] = {b}.sig[i + 1])) AS DOUBLE) / {num_hashes}, 6)"
+    )
+
+
+def minhash_lsh_cte_sql(
+    table: str = "documents",
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    shingle_n: int = 3,
+    num_hashes: int = 32,
+    num_bands: int = 16,
+) -> str:
+    """The portable MinHash+LSH pipeline as a composable CTE chain —
+    everything up to the thresholded union: ends with the ``near``
+    (banded candidates with jaccard_dist) and ``exact_edges`` CTEs.
+    ``minhash_lsh_oracle_sql`` wraps it with the final SELECT;
+    ``dedup_keep_best_minhash``'s oracle chains the recursive
+    component + keep-best CTEs onto it. No leading comma, no WITH
+    keyword."""
+    return f"""{_shingle_hash_ctes(table, text_col, id_col, shingle_n)},
     fp AS (
       SELECT {id_col}, len(hs) AS n_sh, hs,
              md5(array_to_string(list_sort(hs), ',')) AS fp
@@ -542,27 +551,10 @@ def minhash_lsh_cte_sql(
       FROM tagged WHERE n_sh > 0 AND {id_col} <> rep
     ),
     reps AS (SELECT {id_col}, n_sh, hs FROM tagged WHERE {id_col} = rep),
-    hk AS (
-      SELECT {id_col}, k.i AS k,
-             MIN(({a_list}[k.i + 1] * (h >> 32) + {b_list}[k.i + 1])
-                 % {_MINHASH_P}) AS mh
-      FROM (SELECT {id_col}, unnest(hs) AS h FROM reps), range({num_hashes}) k(i)
-      GROUP BY 1, 2
-    ),
-    sigs AS (
-      SELECT {id_col}, list(mh ORDER BY k) AS sig FROM hk GROUP BY {id_col}
-    ),
-    banded AS (
-      SELECT s.{id_col}, s.sig, b.i AS band_idx,
-             array_to_string(s.sig[b.i * {r} + 1 : b.i * {r} + {r}], ':')
-               AS band_key
-      FROM sigs s, range({num_bands}) b(i)
-    ),
+    {_band_ctes("reps", id_col, num_hashes, num_bands)},
     near AS (
       SELECT DISTINCT a.{id_col} AS doc_a, b.{id_col} AS doc_b,
-             ROUND(1.0 - CAST(len(list_filter(range({num_hashes}),
-                       i -> a.sig[i + 1] = b.sig[i + 1])) AS DOUBLE)
-                   / {num_hashes}, 6) AS jaccard_dist
+             {_est_dist_sql("a", "b", num_hashes)} AS jaccard_dist
       FROM banded a JOIN banded b
         ON a.band_idx = b.band_idx AND a.band_key = b.band_key
            AND a.{id_col} < b.{id_col}
@@ -581,10 +573,8 @@ def minhash_lsh_oracle_sql(
     """DuckDB SQL replicating minhash_candidate_pairs_portable EXACTLY:
     same tokenizer, same n-gram shingles, same portable 63-bit shingle
     hash, same literal (a_k, b_k) minhash family, same banding, same
-    exact-dup star-edge collapse. Signature mins are computed
-    relationally (shingle-hash rows × a k-table, GROUP BY) rather than
-    as a 32-slot fold — equivalent values, saner SQL. Built on the
-    composable ``minhash_lsh_cte_sql`` chain (round 13)."""
+    exact-dup star-edge collapse. Built on the composable
+    ``minhash_lsh_cte_sql`` chain."""
     ctes = minhash_lsh_cte_sql(
         table, text_col, id_col, shingle_n, num_hashes, num_bands
     )
@@ -626,8 +616,9 @@ def minhash_incremental_matches(
     skip its shuffle); only the delta — orders of magnitude smaller —
     is hashed per batch, and the candidate join shuffles the small
     delta side to the store's layout. Hashes are the engine-portable
-    family (_portable_signatures), so the whole incremental decision
-    is value-checkable against a SQL oracle.
+    family (_portable_signatures), and banding and the estimate are
+    ``_lsh_pairs``' own helpers, so the whole incremental decision is
+    value-checkable against a SQL oracle.
     """
     assert num_hashes % num_bands == 0
     r = num_hashes // num_bands
@@ -635,15 +626,7 @@ def minhash_incremental_matches(
 
     def banded(df: DataFrame) -> DataFrame:
         sig = _portable_signatures(df, text_col, id_col, shingle_n, num_hashes)
-        return sig.select(
-            "doc",
-            "sig",
-            F.posexplode(
-                F.when(F.col("n_sh") > 0, band_keys).otherwise(
-                    F.array().cast("array<string>")
-                )
-            ).alias("band_idx", "band_key"),
-        )
+        return _banded(sig, band_keys)
 
     s = banded(store).select(
         F.col("doc").alias("store_doc"),
@@ -652,22 +635,15 @@ def minhash_incremental_matches(
         "band_key",
     )
     d = banded(delta)
-    est_matches = F.size(
-        F.filter(
-            F.zip_with(F.col("sig"), F.col("store_sig"), lambda x, y: x == y),
-            lambda m: m,
-        )
-    )
     # First-colliding-band filter instead of a post-join
-    # dropDuplicates exchange — see minhash_candidate_pairs: a
+    # dropDuplicates exchange (the trade-off is on ``_lsh_pairs``): a
     # (delta, store) pair colliding in k bands emits its row from
     # band min(k) only, so the per-pair dedup happens BEFORE the
     # candidate rows shuffle (and before the best-match window), not
     # after. The collision index comes from the two signatures
     # already on the joined row (band keys are injective slice
     # renderings); carrying the band-key ARRAYS through the store-
-    # side shuffle instead measured ~3× its bytes at x100 — the one
-    # regression this round caught in its own re-measure.
+    # side shuffle instead measured ~3× its bytes at x100.
     first_band = (
         F.array_position(
             _band_slice_eq("sig", "store_sig", num_bands, r), True
@@ -680,14 +656,12 @@ def minhash_incremental_matches(
         .select(
             F.col("doc").alias("doc_new"),
             F.col("store_doc").alias("doc_match"),
-            F.round(
-                F.lit(1.0) - est_matches.cast("double") / F.lit(float(num_hashes)), 6
-            ).alias("jaccard_dist"),
+            _est_dist(F.col("sig"), F.col("store_sig"), num_hashes).alias(
+                "jaccard_dist"
+            ),
         )
         .filter(F.col("jaccard_dist") <= max_jaccard_distance)
     )
-    from pyspark.sql.window import Window
-
     best = Window.partitionBy("doc_new").orderBy("jaccard_dist", "doc_match")
     return (
         cand.withColumn("rn", F.row_number().over(best))
@@ -708,51 +682,15 @@ def minhash_incremental_oracle_sql(
 ) -> str:
     """DuckDB SQL replicating minhash_incremental_matches with the
     store = docs with id < split_id and delta = the rest — same
-    portable hashes, banding, estimate, and best-match tie-break."""
-    assert num_hashes % num_bands == 0
-    r = num_hashes // num_bands
-    a_co, b_co = _minhash_coeffs(num_hashes)
-    toks = (
-        f"list_filter(string_split_regex(lower({text_col}), '[^a-z0-9]+'), "
-        "x -> x <> '')"
-    )
-    gram = " || ' ' || ".join(f"tk[i + {j + 1}]" for j in range(shingle_n))
-    h63 = f"CAST(({portable_hash64_sql('s')} & 9223372036854775807) AS BIGINT)"
-    a_list = "[" + ",".join(str(v) for v in a_co) + "]"
-    b_list = "[" + ",".join(str(v) for v in b_co) + "]"
+    portable hashes, banding, estimate, and best-match tie-break. The
+    CTEs are ``minhash_lsh_cte_sql``'s, with signatures over every doc
+    (``hs``) instead of the exact-dup representatives."""
     return f"""
-    WITH tok AS (SELECT {id_col}, {toks} AS tk FROM {table}),
-    sh AS (
-      SELECT {id_col},
-             list_distinct(
-               CASE WHEN len(tk) >= {shingle_n}
-                    THEN list_transform(range(len(tk) - {shingle_n - 1}),
-                                        i -> {gram})
-                    ELSE [] END) AS shs
-      FROM tok
-    ),
-    hs AS (SELECT {id_col}, list_transform(shs, s -> {h63}) AS hs FROM sh),
-    hk AS (
-      SELECT {id_col}, k.i AS k,
-             MIN(({a_list}[k.i + 1] * (h >> 32) + {b_list}[k.i + 1])
-                 % {_MINHASH_P}) AS mh
-      FROM (SELECT {id_col}, unnest(hs) AS h FROM hs), range({num_hashes}) k(i)
-      GROUP BY 1, 2
-    ),
-    sigs AS (
-      SELECT {id_col}, list(mh ORDER BY k) AS sig FROM hk GROUP BY {id_col}
-    ),
-    banded AS (
-      SELECT s.{id_col}, s.sig, b.i AS band_idx,
-             array_to_string(s.sig[b.i * {r} + 1 : b.i * {r} + {r}], ':')
-               AS band_key
-      FROM sigs s, range({num_bands}) b(i)
-    ),
+    WITH {_shingle_hash_ctes(table, text_col, id_col, shingle_n)},
+    {_band_ctes("hs", id_col, num_hashes, num_bands)},
     cand AS (
       SELECT DISTINCT d.{id_col} AS doc_new, s.{id_col} AS doc_match,
-             ROUND(1.0 - CAST(len(list_filter(range({num_hashes}),
-                       i -> d.sig[i + 1] = s.sig[i + 1])) AS DOUBLE)
-                   / {num_hashes}, 6) AS jaccard_dist
+             {_est_dist_sql("d", "s", num_hashes)} AS jaccard_dist
       FROM banded d JOIN banded s
         ON d.band_idx = s.band_idx AND d.band_key = s.band_key
       WHERE d.{id_col} >= {split_id} AND s.{id_col} < {split_id}

@@ -22,14 +22,13 @@ from bigdatafinalproject_hockey_spark.functions.hashing import (
     portable_hash64_expr,
     portable_hash64_sql,
 )
-from bigdatafinalproject_hockey_spark.functions.text import distinct_tokens_expr
+from bigdatafinalproject_hockey_spark.functions.text import (
+    distinct_tokens_expr,
+    tokens_sql,
+)
 from bigdatafinalproject_hockey_spark.operators.partitioning import ensure_parallelism
 
 N_BITS = 64
-
-# DuckDB tokenizer identical to functions.text.tokens_expr (same
-# fragment as queries/extensions._SQL_TOKS).
-_SQL_TOKS = "list_filter(string_split_regex(lower({c}), '[^a-z0-9]+'), x -> x <> '')"
 
 
 def simhash_expr(text_col: Column | str) -> Column:
@@ -190,7 +189,7 @@ def simhash_oracle_sql(
     width = N_BITS // n_bands
     widths = [width + (1 if i < N_BITS % n_bands else 0) for i in range(n_bands)]
     offsets = [sum(widths[:i]) for i in range(n_bands)]
-    toks = _SQL_TOKS.format(c=text_col)
+    toks = tokens_sql(text_col)
     h64 = portable_hash64_sql("token")
     bands_values = ", ".join(
         f"({i}, {offsets[i]}, {(1 << widths[i]) - 1})" for i in range(n_bands)

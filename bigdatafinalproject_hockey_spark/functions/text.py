@@ -25,15 +25,27 @@ STOPWORDS = {
 }
 
 
-def tokens_expr(col: Column | str, pattern: str = "[^a-z0-9]+") -> Column:
+def tokens_expr(col: Column | str) -> Column:
     """Lowercase + regex-split + drop empty tokens.
 
     Empty-string filtering matters: leading/trailing separators yield
     empty tokens in both Spark and DuckDB; filtering keeps the two
-    tokenizations identical.
+    tokenizations identical. Spark lowers U+0130 (İ) to ``i`` + U+0307,
+    so "İstanbul" splits into ``["i", "stanbul"]``; DuckDB's ``lower``
+    gives ``i`` alone, and :func:`tokens_sql` rewrites U+0130 first to
+    match.
     """
     c = F.col(col) if isinstance(col, str) else col
-    return F.filter(F.split(F.lower(c), pattern), lambda x: x != F.lit(""))
+    return F.filter(F.split(F.lower(c), "[^a-z0-9]+"), lambda x: x != F.lit(""))
+
+
+def tokens_sql(c: str) -> str:
+    """DuckDB fragment computing the same token list as
+    :func:`tokens_expr` over SQL expression ``c``."""
+    return (
+        f"list_filter(string_split_regex(lower(replace({c}, chr(304), "
+        "'i' || chr(775))), '[^a-z0-9]+'), x -> x <> '')"
+    )
 
 
 def token_count_expr(col: Column | str) -> Column:

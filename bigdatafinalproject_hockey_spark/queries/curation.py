@@ -31,14 +31,11 @@ from bigdatafinalproject_hockey_spark.functions.text import (
     bigrams_expr,
     md5_fingerprint_expr,
     tokens_expr,
+    tokens_sql,
 )
 from bigdatafinalproject_hockey_spark.operators.grouped import pack_sequences
 from bigdatafinalproject_hockey_spark.operators.windows import topk_per_group
 from bigdatafinalproject_hockey_spark.queries.base import register
-
-_SQL_TOKS = (
-    "list_filter(string_split_regex(lower({c}), '[^a-z0-9]+'), x -> x <> '')"
-)
 
 
 # ---------------------------------------------------------------------------
@@ -51,7 +48,7 @@ _SQL_TOKS = (
 # moved to the faithful per-language LMs (_unigram_lang_ctes below).
 _UNIGRAM_CTES = f"""
     WITH tk AS (
-      SELECT doc_id, lang, unnest({_SQL_TOKS.format(c="text")}) AS token
+      SELECT doc_id, lang, unnest({tokens_sql("text")}) AS token
       FROM documents
     ),
     v AS (SELECT token, COUNT(*) AS tf FROM tk GROUP BY token),
@@ -111,7 +108,7 @@ def _unigram_lang_ctes(src: str) -> str:
     ``pipeline_web_to_shards`` quality-mix stage share one
     definition. Ends with ``qscored``. No leading comma."""
     return f"""qtk AS (
-      SELECT doc_id, lang, unnest({_SQL_TOKS.format(c="text")}) AS token
+      SELECT doc_id, lang, unnest({tokens_sql("text")}) AS token
       FROM {src}
     ),
     qv AS (
@@ -379,7 +376,7 @@ def _rep_ratio_frame(tkdf: DataFrame) -> DataFrame:
     "text_repetition_ngram_profile",
     oracle=f"""
     WITH rtk0 AS (
-      SELECT doc_id, {_SQL_TOKS.format(c="text")} AS tk FROM documents
+      SELECT doc_id, {tokens_sql("text")} AS tk FROM documents
     ),
     {_rep_cte_sql("rtk0")}
     SELECT * FROM rep
@@ -569,7 +566,7 @@ def _gopher_rep_tokens_sql(src: str) -> str:
     """The long-repeat rendering as a CTE (``grend``) over a
     ``(doc_id, text)`` relation — the DuckDB twin of the rendering in
     :func:`_gopher_frame`; shared constants above."""
-    toks = _SQL_TOKS.format(c="text")
+    toks = tokens_sql("text")
     return f"""grend AS (
       SELECT doc_id,
              CASE WHEN doc_id % {_GOPHER_REP_MOD} = 0 THEN
@@ -603,7 +600,7 @@ def _gopher_ctes(
     bounds (``_GOPHER_WEB_*`` at the pipeline) while every other
     rule — including all nine Rae repetition thresholds — keeps the
     shared constants verbatim."""
-    toks = _SQL_TOKS.format(c="text")
+    toks = tokens_sql("text")
     stop_list = ", ".join(f"'{w}'" for w in _GOPHER_STOPWORDS)
     rep_sigs = ",\n             ".join(f"r.{c}" for c in _GOPHER_REP_MAX)
     rep_rules = ",\n             ".join(
@@ -983,7 +980,7 @@ def q_filter_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_bigram_logprob",
     oracle=f"""
     WITH t AS (
-      SELECT doc_id, {_SQL_TOKS.format(c="text")} AS toks FROM documents
+      SELECT doc_id, {tokens_sql("text")} AS toks FROM documents
     ),
     inst AS (
       SELECT doc_id, unnest({_SQL_BIGRAMS.format(t="toks")}) AS bigram FROM t
@@ -1048,7 +1045,7 @@ _SQL_3GRAMS = (
     "text_contamination",
     oracle=f"""
     WITH t AS (
-      SELECT doc_id, {_SQL_TOKS.format(c="text")} AS toks FROM documents
+      SELECT doc_id, {tokens_sql("text")} AS toks FROM documents
     ),
     sh AS (SELECT doc_id, {_SQL_3GRAMS.format(t="toks")} AS grams FROM t),
     bench AS (SELECT DISTINCT unnest(grams) AS g FROM sh WHERE doc_id < 10),
@@ -1225,7 +1222,7 @@ def _decon_ctes(
     oracle, so the two cannot drift. ``bench_source``: the relation
     the doc_id < 10 benchmark docs are drawn from (defaults to
     ``source`` — see ``_decon_scores``)."""
-    toks = _SQL_TOKS.format(c="text")
+    toks = tokens_sql("text")
     return f"""dtk AS (
       SELECT doc_id, text, {toks} AS dtoks FROM {source}
     ),
@@ -1308,7 +1305,7 @@ def q_decontaminate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_tfidf_top_terms",
     oracle=f"""
     WITH tk AS (
-      SELECT doc_id, unnest({_SQL_TOKS.format(c="text")}) AS token
+      SELECT doc_id, unnest({tokens_sql("text")}) AS token
       FROM documents
     ),
     tf AS (SELECT doc_id, token, COUNT(*) AS tf FROM tk GROUP BY doc_id, token),
@@ -1366,7 +1363,7 @@ def q_text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_segments",
     oracle=f"""
     WITH t AS (
-      SELECT doc_id, {_SQL_TOKS.format(c="text")} AS toks FROM documents
+      SELECT doc_id, {tokens_sql("text")} AS toks FROM documents
     ),
     idx AS (
       SELECT doc_id, toks,
@@ -1676,7 +1673,7 @@ _SQL_QUOTA = (
     oracle=f"""
     WITH t AS (
       SELECT doc_id, lang,
-             len({_SQL_TOKS.format(c="text")}) AS n_tokens,
+             len({tokens_sql("text")}) AS n_tokens,
              md5(CAST(doc_id AS VARCHAR)) AS h
       FROM documents
     ),
@@ -1870,7 +1867,7 @@ _PACK_SHARDS = 8
 _PACK_CTE = f"""
     WITH RECURSIVE docs AS (
       SELECT doc_id, lang, doc_id % {_PACK_SHARDS} AS shard,
-             CAST(len({_SQL_TOKS.format(c="text")}) AS BIGINT) AS n_tokens,
+             CAST(len({tokens_sql("text")}) AS BIGINT) AS n_tokens,
              ROW_NUMBER() OVER (
                PARTITION BY lang, doc_id % {_PACK_SHARDS} ORDER BY doc_id
              ) AS rn
@@ -2093,7 +2090,7 @@ _DRIFT_VOCAB = 2000
     "corpus_drift",
     oracle=f"""
     WITH tk AS (
-      SELECT source, unnest({_SQL_TOKS.format(c="text")}) AS token
+      SELECT source, unnest({tokens_sql("text")}) AS token
       FROM documents
     ),
     call AS (SELECT token, COUNT(*) AS c_all FROM tk GROUP BY token),
@@ -2207,8 +2204,8 @@ _CHUNK_S = 48   # stride (overlap = W - S = 16)
     "chunk_overlap",
     oracle=f"""
     WITH base AS (
-      SELECT doc_id, {_SQL_TOKS.format(c="text")} AS toks,
-             len({_SQL_TOKS.format(c="text")}) AS n
+      SELECT doc_id, {tokens_sql("text")} AS toks,
+             len({tokens_sql("text")}) AS n
       FROM documents
     ),
     nc AS (
@@ -2283,7 +2280,7 @@ _TOKENIZE_B = 64   # OOV hash buckets (power of two: id = V + low bits of hash)
       SELECT doc_id,
              unnest(range(len(tk))) AS pos,
              unnest(tk) AS token
-      FROM (SELECT doc_id, {_SQL_TOKS.format(c="text")} AS tk FROM documents)
+      FROM (SELECT doc_id, {tokens_sql("text")} AS tk FROM documents)
     ),
     counts AS (SELECT token, COUNT(*) AS cnt FROM tok GROUP BY token),
     vocab AS (
@@ -2361,7 +2358,7 @@ _QC_WEIGHTS = [
     "text_quality_classifier",
     oracle=f"""
     WITH tk AS (
-      SELECT doc_id, {_SQL_TOKS.format(c="text")} AS tk FROM documents
+      SELECT doc_id, {tokens_sql("text")} AS tk FROM documents
     )
     SELECT doc_id,
            CAST(len(tk) AS BIGINT) AS n_tok,
@@ -2559,7 +2556,7 @@ def _quality_units_sql(tk: str) -> str:
       JOIN keep k ON n.doc_id = k.doc_id
     ),
     tk AS (
-      SELECT doc_id, source, {_SQL_TOKS.format(c="text")} AS tk FROM surv
+      SELECT doc_id, source, {tokens_sql("text")} AS tk FROM surv
     ),
     scored AS (
       SELECT doc_id, source,
@@ -2768,7 +2765,7 @@ def q_ts_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT doc_id, CAST(i - 1 AS INT) AS pos,
            list_extract(toks, i) || ' ' || list_extract(toks, i + 1)
              AS bigram
-    FROM (SELECT doc_id, {_SQL_TOKS.format(c="text")} AS toks
+    FROM (SELECT doc_id, {tokens_sql("text")} AS toks
           FROM documents) t,
     LATERAL (SELECT unnest(generate_series(1, len(toks) - 1)) AS i) g
     """,
@@ -2961,7 +2958,7 @@ def _span_cte_sql(
     must be empty or end with a comma."""
     return f"""
     WITH {prefix} t AS (
-      SELECT doc_id, {_SQL_TOKS.format(c=text)} AS toks FROM {source}
+      SELECT doc_id, {tokens_sql(text)} AS toks FROM {source}
     ),
     s AS (
       SELECT doc_id,
@@ -3281,7 +3278,7 @@ def _decon_redact_oracle() -> str:
     """Positional-3-gram cuts shaped as a ``spans`` CTE so the
     SHARED ``_REWRITE_CTES`` island-merge/rebuild block applies
     verbatim — the redact oracle cannot drift from the rewrite's."""
-    toks = _SQL_TOKS.format(c="text")
+    toks = tokens_sql("text")
     return (
         f"""
     WITH tall AS (
@@ -3391,7 +3388,7 @@ _WEB_PIPE_PREFIX = f"""
     ),
     gated AS (
       SELECT doc_id, text FROM clean
-      WHERE len({_SQL_TOKS.format(c="text")}) >= 20
+      WHERE len({tokens_sql("text")}) >= 20
         AND n_blocks_dropped * 2 < n_blocks_kept + n_blocks_dropped
     ),"""
 
@@ -3646,7 +3643,7 @@ def _web_to_shards_oracle() -> str:
     ),
     gated AS (
       SELECT doc_id, text FROM clean
-      WHERE len({_SQL_TOKS.format(c="text")}) >= 20
+      WHERE len({tokens_sql("text")}) >= 20
         AND n_blocks_dropped * 2 < n_blocks_kept + n_blocks_dropped
     ),
     norm AS MATERIALIZED (
@@ -3689,7 +3686,7 @@ def _web_to_shards_oracle() -> str:
         + f""",
     tokpos AS (
       SELECT doc, unnest(range(len(tk))) AS pos, unnest(tk) AS token
-      FROM (SELECT doc, {_SQL_TOKS.format(c="dtext")} AS tk FROM rw)
+      FROM (SELECT doc, {tokens_sql("dtext")} AS tk FROM rw)
     ),
     tcounts AS (SELECT token, COUNT(*) AS cnt FROM tokpos GROUP BY token),
     tvocab AS (
@@ -4154,7 +4151,7 @@ def q_filter_url_blocklist(spark: SparkSession, sf_dir: str) -> DataFrame:
     "bpe_learn_merge",
     oracle=f"""
     WITH RECURSIVE occ AS (
-      SELECT unnest({_SQL_TOKS.format(c="text")}) AS tok FROM documents
+      SELECT unnest({tokens_sql("text")}) AS tok FROM documents
     ),
     ch AS (
       SELECT tok, string_split(tok, '') AS cs,
@@ -4331,7 +4328,7 @@ def _bpe_learn_ctes(k: int) -> str:
     parts = [
         f"""
     WITH occ AS (
-      SELECT unnest({_SQL_TOKS.format(c="text")}) AS tok FROM documents
+      SELECT unnest({tokens_sql("text")}) AS tok FROM documents
     ),
     ch AS (
       SELECT tok, CAST(COUNT(*) AS BIGINT) AS freq FROM occ GROUP BY tok
@@ -4602,7 +4599,7 @@ def _bpe_apply_oracle(k: int) -> str:
         + f""",
     corpus AS (
       SELECT doc_id, unnest(range(len(tk))) AS pos, unnest(tk) AS tok
-      FROM (SELECT doc_id, {_SQL_TOKS.format(c="text")} AS tk
+      FROM (SELECT doc_id, {tokens_sql("text")} AS tk
             FROM documents)
     ),
     segx AS (
@@ -4750,7 +4747,7 @@ def _bpe_delta_ctes(k: int) -> str:
         FROM (
           SELECT doc_id, unnest(range(len(tk))) AS pos,
                  unnest(tk) AS tok
-          FROM (SELECT doc_id, {_SQL_TOKS.format(c="text")} AS tk
+          FROM (SELECT doc_id, {tokens_sql("text")} AS tk
                 FROM documents WHERE doc_id % {_BPE_DELTA_MOD} = 0)
         )
       )

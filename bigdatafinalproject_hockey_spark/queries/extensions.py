@@ -24,6 +24,7 @@ from bigdatafinalproject_hockey_spark.dedup.minhash import (
     minhash_candidate_pairs_portable,
     minhash_incremental_matches,
     minhash_incremental_oracle_sql,
+    minhash_lsh_cte_sql,
     minhash_lsh_oracle_sql,
 )
 from bigdatafinalproject_hockey_spark.dedup.simhash import (
@@ -40,6 +41,7 @@ from bigdatafinalproject_hockey_spark.functions.text import (
     md5_fingerprint_expr,
     stopword_ratio_expr,
     token_count_expr,
+    tokens_sql,
 )
 from bigdatafinalproject_hockey_spark.multimodal import (
     attach_binary_payload,
@@ -57,11 +59,6 @@ from bigdatafinalproject_hockey_spark.similarity import (
     brute_force_cosine_topk,
     cosine_lsh_near_pairs,
     cosine_lsh_oracle_sql,
-)
-
-# DuckDB-side tokenizer identical to functions.text.tokens_expr
-_SQL_TOKS = (
-    "list_filter(string_split_regex(lower({c}), '[^a-z0-9]+'), x -> x <> '')"
 )
 
 # ---------------------------------------------------------------------------
@@ -87,12 +84,15 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "dedup_ngram_jaccard",
-    oracle=f"""
-    WITH tok AS (
+# DuckDB oracle fragments shared by the dedup oracles below. An oracle
+# shares SQL only with other oracles, never with the Spark path it
+# checks.
+#
+# Token-set Jaccard inputs, blocked by language: distinct tokens per
+# doc, token counts, and per-pair intersection sizes.
+_JACCARD_CTES = f"""tok AS (
       SELECT doc_id, lang,
-             unnest(list_distinct({_SQL_TOKS.format(c="text")})) AS token
+             unnest(list_distinct({tokens_sql("text")})) AS token
       FROM documents
     ),
     cnt AS (SELECT doc_id, COUNT(*) AS n_tok FROM tok GROUP BY doc_id),
@@ -101,7 +101,76 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM tok a JOIN tok b
         ON a.token = b.token AND a.lang = b.lang AND a.doc_id < b.doc_id
       GROUP BY 1, 2
+    )"""
+
+# ``pairs``: the Jaccard >= 0.8 pairs of _JACCARD_CTES.
+_JACCARD_PAIRS_CTE = """pairs AS (
+      SELECT doc_a, doc_b
+      FROM inter
+      JOIN cnt ca ON doc_a = ca.doc_id
+      JOIN cnt cb ON doc_b = cb.doc_id
+      WHERE CAST(n_inter AS DOUBLE) /
+            CAST(ca.n_tok + cb.n_tok - n_inter AS DOUBLE) >= 0.8
+    )"""
+
+# ``comp``: connected components of the graph of a ``pairs`` CTE, as a
+# recursive transitive closure (needs WITH RECURSIVE). Every doc gets
+# the min doc id it reaches, an unpaired doc its own id.
+_COMPONENTS_CTES = """und AS (
+      SELECT doc_a AS a, doc_b AS b FROM pairs
+      UNION ALL
+      SELECT doc_b, doc_a FROM pairs
+    ),
+    reach(a, b) AS (
+      SELECT a, b FROM und
+      UNION
+      SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a
+    ),
+    comp AS (
+      SELECT d.doc_id,
+             LEAST(d.doc_id, COALESCE(MIN(r.b), d.doc_id)) AS component_id
+      FROM documents d LEFT JOIN reach r ON d.doc_id = r.a
+      GROUP BY d.doc_id
+    )"""
+
+# Keep-best tail after ``comp``: per component, the doc with the most
+# tokens, doc id breaking ties.
+_KEEP_BEST_TAIL = f"""q AS (
+      SELECT doc_id, len({tokens_sql("text")}) AS n_tokens
+      FROM documents
     )
+    SELECT component_id, doc_id AS kept_doc_id,
+           CAST(n_tokens AS BIGINT) AS n_tokens
+    FROM (
+      SELECT c.component_id, c.doc_id, q.n_tokens,
+             ROW_NUMBER() OVER (PARTITION BY c.component_id
+                                ORDER BY q.n_tokens DESC, c.doc_id) AS rn
+      FROM comp c JOIN q ON q.doc_id = c.doc_id
+    ) WHERE rn = 1"""
+
+
+def _keep_best(docs: DataFrame, comps: DataFrame) -> DataFrame:
+    """(component_id, kept_doc_id, n_tokens): per component of
+    ``comps``, the doc with the most tokens, doc id breaking ties —
+    one |docs|-row join and one bounded window."""
+    quality = docs.select(
+        "doc_id", token_count_expr("text").cast("long").alias("n_tokens")
+    )
+    best = win_ops.topk_per_group(
+        comps.join(quality, "doc_id"),
+        ["component_id"],
+        [F.col("n_tokens").desc(), F.col("doc_id").asc()],
+        1,
+    )
+    return best.select(
+        "component_id", F.col("doc_id").alias("kept_doc_id"), "n_tokens"
+    )
+
+
+@register(
+    "dedup_ngram_jaccard",
+    oracle=f"""
+    WITH {_JACCARD_CTES}
     SELECT doc_a, doc_b,
            CAST(n_inter AS DOUBLE) /
            CAST(ca.n_tok + cb.n_tok - n_inter AS DOUBLE) AS jaccard
@@ -122,18 +191,7 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_containment",
     oracle=f"""
-    WITH tok AS (
-      SELECT doc_id, lang,
-             unnest(list_distinct({_SQL_TOKS.format(c="text")})) AS token
-      FROM documents
-    ),
-    cnt AS (SELECT doc_id, COUNT(*) AS n_tok FROM tok GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter
-      FROM tok a JOIN tok b
-        ON a.token = b.token AND a.lang = b.lang AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ),
+    WITH {_JACCARD_CTES},
     scored AS (
       SELECT doc_a, doc_b, ca.n_tok AS n_a, cb.n_tok AS n_b,
              CAST(n_inter AS DOUBLE) / LEAST(ca.n_tok, cb.n_tok)
@@ -172,40 +230,10 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_components",
     oracle=f"""
-    WITH RECURSIVE tok AS (
-      SELECT doc_id, lang,
-             unnest(list_distinct({_SQL_TOKS.format(c="text")})) AS token
-      FROM documents
-    ),
-    cnt AS (SELECT doc_id, COUNT(*) AS n_tok FROM tok GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter
-      FROM tok a JOIN tok b
-        ON a.token = b.token AND a.lang = b.lang AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ),
-    pairs AS (
-      SELECT doc_a, doc_b
-      FROM inter
-      JOIN cnt ca ON doc_a = ca.doc_id
-      JOIN cnt cb ON doc_b = cb.doc_id
-      WHERE CAST(n_inter AS DOUBLE) /
-            CAST(ca.n_tok + cb.n_tok - n_inter AS DOUBLE) >= 0.8
-    ),
-    und AS (
-      SELECT doc_a AS a, doc_b AS b FROM pairs
-      UNION ALL
-      SELECT doc_b, doc_a FROM pairs
-    ),
-    reach(a, b) AS (
-      SELECT a, b FROM und
-      UNION
-      SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a
-    )
-    SELECT d.doc_id,
-           LEAST(d.doc_id, COALESCE(MIN(r.b), d.doc_id)) AS component_id
-    FROM documents d LEFT JOIN reach r ON d.doc_id = r.a
-    GROUP BY d.doc_id
+    WITH RECURSIVE {_JACCARD_CTES},
+    {_JACCARD_PAIRS_CTE},
+    {_COMPONENTS_CTES}
+    SELECT doc_id, component_id FROM comp
     """,
 )
 def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -222,62 +250,18 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_keep_best",
     oracle=f"""
-    WITH RECURSIVE tok AS (
-      SELECT doc_id, lang,
-             unnest(list_distinct({_SQL_TOKS.format(c="text")})) AS token
-      FROM documents
-    ),
-    cnt AS (SELECT doc_id, COUNT(*) AS n_tok FROM tok GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter
-      FROM tok a JOIN tok b
-        ON a.token = b.token AND a.lang = b.lang AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    ),
-    pairs AS (
-      SELECT doc_a, doc_b
-      FROM inter
-      JOIN cnt ca ON doc_a = ca.doc_id
-      JOIN cnt cb ON doc_b = cb.doc_id
-      WHERE CAST(n_inter AS DOUBLE) /
-            CAST(ca.n_tok + cb.n_tok - n_inter AS DOUBLE) >= 0.8
-    ),
-    und AS (
-      SELECT doc_a AS a, doc_b AS b FROM pairs
-      UNION ALL
-      SELECT doc_b, doc_a FROM pairs
-    ),
-    reach(a, b) AS (
-      SELECT a, b FROM und
-      UNION
-      SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a
-    ),
-    comp AS (
-      SELECT d.doc_id,
-             LEAST(d.doc_id, COALESCE(MIN(r.b), d.doc_id)) AS component_id
-      FROM documents d LEFT JOIN reach r ON d.doc_id = r.a
-      GROUP BY d.doc_id
-    ),
-    q AS (
-      SELECT doc_id, len({_SQL_TOKS.format(c="text")}) AS n_tokens
-      FROM documents
-    )
-    SELECT component_id, doc_id AS kept_doc_id,
-           CAST(n_tokens AS BIGINT) AS n_tokens
-    FROM (
-      SELECT c.component_id, c.doc_id, q.n_tokens,
-             ROW_NUMBER() OVER (PARTITION BY c.component_id
-                                ORDER BY q.n_tokens DESC, c.doc_id) AS rn
-      FROM comp c JOIN q ON q.doc_id = c.doc_id
-    ) WHERE rn = 1
+    WITH RECURSIVE {_JACCARD_CTES},
+    {_JACCARD_PAIRS_CTE},
+    {_COMPONENTS_CTES},
+    {_KEEP_BEST_TAIL}
     """,
 )
 def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality-aware cluster dedup (round 9): near-dup components →
-    keep the BEST document per cluster, not an arbitrary one — the
-    form production curation actually runs (a dedup that keeps the
-    min-id doc throws away the longer/cleaner variant whenever the
-    crawl's junk copy sorts first). Composition of two green tiers:
+    """Quality-aware cluster dedup: near-dup components → keep the
+    BEST document per cluster, not an arbitrary one — the form
+    production curation actually runs (a dedup that keeps the min-id
+    doc throws away the longer/cleaner variant whenever the crawl's
+    junk copy sorts first). Composition of two green tiers:
     `dedup_components`' min-label clusters, then one argmax-per-
     component window over a deterministic quality key (token count
     desc, doc id tiebreak — swap in `text_quality_classifier`'s score
@@ -285,86 +269,41 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     top of the component pass is one |docs|-row join + one bounded
     window — the keep-best pass itself is the cheap part.
 
-    SCALE SCOPE (round 13, VERDICT r12 item 7): this variant's
-    candidate stage is the EXACT blocked-jaccard inverted-index join
-    (dedup/jaccard.py), whose cost is Σ|posting list|² within a
-    block — correct for narrow blocks (lang × length-bucket ×
-    source, the config its docstring prescribes) but quadratic on a
-    heavy block: on an amplified corpus a ubiquitous token's posting
-    list spans a whole copy and the join explodes (measured: a 100×
-    corpus exhausted shuffle-spill disk). The 100 TB configuration is
-    ``dedup_keep_best_minhash`` below — identical keep-best semantics
-    over the sub-quadratic MinHash+LSH candidate stage. Output: one row per
-    component (component_id, kept_doc_id, n_tokens)."""
+    SCALE SCOPE: this variant's candidate stage is the EXACT
+    blocked-jaccard inverted-index join (dedup/jaccard.py), whose cost
+    is Σ|posting list|² within a block — correct for narrow blocks
+    (lang × length-bucket × source, the config its docstring
+    prescribes) but quadratic on a heavy block: on an amplified corpus
+    a ubiquitous token's posting list spans a whole copy and the join
+    explodes (measured: a 100× corpus exhausted shuffle-spill disk).
+    The 100 TB configuration is ``dedup_keep_best_minhash`` below —
+    identical keep-best semantics over the sub-quadratic MinHash+LSH
+    candidate stage. Output: one row per component (component_id,
+    kept_doc_id, n_tokens)."""
     docs = load_table(spark, "documents", sf_dir)
     pairs = jaccard_pairs(docs, "text", "doc_id", block_col="lang", threshold=0.8)
-    comps = dedup_components(docs, pairs)
-    quality = docs.select(
-        "doc_id", token_count_expr("text").cast("long").alias("n_tokens")
-    )
-    ranked = comps.join(quality, "doc_id")
-    best = win_ops.topk_per_group(
-        ranked,
-        ["component_id"],
-        [F.col("n_tokens").desc(), F.col("doc_id").asc()],
-        1,
-    )
-    return best.select(
-        "component_id", F.col("doc_id").alias("kept_doc_id"), "n_tokens"
-    )
+    return _keep_best(docs, dedup_components(docs, pairs))
 
 
-def _keep_best_minhash_oracle() -> str:
-    from bigdatafinalproject_hockey_spark.dedup.minhash import (
-        minhash_lsh_cte_sql,
-    )
-
-    return f"""
+@register(
+    "dedup_keep_best_minhash",
+    oracle=f"""
     WITH RECURSIVE {minhash_lsh_cte_sql()},
-    kcand AS (
+    pairs AS (
       SELECT doc_a, doc_b FROM near WHERE jaccard_dist <= 0.5
       UNION ALL
       SELECT doc_a, doc_b FROM exact_edges
     ),
-    und AS (
-      SELECT doc_a AS a, doc_b AS b FROM kcand
-      UNION ALL
-      SELECT doc_b, doc_a FROM kcand
-    ),
-    reach(a, b) AS (
-      SELECT a, b FROM und
-      UNION
-      SELECT r.a, u.b FROM reach r JOIN und u ON r.b = u.a
-    ),
-    comp AS (
-      SELECT d.doc_id,
-             LEAST(d.doc_id, COALESCE(MIN(r.b), d.doc_id)) AS component_id
-      FROM documents d LEFT JOIN reach r ON d.doc_id = r.a
-      GROUP BY d.doc_id
-    ),
-    q AS (
-      SELECT doc_id, len({_SQL_TOKS.format(c="text")}) AS n_tokens
-      FROM documents
-    )
-    SELECT component_id, doc_id AS kept_doc_id,
-           CAST(n_tokens AS BIGINT) AS n_tokens
-    FROM (
-      SELECT c.component_id, c.doc_id, q.n_tokens,
-             ROW_NUMBER() OVER (PARTITION BY c.component_id
-                                ORDER BY q.n_tokens DESC, c.doc_id) AS rn
-      FROM comp c JOIN q ON q.doc_id = c.doc_id
-    ) WHERE rn = 1
-    """
-
-
-@register("dedup_keep_best_minhash", oracle=_keep_best_minhash_oracle())
+    {_COMPONENTS_CTES},
+    {_KEEP_BEST_TAIL}
+    """,
+)
 def q_dedup_keep_best_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality-aware cluster dedup over MINHASH clusters (round 13,
-    VERDICT r12 item 7) — the 100 TB configuration of
-    ``dedup_keep_best``: identical keep-best semantics (min-label
-    components → one argmax-per-component window over token count
-    desc, doc id tiebreak), but the candidate stage is the
-    sub-quadratic portable MinHash+LSH pipeline
+    """Quality-aware cluster dedup over MINHASH clusters — the 100 TB
+    configuration of ``dedup_keep_best``: identical keep-best
+    semantics (min-label components → one argmax-per-component window
+    over token count desc, doc id tiebreak), but the candidate stage
+    is the sub-quadratic portable MinHash+LSH pipeline
     (``minhash_candidate_pairs_portable``, est-jaccard-distance
     ≤ 0.5 + the exact-dup star collapse) instead of the exact
     blocked-jaccard inverted-index join — the production action of
@@ -375,39 +314,25 @@ def q_dedup_keep_best_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     propagation over checkpointed metadata-width frames, one |docs|
     quality join + one bounded window. Nothing is ∝ |posting list|².
     Full value-hash oracle: the composable portable-MinHash CTE
-    chain (``minhash_lsh_cte_sql`` — byte-shared with the
+    chain (``minhash_lsh_cte_sql`` — shared with the
     dedup_minhash_lsh_portable oracle) into the recursive
-    reachability closure and the keep-best window."""
-    from bigdatafinalproject_hockey_spark.dedup.minhash import (
-        minhash_candidate_pairs_portable,
-    )
-
+    reachability closure and the keep-best window, both shared with
+    ``dedup_keep_best``'s oracle."""
     docs = load_table(spark, "documents", sf_dir)
     pairs = minhash_candidate_pairs_portable(
         docs, "text", "doc_id", shingle_n=3, max_jaccard_distance=0.5
     )
-    comps = dedup_components(docs, pairs.select("doc_a", "doc_b"))
-    quality = docs.select(
-        "doc_id", token_count_expr("text").cast("long").alias("n_tokens")
-    )
-    ranked = comps.join(quality, "doc_id")
-    best = win_ops.topk_per_group(
-        ranked,
-        ["component_id"],
-        [F.col("n_tokens").desc(), F.col("doc_id").asc()],
-        1,
-    )
-    return best.select(
-        "component_id", F.col("doc_id").alias("kept_doc_id"), "n_tokens"
-    )
+    return _keep_best(docs, dedup_components(docs, pairs.select("doc_a", "doc_b")))
 
 
 @register("dedup_minhash_lsh")  # xxhash64 fast path → rows-only check
 def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH candidate near-dup pairs (sub-quadratic scale
-    path). xxhash64-based fast variant — the 100 TB/bench path; its
-    semantics are externally verified through
-    dedup_minhash_lsh_portable below."""
+    path) with the xxhash64 hash family — the 100 TB/bench path. Its
+    dataflow after the signatures is the one
+    dedup_minhash_lsh_portable runs and checks against DuckDB; only
+    its xxhash64 signature and band-key expressions are checked
+    rows-only."""
     docs = load_table(spark, "documents", sf_dir)
     return minhash_candidate_pairs(
         docs, "text", "doc_id", shingle_n=3, max_jaccard_distance=0.5
@@ -421,9 +346,10 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dedup_minhash_lsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The flagship MinHash+LSH dedup pipeline with engine-portable
     hashes (md5-derived shingle hash + literal universal-hash minhash
-    family) — identical dataflow, banding, and exact-dup collapse to
-    dedup_minhash_lsh, but every value is reproducible in DuckDB, so
-    the whole sub-quadratic pipeline gets a full value-hash check."""
+    family). It runs the same dataflow as dedup_minhash_lsh — exact-dup
+    collapse, banding, co-partitioned self-join, estimate — and every
+    value is reproducible in DuckDB, so the full value-hash check
+    covers that shared dataflow as well as the portable hashes."""
     docs = load_table(spark, "documents", sf_dir)
     return minhash_candidate_pairs_portable(
         docs, "text", "doc_id", shingle_n=3, max_jaccard_distance=0.5
@@ -594,7 +520,7 @@ def q_sim_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_token_count",
     oracle=f"""
     SELECT doc_id,
-           CAST(len({_SQL_TOKS.format(c="text")}) AS BIGINT) AS n_tokens,
+           CAST(len({tokens_sql("text")}) AS BIGINT) AS n_tokens,
            CAST(length(text) AS BIGINT) AS n_chars_actual
     FROM documents
     """,
@@ -613,7 +539,7 @@ def q_text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_repetition_score",
     oracle=f"""
     WITH tk AS (
-      SELECT doc_id, unnest({_SQL_TOKS.format(c="text")}) AS token
+      SELECT doc_id, unnest({tokens_sql("text")}) AS token
       FROM documents
     ),
     c AS (
@@ -683,7 +609,7 @@ def q_agg_quantile_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_top_tokens",
     oracle=f"""
     WITH tk AS (
-      SELECT doc_id, unnest({_SQL_TOKS.format(c="text")}) AS token
+      SELECT doc_id, unnest({tokens_sql("text")}) AS token
       FROM documents
     ),
     stats AS (
@@ -748,7 +674,7 @@ _EN_STOP_SQL = "['the', 'a', 'of', 'and', 'to', 'in', 'is', 'value']"
     "text_quality_score",
     oracle=f"""
     WITH t AS (
-      SELECT doc_id, text, {_SQL_TOKS.format(c="text")} AS toks
+      SELECT doc_id, text, {tokens_sql("text")} AS toks
       FROM documents
     )
     SELECT doc_id,
@@ -782,7 +708,7 @@ def q_text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_lang_id",
     oracle=f"""
     WITH t AS (
-      SELECT doc_id, lang, {_SQL_TOKS.format(c="text")} AS toks
+      SELECT doc_id, lang, {tokens_sql("text")} AS toks
       FROM documents
     )
     SELECT doc_id, lang,
@@ -831,7 +757,7 @@ def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     "pipeline_document_curation",
     oracle=f"""
     WITH t AS (
-      SELECT doc_id, lang, text, {_SQL_TOKS.format(c="text")} AS toks
+      SELECT doc_id, lang, text, {tokens_sql("text")} AS toks
       FROM documents
     ),
     m AS (
@@ -1457,7 +1383,7 @@ def q_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     tk AS (
       SELECT doc_id,
-             unnest(list_distinct({_SQL_TOKS.format(c="text")})) AS token
+             unnest(list_distinct({tokens_sql("text")})) AS token
       FROM documents
     ),
     qtk AS (SELECT doc_id AS query_id, token FROM tk WHERE doc_id < 20),

@@ -37,6 +37,7 @@ from bigdatafinalproject_hockey_spark.functions.vectors import (
 )
 from bigdatafinalproject_hockey_spark.operators.windows import topk_per_group
 from bigdatafinalproject_hockey_spark.similarity import (
+    _DUCK_L2FP,
     _sign_band_key_col,
     brute_force_cosine_topk,
     bucketed_ivf_assignment_from_keys,
@@ -671,29 +672,22 @@ def q_dedup_semantic_autokey(spark: SparkSession, sf_dir: str) -> DataFrame:
     return semantic_dedup_from_assignment(assign, min_cosine=0.3)
 
 
-# Shared PQ CTE prefix (DuckDB): subvector split, deterministic
+# Shared PQ CTE fragments (DuckDB): subvector split, deterministic
 # per-subspace codebooks, integer squared-L2 scoring, argmin encode —
-# byte-identical semantics to similarity.pq_encode (same rounding,
-# same code tiebreak) so the two PQ oracles can never drift from the
-# Spark encoder.
-# The chain after ``e`` is separate so sim_ann_ivfpq can append it to
-# the IVF assignment CTE (which defines the same ``e``) without a
-# name collision.
-_PQ_CHAIN = """
-    sub AS (
+# value-identical to similarity.pq_encode (same rounding, same code
+# tiebreak) so the PQ oracles can never drift from the Spark encoder.
+# Each fragment is spelled once; an oracle picks the ones it needs.
+#
+# ``sub``: the 8 subvectors of 8 dims of each ``emb`` row of ``{src}``.
+_PQ_SUB = """sub AS (
       SELECT vec_id, mm.m AS m, emb[mm.m * 8 + 1 : mm.m * 8 + 8] AS subv
-      FROM e, LATERAL (SELECT unnest(range(8)) AS m) mm
-    ),
-    cb AS (
-      SELECT m, vec_id // 50 AS code, subv AS cvec
-      FROM sub WHERE vec_id % 50 = 0 AND vec_id < 800
-    ),
-    pq_scored AS (
+      FROM {src}, LATERAL (SELECT unnest(range(8)) AS m) mm
+    )"""
+
+# ``pq_scored``/``enc``: each ``sub`` row's nearest ``cb`` code.
+_PQ_ENCODE = f"""pq_scored AS (
       SELECT s.vec_id, s.m, c.code,
-             CAST(ROUND(ROUND(list_sum(list_transform(
-                 list_zip(s.subv, c.cvec),
-                 z -> (z[1] - z[2]) * (z[1] - z[2]))), 6) * 1000000)
-               AS BIGINT) AS d_fp
+             {_DUCK_L2FP.format(a="s.subv", b="c.cvec")} AS d_fp
       FROM sub s JOIN cb c ON s.m = c.m
     ),
     enc AS (
@@ -702,13 +696,81 @@ _PQ_CHAIN = """
                                      ORDER BY d_fp, code) AS rn
         FROM pq_scored
       ) WHERE rn = 1
-    )
-"""
+    )"""
+
+# The chain after ``e`` (static codebooks: every 50th vector's
+# subvectors, 16 codes) is separate so the IVF-PQ oracles can append
+# it to the IVF assignment CTE, which defines the same ``e``.
+_PQ_CHAIN = f"""{_PQ_SUB.format(src="e")},
+    cb AS (
+      SELECT m, vec_id // 50 AS code, subv AS cvec
+      FROM sub WHERE vec_id % 50 = 0 AND vec_id < 800
+    ),
+    {_PQ_ENCODE}"""
 
 _PQ_CTE = (
-    "e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),"
+    "e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),\n    "
     + _PQ_CHAIN
 )
+
+# ``qsub``/``lut``: the 10 query vectors' subvectors and their exact
+# distance to every ``cb`` code — the ADC lookup table.
+_PQ_LUT = f"""qsub AS (SELECT vec_id AS query_id, m, subv AS qsub
+             FROM sub WHERE vec_id < 10),
+    lut AS (
+      SELECT q.query_id, c.m, c.code,
+             {_DUCK_L2FP.format(a="q.qsub", b="c.cvec")} AS d_fp
+      FROM qsub q JOIN cb c ON q.m = c.m
+    )"""
+
+
+def _ivfpq_adc_ctes(nprobe: int = 1) -> str:
+    """``qc``/``qsub``/``lut``/``cand``/``adc`` after the IVF
+    assignment and a PQ chain: each query's ``nprobe`` nearest cells
+    (the assignment's ranking), every other member of those cells, and
+    its ADC distance summed from ``lut`` over its ``enc`` codes."""
+    return f"""qc AS (SELECT vec_id AS query_id, cent_id AS cell
+           FROM ranked WHERE vec_id < 10 AND rn <= {nprobe}),
+    {_PQ_LUT},
+    cand AS (
+      SELECT qc.query_id, a.vec_id AS neighbor_id
+      FROM qc JOIN assign a ON a.cell = qc.cell
+      WHERE a.vec_id <> qc.query_id
+    ),
+    adc AS (
+      SELECT c.query_id, c.neighbor_id,
+             CAST(SUM(l.d_fp) AS BIGINT) AS adc_fp
+      FROM cand c
+      JOIN enc en ON en.vec_id = c.neighbor_id
+      JOIN lut l ON l.query_id = c.query_id
+                AND l.m = en.m AND l.code = en.code
+      GROUP BY 1, 2
+    )"""
+
+
+# The 5 nearest ``adc`` neighbors per query, distance then id.
+_ADC_TOP5 = """SELECT query_id, neighbor_id, adc_fp, rnk FROM (
+      SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+                                   ORDER BY adc_fp, neighbor_id) AS rnk
+      FROM adc
+    ) WHERE rnk <= 5"""
+
+# ``shortlist``/``rr``: the 20 nearest ``adc`` neighbors per query,
+# rescored by exact rounded cosine.
+_PQ_RERANK_CTES = f"""shortlist AS (
+      SELECT query_id, neighbor_id FROM (
+        SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+                                     ORDER BY adc_fp, neighbor_id) AS srnk
+        FROM adc
+      ) WHERE srnk <= 20
+    ),
+    rr AS (
+      SELECT s.query_id, s.neighbor_id,
+             {_COS_SQL.format(a="qe.emb", b="ne.emb")} AS cosine
+      FROM shortlist s
+      JOIN e qe ON qe.vec_id = s.query_id
+      JOIN e ne ON ne.vec_id = s.neighbor_id
+    )"""
 
 
 @register(
@@ -744,16 +806,7 @@ def q_embedding_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sim_ann_pq_adc",
     oracle=f"""
     WITH {_PQ_CTE},
-    q AS (SELECT vec_id AS query_id, m, subv AS qsub
-          FROM sub WHERE vec_id < 10),
-    lut AS (
-      SELECT q.query_id, c.m, c.code,
-             CAST(ROUND(ROUND(list_sum(list_transform(
-                 list_zip(q.qsub, c.cvec),
-                 z -> (z[1] - z[2]) * (z[1] - z[2]))), 6) * 1000000)
-               AS BIGINT) AS d_fp
-      FROM q JOIN cb c ON q.m = c.m
-    ),
+    {_PQ_LUT},
     adc AS (
       SELECT l.query_id, en.vec_id AS neighbor_id,
              CAST(SUM(l.d_fp) AS BIGINT) AS adc_fp
@@ -762,11 +815,7 @@ def q_embedding_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
       WHERE en.vec_id <> l.query_id
       GROUP BY 1, 2
     )
-    SELECT query_id, neighbor_id, adc_fp, rnk FROM (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                   ORDER BY adc_fp, neighbor_id) AS rnk
-      FROM adc
-    ) WHERE rnk <= 5
+    {_ADC_TOP5}
     """,
 )
 def q_sim_ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -793,36 +842,8 @@ def q_sim_ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH {_IVF_ASSIGN_CTE},
     {_PQ_CHAIN},
-    qc AS (SELECT vec_id AS query_id, cell FROM assign WHERE vec_id < 10),
-    qsub AS (SELECT vec_id AS query_id, m, subv AS qsub
-             FROM sub WHERE vec_id < 10),
-    lut AS (
-      SELECT q.query_id, c.m, c.code,
-             CAST(ROUND(ROUND(list_sum(list_transform(
-                 list_zip(q.qsub, c.cvec),
-                 z -> (z[1] - z[2]) * (z[1] - z[2]))), 6) * 1000000)
-               AS BIGINT) AS d_fp
-      FROM qsub q JOIN cb c ON q.m = c.m
-    ),
-    cand AS (
-      SELECT qc.query_id, a.vec_id AS neighbor_id
-      FROM qc JOIN assign a ON a.cell = qc.cell
-      WHERE a.vec_id <> qc.query_id
-    ),
-    adc AS (
-      SELECT c.query_id, c.neighbor_id,
-             CAST(SUM(l.d_fp) AS BIGINT) AS adc_fp
-      FROM cand c
-      JOIN enc en ON en.vec_id = c.neighbor_id
-      JOIN lut l ON l.query_id = c.query_id
-                AND l.m = en.m AND l.code = en.code
-      GROUP BY 1, 2
-    )
-    SELECT query_id, neighbor_id, adc_fp, rnk FROM (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                   ORDER BY adc_fp, neighbor_id) AS rnk
-      FROM adc
-    ) WHERE rnk <= 5
+    {_ivfpq_adc_ctes()}
+    {_ADC_TOP5}
     """,
 )
 def q_sim_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -923,56 +944,11 @@ def _pq_fitted_codebook_sidecar(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sim_ann_ivfpq_fitted",
     oracle=f"""
     WITH {_IVF_ASSIGN_CTE},
-    sub AS (
-      SELECT vec_id, mm.m AS m, emb[mm.m * 8 + 1 : mm.m * 8 + 8] AS subv
-      FROM e, LATERAL (SELECT unnest(range(8)) AS m) mm
-    ),
+    {_PQ_SUB.format(src="e")},
     {pq_lloyd_cte(iterations=2)},
-    pq_scored AS (
-      SELECT s.vec_id, s.m, c.code,
-             CAST(ROUND(ROUND(list_sum(list_transform(
-                 list_zip(s.subv, c.cvec),
-                 z -> (z[1] - z[2]) * (z[1] - z[2]))), 6) * 1000000)
-               AS BIGINT) AS d_fp
-      FROM sub s JOIN cb c ON s.m = c.m
-    ),
-    enc AS (
-      SELECT vec_id, m, code FROM (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id, m
-                                     ORDER BY d_fp, code) AS rn
-        FROM pq_scored
-      ) WHERE rn = 1
-    ),
-    qc AS (SELECT vec_id AS query_id, cell FROM assign WHERE vec_id < 10),
-    qsub AS (SELECT vec_id AS query_id, m, subv AS qsub
-             FROM sub WHERE vec_id < 10),
-    lut AS (
-      SELECT q.query_id, c.m, c.code,
-             CAST(ROUND(ROUND(list_sum(list_transform(
-                 list_zip(q.qsub, c.cvec),
-                 z -> (z[1] - z[2]) * (z[1] - z[2]))), 6) * 1000000)
-               AS BIGINT) AS d_fp
-      FROM qsub q JOIN cb c ON q.m = c.m
-    ),
-    cand AS (
-      SELECT qc.query_id, a.vec_id AS neighbor_id
-      FROM qc JOIN assign a ON a.cell = qc.cell
-      WHERE a.vec_id <> qc.query_id
-    ),
-    adc AS (
-      SELECT c.query_id, c.neighbor_id,
-             CAST(SUM(l.d_fp) AS BIGINT) AS adc_fp
-      FROM cand c
-      JOIN enc en ON en.vec_id = c.neighbor_id
-      JOIN lut l ON l.query_id = c.query_id
-                AND l.m = en.m AND l.code = en.code
-      GROUP BY 1, 2
-    )
-    SELECT query_id, neighbor_id, adc_fp, rnk FROM (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                   ORDER BY adc_fp, neighbor_id) AS rnk
-      FROM adc
-    ) WHERE rnk <= 5
+    {_PQ_ENCODE},
+    {_ivfpq_adc_ctes()}
+    {_ADC_TOP5}
     """,
 )
 def q_sim_ann_ivfpq_fitted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1007,37 +983,8 @@ def q_sim_ann_ivfpq_fitted(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH {_IVF_ASSIGN_CTE},
     {_PQ_CHAIN},
-    qc AS (SELECT vec_id AS query_id, cent_id AS cell
-           FROM ranked WHERE vec_id < 10 AND rn <= 2),
-    qsub AS (SELECT vec_id AS query_id, m, subv AS qsub
-             FROM sub WHERE vec_id < 10),
-    lut AS (
-      SELECT q.query_id, c.m, c.code,
-             CAST(ROUND(ROUND(list_sum(list_transform(
-                 list_zip(q.qsub, c.cvec),
-                 z -> (z[1] - z[2]) * (z[1] - z[2]))), 6) * 1000000)
-               AS BIGINT) AS d_fp
-      FROM qsub q JOIN cb c ON q.m = c.m
-    ),
-    cand AS (
-      SELECT qc.query_id, a.vec_id AS neighbor_id
-      FROM qc JOIN assign a ON a.cell = qc.cell
-      WHERE a.vec_id <> qc.query_id
-    ),
-    adc AS (
-      SELECT c.query_id, c.neighbor_id,
-             CAST(SUM(l.d_fp) AS BIGINT) AS adc_fp
-      FROM cand c
-      JOIN enc en ON en.vec_id = c.neighbor_id
-      JOIN lut l ON l.query_id = c.query_id
-                AND l.m = en.m AND l.code = en.code
-      GROUP BY 1, 2
-    )
-    SELECT query_id, neighbor_id, adc_fp, rnk FROM (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                   ORDER BY adc_fp, neighbor_id) AS rnk
-      FROM adc
-    ) WHERE rnk <= 5
+    {_ivfpq_adc_ctes(nprobe=2)}
+    {_ADC_TOP5}
     """,
 )
 def q_sim_ann_ivfpq_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1066,45 +1013,8 @@ def q_sim_ann_ivfpq_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH {_IVF_ASSIGN_CTE},
     {_PQ_CHAIN},
-    qc AS (SELECT vec_id AS query_id, cell FROM assign WHERE vec_id < 10),
-    qsub AS (SELECT vec_id AS query_id, m, subv AS qsub
-             FROM sub WHERE vec_id < 10),
-    lut AS (
-      SELECT q.query_id, c.m, c.code,
-             CAST(ROUND(ROUND(list_sum(list_transform(
-                 list_zip(q.qsub, c.cvec),
-                 z -> (z[1] - z[2]) * (z[1] - z[2]))), 6) * 1000000)
-               AS BIGINT) AS d_fp
-      FROM qsub q JOIN cb c ON q.m = c.m
-    ),
-    cand AS (
-      SELECT qc.query_id, a.vec_id AS neighbor_id
-      FROM qc JOIN assign a ON a.cell = qc.cell
-      WHERE a.vec_id <> qc.query_id
-    ),
-    adc AS (
-      SELECT c.query_id, c.neighbor_id,
-             CAST(SUM(l.d_fp) AS BIGINT) AS adc_fp
-      FROM cand c
-      JOIN enc en ON en.vec_id = c.neighbor_id
-      JOIN lut l ON l.query_id = c.query_id
-                AND l.m = en.m AND l.code = en.code
-      GROUP BY 1, 2
-    ),
-    shortlist AS (
-      SELECT query_id, neighbor_id FROM (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                     ORDER BY adc_fp, neighbor_id) AS srnk
-        FROM adc
-      ) WHERE srnk <= 20
-    ),
-    rr AS (
-      SELECT s.query_id, s.neighbor_id,
-             {_COS_SQL.format(a="qe.emb", b="ne.emb")} AS cosine
-      FROM shortlist s
-      JOIN e qe ON qe.vec_id = s.query_id
-      JOIN e ne ON ne.vec_id = s.neighbor_id
-    )
+    {_ivfpq_adc_ctes()},
+    {_PQ_RERANK_CTES}
     SELECT query_id, neighbor_id, cosine, rnk FROM (
       SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
                                    ORDER BY cosine DESC, neighbor_id) AS rnk
@@ -1141,51 +1051,14 @@ def q_sim_ann_ivfpq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH {_IVF_ASSIGN_CTE},
     {_PQ_CHAIN},
-    qc AS (SELECT vec_id AS query_id, cell FROM assign WHERE vec_id < 10),
-    qsub AS (SELECT vec_id AS query_id, m, subv AS qsub
-             FROM sub WHERE vec_id < 10),
-    lut AS (
-      SELECT q.query_id, c.m, c.code,
-             CAST(ROUND(ROUND(list_sum(list_transform(
-                 list_zip(q.qsub, c.cvec),
-                 z -> (z[1] - z[2]) * (z[1] - z[2]))), 6) * 1000000)
-               AS BIGINT) AS d_fp
-      FROM qsub q JOIN cb c ON q.m = c.m
-    ),
-    cand AS (
-      SELECT qc.query_id, a.vec_id AS neighbor_id
-      FROM qc JOIN assign a ON a.cell = qc.cell
-      WHERE a.vec_id <> qc.query_id
-    ),
-    adc AS (
-      SELECT c.query_id, c.neighbor_id,
-             CAST(SUM(l.d_fp) AS BIGINT) AS adc_fp
-      FROM cand c
-      JOIN enc en ON en.vec_id = c.neighbor_id
-      JOIN lut l ON l.query_id = c.query_id
-                AND l.m = en.m AND l.code = en.code
-      GROUP BY 1, 2
-    ),
+    {_ivfpq_adc_ctes()},
+    {_PQ_RERANK_CTES},
     pqtop AS (
       SELECT query_id, neighbor_id FROM (
         SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
                                      ORDER BY adc_fp, neighbor_id) AS rnk
         FROM adc
       ) WHERE rnk <= 5
-    ),
-    shortlist AS (
-      SELECT query_id, neighbor_id FROM (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                     ORDER BY adc_fp, neighbor_id) AS srnk
-        FROM adc
-      ) WHERE srnk <= 20
-    ),
-    rr AS (
-      SELECT s.query_id, s.neighbor_id,
-             {_COS_SQL.format(a="qe.emb", b="ne.emb")} AS cosine
-      FROM shortlist s
-      JOIN e qe ON qe.vec_id = s.query_id
-      JOIN e ne ON ne.vec_id = s.neighbor_id
     ),
     rrtop AS (
       SELECT query_id, neighbor_id FROM (
@@ -1514,64 +1387,19 @@ def q_pipeline_embedding_curation(spark: SparkSession, sf_dir: str) -> DataFrame
     resid AS (
       SELECT a.vec_id, a.cell,
              list_transform(list_zip(e.emb, c.cemb),
-                            z -> z[1] - z[2]) AS rvec
+                            z -> z[1] - z[2]) AS emb
       FROM assign a
       JOIN e ON e.vec_id = a.vec_id
       JOIN cent c ON c.cent_id = a.cell
     ),
-    rsub AS (
-      SELECT vec_id, mm.m AS m, rvec[mm.m * 8 + 1 : mm.m * 8 + 8] AS subv
-      FROM resid, LATERAL (SELECT unnest(range(8)) AS m) mm
-    ),
-    rcb AS (
+    {_PQ_SUB.format(src="resid")},
+    cb AS (
       SELECT m, (vec_id - 7) // 50 AS code, subv AS cvec
-      FROM rsub WHERE vec_id % 50 = 7 AND vec_id < 807
+      FROM sub WHERE vec_id % 50 = 7 AND vec_id < 807
     ),
-    r_scored AS (
-      SELECT s.vec_id, s.m, c.code,
-             CAST(ROUND(ROUND(list_sum(list_transform(
-                 list_zip(s.subv, c.cvec),
-                 z -> (z[1] - z[2]) * (z[1] - z[2]))), 6) * 1000000)
-               AS BIGINT) AS d_fp
-      FROM rsub s JOIN rcb c ON s.m = c.m
-    ),
-    r_enc AS (
-      SELECT vec_id, m, code FROM (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id, m
-                                     ORDER BY d_fp, code) AS rn
-        FROM r_scored
-      ) WHERE rn = 1
-    ),
-    qc AS (SELECT vec_id AS query_id, cell FROM assign WHERE vec_id < 10),
-    qsub AS (SELECT vec_id AS query_id, m, subv AS qsub
-             FROM rsub WHERE vec_id < 10),
-    lut AS (
-      SELECT q.query_id, c.m, c.code,
-             CAST(ROUND(ROUND(list_sum(list_transform(
-                 list_zip(q.qsub, c.cvec),
-                 z -> (z[1] - z[2]) * (z[1] - z[2]))), 6) * 1000000)
-               AS BIGINT) AS d_fp
-      FROM qsub q JOIN rcb c ON q.m = c.m
-    ),
-    cand AS (
-      SELECT qc.query_id, a.vec_id AS neighbor_id
-      FROM qc JOIN assign a ON a.cell = qc.cell
-      WHERE a.vec_id <> qc.query_id
-    ),
-    adc AS (
-      SELECT c.query_id, c.neighbor_id,
-             CAST(SUM(l.d_fp) AS BIGINT) AS adc_fp
-      FROM cand c
-      JOIN r_enc en ON en.vec_id = c.neighbor_id
-      JOIN lut l ON l.query_id = c.query_id
-                AND l.m = en.m AND l.code = en.code
-      GROUP BY 1, 2
-    )
-    SELECT query_id, neighbor_id, adc_fp, rnk FROM (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                   ORDER BY adc_fp, neighbor_id) AS rnk
-      FROM adc
-    ) WHERE rnk <= 5
+    {_PQ_ENCODE},
+    {_ivfpq_adc_ctes()}
+    {_ADC_TOP5}
     """,
 )
 def q_sim_ann_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -73,7 +73,10 @@ def get_session(
         # output. (The loader still handles INT96 input defensively.)
         "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
         "spark.ui.enabled": "false",
-        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+        # The whole registry at sf0.01 runs in a 6g heap, which a
+        # 15 GB machine can hold next to the Python side; larger
+        # deployments set SPARK_GRAFT_DRIVER_MEM.
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "6g"),
     }
     if extra_conf:
         conf.update(extra_conf)

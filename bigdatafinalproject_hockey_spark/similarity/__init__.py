@@ -1108,7 +1108,7 @@ def pq_lloyd_cte(
     """DuckDB CTE chain replicating ``pq_codebooks_lloyd`` EXACTLY
     (same init, same E/M rules, same integer statistics, same single
     division) — unrolled over ``iterations``. Assumes a prior ``sub``
-    CTE (vec_id, m, subv — the ``_PQ_CHAIN`` shape) and ends with
+    CTE (vec_id, m, subv — the ``_PQ_SUB`` shape) and ends with
     ``cb(m, code, cvec)`` holding the fitted codebooks, so the
     standard PQ score/encode tail composes unchanged."""
     parts = [

@@ -458,11 +458,20 @@ def test_minhash_signature_slots_are_independent(spark):
     assert len(set(sig)) > 1, "all minhash slots identical — seed not varying"
 
 
-def test_minhash_recall_on_synthetic_near_dups(spark):
+@pytest.mark.parametrize("twin", ["fast", "portable"])
+def test_minhash_recall_on_synthetic_near_dups(spark, twin):
     """Planted near-duplicates (small token edits) must be recovered;
     unrelated docs must not pair. End-to-end guard on the banding
-    S-curve + signature estimator."""
-    from bigdatafinalproject_hockey_spark.dedup.minhash import minhash_candidate_pairs
+    S-curve + signature estimator, for both hash families."""
+    from bigdatafinalproject_hockey_spark.dedup.minhash import (
+        minhash_candidate_pairs,
+        minhash_candidate_pairs_portable,
+    )
+
+    pairs_fn = {
+        "fast": minhash_candidate_pairs,
+        "portable": minhash_candidate_pairs_portable,
+    }[twin]
 
     base = ("alpha bravo charlie delta echo foxtrot golf hotel india juliet "
             "kilo lima mike november oscar papa quebec romeo sierra tango")
@@ -477,7 +486,7 @@ def test_minhash_recall_on_synthetic_near_dups(spark):
     df = spark.createDataFrame(rows, ["doc_id", "text"])
     pairs = {
         (r.doc_a, r.doc_b)
-        for r in minhash_candidate_pairs(
+        for r in pairs_fn(
             df, "text", "doc_id", shingle_n=3, max_jaccard_distance=0.5
         ).collect()
     }

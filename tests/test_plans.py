@@ -93,20 +93,25 @@ def _final_plan_of(spark, name: str) -> str:
     return plan.split("== Initial Plan ==")[0]
 
 
-def test_minhash_self_join_copartitioned(spark):
-    """The minhash pipeline pays its scan ONCE without caching: the
-    parallelized scan exchange, the band-key exchange (both self-join
-    sides), and the signature branch's fp exchange are each
-    materialized once, with second consumers fed by runtime exchange
-    reuse (printed as ReusedExchange or a shared ShuffleQueryStage).
-    The one sanctioned recompute is the star-edge branch's PRUNED
-    fp pipeline (no signature work) over the reused scan exchange —
-    so the documents FileScan must appear exactly once in the final
-    plan, and the materialized exchanges stay bounded."""
-    plan = _final_plan_of(spark, "dedup_minhash_lsh")
+@pytest.mark.parametrize(
+    "name", ["dedup_minhash_lsh", "dedup_minhash_lsh_portable"]
+)
+def test_minhash_self_join_copartitioned(spark, name):
+    """Both hash families share one dataflow, and it pays its scan
+    ONCE without caching: the parallelized scan exchange, the band-key
+    exchange (both self-join sides), and the signature branch's fp
+    exchange are each materialized once, with second consumers fed by
+    runtime exchange reuse (printed as ReusedExchange or a shared
+    ShuffleQueryStage). The one sanctioned recompute is the star-edge
+    branch's PRUNED fp pipeline (no signature work) over the reused
+    scan exchange — so the documents FileScan must appear exactly once
+    in the final plan, and the materialized exchanges stay bounded."""
+    plan = _final_plan_of(spark, name)
     assert "isFinalPlan=true" in plan
     assert plan.count("FileScan parquet") == 1, plan
     assert plan.count("Exchange hashpartitioning") <= 5, plan
+    # and stays UDF-free: every hash is a Catalyst expression
+    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
 def test_agg_partial_final(spark):
@@ -414,19 +419,6 @@ def test_upsert_batch_scans_index_not_sink(spark, tmp_path):
     assert "event_id" in read_schema, plan
     # keys-only: the wide sink columns never appear in any scan
     assert "value" not in read_schema and "user_id" not in read_schema, plan
-
-
-def test_minhash_portable_self_join_copartitioned(spark):
-    """The portable variant must keep the fast variant's scale shape:
-    fp and band-key exchanges each materialized once, second consumers
-    fed via ReusedExchange (same contract as
-    test_minhash_self_join_copartitioned)."""
-    plan = _final_plan_of(spark, "dedup_minhash_lsh_portable")
-    assert "isFinalPlan=true" in plan
-    assert plan.count("FileScan parquet") == 1, plan
-    assert plan.count("Exchange hashpartitioning") <= 5, plan
-    # and stays UDF-free: every hash is a Catalyst expression
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
 def test_tokenize_vocab_broadcast(spark):

@@ -204,19 +204,31 @@ def test_cosine_lsh_recall_on_planted_near_dups(spark):
         assert pair in exact and abs(cos - exact[pair]) < 1e-9
 
 
-def test_minhash_survives_pathological_exact_dup_cluster(spark):
-    """A 10⁴-copy exact-duplicate cluster must NOT form a quadratic
-    band bucket (~5×10⁷ pairs in one task): the fingerprint collapse
+@pytest.mark.parametrize(
+    "twin, n_copies",
+    [("fast", 10_000), ("portable", 1_000)],
+    ids=["fast", "portable"],
+)
+def test_minhash_survives_pathological_exact_dup_cluster(spark, twin, n_copies):
+    """An exact-duplicate cluster must NOT form a quadratic band bucket
+    (~5×10⁷ pairs in one task at 10⁴ copies): the fingerprint collapse
     emits exactly n-1 star edges at distance 0 and bands only the
-    representative. Wall-clock bound keeps a regression visible —
-    pre-fix this shape runs for minutes; post-fix, seconds."""
+    representative, and planted near-dups are still found. Both hash
+    families run the one shared dataflow; their pair SETS may differ
+    at the S-curve margin, these structural guarantees may not. The
+    wall-clock bound keeps a regression visible — without the
+    collapse this shape runs for minutes; with it, seconds."""
     import time
 
     from bigdatafinalproject_hockey_spark.dedup.minhash import (
         minhash_candidate_pairs,
+        minhash_candidate_pairs_portable,
     )
 
-    n_copies = 10_000
+    pairs_fn = {
+        "fast": minhash_candidate_pairs,
+        "portable": minhash_candidate_pairs_portable,
+    }[twin]
     text = "the quick brown fox jumps over the lazy dog again and again"
     rows = [(i, text) for i in range(n_copies)]
     # plus a near-dup pair of distinct docs to prove the LSH path still runs
@@ -225,7 +237,7 @@ def test_minhash_survives_pathological_exact_dup_cluster(spark):
     df = spark.createDataFrame(rows, ["doc_id", "text"]).repartition(8)
 
     t0 = time.time()
-    pairs = minhash_candidate_pairs(
+    pairs = pairs_fn(
         df, "text", "doc_id", shingle_n=3, max_jaccard_distance=0.5
     ).collect()
     elapsed = time.time() - t0
@@ -237,6 +249,56 @@ def test_minhash_survives_pathological_exact_dup_cluster(spark):
     assert (20_000, 20_001) in near
     # reduced pair set: n-1 star edges + the near pair, nothing quadratic
     assert len(pairs) < n_copies + 10
+
+
+def test_tokens_sql_matches_tokens_expr_on_unicode_edge_cases(spark):
+    """The DuckDB tokenizer every text oracle uses must split exactly
+    as the Spark one, including on case-mapping edge cases: U+0130
+    (Spark lowers it to i + U+0307), final sigma, ligatures, the
+    Kelvin sign, titlecase digraphs, Roman numerals, emoji, NBSP,
+    separators at the ends, and the empty string."""
+    import duckdb
+
+    from bigdatafinalproject_hockey_spark.functions.text import (
+        tokens_expr,
+        tokens_sql,
+    )
+
+    texts = [
+        "İstanbul",
+        "DİYARBAKIR and İzmir",
+        "iİi İ",
+        "ÉCOLE élève Café",
+        "Straße STRASSE",
+        "ΣΊΣΥΦΟΣ όσος",
+        "ﬁle ﬂow",
+        "5\u212a temperature",
+        "ǅemal Ǆ ǆ",
+        "Ⅻ chapter ⅻ",
+        "ŉ apostrophe",
+        "emoji 😀 test 🇨🇦",
+        "non\u00a0breaking space",
+        "dotless ı and I",
+        "  leading, trailing!  ",
+        "MiXeD-case_words 123abc a--b",
+        "tab\tnew\nline",
+        "",
+    ]
+    df = spark.createDataFrame(list(enumerate(texts)), ["i", "text"])
+    got_spark = {
+        r["i"]: list(r["tk"])
+        for r in df.select("i", tokens_expr("text").alias("tk")).collect()
+    }
+    con = duckdb.connect()
+    con.register("t", pd.DataFrame({"i": range(len(texts)), "text": texts}))
+    got_duck = {
+        i: list(tk)
+        for i, tk in con.execute(
+            f"SELECT i, {tokens_sql('text')} AS tk FROM t"
+        ).fetchall()
+    }
+    assert got_duck == got_spark
+    assert got_spark[0] == ["i", "stanbul"]
 
 
 def test_simhash_recall_vs_exact_jaccard_on_planted_near_dups(spark):
@@ -343,39 +405,6 @@ def test_deterministic_uniform_rate_and_stability(spark):
     # partitioning-invariant: identical sample after a repartition
     re_ids = {r["id"] for r in df.repartition(17).filter(u < frac).collect()}
     assert re_ids == {r["id"] for r in kept.collect()}
-
-
-def test_minhash_portable_matches_fast_variant_semantics(spark):
-    """The portable twin must keep the fast variant's two defining
-    behaviors: (a) exact-dup clusters collapse to star edges (no
-    quadratic band bucket), (b) planted near-dups are found. Hash
-    families differ, so pair SETS may differ at the S-curve margin —
-    the structural guarantees must not."""
-    import time
-
-    from bigdatafinalproject_hockey_spark.dedup.minhash import (
-        minhash_candidate_pairs_portable,
-    )
-
-    n_copies = 1_000
-    text = "the quick brown fox jumps over the lazy dog again and again"
-    rows = [(i, text) for i in range(n_copies)]
-    rows += [(20_000, "alpha beta gamma delta epsilon zeta eta theta iota"),
-             (20_001, "alpha beta gamma delta epsilon zeta eta theta kappa")]
-    df = spark.createDataFrame(rows, ["doc_id", "text"]).repartition(8)
-
-    t0 = time.time()
-    pairs = minhash_candidate_pairs_portable(
-        df, "text", "doc_id", shingle_n=3, max_jaccard_distance=0.5
-    ).collect()
-    elapsed = time.time() - t0
-    assert elapsed < 120, f"straggler bucket suspected: {elapsed:.0f}s"
-
-    star = [(r["doc_a"], r["doc_b"]) for r in pairs if r["jaccard_dist"] == 0.0]
-    assert sorted(star) == [(0, i) for i in range(1, n_copies)]
-    near = {(r["doc_a"], r["doc_b"]) for r in pairs if r["jaccard_dist"] > 0.0}
-    assert (20_000, 20_001) in near
-    assert len(pairs) < n_copies + 10
 
 
 # --- PPM codec: roundtrip + header-whitespace tolerance (no Spark) ---
