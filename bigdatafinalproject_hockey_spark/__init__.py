@@ -24,7 +24,6 @@ Layout:
     pipeline/   the reference-equivalent end-to-end flow (SURVEY.md §3)
     queries/    the named query registry, each with a DuckDB oracle
     streaming/  Structured Streaming extension over the events table
-    plancapture physical-plan capture and inspection helpers
 """
 
 __version__ = "0.1.0"

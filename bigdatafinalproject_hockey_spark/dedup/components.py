@@ -42,8 +42,6 @@ def connected_components(
     component_id) where component_id is the minimum node id reachable.
     Deterministic — oracle-checkable against a recursive-CTE closure.
     """
-    from bigdatafinalproject_hockey_spark.plancapture import capture
-
     fwd = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     # Eager localCheckpoint: materializes AND truncates lineage, so
     # every round's plan is (checkpointed edges ⋈ checkpointed labels)
@@ -59,7 +57,7 @@ def connected_components(
         )
     ).localCheckpoint()
     changed = 0
-    for round_no in range(max_iter):
+    for _ in range(max_iter):
         # min label among each node's neighbors this round
         neighbor_min = (
             und.join(labels, und.b == labels.node)
@@ -67,20 +65,16 @@ def connected_components(
             .agg(F.min("label").alias("nbr_label"))
             .select(F.col("a").alias("nm_node"), "nbr_label")
         )
-        new_labels_pre = labels.join(
-            neighbor_min, labels.node == neighbor_min.nm_node, "left"
-        ).select(
-            "node",
-            F.least(
-                F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
-            ).alias("label"),
+        new_labels = (
+            labels.join(neighbor_min, labels.node == neighbor_min.nm_node, "left")
+            .select(
+                "node",
+                F.least(
+                    F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
+                ).alias("label"),
+            )
+            .localCheckpoint()
         )
-        if round_no == 0:
-            # every round shares this plan shape; the checkpoint hides
-            # it from the audit, so surface round 1's pre-checkpoint
-            # plan (round count is data-dependent — one stable label)
-            capture("propagate_round", new_labels_pre)
-        new_labels = new_labels_pre.localCheckpoint()
         changed = (
             new_labels.select("node", F.col("label").alias("new_label"))
             .join(labels, "node")

@@ -1068,7 +1068,9 @@ def q_stream_custom_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The drain uses a continuous trigger polled to the known terminal
     count (the simple-reader prefetch model exposes only one pending
-    batch to availableNow, which would stop after 500 rows)."""
+    batch to availableNow, which would stop after 500 rows). The poll
+    reads the query's progress reports, which count the rows each
+    committed batch wrote to the sink, so waiting runs no Spark job."""
     import time
     import uuid
 
@@ -1092,10 +1094,14 @@ def q_stream_custom_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(processingTime="0 seconds")
         .start()
     )
+
+    def drained() -> int:
+        return sum(p["numInputRows"] for p in q.recentProgress)
+
     try:
         deadline = time.time() + 120
         while time.time() < deadline:
-            if spark.table(name).count() >= n_rows:
+            if drained() >= n_rows:
                 break
             time.sleep(0.2)
         else:
@@ -1104,7 +1110,7 @@ def q_stream_custom_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
             # (ADVICE r4).
             raise TimeoutError(
                 f"custom streaming source drained only "
-                f"{spark.table(name).count()}/{n_rows} rows in 120s"
+                f"{drained()}/{n_rows} rows in 120s"
             )
     finally:
         q.stop()

@@ -16,7 +16,6 @@ from pyspark.sql.window import Window
 
 from bigdatafinalproject_hockey_spark.catalog import load_table
 from bigdatafinalproject_hockey_spark.operators import bucketing as bucket_ops
-from bigdatafinalproject_hockey_spark.plancapture import capture
 from bigdatafinalproject_hockey_spark.functions.numeric import (
     cents_expr,
     fixed_point_sum,
@@ -866,9 +865,6 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     outdeg = edges.groupBy("s1").agg(F.count(F.lit(1)).alias("d"))
-    # the ingest job (lineitem self-join + degree join) executes
-    # inside the sidecar build — surface its plan to the audit
-    capture("edges_ingest", edges.join(outdeg, "s1"))
     table = bucket_ops.cached_bucketed(
         edges.join(outdeg, "s1"),
         "graph_supplier_edges",

@@ -3824,10 +3824,7 @@ def q_pipeline_web_to_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     would each re-evaluate their whole upstream lineage lazily.
     Each boundary therefore localCheckpoints eagerly (the
     graph_bfs_hops precedent; at 100 TB these are exactly the
-    points a production pipeline persists between stages), with
-    every stage's plan surfaced to the audit via plancapture
-    (#extract_norm / #quality_gate / #quality_mix / #decon /
-    #rewrite / #tokenize_meta).
+    points a production pipeline persists between stages).
 
     Full value-hash oracle chaining the SHARED per-stage CTE
     builders — _url_ctes, extraction closed form, _gopher_ctes,
@@ -3843,7 +3840,6 @@ def q_pipeline_web_to_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
         html_fixture_expr,
         normalize_unicode_batched,
     )
-    from bigdatafinalproject_hockey_spark.plancapture import capture
 
     src = load_table(spark, "documents", sf_dir)
     # STAGE 0 — URL blocklist + canonical-URL dedup (round 13,
@@ -3870,7 +3866,6 @@ def q_pipeline_web_to_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     norm = normalize_unicode_batched(dirty, "text", "doc_id").select(
         "doc_id", F.col("norm_text").alias("text")
     )
-    capture("extract_norm", norm)
     norm = norm.localCheckpoint(eager=True)
     # QUALITY GATE (round 13): the full Gopher rule battery over the
     # normalized text — the shared _gopher_frame with the pipeline's
@@ -3887,7 +3882,6 @@ def q_pipeline_web_to_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     gkept = norm.join(
         g.filter(F.col("keep")).select("doc_id"), "doc_id", "semi"
     )
-    capture("quality_gate", gkept)
     gkept = gkept.localCheckpoint(eager=True)
     # TERTILE MIX (round 13): CCNet head/middle/tail rate sampling
     # over the battery survivors, scored by each doc's OWN language's
@@ -3896,7 +3890,6 @@ def q_pipeline_web_to_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     glang = gkept.join(src.select("doc_id", "lang"), "doc_id")
     mix_ids = _tertile_mix_frame(glang).select("doc_id")
     mixed = gkept.join(mix_ids, "doc_id", "semi")
-    capture("quality_mix", mixed)
     mixed = mixed.localCheckpoint(eager=True)
     # Decontamination (round 12, VERDICT r11 item 3): drop the
     # benchmark docs and every doc whose 3-gram benchmark overlap
@@ -3909,12 +3902,10 @@ def q_pipeline_web_to_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (the scores leg and the anti-join base both read it), so it
     # checkpoints eagerly like the others.
     decon = _decon_apply(mixed, _DECON_WEB_MAX_RATIO, bench_df=norm)
-    capture("decon", decon)
     decon = decon.localCheckpoint(eager=True)
     rw = remove_repeated_spans(
         decon, "text", "doc_id", min_span=_SPAN_K, max_block=_SPAN_MAX_BLOCK
     )
-    capture("rewrite", rw)
     rw = rw.localCheckpoint(eager=True)
 
     toks = rw.select(
@@ -3947,7 +3938,6 @@ def q_pipeline_web_to_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(tokagg, "doc", "left")
         .withColumn("tok_checksum", F.coalesce("tok_checksum", F.lit(0)))
     )
-    capture("tokenize_meta", meta)
     meta = meta.localCheckpoint(eager=True)
 
     packed = pack_sequences(
@@ -4410,7 +4400,6 @@ def _bpe_learn(spark: SparkSession, docs: DataFrame, k: int):
     from bigdatafinalproject_hockey_spark.operators.partitioning import (
         ensure_parallelism,
     )
-    from bigdatafinalproject_hockey_spark.plancapture import capture
 
     occ = ensure_parallelism(docs).select(
         F.explode(tokens_expr("text")).alias("tok")
@@ -4419,9 +4408,8 @@ def _bpe_learn(spark: SparkSession, docs: DataFrame, k: int):
         occ.groupBy("tok")
         .agg(F.count(F.lit(1)).cast("long").alias("freq"))
         .withColumn("seg", F.split("tok", ""))
+        .localCheckpoint(eager=True)
     )
-    capture("wordtypes", ch)
-    ch = ch.localCheckpoint(eager=True)
     return _bpe_learn_iters(ch, [], 1, k)
 
 
@@ -4434,14 +4422,15 @@ def _bpe_learn_iters(
     starts from the frozen model's segmentation at start = k+1).
     ``bests`` is copied on entry (ADVICE r12): callers keeping a
     reference to the pre-extension list must not see it mutated."""
-    from bigdatafinalproject_hockey_spark.plancapture import capture
-
     bests = list(bests)
     for i in range(start, end + 1):
         pairs = _bpe_pair_stats(ch, "seg")
-        best = pairs.orderBy(F.desc("cnt"), "x", "y").limit(1).select("x", "y")
-        capture(f"best{i}", best)
-        best = best.localCheckpoint(eager=True)
+        best = (
+            pairs.orderBy(F.desc("cnt"), "x", "y")
+            .limit(1)
+            .select("x", "y")
+            .localCheckpoint(eager=True)
+        )
         # EARLY STOP (ADVICE r11): an empty argmax means the corpus is
         # fully merged before iteration k — keep the partial merge
         # table and current segmentation instead of letting the empty
@@ -4454,11 +4443,11 @@ def _bpe_learn_iters(
         if best.isEmpty():
             break
         bests.append(best.select(F.lit(i).alias("it"), "x", "y"))
-        merged = ch.crossJoin(F.broadcast(best)).select(
-            "tok", "freq", _bpe_pair_merge_fold("seg").alias("seg")
+        ch = (
+            ch.crossJoin(F.broadcast(best))
+            .select("tok", "freq", _bpe_pair_merge_fold("seg").alias("seg"))
+            .localCheckpoint(eager=True)
         )
-        capture(f"merge{i}", merged)
-        ch = merged.localCheckpoint(eager=True)
     return ch, bests
 
 
@@ -4487,8 +4476,7 @@ def q_bpe_learn_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     - Iterations are EAGER with localCheckpoint lineage truncation
       (the ``graph_bfs_hops`` precedent) — a lazy chain would
       re-derive seg_{i-1} once for the pair stats and once for the
-      fold, doubling work per level (2^k blowup); each stage's plan
-      is surfaced to the audit via plancapture.
+      fold, doubling work per level (2^k blowup).
     - Degenerate corpora STOP EARLY (ADVICE r11): an empty argmax at
       iteration i ends the loop with the i-1 merges already learned —
       the partial merge table and current segmentation are the
@@ -4971,8 +4959,6 @@ def q_bpe_vocab_extend(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference pinning that the frozen prefix really is a prefix and
     the new merges equal independent continued learning
     (tests/test_curation.py)."""
-    from bigdatafinalproject_hockey_spark.plancapture import capture
-
     docs = load_table(spark, "documents", sf_dir)
     ch, bests = _bpe_learn(spark, docs, _BPE_K)
 
@@ -4992,9 +4978,8 @@ def q_bpe_vocab_extend(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("long").alias("freq"),
             F.coalesce("seg", "useg").alias("seg"),
         )
+        .localCheckpoint(eager=True)
     )
-    capture("union_types", uch)
-    uch = uch.localCheckpoint(eager=True)
 
     ch2, bests = _bpe_learn_iters(
         uch, bests, _BPE_K + 1, _BPE_K + _BPE_EXT_K

@@ -23,7 +23,6 @@ from pyspark.sql import functions as F
 
 from bigdatafinalproject_hockey_spark.catalog import load_table
 from bigdatafinalproject_hockey_spark.operators import bucketing as bucket_ops
-from bigdatafinalproject_hockey_spark.plancapture import capture
 from bigdatafinalproject_hockey_spark.queries.base import register
 
 # Shared CTE head: canonical (p1 < p2) part co-purchase edges with
@@ -87,9 +86,6 @@ def undirected_edges_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     und = edges.select(F.col("p1").alias("s"), F.col("p2").alias("d")).unionByName(
         edges.select(F.col("p2").alias("s"), F.col("p1").alias("d"))
     )
-    # the ingest job's plan never reaches the returned DataFrame (it
-    # executes inside the sidecar build) — surface it to the audit
-    capture("edges_ingest", und)
     table = bucket_ops.cached_bucketed(
         und,
         "graph_copurchase_und",
@@ -190,14 +186,11 @@ def q_graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so orientation (two degree joins) is computed a single time. The
     # edge DERIVATION itself no longer recurs at all: it lives in the
     # bucketed ingest above.
-    oriented_pre = keyed.select(
+    oriented = keyed.select(
         F.when(p1_is_src, F.col("p1")).otherwise(F.col("p2")).alias("src"),
         F.when(p1_is_src, F.col("p2")).otherwise(F.col("p1")).alias("dst"),
         F.when(p1_is_src, F.col("dp2")).otherwise(F.col("dp1")).alias("dst_d"),
-    )
-    # localCheckpoint truncates lineage — audit the pre-checkpoint plan
-    capture("oriented", oriented_pre)
-    oriented = oriented_pre.localCheckpoint(eager=True)
+    ).localCheckpoint(eager=True)
     e1, e2, e3 = oriented.alias("e1"), oriented.alias("e2"), oriented.alias("e3")
     wedge_order = (F.col("e1.dst_d") < F.col("e2.dst_d")) | (
         (F.col("e1.dst_d") == F.col("e2.dst_d"))
@@ -276,15 +269,13 @@ def q_graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     dist = seeds.localCheckpoint(eager=True)
     frontier = dist
     for k in range(1, 5):
-        nxt_pre = (
+        nxt = (
             frontier.join(und, frontier.node == und.s)
             .select(F.col("d").alias("node"), F.lit(k).alias("hop"))
             .distinct()
             .join(dist, "node", "left_anti")
+            .localCheckpoint(eager=True)
         )
-        # each round's plan is checkpoint-truncated — audit it first
-        capture(f"round{k}", nxt_pre)
-        nxt = nxt_pre.localCheckpoint(eager=True)
         dist = dist.unionByName(nxt).localCheckpoint(eager=True)
         frontier = nxt
     return dist.select(F.col("node").alias("p_partkey"), F.col("hop").alias("hops"))

@@ -27,8 +27,7 @@ from bigdatafinalproject_hockey_spark.operators import (
     bucketing as bucket_ops,
     joins as join_ops,
 )
-from bigdatafinalproject_hockey_spark import plancapture, sidecar
-from bigdatafinalproject_hockey_spark.plancapture import capture
+from bigdatafinalproject_hockey_spark import sidecar
 from bigdatafinalproject_hockey_spark.queries.base import register
 from bigdatafinalproject_hockey_spark.session import with_conf
 from bigdatafinalproject_hockey_spark.functions.vectors import (
@@ -264,10 +263,14 @@ _COS_SQL = (
 )
 
 
-@register(
-    "sim_ann_ivf",
-    oracle=f"""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
+# Shared IVF-assignment CTE prefix (DuckDB): every-50th-vector
+# centroids (capped at 50 — see _ivf_centroids for the scale law),
+# nearest-centroid cell per vector (rounded cosine, centroid-id
+# tiebreak) — byte-identical semantics to
+# similarity.ivf_cell_assignment so the oracles below can never
+# drift from the Spark quantizer.
+_IVF_ASSIGN_CTE = f"""
+    e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
     cent AS (SELECT vec_id AS cent_id, emb AS cemb FROM e
             WHERE vec_id % 50 = 0 AND vec_id < 2500),
     scored AS (
@@ -275,13 +278,19 @@ _COS_SQL = (
              {_COS_SQL.format(a="emb", b="cemb")} AS cs
       FROM e CROSS JOIN cent
     ),
-    assign AS (
-      SELECT vec_id, cent_id AS cell FROM (
-        SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                                     ORDER BY cs DESC, cent_id) AS rn
-        FROM scored
-      ) WHERE rn = 1
+    ranked AS (
+      SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
+                                   ORDER BY cs DESC, cent_id) AS rn
+      FROM scored
     ),
+    assign AS (SELECT vec_id, cent_id AS cell FROM ranked WHERE rn = 1)
+"""
+
+
+@register(
+    "sim_ann_ivf",
+    oracle=f"""
+    WITH {_IVF_ASSIGN_CTE},
     q AS (
       SELECT e.vec_id AS query_id, emb AS qemb, a.cell
       FROM e JOIN assign a ON e.vec_id = a.vec_id
@@ -323,30 +332,6 @@ def _ivf_centroids(emb: DataFrame) -> DataFrame:
     linear; a production deployment would use a KMeans-fit or
     √n-sized codebook, supplied to the same operators."""
     return emb.filter((F.col("vec_id") % 50 == 0) & (F.col("vec_id") < 2500))
-
-
-# Shared IVF-assignment CTE prefix (DuckDB): every-50th-vector
-# centroids (capped at 50 — see _ivf_centroids for the scale law),
-# nearest-centroid cell per vector (rounded cosine, centroid-id
-# tiebreak) — byte-identical semantics to
-# similarity.ivf_cell_assignment so the three oracles below can never
-# drift from the Spark quantizer.
-_IVF_ASSIGN_CTE = f"""
-    e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-    cent AS (SELECT vec_id AS cent_id, emb AS cemb FROM e
-            WHERE vec_id % 50 = 0 AND vec_id < 2500),
-    scored AS (
-      SELECT e.vec_id, cent_id,
-             {_COS_SQL.format(a="emb", b="cemb")} AS cs
-      FROM e CROSS JOIN cent
-    ),
-    ranked AS (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                                   ORDER BY cs DESC, cent_id) AS rn
-      FROM scored
-    ),
-    assign AS (SELECT vec_id, cent_id AS cell FROM ranked WHERE rn = 1)
-"""
 
 
 @register(
@@ -567,9 +552,6 @@ def _emb_signkeys_bucketed(
             *[_sign_band_key_col("emb", b, bits_per_band) for b in range(8)]
         ).alias("keys"),
     )
-    # the ingest job's plan never reaches the returned DataFrame (it
-    # executes inside the sidecar build) — surface it to the audit
-    capture("keys_ingest", keyed)
     table = bucket_ops.cached_bucketed(
         keyed,
         "emb_signkeys",
@@ -916,22 +898,12 @@ def _pq_fitted_codebook_sidecar(spark: SparkSession, sf_dir: str) -> DataFrame:
     pins the equality); a per-run re-fit measured ~4.0 s, all of it
     amortizable build cost, none of it search.
 
-    The fit plan is constructed only when it will be executed (a
-    store miss) or audited (a capture sink is installed): building the
-    multi-join graph just to hand it to a no-op capture() costs ~100
-    py4j round-trips on every warm search."""
-
-    def fit() -> DataFrame:
-        cb = pq_codebooks_lloyd(load_table(spark, "embeddings", sf_dir), iterations=2)
-        # the fit job's plan never reaches the returned DataFrame —
-        # surface it to the audit (whenever a sink is listening)
-        capture("pq_fit_ingest", cb)
-        return cb
-
-    audited = fit() if plancapture.active() else None
+    The fit plan is constructed only inside ``build``, on a store
+    miss: building the multi-join graph costs ~100 py4j round-trips,
+    which a warm search never pays."""
 
     def build(tmp: str) -> None:
-        cb = audited if audited is not None else fit()
+        cb = pq_codebooks_lloyd(load_table(spark, "embeddings", sf_dir), iterations=2)
         cb.coalesce(1).write.mode("overwrite").parquet(tmp)
 
     path = sidecar.cached(
@@ -1636,9 +1608,6 @@ def q_mv_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("cents").alias("cents"),
             )
         )
-        # each batch's merge job plan never reaches the returned
-        # DataFrame (it executes at this write) — audit it
-        capture(f"b{k}", merged)
         merged.write.mode("overwrite").parquet(f"{path}_b{k}")
         store = spark.read.parquet(f"{path}_b{k}")
     assert store is not None
@@ -1889,15 +1858,14 @@ def q_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register(
-    "merge_scd2",
-    oracle="""
-    WITH cur AS (
+# The SCD2 oracles' open customer snapshot, and q_merge_scd2's updates
+# batch with the versions it really changes (no-op updates dropped).
+_SCD2_CUR_CTE = """cur AS (
       SELECT c_custkey, c_mktsegment,
              TIMESTAMP '1995-01-01' AS valid_from
       FROM customer
-    ),
-    upd AS (
+    )"""
+_SCD2_CHG_CTES = """upd AS (
       SELECT c_custkey,
              CASE WHEN c_custkey % 14 = 0 THEN c_mktsegment
                   ELSE 'PROMO-' || CAST(c_custkey % 3 AS VARCHAR)
@@ -1909,7 +1877,14 @@ def q_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT u.c_custkey, u.c_mktsegment, u.eff_date
       FROM upd u JOIN cur c ON u.c_custkey = c.c_custkey
       WHERE u.c_mktsegment IS DISTINCT FROM c.c_mktsegment
-    )
+    )"""
+
+
+@register(
+    "merge_scd2",
+    oracle=f"""
+    WITH {_SCD2_CUR_CTE},
+    {_SCD2_CHG_CTES}
     SELECT c.c_custkey, c.c_mktsegment, c.valid_from,
            g.eff_date AS valid_to,
            CAST(CASE WHEN g.c_custkey IS NULL THEN 1 ELSE 0 END AS BIGINT)
@@ -1959,24 +1934,8 @@ def q_merge_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "join_scd2_pointintime",
     oracle=f"""
-    WITH cur AS (
-      SELECT c_custkey, c_mktsegment,
-             TIMESTAMP '1995-01-01' AS valid_from
-      FROM customer
-    ),
-    upd AS (
-      SELECT c_custkey,
-             CASE WHEN c_custkey % 14 = 0 THEN c_mktsegment
-                  ELSE 'PROMO-' || CAST(c_custkey % 3 AS VARCHAR)
-             END AS c_mktsegment,
-             TIMESTAMP '1999-06-01' AS eff_date
-      FROM customer WHERE c_custkey % 7 = 0
-    ),
-    chg AS (
-      SELECT u.c_custkey, u.c_mktsegment, u.eff_date
-      FROM upd u JOIN cur c ON u.c_custkey = c.c_custkey
-      WHERE u.c_mktsegment IS DISTINCT FROM c.c_mktsegment
-    ),
+    WITH {_SCD2_CUR_CTE},
+    {_SCD2_CHG_CTES},
     hist AS (
       SELECT c.c_custkey, c.c_mktsegment, c.valid_from,
              g.eff_date AS valid_to
@@ -2188,10 +2147,6 @@ def _lineitem_rowgroup_clustered(spark: SparkSession, sf_dir: str) -> str:
         "l_quantity",
         "l_extendedprice",
     )
-    # the ingest job's plan never reaches the returned DataFrame —
-    # surface it to the audit (unconditionally, like every ingest
-    # sidecar: the audit asserts this run's observed capture keys)
-    capture("rowgroup_ingest", li)
 
     def build(tmp: str) -> None:
         (
@@ -2264,12 +2219,8 @@ def q_scan_rowgroups_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stream_scd2_cdc",
-    oracle="""
-    WITH cur AS (
-      SELECT c_custkey, c_mktsegment,
-             TIMESTAMP '1995-01-01' AS valid_from
-      FROM customer
-    ),
+    oracle=f"""
+    WITH {_SCD2_CUR_CTE},
     upd AS (
       SELECT c_custkey,
              'PROMO-' || CAST(c_custkey % 3 AS VARCHAR) AS new_seg,
@@ -2606,9 +2557,6 @@ def q_mv_incremental_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             continue
         step_dir = os.path.join(path, f"s{step}")
         out = contrib.select("event_id", "user_id", "c_mktsegment", "value")
-        # per-step delta-join plans execute at this write, invisible
-        # to the returned multi-path read — audit each one
-        capture(f"s{step}", out)
         out.write.mode("overwrite").parquet(step_dir)
         step_dirs.append(step_dir)
     assert step_dirs

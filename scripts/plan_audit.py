@@ -1,68 +1,69 @@
 """Full-registry physical-plan audit: flag scale red-flags everywhere.
 
 The plan-lock tests (tests/test_plans.py) pin the plans that MATTER
-most, one by one. This sweep is the complement: render the formatted
-physical plan of EVERY registry query at sf0.01 and grep for the
-patterns that sink a 100 TB run —
+most, one by one. This sweep is the complement: it builds EVERY
+registry query at sf0.01 and audits two kinds of formatted physical
+plan per query:
+
+- the plan of the DataFrame the query RETURNS, keyed by the query
+  name;
+- every plan Spark EXECUTED while the query was being built (eager
+  checkpoints, sidecar ingests, per-step writes, eager counts), read
+  from Spark's SQL status store, which holds each execution's plan
+  description even with the UI off. Each distinct executed plan gets
+  the key ``query#1..n`` in first-seen order, so an iterative loop
+  yields one key per distinct round plan. Nothing in the engine
+  reports these stages: a new eager stage is audited without a hook.
+
+The build runs against an EMPTY sidecar store (a fresh directory,
+removed afterwards): a store hit executes nothing, so every ingest a
+query can trigger runs and is audited.
+
+Each plan is grepped for the patterns that sink a 100 TB run —
 
 - ``CartesianProduct``        unbounded pair blow-up
 - ``BroadcastNestedLoopJoin`` quadratic unless one side is truly small
 - ``Exchange SinglePartition``everything through one task
 
-and fail (exit 1) if any query outside the known-intentional
+and the audit fails (exit 1) if any plan outside the known-intentional
 allowlist trips one. A second sweep checks COLUMN PRUNING: any
 FileScan over a catalog table (width >= 5) whose ReadSchema carries
 the table's full width is flagged — a projection that stops reaching
 the scan is invisible at sf0.01 and a full-table read at 100 TB.
-Round-5 baseline: zero full-width reads.
 
-A third sweep locks each query's SHUFFLE BUDGET: the number of
-``Exchange`` nodes in the physical plan is recorded in
-``scripts/shuffle_baseline.json`` on the first run and compared on
-every later one — a query whose exchange count GROWS fails the audit
-(the docstrings state shuffle budgets; this makes them enforceable).
-A count that shrinks is reported and auto-recorded as the new
-baseline. The allowlist entries are all the SAME shape:
-a ``crossJoin(F.broadcast(...))`` against a SCALAR aggregate (one
-row: ref date, total count, fence thresholds) or a BOUNDED metadata
-table (IVF centroids, top-V vocab, band table) — the cases where a
+A third sweep locks each plan's SHUFFLE BUDGET: the number of
+``Exchange`` nodes is recorded in ``scripts/shuffle_baseline.json``
+and compared on every later run — a plan whose exchange count GROWS
+fails the audit (the docstrings state shuffle budgets; this makes them
+enforceable). A count that shrinks is reported and recorded as the
+new baseline. A returned plan is counted as ``explainString`` renders
+it; an executed plan is counted on its ``== Initial Plan ==`` tree, the
+tree ``explainString`` renders before execution, so an AQE re-plan at
+run time cannot move a budget.
+
+The allowlist entries for returned plans are all the SAME shape: a
+``crossJoin(F.broadcast(...))`` against a SCALAR aggregate (one row:
+ref date, total count, fence thresholds) or a BOUNDED metadata table
+(IVF centroids, top-V vocab, band table) — the cases where a
 nested-loop broadcast join is the correct, cheapest plan at any
-scale. A NEW name appearing here means a quadratic plan crept into a
-query that didn't opt in; remove a name when its query drops the
-pattern.
-
-Round-5 baseline: 13 allowlisted BNL joins, zero cartesian, zero
-single-partition exchanges, 187 queries. Round 6: 193 queries + 16
-captured eager stages (209 audited plans), same flag counts. Round 7:
-199 queries + 16 captured stages (215 audited plans); the new
-IVF/PQ-family queries join the centroid-table BNL allowlist, while
-``dedup_semantic_scaled`` deliberately does NOT — its quantizer is a
-broadcast HASH join on sign-LSH band keys, which is the whole point
-of that variant.
-
-COVERAGE BOUNDARY (ADVICE r5): rendering the RETURNED DataFrame's
-plan cannot see stages a query executes eagerly while being built —
-a ``localCheckpoint`` truncates lineage and a per-step parquet write
-runs a whole job whose plan never reaches the returned frame. Round 6
-closes the known cases through the plancapture hook
-(bigdatafinalproject_hockey_spark/plancapture.py): the iterative /
-MV / ingest queries call ``capture(label, df)`` on each eager stage,
-this audit installs a sink, and every captured plan is audited under
-``<query>#<label>`` with the same flag/pruning/shuffle-ratchet rules
-(tests/test_plan_audit.py asserts the expected capture keys exist, so
-a removed hook fails the suite). Eager stages in code that does NOT
-call capture() remain invisible — fixture staging writes
-(roundtrip sources, amplified corpora) are deliberately out of scope.
+scale. ``dedup_semantic_scaled`` deliberately does NOT appear: its
+quantizer is a broadcast HASH join on sign-LSH band keys, which is
+the whole point of that variant. A NEW name appearing here means a
+quadratic plan crept into a query that didn't opt in; remove a name
+when its query drops the pattern.
 
 Run from the repo root:  python scripts/plan_audit.py
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import re
+import shutil
 import sys
+import tempfile
 
 sys.path.insert(0, ".")
 
@@ -72,11 +73,11 @@ FLAGS = {
     # formatted mode puts an Exchange's partitioning on its own
     # "Arguments:" line, NOT adjacent to the node name — matching the
     # legacy "Exchange SinglePartition" substring silently checks
-    # nothing (a false negative this audit itself shipped with first).
+    # nothing.
     "single_part_exchange": re.compile(r"Arguments: SinglePartition", re.I),
 }
 
-# query -> the flags it is ALLOWED to trip, with the rationale
+# query -> the flags its plans are ALLOWED to trip, with the rationale
 # enforced by review. Two benign patterns only:
 #   bnl_join              crossJoin(broadcast(X)) where X is a SCALAR
 #                         aggregate (one row) or a BOUNDED metadata
@@ -86,6 +87,9 @@ FLAGS = {
 #                         partition to one task) or a global window
 #                         over a per-key aggregate whose docstring
 #                         states the |keys|-fit-a-partition bound
+# A ``query#eager`` entry applies to the plans the query EXECUTES
+# while it is built (on top of the query's own entry) and is the only
+# place ``full_width_read`` may be allowed.
 ALLOWED: dict[str, set[str]] = {
     "agg_count_filter": {"single_part_exchange"},      # global scalar count
     "agg_global_max": {"single_part_exchange"},        # global scalar max
@@ -118,12 +122,12 @@ ALLOWED: dict[str, set[str]] = {
                                               # scale path: join_interval_binned)
     "ml_centroid_classify": {"bnl_join", "single_part_exchange"},  # |classes|-row
                                               # mean table folded to one broadcast
-                                              # row (round 13 — see the IVF/PQ
-                                              # pack block below)
+                                              # row (see the IVF/PQ pack block
+                                              # below)
     "ml_eval_deterministic": {"single_part_exchange"},  # global confusion scalars
     "sample_temperature": {"bnl_join", "single_part_exchange"},  # scalar corpus totals
     "scan_csv_quarantine": {"single_part_exchange"},   # global quarantine count
-    # Round 13: the IVF/PQ family's quantizer/encode argmax runs as an
+    # The IVF/PQ family's quantizer/encode argmax runs as an
     # expression fold over a SINGLE broadcast row holding the bounded
     # candidate table (≤50 centroids / m×codes≤128 codebook rows /
     # |queries|-row ADC LUTs — see similarity._pack_centroids /
@@ -158,6 +162,32 @@ ALLOWED: dict[str, set[str]] = {
     "quality_tertile_split": {"bnl_join", "single_part_exchange"},  # same
                                               # scalar vocab total as its
                                               # unigram base
+    # Executed while the query is built: global scalars collected to
+    # the driver.
+    "dedup_components#eager": {"single_part_exchange"},  # per-round changed-label count (fixed-point test)
+    "dedup_keep_best#eager": {"single_part_exchange"},  # same components loop
+    "dedup_keep_best_minhash#eager": {"single_part_exchange"},  # same components loop
+    "ml_train_eval#eager": {"single_part_exchange"},  # temporal split's max year; class counts; metrics row
+    "ml_train_eval_rf#eager": {"single_part_exchange"},  # same split, fit counts and metrics row
+    "ml_train_eval_gbt#eager": {"single_part_exchange"},  # same split, fit counts and metrics row
+    "ml_train_eval_mlp#eager": {"single_part_exchange"},  # same split, fit counts and metrics row
+    "ml_eval_calibration#eager": {"single_part_exchange"},  # temporal split's max year
+    "ml_eval_pr_curve#eager": {"single_part_exchange"},  # temporal split's max year
+    "split_temporal#eager": {"single_part_exchange"},  # max year collected before the split
+    # Executed while the query is built: fixture staging writes that
+    # copy a whole catalog table before the read under test.
+    "scan_csv_roundtrip#eager": {"full_width_read"},  # customer written as CSV
+    "scan_jsonl_roundtrip#eager": {"full_width_read"},  # documents written as JSONL
+    "scan_text_roundtrip#eager": {"full_width_read"},  # documents written as text
+    "scan_orc_roundtrip#eager": {"full_width_read"},  # documents written as ORC
+    "scan_files_pruned#eager": {"full_width_read"},  # orders staged date-clustered
+    "sink_parquet_compacted#eager": {"full_width_read", "single_part_exchange"},  # documents
+                                              # scattered into 64 files; compaction
+                                              # to the computed file count (1 at sf0.01)
+    "stream_late_data_accounting#eager": {"full_width_read", "single_part_exchange"},  # events
+                                              # staged as the stream's source files;
+                                              # per-batch max-ts and late-row
+                                              # counts, merged count store
 }
 
 SF = "/root/testdata/sf0.01"
@@ -169,6 +199,27 @@ _LOCATION_RX = re.compile(r"Location:.*?/(\w+)\.parquet")
 _READSCHEMA_RX = re.compile(r"ReadSchema: struct<([^>]*)>")
 # formatted-mode Exchange node detail headers: "(5) Exchange"
 _EXCHANGE_RX = re.compile(r"(?m)^\(\d+\) Exchange\b")
+# an AQE plan's run-time tree, rendered after execution above the
+# "+- == Initial Plan ==" tree
+_FINAL_TREE_RX = re.compile(r"^( *)\+- == (?:Final|Current) Plan ==$")
+# the node number a tree line ends with: "+- Exchange (4)",
+# "ShuffleQueryStage (5), Statistics(sizeInBytes=336.0 B)"
+_TREE_ID_RX = re.compile(r" \((\d+)\)(?:, Statistics\(.*\))?$")
+_DETAIL_ID_RX = re.compile(r"^\((\d+)\) ")
+# what differs between runs of one plan: node numbers, expression,
+# plan and lambda-variable ids, codegen stage ids, size estimates, the
+# id and call site of a checkpointed RDD, a streaming write's epoch and
+# object identity hashes
+_UNSTABLE_RX = re.compile(
+    r"\(\d+\)|#\d+L?|plan_id=\d+|lambda \w+?_\d+|codegen id : \d+"
+    r"|Statistics\([^)]*\)|\w+RDD\[\d+\] at [^,]*|epoch: \d+|@[0-9a-f]{4,}\b"
+)
+# DDL executions, which carry no physical query plan (a CTAS runs its
+# query as a nested execution of its own)
+_PLAN_LESS_RX = re.compile(
+    r"\A== Physical Plan ==\n(?:DropTable|Execute (?:CreateDataSourceTable"
+    r"|CreateDataSourceTableAsSelect|CreateView|SaveAsV1Table)Command) \(1\)\n"
+)
 
 
 def _full_width_reads(plan: str, widths: dict[str, int]) -> list[str]:
@@ -176,11 +227,10 @@ def _full_width_reads(plan: str, widths: dict[str, int]) -> list[str]:
     narrower than 5 columns are exempt: nation/region are all-key).
 
     Location and ReadSchema are matched WITHIN one node detail block
-    (split on the "(N) NodeName" headers): a single cross-plan
-    non-greedy match (the original shape) let a scan whose Location
-    didn't fit the parquet pattern swallow the following nodes'
-    ReadSchema lines, silently exempting catalog scans from the sweep
-    (ADVICE r5 — false negatives only, but still a hole)."""
+    (split on the "(N) NodeName" headers): one cross-plan non-greedy
+    match would let a scan whose Location doesn't fit the parquet
+    pattern swallow the following nodes' ReadSchema lines, silently
+    exempting catalog scans from the sweep."""
     out = []
     for block in _NODE_RX.split(plan):
         loc = _LOCATION_RX.search(block)
@@ -194,14 +244,111 @@ def _full_width_reads(plan: str, widths: dict[str, int]) -> list[str]:
     return out
 
 
+def initial_plan(desc: str) -> str:
+    """An executed plan's description as ``explainString`` rendered it
+    before execution: every AQE ``== Final Plan ==`` tree is dropped,
+    with the detail blocks of the nodes only that tree shows. The
+    stored description lists both trees' nodes, so counting over the
+    whole text counts each exchange twice."""
+    kept: list[str] = []
+    final_ids: set[str] = set()
+    kept_ids: set[str] = set()
+    cut = None  # indent of the final tree being dropped
+    for line in desc.split("\n"):
+        m = _FINAL_TREE_RX.match(line)
+        if m:
+            cut = len(m.group(1)) + 3
+            continue
+        if cut is not None and line.startswith(" " * cut):
+            final_ids.update(_TREE_ID_RX.findall(line))
+            continue
+        cut = None
+        kept_ids.update(_TREE_ID_RX.findall(line))
+        kept.append(line)
+    drop = final_ids - kept_ids
+    out: list[str] = []
+    skipping = False
+    for line in kept:
+        m = _DETAIL_ID_RX.match(line)
+        if m:
+            skipping = m.group(1) in drop
+        if not skipping:
+            out.append(line)
+        elif not line:
+            skipping = False
+    return "\n".join(out)
+
+
+def _last_execution_id(spark) -> int:
+    """Id of the newest SQL execution Spark has recorded (-1: none)."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    n = store.executionsCount()
+    return store.executionsList(n - 1, 1).apply(0).executionId() if n else -1
+
+
+def executed_plans(spark, after_id: int) -> list[str]:
+    """The plan of every SQL execution recorded after ``after_id``,
+    oldest first, rendered by ``initial_plan``; executions that run
+    only a DDL command are skipped.
+
+    The store lists executions by id and drops the oldest finished
+    ones beyond ``spark.sql.ui.retainedExecutions`` on a background
+    thread, so the tail is read in growing windows until it reaches
+    ``after_id``."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    want = 16
+    while True:
+        n = store.executionsCount()
+        seq = store.executionsList(max(0, n - want), want)
+        execs = [seq.apply(i) for i in range(seq.size())]
+        if not execs or execs[0].executionId() <= after_id or want >= n:
+            break
+        want *= 4
+    plans = []
+    for e in execs:
+        if e.executionId() <= after_id:
+            continue
+        desc = e.physicalPlanDescription()
+        if not _PLAN_LESS_RX.match(desc):
+            plans.append(initial_plan(desc))
+    return plans
+
+
+def distinct_plans(plans: list[str]) -> list[str]:
+    """``plans`` without repeats, first-seen order; two plans are the
+    same when they differ only in what ``_UNSTABLE_RX`` matches."""
+    seen: dict[str, str] = {}
+    for plan in plans:
+        seen.setdefault(_UNSTABLE_RX.sub("", plan), plan)
+    return list(seen.values())
+
+
+@contextlib.contextmanager
+def _empty_sidecar_store():
+    """Point the sidecar store at a fresh directory for the duration,
+    then restore it and remove the directory."""
+    from bigdatafinalproject_hockey_spark import sidecar
+
+    saved = sidecar.ROOT, sidecar._process_dir
+    sidecar.ROOT = tempfile.mkdtemp(prefix="plan-audit-sidecars-")
+    # scratch() keeps its per-process directory under ROOT: start a
+    # new one there, and never hand out one inside the removed root
+    sidecar._process_dir = None
+    try:
+        yield
+    finally:
+        shutil.rmtree(sidecar.ROOT, ignore_errors=True)
+        sidecar.ROOT, sidecar._process_dir = saved
+
+
 def run_audit() -> tuple[int, dict[str, int]]:
     """Run the sweep; return (exit code, observed plan keys -> exchange
-    counts). The observed dict is the per-RUN ground truth — one key
-    per registry query plus one per captured eager stage — so callers
-    (tests/test_plan_audit.py) can assert capture-hook coverage against
-    what this run actually saw, not against the baseline file, which
-    always contains historical keys (ADVICE r6 medium: the old
-    assertion could not catch a dropped capture() hook)."""
+    counts). The observed dict is this run's ground truth — one key
+    per registry query plus one per distinct executed plan — so
+    callers (tests/test_plan_audit.py) can assert coverage against
+    what this run actually saw, not against the baseline file."""
     from bigdatafinalproject_hockey_spark.catalog import SCHEMAS
     from bigdatafinalproject_hockey_spark.queries import QUERIES
     from bigdatafinalproject_hockey_spark.session import get_session
@@ -220,59 +367,46 @@ def run_audit() -> tuple[int, dict[str, int]]:
     observed: dict[str, int] = {}
     violations: dict[str, list[str]] = {}
 
-    def _audit_one(key: str, qname: str, plan: str) -> None:
+    def _audit_one(key: str, plan: str, allowed: set[str]) -> None:
         """Apply flags, pruning sweep, and the shuffle ratchet to one
-        rendered plan. ``key`` is the baseline entry (query name, or
-        query#stage for a captured eager stage); the flag allowlist is
-        the owning QUERY's — a stage needing its own exemption should
-        be its own named pattern, not a silent pass."""
+        rendered plan under its baseline ``key``."""
         hits = {k for k, rx in FLAGS.items() if rx.search(plan)}
-        bad = sorted(hits - ALLOWED.get(qname, set()))
-        bad += _full_width_reads(plan, widths)
+        bad = sorted(hits - allowed)
+        if "full_width_read" not in allowed:
+            bad += _full_width_reads(plan, widths)
         observed[key] = len(_EXCHANGE_RX.findall(plan))
         if key in baseline and observed[key] > baseline[key]:
             bad.append(f"shuffle_regression:{baseline[key]}->{observed[key]}")
         if bad:
             violations[key] = bad
 
-    from bigdatafinalproject_hockey_spark import plancapture
-
-    for name, fn in QUERIES.items():
-        # Render every plan from an EMPTY cache: a persisted subtree
-        # (e.g. the IVF cell assignment) renders as InMemoryRelation
-        # once another query in the same session has registered an
-        # identical plan, collapsing its exchanges out of the count —
-        # so the measured budget depended on which queries ran first
-        # (the in-suite audit after a full test session recorded
-        # sim_ann_ivf at 4 exchanges, a fresh session at 6). Clearing
-        # per query pins the ratchet to the fresh-session rendering.
-        # Note the persisted-subtree counts OVERSTATE real shuffles:
-        # each reference re-renders the cached fragment's exchanges,
-        # while at runtime the fragment materializes once.
-        spark.catalog.clearCache()
-        captured: list[tuple[str, str]] = []
-
-        def _sink(label, df, _cap=captured):
-            # render NOW — the DataFrame is about to be checkpointed
-            # or written; rendering later would see truncated lineage
-            _cap.append(
-                (label, df._jdf.queryExecution().explainString(mode))
-            )
-
-        plancapture.install(_sink)
-        try:
-            df = fn(spark, SF)
-            plan = df._jdf.queryExecution().explainString(mode)
-        except Exception as exc:  # noqa: BLE001
-            violations[name] = [f"PLAN_ERROR {type(exc).__name__}: {exc}"[:120]]
-            continue
-        finally:
-            plancapture.uninstall()
-        _audit_one(name, name, plan)
-        # eager intermediate stages (ADVICE r5's blind spot): same
-        # rules, keyed query#stage so each holds its own budget
-        for label, cplan in captured:
-            _audit_one(f"{name}#{label}", name, cplan)
+    with _empty_sidecar_store():
+        for name, fn in QUERIES.items():
+            # Render every plan from an EMPTY cache: a persisted subtree
+            # (e.g. the IVF cell assignment) renders as InMemoryRelation
+            # once another query in the same session has registered an
+            # identical plan, collapsing its exchanges out of the count —
+            # so the measured budget would depend on which queries ran
+            # first. Clearing per query pins the ratchet to the
+            # fresh-session rendering. Note the persisted-subtree counts
+            # OVERSTATE real shuffles: each reference re-renders the
+            # cached fragment's exchanges, while at runtime the fragment
+            # materializes once.
+            spark.catalog.clearCache()
+            before = _last_execution_id(spark)
+            try:
+                df = fn(spark, SF)
+                plan = df._jdf.queryExecution().explainString(mode)
+            except Exception as exc:  # noqa: BLE001
+                violations[name] = [f"PLAN_ERROR {type(exc).__name__}: {exc}"[:120]]
+                continue
+            allowed = ALLOWED.get(name, set())
+            _audit_one(name, plan, allowed)
+            eager = allowed | ALLOWED.get(f"{name}#eager", set())
+            for i, executed in enumerate(
+                distinct_plans(executed_plans(spark, before)), 1
+            ):
+                _audit_one(f"{name}#{i}", executed, eager)
     for name, flags in sorted(violations.items()):
         print(f"VIOLATION {name}: {flags}")
     improved = {
@@ -283,13 +417,12 @@ def run_audit() -> tuple[int, dict[str, int]]:
     for n, (old, new) in sorted(improved.items()):
         print(f"IMPROVED {n}: {old} -> {new} exchanges")
     if not violations:
-        # Record THIS run's observations verbatim: new queries seed
-        # their entries, improvements ratchet down, and keys for
-        # removed/renamed queries or dropped stage captures are PRUNED
-        # (ADVICE r6 low: merging kept stale entries forever, letting a
-        # renamed query silently restart its ratchet and blinding the
-        # capture-coverage test). A green run observes every live
-        # registry query, so ``observed`` is exactly the live key set.
+        # Record THIS run's observations verbatim: new keys seed their
+        # entries, improvements ratchet down, and keys for removed or
+        # renamed queries and vanished executed plans are PRUNED, so a
+        # renamed query cannot keep a stale entry around. A green run
+        # observes every live registry query, so ``observed`` is
+        # exactly the live key set.
         stale = sorted(set(baseline) - set(observed))
         for key in stale:
             print(f"PRUNED stale baseline key: {key}")

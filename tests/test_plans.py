@@ -835,8 +835,8 @@ def test_bpe_learn_vocab_no_python_stage_and_truncated_iterations(spark):
     double per level), so the RETURNED plan is just the final vocab
     RDD scan + the broadcast merge-list attach — no Python stage, no
     cartesian, no data-sized shuffle. The per-iteration pair-stats /
-    argmax / fold plans are audited through their plancapture hooks
-    (bpe_learn_vocab#best{i} / #merge{i} — presence locked by
+    argmax / fold plans run at their checkpoints, where the plan audit
+    reads them (bpe_learn_vocab#N keys — presence locked by
     tests/test_plan_audit.py)."""
     plan = plan_of(spark, "bpe_learn_vocab")
     assert "MapInPandas" not in plan and "BatchEvalPython" not in plan
@@ -863,7 +863,7 @@ def test_filter_url_blocklist_broadcast_anti_one_window(spark):
 def test_pipeline_web_to_shards_checkpointed_stages(spark):
     """The composed web→shards chain (round 11) materializes its
     fan-out boundaries eagerly (extract+norm / rewrite / meta — each
-    audited via its plancapture hook), so the RETURNED plan is just
+    audited as an executed plan), so the RETURNED plan is just
     the metadata table through packing and the reshard: one grouped
     Arrow fold, the shard window, no re-derivation of any Arrow
     extraction stage (a lazy chain rendered EIGHT of them), no
@@ -882,8 +882,8 @@ def test_tokenize_bpe_corpus_apply_is_broadcast_only(spark):
     tables are vocabulary-sized) — the corpus never shuffles. The
     only exchanges are over the tiny alphabet/symbol-table side
     (allowlisted single-partition windows + two vocab-sized hash
-    aggregations); the learn loop's stages are audited via their
-    plancapture hooks."""
+    aggregations); the learn loop's stages are audited as the plans
+    their checkpoints execute."""
     plan = plan_of(spark, "tokenize_bpe_corpus")
     assert plan.count("FileScan parquet") == 1       # corpus scanned once
     assert plan.count("BroadcastHashJoin") == 2
