@@ -4,7 +4,8 @@ The reference reads its CSVs with ``inferSchema=true`` and then
 re-casts every consumed column (reference code/experiment.py:281-298,
 322-338). Inference costs an extra scan and is fragile at scale, so
 this engine pins every table to an explicit ``StructType``;
-``verify_contract`` checks a table's parquet footers against it.
+``verify_contract`` checks a table's parquet footers against it, and
+``load_table`` runs that check whenever it meets a new file version.
 This module is the only one that knows how ``events.ts`` is encoded
 (``events_source``).
 
@@ -16,6 +17,7 @@ a scale-factor directory (``sf_dir``).
 from __future__ import annotations
 
 import os
+from typing import Callable
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -122,6 +124,8 @@ SCHEMAS: dict[str, T.StructType] = {
 
 TABLES = tuple(SCHEMAS)
 
+Decode = Callable[[DataFrame], DataFrame]
+
 
 def _footer_paths(path: str) -> list[str]:
     """Every parquet part file for a table path (a single file, or the
@@ -136,6 +140,16 @@ def _footer_paths(path: str) -> list[str]:
             raise FileNotFoundError(f"no parquet files under {path}")
         return parts
     return [path]
+
+
+def file_version(path: str) -> tuple[tuple[str, int, int], ...]:
+    """(absolute path, size, ``st_mtime_ns``) of every part file of a
+    table path: rewriting the table changes it."""
+    out = []
+    for part in _footer_paths(path):
+        st = os.stat(part)
+        out.append((os.path.abspath(part), st.st_size, st.st_mtime_ns))
+    return tuple(out)
 
 
 def events_ts_encoding(path: str) -> str:
@@ -212,7 +226,7 @@ def verify_contract(name: str, path: str) -> None:
                 )
 
 
-def events_source(path: str):
+def events_source(path: str) -> tuple[T.StructType, Decode]:
     """(read schema, decode) for the events table at ``path``.
 
     ``events.ts`` is encoded differently across testdata generations
@@ -243,15 +257,68 @@ def events_source(path: str):
     return schema, decode
 
 
+# Session conf that changes the schema Spark infers from a parquet
+# footer; a read resolved under one set of values is not reused under
+# another.
+PARQUET_INFERENCE_CONF = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.legacy.parquet.nanosAsLong",
+)
+
+# table path -> (version key, (read schema, decode or None)). One
+# entry per path: a new file version replaces the old entry. Each
+# entry is one tuple stored by a single dict assignment, so a
+# concurrent caller sees the old entry or the new one, never half of
+# one.
+_resolved: dict[str, tuple[tuple, tuple[T.StructType, Decode | None]]] = {}
+
+
+def _resolve_read(
+    spark: SparkSession, name: str, path: str
+) -> tuple[T.StructType, Decode | None]:
+    """``events_source(path)`` for ``events``; for any other table the
+    schema Spark infers for ``path`` and no decode. Resolved once per
+    version key (``file_version(path)`` and the session's
+    ``PARQUET_INFERENCE_CONF`` values) after ``verify_contract``
+    passes; a failing check stores nothing."""
+    key = (
+        file_version(path),
+        tuple(spark.conf.get(k, None) for k in PARQUET_INFERENCE_CONF),
+    )
+    entry = _resolved.get(os.path.abspath(path))
+    if entry is not None and entry[0] == key:
+        return entry[1]
+    verify_contract(name, path)
+    if name == "events":
+        read = events_source(path)
+    else:
+        read = (spark.read.parquet(path).schema, None)
+    _resolved[os.path.abspath(path)] = (key, read)
+    return read
+
+
 def load_table(spark: SparkSession, name: str, sf_dir: str) -> DataFrame:
     """Load one synthetic table as a DataFrame.
 
     ``events`` is read with ``events_source``'s schema and decoded.
-    Every other table carries its schema in the parquet footer, which
-    is expected to equal ``SCHEMAS[name]`` up to timestamp precision;
-    forcing ours on the reader would break vectorized reads on a
-    mismatch. Column pruning + predicate pushdown come free from
-    expressing queries declaratively downstream.
+    Every other table is read with the schema Spark infers from its
+    parquet footer, which is expected to equal ``SCHEMAS[name]`` up to
+    timestamp precision (a tz-naive timestamp stays
+    ``timestamp_ntz``); forcing ours on the reader would break
+    vectorized reads on a mismatch. Column pruning + predicate
+    pushdown come free from expressing queries declaratively
+    downstream.
+
+    The read is resolved once per file version: the first call checks
+    ``verify_contract`` and infers (one Spark job, or a footer read
+    for ``events``); later calls reuse the result and launch no job.
+    The version key holds each part file's absolute path, size and
+    mtime, and the session's ``PARQUET_INFERENCE_CONF`` values, so a
+    rewritten table or a session that infers differently resolves
+    afresh.
     """
     if name not in SCHEMAS:
         raise KeyError(f"unknown table {name!r}; have {sorted(SCHEMAS)}")
@@ -260,7 +327,6 @@ def load_table(spark: SparkSession, name: str, sf_dir: str) -> DataFrame:
     # is stable regardless of host TZ.
     pin(spark)
     path = f"{sf_dir}/{name}.parquet"
-    if name == "events":
-        schema, decode = events_source(path)
-        return decode(spark.read.schema(schema).parquet(path))
-    return spark.read.parquet(path)
+    schema, decode = _resolve_read(spark, name, path)
+    df = spark.read.schema(schema).parquet(path)
+    return decode(df) if decode else df

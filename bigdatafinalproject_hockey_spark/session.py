@@ -24,6 +24,12 @@ from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+# The directory that holds this package. Python workers unpickle the
+# engine's UDFs and data sources by module reference, so
+# ``get_session`` puts it on their path, wherever the driver runs,
+# ahead of any worker path the caller passes in ``extra_conf``.
+PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 # Conf every result depends on. Deterministic cross-engine comparison:
 # DuckDB is UTC-naive.
 PINNED_CONF = {"spark.sql.session.timeZone": "UTC"}
@@ -80,6 +86,15 @@ def get_session(
     }
     if extra_conf:
         conf.update(extra_conf)
+    worker_path = conf.get("spark.executorEnv.PYTHONPATH", "").split(os.pathsep)
+    conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+        [PACKAGE_PARENT] + [p for p in worker_path if p and p != PACKAGE_PARENT]
+    )
+    # Local files are written without a chmod process per file.
+    # (Imported here: localfs -> sidecar -> catalog imports this module.)
+    from bigdatafinalproject_hockey_spark import localfs
+
+    conf.update(localfs.session_conf(master, conf))
     for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

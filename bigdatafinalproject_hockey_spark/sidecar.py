@@ -29,7 +29,7 @@ import tempfile
 import threading
 from typing import Callable
 
-from bigdatafinalproject_hockey_spark.catalog import _footer_paths
+from bigdatafinalproject_hockey_spark.catalog import file_version
 
 ROOT = os.path.join(tempfile.gettempdir(), "spark-graft")
 
@@ -40,11 +40,8 @@ _process_dir: str | None = None
 def _key(name: str, inputs: list[str], version: str) -> str:
     h = hashlib.sha256(version.encode())
     for path in inputs:
-        for part in _footer_paths(path):
-            st = os.stat(part)
-            h.update(
-                f"\0{os.path.abspath(part)}\0{st.st_size}\0{st.st_mtime_ns}".encode()
-            )
+        for part, size, mtime in file_version(path):
+            h.update(f"\0{part}\0{size}\0{mtime}".encode())
     return f"{name}_{h.hexdigest()[:16]}"
 
 

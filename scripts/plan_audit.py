@@ -36,10 +36,11 @@ A third sweep locks each plan's SHUFFLE BUDGET: the number of
 and compared on every later run — a plan whose exchange count GROWS
 fails the audit (the docstrings state shuffle budgets; this makes them
 enforceable). A count that shrinks is reported and recorded as the
-new baseline. A returned plan is counted as ``explainString`` renders
-it; an executed plan is counted on its ``== Initial Plan ==`` tree, the
-tree ``explainString`` renders before execution, so an AQE re-plan at
-run time cannot move a budget.
+new baseline. Every plan, returned or executed, is counted on its
+``== Initial Plan ==`` tree, the tree ``explainString`` renders before
+execution, so an AQE re-plan at run time cannot move a budget (a
+returned plan that reads a persisted fragment which already ran would
+otherwise count that fragment's exchanges on both its trees).
 
 The allowlist entries for returned plans are all the SAME shape: a
 ``crossJoin(F.broadcast(...))`` against a SCALAR aggregate (one row:
@@ -245,8 +246,8 @@ def _full_width_reads(plan: str, widths: dict[str, int]) -> list[str]:
 
 
 def initial_plan(desc: str) -> str:
-    """An executed plan's description as ``explainString`` rendered it
-    before execution: every AQE ``== Final Plan ==`` tree is dropped,
+    """A plan description as ``explainString`` rendered it before
+    execution: every AQE ``== Final Plan ==`` tree is dropped,
     with the detail blocks of the nodes only that tree shows. The
     stored description lists both trees' nodes, so counting over the
     whole text counts each exchange twice."""
@@ -396,7 +397,7 @@ def run_audit() -> tuple[int, dict[str, int]]:
             before = _last_execution_id(spark)
             try:
                 df = fn(spark, SF)
-                plan = df._jdf.queryExecution().explainString(mode)
+                plan = initial_plan(df._jdf.queryExecution().explainString(mode))
             except Exception as exc:  # noqa: BLE001
                 violations[name] = [f"PLAN_ERROR {type(exc).__name__}: {exc}"[:120]]
                 continue

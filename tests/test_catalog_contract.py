@@ -8,9 +8,15 @@ place instead of deep inside two dozen queries.
 """
 
 import datetime
+import os
+import shutil
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import types as T
 
+from bigdatafinalproject_hockey_spark import catalog
 from bigdatafinalproject_hockey_spark.catalog import (
     SCHEMAS,
     events_ts_encoding,
@@ -154,3 +160,108 @@ def test_load_spark_written_events(spark, tmp_path, out_type):
         map(tuple, load_table(spark, "events", str(tmp_path / f"events_{out_type}")).collect())
     )
     assert got == want
+
+
+def _jobs_in(spark, group, fn):
+    """(fn(), ids of the Spark jobs ``fn`` ran under job group ``group``)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _orders(tmp_path, n_rows: int = 2, tz: str | None = None) -> str:
+    """An sf dir holding an orders table of ``n_rows`` rows whose
+    ``o_orderdate`` carries time zone ``tz``."""
+    table = pa.table(
+        {
+            "o_orderkey": pa.array(range(n_rows), pa.int64()),
+            "o_custkey": pa.array(range(n_rows), pa.int64()),
+            "o_orderstatus": pa.array(["O"] * n_rows),
+            "o_totalprice": pa.array([1.0] * n_rows, pa.float64()),
+            "o_orderdate": pa.array(
+                [datetime.datetime(2024, 1, 1)] * n_rows, pa.timestamp("us", tz=tz)
+            ),
+            "o_orderpriority": pa.array(["1-URGENT"] * n_rows),
+        }
+    )
+    pq.write_table(table, str(tmp_path / "orders.parquet"))
+    return str(tmp_path)
+
+
+def test_second_load_runs_no_job(spark, tmp_path):
+    """The first load of a file version infers its schema with a Spark
+    job; a second load of the same version runs none and reads with the
+    same schema."""
+    shutil.copy(f"{SF_DIRS[0]}/lineitem.parquet", tmp_path / "lineitem.parquet")
+    first, jobs = _jobs_in(
+        spark, "load-first", lambda: load_table(spark, "lineitem", str(tmp_path))
+    )
+    assert jobs, "the first load should infer the footer schema"
+    second, jobs = _jobs_in(
+        spark, "load-second", lambda: load_table(spark, "lineitem", str(tmp_path))
+    )
+    assert jobs == []
+    assert second.schema == first.schema
+
+
+def test_rewritten_table_resolves_afresh(spark, tmp_path):
+    """A rewrite of the table at the same path is a new file version: the
+    next load reads the new schema, and a rewrite that breaks the
+    contract fails instead of serving the old entry."""
+    sf = _orders(tmp_path)
+
+    def date_type():
+        return load_table(spark, "orders", sf).schema["o_orderdate"].dataType
+
+    assert date_type() == T.TimestampNTZType()
+    _orders(tmp_path, tz="UTC")
+    assert date_type() == T.TimestampType()
+    extra = pq.read_table(f"{sf}/orders.parquet").append_column(
+        "o_comment", pa.array(["x", "y"])
+    )
+    pq.write_table(extra, f"{sf}/orders.parquet")
+    with pytest.raises(ValueError, match="o_comment"):
+        load_table(spark, "orders", sf)
+
+
+def test_memo_follows_session_inference_conf(spark):
+    """A session that infers tz-naive timestamps as ``timestamp`` reads
+    orders.o_orderdate that way; the default session still reads it as
+    ``timestamp_ntz``."""
+    other = spark.newSession()
+    other.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    for session, want in ((spark, "timestamp_ntz"), (other, "timestamp"), (spark, "timestamp_ntz")):
+        df = load_table(session, "orders", SF_DIRS[0])
+        assert df.schema["o_orderdate"].dataType.simpleString() == want
+
+
+def test_memo_keeps_one_entry_per_path(spark, tmp_path):
+    """After several rewrites of one table, the memo holds one entry
+    for it: the current file version's."""
+    for n_rows in range(1, 5):
+        load_table(spark, "orders", _orders(tmp_path, n_rows=n_rows))
+    path = os.path.abspath(f"{tmp_path}/orders.parquet")
+    held = [
+        files
+        for (files, _conf), _read in catalog._resolved.values()
+        if any(part == path for part, _size, _mtime in files)
+    ]
+    assert held == [catalog.file_version(path)]
+
+
+def test_contract_checked_at_load(spark, tmp_path):
+    """A table that breaks the testdata contract fails at load, naming
+    the column, on every call: a failing check is not memoised."""
+    table = pq.read_table(f"{SF_DIRS[0]}/lineitem.parquet")
+    i = table.schema.get_field_index("l_linenumber")
+    table = table.set_column(
+        i, "l_linenumber", table.column(i).cast(pa.int64())
+    )
+    pq.write_table(table, str(tmp_path / "lineitem.parquet"))
+    for _ in range(2):
+        with pytest.raises(ValueError, match="lineitem.l_linenumber"):
+            load_table(spark, "lineitem", str(tmp_path))

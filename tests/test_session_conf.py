@@ -139,3 +139,30 @@ def test_with_conf_keeps_a_stream_streaming(spark):
 
     stream = read_events_stream(spark, SF_DIR)
     assert with_conf(stream, {"spark.sql.shuffle.partitions": "3"}).isStreaming
+
+
+def test_workers_import_package_from_any_cwd(tmp_path):
+    """A driver started outside the checkout, with no PYTHONPATH, still
+    runs a Python data source: ``get_session`` puts the package on the
+    Python workers' path."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = (
+        "import sys\n"
+        f"sys.path.insert(0, {repo!r})\n"
+        "from bigdatafinalproject_hockey_spark.queries import QUERIES\n"
+        "from bigdatafinalproject_hockey_spark.session import get_session\n"
+        "spark = get_session(app_name='cwd', shuffle_partitions=2)\n"
+        f"print(QUERIES['scan_custom_datasource'](spark, {SF_DIR!r}).count())\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="1g")
+    out = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert out.stdout.split()[-1] == "2000"
