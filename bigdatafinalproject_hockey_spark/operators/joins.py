@@ -21,6 +21,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from bigdatafinalproject_hockey_spark.operators.strings import quote_ident, sql_literal
+
 
 def join_equi(
     left: DataFrame,
@@ -54,13 +56,17 @@ def join_self_matchup(
 
     All non-key columns get side prefixes, resolving the self-join
     ambiguity the reference handles with a 31-line aliased select. Each
-    side is renamed by one whole-frame ``toDF``, not a per-column alias.
+    side is one ``where`` and one renaming ``selectExpr``, both SQL
+    text, so the build sends a few py4j commands per side, not a few
+    per column.
     """
-    rest = [c for c in df.columns if c != split_col]
+    rest = [c for c in df.columns if c not in keys and c != split_col]
 
     def side(value: object, prefix: str) -> DataFrame:
-        names = [c if c in keys else f"{prefix}{c}" for c in rest]
-        return df.filter(F.col(split_col) == F.lit(value)).drop(split_col).toDF(*names)
+        return df.where(f"{quote_ident(split_col)} = {sql_literal(value)}").selectExpr(
+            *map(quote_ident, keys),
+            *[f"{quote_ident(c)} AS {quote_ident(prefix + c)}" for c in rest],
+        )
 
     return side(left_value, left_prefix).join(
         side(right_value, right_prefix), list(keys), "inner"

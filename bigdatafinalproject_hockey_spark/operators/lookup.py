@@ -22,11 +22,19 @@ from itertools import chain
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from bigdatafinalproject_hockey_spark.operators.strings import sql_literal
+
 
 def literal_map_expr(mapping: Mapping[str, str]) -> Column:
     """Constant MapType expression from a Python dict
     (reference code/experiment.py:272-274)."""
     return F.create_map(*[F.lit(x) for x in chain.from_iterable(mapping.items())])
+
+
+def literal_map_sql(mapping: Mapping[str, str]) -> str:
+    """``literal_map_expr`` as SQL text: ``map(k1, v1, ...)``, one
+    string however many entries the dict has."""
+    return f"map({', '.join(map(sql_literal, chain.from_iterable(mapping.items())))})"
 
 
 def map_literal_lookup(

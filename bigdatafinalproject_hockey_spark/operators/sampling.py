@@ -19,6 +19,7 @@ from bigdatafinalproject_hockey_spark.operators.aggregates import (
     collect_scalar,
 )
 from bigdatafinalproject_hockey_spark.operators.joins import semi_join_keys
+from bigdatafinalproject_hockey_spark.operators.strings import quote_ident, sql_literal
 
 
 def sample_by_key(
@@ -133,9 +134,8 @@ def split_at(
 ) -> tuple[DataFrame, DataFrame]:
     """``split_temporal`` for a caller that already knows the max
     period. A NULL max (empty input) leaves both halves empty."""
-    train = df.filter(F.col(time_col) < F.lit(max_val))
-    test = df.filter(F.col(time_col) == F.lit(max_val))
-    return train, test
+    col, val = quote_ident(time_col), sql_literal(max_val)
+    return df.where(f"{col} < {val}"), df.where(f"{col} = {val}")
 
 
 def split_random(

@@ -23,6 +23,8 @@ from collections.abc import Mapping, Sequence
 from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
+from bigdatafinalproject_hockey_spark.operators.strings import quote_ident
+
 
 def ordered_window(
     partition_by: Sequence[str], order_by: Sequence[str]
@@ -46,6 +48,17 @@ def win_row_number(
     """Sequence number within partition (reference code/experiment.py:423-429)."""
     w = ordered_window(partition_by, order_by)
     return df.withColumn(out, F.row_number().over(w))
+
+
+def _expanding_frame(include_current: bool) -> tuple[int, int]:
+    """ROWS bounds of the expanding frame: every prior row, and the
+    current one only if ``include_current``."""
+    return Window.unboundedPreceding, 0 if include_current else -1
+
+
+def _sliding_frame(lookback: int, include_current: bool) -> tuple[int, int]:
+    """ROWS bounds of the sliding frame: the ``lookback`` prior rows."""
+    return -lookback, 0 if include_current else -1
 
 
 def _framed(
@@ -82,8 +95,7 @@ def expanding_columns(
     where its frame is empty — the reference's per-feature defaults
     (code/experiment.py:476-494) without a second projection."""
     w = ordered_window(partition_by, order_by)
-    end = 0 if include_current else -1
-    return _framed(w, measures, Window.unboundedPreceding, end, defaults)
+    return _framed(w, measures, *_expanding_frame(include_current), defaults)
 
 
 def sliding_columns(
@@ -97,8 +109,82 @@ def sliding_columns(
     """``win_sliding``'s output columns by name (see
     ``expanding_columns``)."""
     w = ordered_window(partition_by, order_by)
-    end = 0 if include_current else -1
-    return _framed(w, measures, -lookback, end, defaults)
+    return _framed(w, measures, *_sliding_frame(lookback, include_current), defaults)
+
+
+def window_sql(
+    partition_by: Sequence[str],
+    order_by: Sequence[str],
+    frame: tuple[int, int] | None = None,
+) -> str:
+    """``ordered_window`` as an inline SQL window spec,
+    ``(PARTITION BY .. ORDER BY .. [ROWS BETWEEN ..])``. Spark's
+    expression parser takes no named window, so each ``OVER`` spells
+    its spec out."""
+    spec = (
+        f"PARTITION BY {', '.join(map(quote_ident, partition_by))} "
+        f"ORDER BY {', '.join(map(quote_ident, order_by))}"
+    )
+    if frame is not None:
+        start, end = map(_bound_sql, frame)
+        spec += f" ROWS BETWEEN {start} AND {end}"
+    return f"({spec})"
+
+
+def _bound_sql(offset: int) -> str:
+    """A ``rowsBetween`` bound at or before the current row as SQL
+    frame text."""
+    if offset == Window.unboundedPreceding:
+        return "UNBOUNDED PRECEDING"
+    return f"{-offset} PRECEDING"
+
+
+def _framed_sql(
+    partition_by: Sequence[str],
+    order_by: Sequence[str],
+    measures: Mapping[str, str],
+    frame: tuple[int, int],
+    defaults: Mapping[str, str],
+) -> list[str]:
+    """``_framed`` as ``selectExpr`` text: ``<measure> OVER (..) AS
+    name`` per output, in ``coalesce(.., default)`` where ``defaults``
+    names it. Measures and defaults are SQL expressions."""
+    over = window_sql(partition_by, order_by, frame)
+    out = []
+    for name, agg in measures.items():
+        expr = f"{agg} OVER {over}"
+        if name in defaults:
+            expr = f"coalesce({expr}, {defaults[name]})"
+        out.append(f"{expr} AS {quote_ident(name)}")
+    return out
+
+
+def expanding_sql(
+    partition_by: Sequence[str],
+    order_by: Sequence[str],
+    measures: Mapping[str, str],
+    defaults: Mapping[str, str],
+) -> list[str]:
+    """``expanding_columns`` (current row excluded) as ``selectExpr``
+    text; ``measures`` and ``defaults`` map output names to SQL
+    expressions."""
+    return _framed_sql(
+        partition_by, order_by, measures, _expanding_frame(False), defaults
+    )
+
+
+def sliding_sql(
+    partition_by: Sequence[str],
+    order_by: Sequence[str],
+    measures: Mapping[str, str],
+    lookback: int,
+    defaults: Mapping[str, str],
+) -> list[str]:
+    """``sliding_columns`` (current row excluded) as ``selectExpr``
+    text (see ``expanding_sql``)."""
+    return _framed_sql(
+        partition_by, order_by, measures, _sliding_frame(lookback, False), defaults
+    )
 
 
 def win_expanding(

@@ -20,11 +20,27 @@ DataFrames with the column roles declared in PipelineConfig works —
 the hockey CSVs of the reference are one instantiation (tests build
 reference-shaped fixtures per FIXTURES.md §A).
 
+Each stage is one or two DataFrame calls over SQL expression text
+(``selectExpr``, ``where``, ``F.expr``), which build the same Catalyst
+plan as Column calls. A Column call is about 15 py4j round trips with
+``spark.python.sql.dataFrameDebugging.enabled`` on, an expression
+string one, so building the plan costs a few hundred commands, not a
+few thousand. No stage is ``spark.sql("... {df}", df=df)``: over the
+persisted ``game_data`` that form misses the cache, and the matchups
+rescan both CSVs.
+
+Plan shape (the executed plan of the CLI): two hash exchanges, one on
+(game, season, team) for the event aggregate and one on (team,
+season) for the window features, which all share one Window. Both
+joins broadcast one side: the cleaned results in the 3-key join, one
+side of the matchup self-join.
+
 Scale notes (100 TB): events should land partitioned by season so the
 3-key join prunes; the window partitions are (team, season) — bounded
-(~82 rows) regardless of total data size; the only wide shuffles are
-the event aggregation and the join, both on the same (game, season,
-team) key, which Catalyst/AQE plans as one exchange reused twice.
+(~82 rows) regardless of total data size. At that size the results
+side outgrows the broadcast threshold, and the 3-key join shuffles it
+on (game, season, team), the key the aggregate's output is already
+partitioned by.
 """
 
 from __future__ import annotations
@@ -36,14 +52,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from bigdatafinalproject_hockey_spark.operators import (
-    aggregates as agg_ops,
     joins as join_ops,
     lookup as lookup_ops,
     sampling as sample_ops,
-    scalar as scalar_ops,
     strings as string_ops,
     windows as win_ops,
 )
+from bigdatafinalproject_hockey_spark.operators.strings import quote_ident, sql_literal
 
 
 @dataclass
@@ -107,68 +122,78 @@ def events_types(cfg: PipelineConfig) -> dict[str, T.DataType]:
     }
 
 
-def _cast_untyped(df: DataFrame, types: dict[str, T.DataType]) -> DataFrame:
-    """Cast the columns that do not have their type yet; a typed read
-    leaves none. Absent columns (the game key's other name) are left
-    to fail where they are used."""
-    have = {f.name: f.dataType for f in df.schema.fields}
-    return scalar_ops.cast_types(
-        df, {c: t for c, t in types.items() if have.get(c, t) != t}
-    )
-
-
-def _team_code_expr(cfg: PipelineConfig, raw: str) -> F.Column:
+def _team_code_sql(cfg: PipelineConfig, raw: str) -> str:
     """Literal-map lookup with whitespace-normalize + strip-charset
-    fallback (reference code/experiment.py:305-316)."""
-    norm = string_ops.normalize_ws_expr(F.col(raw))
-    fallback = string_ops.strip_charset_expr(norm)
+    fallback (reference code/experiment.py:305-316), as SQL text."""
+    norm = string_ops.normalize_ws_sql(quote_ident(raw))
+    fallback = string_ops.strip_charset_sql(norm)
     if not cfg.team_map:
         return fallback
-    return F.coalesce(lookup_ops.literal_map_expr(cfg.team_map)[norm], fallback)
+    return f"coalesce({lookup_ops.literal_map_sql(cfg.team_map)}[{norm}], {fallback})"
+
+
+def _clean(
+    df: DataFrame,
+    cfg: PipelineConfig,
+    types: dict[str, T.DataType],
+    team_raw: str,
+    renames: dict[str, str],
+    date_col: str | None = None,
+) -> DataFrame:
+    """One clean step as one projection and one filter, both SQL text:
+    every column in place, renamed per ``renames``; ``try_cast`` to its
+    entry in ``types`` where it lacks that type (a typed read leaves
+    none); ``date_col`` parsed unless it is a date already; the team
+    code added (or replaced in place); then the range bounds, on the
+    typed columns."""
+    exprs = {}
+    for f in df.schema.fields:
+        name = renames.get(f.name, f.name)
+        expr = quote_ident(f.name)
+        if name in types and f.dataType != types[name]:
+            expr = f"try_cast({expr} AS {types[name].simpleString()})"
+        elif name == date_col and f.dataType != T.DateType():
+            expr = f"to_date({expr}, {sql_literal(cfg.date_format)})"
+        exprs[name] = expr if expr == quote_ident(name) else f"{expr} AS {quote_ident(name)}"
+    exprs[cfg.team_col] = f"{_team_code_sql(cfg, team_raw)} AS {quote_ident(cfg.team_col)}"
+    bounds = [
+        f"{quote_ident(c)} >= {sql_literal(v)}"
+        for c, v in ((cfg.season_col, cfg.min_season), (cfg.game_col, cfg.min_game))
+        if v is not None
+    ]
+    df = df.selectExpr(*exprs.values())
+    return df.where(" AND ".join(bounds)) if bounds else df
 
 
 def clean_results(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """Rename/cast/date-parse/filter/normalize the results table
     (reference code/experiment.py:286-316)."""
-    if GAME_ID_ALIAS in df.columns:
-        df = scalar_ops.rename_cols(df, {GAME_ID_ALIAS: cfg.game_col})
-    df = _cast_untyped(df, results_types(cfg))
-    if dict(df.dtypes).get(cfg.date_col) != "date":
-        df = scalar_ops.parse_date(df, cfg.date_col, cfg.date_format)
-    bounds = {}
-    if cfg.min_season is not None:
-        bounds[cfg.season_col] = cfg.min_season
-    if cfg.min_game is not None:
-        bounds[cfg.game_col] = cfg.min_game
-    df = scalar_ops.filter_range(df, bounds)
-    df = df.withColumn(cfg.team_col, _team_code_expr(cfg, cfg.results_team_raw))
-    return df
+    return _clean(
+        df,
+        cfg,
+        results_types(cfg),
+        cfg.results_team_raw,
+        {GAME_ID_ALIAS: cfg.game_col},
+        cfg.date_col,
+    )
 
 
 def clean_events(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """Cast/filter/normalize the events table
     (reference code/experiment.py:328-356)."""
-    df = _cast_untyped(df, events_types(cfg))
-    bounds = {}
-    if cfg.min_season is not None:
-        bounds[cfg.season_col] = cfg.min_season
-    if cfg.min_game is not None:
-        bounds[cfg.game_col] = cfg.min_game
-    df = scalar_ops.filter_range(df, bounds)
-    df = df.withColumn(cfg.team_col, _team_code_expr(cfg, cfg.events_team_raw))
-    return df
+    return _clean(df, cfg, events_types(cfg), cfg.events_team_raw, {})
 
 
 def aggregate_events(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """Per (game, season, team) sums + averages
     (reference code/experiment.py:359-366)."""
-    measures: dict[str, F.Column] = {}
-    for c in cfg.event_sum_cols:
-        measures[f"sum_{c}"] = F.sum(c)
-    for c in cfg.event_avg_cols:
-        measures[f"avg_{c}"] = F.avg(c)
-    return agg_ops.agg_group_multi(
-        df, [cfg.game_col, cfg.season_col, cfg.team_col], measures
+    measures = [
+        f"{fn}({quote_ident(c)}) AS {quote_ident(f'{fn}_{c}')}"
+        for fn, cols in (("sum", cfg.event_sum_cols), ("avg", cfg.event_avg_cols))
+        for c in cols
+    ]
+    return df.groupBy(cfg.game_col, cfg.season_col, cfg.team_col).agg(
+        *map(F.expr, measures)
     )
 
 
@@ -181,7 +206,7 @@ def build_game_data(
     e = aggregate_events(clean_events(events, cfg), cfg)
     keys = [cfg.game_col, cfg.season_col, cfg.team_col]
     joined = join_ops.join_equi(r, e, keys, "inner")
-    return scalar_ops.filter_notnull(joined, keys)
+    return joined.where(" AND ".join(f"{quote_ident(k)} IS NOT NULL" for k in keys))
 
 
 def feature_cols(cfg: PipelineConfig) -> list[str]:
@@ -197,31 +222,34 @@ def add_window_features(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     (code/experiment.py:416-472) with the exact frames
     (unboundedPreceding,-1) and (-N,-1), each defaulted per column
     where its frame is empty (476-494). The game number, both frames
-    and the defaults are one projection: every DataFrame call is
-    analyzed eagerly, so each extra projection re-analyzes the plan."""
+    and the defaults are one ``selectExpr`` of SQL text: every
+    DataFrame call is analyzed eagerly, so each extra projection
+    re-analyzes the plan, and each Column call is py4j round trips of
+    its own. All 2N+1 window expressions share one (partition, order)
+    spec, so Catalyst plans them as one Window over one exchange."""
     part = [cfg.team_col, cfg.season_col]
     order = [cfg.date_col, cfg.game_col]
     measures = feature_cols(cfg)
-    # Both frames share each measure's aggregate and default Column.
-    avg = {c: F.avg(c) for c in measures}
-    default = {c: F.lit(cfg.feature_defaults.get(c, 0.0)) for c in measures}
-    return df.withColumns(
-        {
-            "game_num": F.row_number().over(win_ops.ordered_window(part, order)),
-            **win_ops.expanding_columns(
-                part,
-                order,
-                {f"hist_{c}": a for c, a in avg.items()},
-                defaults={f"hist_{c}": d for c, d in default.items()},
-            ),
-            **win_ops.sliding_columns(
-                part,
-                order,
-                {f"recent_{c}": a for c, a in avg.items()},
-                lookback=cfg.lookback,
-                defaults={f"recent_{c}": d for c, d in default.items()},
-            ),
-        }
+    avg = {c: f"avg({quote_ident(c)})" for c in measures}
+    default = {
+        c: sql_literal(float(cfg.feature_defaults.get(c, 0.0))) for c in measures
+    }
+    return df.selectExpr(
+        "*",
+        f"row_number() OVER {win_ops.window_sql(part, order)} AS game_num",
+        *win_ops.expanding_sql(
+            part,
+            order,
+            {f"hist_{c}": a for c, a in avg.items()},
+            defaults={f"hist_{c}": d for c, d in default.items()},
+        ),
+        *win_ops.sliding_sql(
+            part,
+            order,
+            {f"recent_{c}": a for c, a in avg.items()},
+            lookback=cfg.lookback,
+            defaults={f"recent_{c}": d for c, d in default.items()},
+        ),
     )
 
 
@@ -236,7 +264,7 @@ def build_matchups(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     if has_label:
         keep.append("Win")
     matched = join_ops.join_self_matchup(
-        df.select(*dict.fromkeys(keep)),
+        df.selectExpr(*map(quote_ident, dict.fromkeys(keep))),
         keys=keys,
         split_col=cfg.home_col,
         left_value=1,
@@ -244,12 +272,14 @@ def build_matchups(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
         left_prefix="home_",
         right_prefix="away_",
     )
-    derived = {
-        f"diff_{c}": matched[f"home_{c}"] - matched[f"away_{c}"] for c in hist_cols
-    }
+    derived = [
+        f"{quote_ident(f'home_{c}')} - {quote_ident(f'away_{c}')}"
+        f" AS {quote_ident(f'diff_{c}')}"
+        for c in hist_cols
+    ]
     if has_label:
-        derived["label"] = F.when(matched["home_Win"] == 1, 1.0).otherwise(0.0)
-    return scalar_ops.derive_arith(matched, derived)
+        derived.append("CASE WHEN home_Win = 1 THEN 1.0D ELSE 0.0D END AS label")
+    return matched.selectExpr("*", *derived)
 
 
 def collect_counts(
@@ -261,22 +291,16 @@ def collect_counts(
     ``game_team_rows``, ``matchups``, ``train``, ``test`` and
     ``test_positives`` (None without test rows or a ``label``
     column). The max period is None on empty matchups."""
-    pos = (
-        F.count(F.when(F.col("label") == 1, 1))
-        if "label" in matchups.columns
-        else F.lit(None).cast("long")
-    )
+    pos = "count_if(label = 1)" if "label" in matchups.columns else "CAST(NULL AS BIGINT)"
 
-    def tally(df: DataFrame, frame: str, period: F.Column, positives: F.Column):
-        return df.groupBy(F.lit(frame).alias("frame"), period.alias("period")).agg(
-            F.count(F.lit(1)).alias("n"), positives.alias("pos")
-        )
+    def tally(df: DataFrame, frame: str, period: str, positives: str) -> DataFrame:
+        return df.groupBy(
+            F.expr(f"{sql_literal(frame)} AS frame"), F.expr(f"{period} AS period")
+        ).agg(F.expr("count(1) AS n"), F.expr(f"{positives} AS pos"))
 
     rows = (
-        tally(matchups, "matchups", F.col(cfg.season_col), pos)
-        .unionByName(
-            tally(game_data, "game_data", F.lit(None), F.lit(None).cast("long"))
-        )
+        tally(matchups, "matchups", quote_ident(cfg.season_col), pos)
+        .unionByName(tally(game_data, "game_data", "NULL", "CAST(NULL AS BIGINT)"))
         .collect()
     )
     periods = {r["period"]: r for r in rows if r["frame"] == "matchups"}

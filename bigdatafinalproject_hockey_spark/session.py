@@ -5,7 +5,8 @@ The reference builds its session with 4g driver/executor memory and
 We instead enable AQE so shuffle sizing is adaptive (the modern
 replacement for a hand-tuned partition count), pin the session
 timezone to UTC (so results are comparable against UTC-naive engines
-like DuckDB), and enable Arrow for any pandas exchange.
+like DuckDB), lower the file open cost so an input of a few MB scans
+on every core, and enable Arrow for any pandas exchange.
 
 This is the only module that writes session conf. ``pin`` brings a
 session built elsewhere (the driver's plain one) to ``PINNED_CONF``;
@@ -70,6 +71,14 @@ def get_session(
         # never binds — the advisory partition size governs — so the
         # 100 TB plan shape is unchanged.
         "spark.sql.adaptive.coalescePartitions.minPartitionSize": "128k",
+        # A file scan's split size is at least the open cost, 4 MB by
+        # default, so a CSV of a few MB (the CLI's events file) is one
+        # split and its parse, map and partial aggregate run on one
+        # core. At 1 MB the split size falls to about (total bytes +
+        # 1 MB per file) / cores, so such a file runs on every core.
+        # Parquet tables of one small file still plan one split, and
+        # at production file sizes the 128 MB split cap governs.
+        "spark.sql.files.openCostInBytes": "1m",
         **PINNED_CONF,
         # Arrow for pandas_udf / toPandas / createDataFrame paths.
         "spark.sql.execution.arrow.pyspark.enabled": "true",

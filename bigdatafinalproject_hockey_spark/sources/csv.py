@@ -47,11 +47,13 @@ def scan_csv(
     """
     return (
         spark.read.schema(schema)
-        .option("header", str(header).lower())
-        .option("nullValue", null_value)
-        .option("emptyValue", None)
-        .option("dateFormat", date_format)
-        .option("mode", "PERMISSIVE")
+        .options(
+            header=str(header).lower(),
+            nullValue=null_value,
+            emptyValue=None,
+            dateFormat=date_format,
+            mode="PERMISSIVE",
+        )
         .csv(path)
     )
 

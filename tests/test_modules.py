@@ -71,6 +71,26 @@ def test_scan_csv_named_types_columns_by_header(spark, tmp_path):
     assert rows == [("x", 3.5, 1), ("y", None, 2), ("z", None, 3)]
 
 
+def test_few_mb_csv_scans_on_several_cores(spark, tmp_path):
+    """A headed CSV of a few MB plans more than one input split in a
+    ``get_session`` session, so its scan is not left to one core; a
+    small parquet table of one file still plans one."""
+    from bigdatafinalproject_hockey_spark.sources.csv import scan_csv_named
+
+    if spark.sparkContext.defaultParallelism < 2:
+        pytest.skip("one core: nothing to split across")
+    p = tmp_path / "big.csv"
+    with open(p, "w") as f:
+        f.write("id,name,score\n")
+        f.writelines(f"{i},name {i:09d},{i / 7:.6f}\n" for i in range(120_000))
+    assert p.stat().st_size >= 3 * 2**20
+    df = scan_csv_named(spark, str(p), {"id": T.LongType(), "score": T.DoubleType()})
+    assert df.rdd.getNumPartitions() >= 2
+    small = str(tmp_path / "small.parquet")
+    spark.range(1000).coalesce(1).write.parquet(small)
+    assert spark.read.parquet(small).rdd.getNumPartitions() == 1
+
+
 def _write_header_case(spark, tmp_path, case: str) -> str:
     """A headed CSV input of one kind; returns the path to read."""
     import gzip

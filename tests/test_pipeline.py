@@ -12,6 +12,7 @@ from __future__ import annotations
 import csv
 import json
 import random
+import re
 
 import duckdb
 import pytest
@@ -19,8 +20,12 @@ from pyspark.sql import functions as F
 
 from bigdatafinalproject_hockey_spark.pipeline import (
     PipelineConfig,
+    clean_results,
+    events_types,
+    results_types,
     run_pipeline,
 )
+from bigdatafinalproject_hockey_spark.sources.csv import scan_csv_named
 
 # Map is keyed on NORMALIZED names (lookup runs after whitespace
 # collapse, like the reference); raw data carries messy variants.
@@ -336,12 +341,90 @@ def test_window_frames_match_duckdb(pipeline_out):
     assert (merged["recent_sum_Goal"] - merged["recent_ref"]).abs().max() < 1e-9
 
 
+def test_cli_scans_each_csv_once(spark, tmp_path):
+    """The frames the CLI reads after ``run_pipeline`` (windows, write,
+    split) are planned over the cached intermediates, so each input CSV
+    is scanned once per run. A frame that misses the cache rescans its
+    CSVs without running more jobs (one such build ran one job fewer),
+    so ``CLI_JOB_BUDGET`` cannot see it."""
+    argv = _write_cli_inputs(tmp_path)
+    paths = dict(zip(argv[:4:2], argv[1:4:2]))
+    cfg = PipelineConfig(team_map=TEAM_MAP)
+    out = run_pipeline(
+        scan_csv_named(spark, paths["--results"], results_types(cfg)),
+        scan_csv_named(spark, paths["--events"], events_types(cfg)),
+        cfg,
+    )
+    try:
+        for name in ("game_data", "featured", "matchups", "train", "test"):
+            plan = out[name]._jdf.queryExecution().withCachedData()
+            leaves = plan.collectLeaves()
+            kinds = {leaves.apply(i).nodeName() for i in range(leaves.size())}
+            assert kinds == {"InMemoryRelation"}, (name, plan.toString())
+    finally:
+        out["matchups"].unpersist()
+        out["game_data"].unpersist()
+
+
+# Team names and a team column name that SQL text must quote: ', \, %
+# and non-ASCII letters in values, a space, a dot and a backtick in
+# the name.
+QUOTED_TEAM_MAP = {
+    "O'Neil's Club": "ONC",
+    "Back\\": "BSL",
+    "100% Ärger": "PCT",
+    "a\\'b": "ESC",
+    "Ville de Québec": "QUE",
+}
+QUOTED_RAW_NAMES = [
+    "  O'Neil's   Club ",
+    "Back\\",
+    "100%  Ärger",
+    "a\\'b",
+    "Ville de Québec",
+    "Zoë's 50% \\ Team",
+    "It''s \\' 100%",
+]
+QUOTED_TEAM_COL = "Ev Team.`raw`"
+
+
+def _team_code_py(raw: str, team_map: dict[str, str]) -> str:
+    """The team-code rule in Python: collapse ASCII whitespace runs and
+    trim, look the name up, else uppercase and keep only A-Z."""
+    norm = re.sub(r"\s+", " ", raw, flags=re.ASCII).strip(" ")
+    return team_map.get(norm, re.sub("[^A-Z]", "", norm.upper()))
+
+
+def test_team_code_quotes_names_and_values(spark, tmp_path):
+    """Quotes, backslashes, ``%`` and accents in the team map and in
+    the raw names, and a team column named with a space, a dot and
+    backticks, resolve to the code the Python form of the rule gives."""
+    path = tmp_path / "results.csv"
+    cols = ["Game Id", "Season", "Date", QUOTED_TEAM_COL, "Is_Home", "Goal", "Win", "Points", "xG"]
+    with open(path, "w", newline="", encoding="utf-8") as f:
+        w = csv.writer(f)
+        w.writerow(cols)
+        w.writerows(
+            (i + 1, 20212022, "10/1/2021", raw, i % 2, 1, 0, 0, 0.5)
+            for i, raw in enumerate(QUOTED_RAW_NAMES)
+        )
+    cfg = PipelineConfig(team_map=QUOTED_TEAM_MAP, results_team_raw=QUOTED_TEAM_COL)
+    cleaned = clean_results(scan_csv_named(spark, str(path), results_types(cfg)), cfg)
+    raw_at, code_at = cleaned.columns.index(QUOTED_TEAM_COL), cleaned.columns.index("TeamCode")
+    got = {r[raw_at]: r[code_at] for r in cleaned.collect()}
+    assert sorted(got) == sorted(QUOTED_RAW_NAMES)
+    assert got == {n: _team_code_py(n, QUOTED_TEAM_MAP) for n in QUOTED_RAW_NAMES}
+    # Five names hit the map; the last two take the fallback.
+    assert sum(c in QUOTED_TEAM_MAP.values() for c in got.values()) == 5
+
+
 # Python→JVM commands that building the fixture's plan (game_data →
 # featured → matchups, no action) sends from the calling thread:
-# measured 2,118 (4,432 with a projection per step), plus 25%. A
-# Column call costs up to ~13 round trips, so a per-column projection
-# or alias shows up here.
-PLAN_BUILD_PY4J_BUDGET = 2_650
+# measured 247, plus 25%. Each stage is a few DataFrame calls over SQL
+# expression text, whose cost is one command per expression string; a
+# Column call costs up to ~15 round trips, so building a stage from
+# Column calls again (2,118 commands) shows up here.
+PLAN_BUILD_PY4J_BUDGET = 310
 
 
 def test_plan_build_py4j_budget(spark, pipeline_out, monkeypatch):
