@@ -73,7 +73,10 @@ def _parse_args(argv: list[str] | None = None) -> argparse.Namespace:
         help="print the first N matchup rows (default 20) — the "
         "reference's console sink (experiment.py:678-680)",
     )
-    return p.parse_args(argv)
+    args = p.parse_args(argv)
+    if args.lookback < 1:
+        p.error(f"--lookback must be at least 1, got {args.lookback}")
+    return args
 
 
 def main(argv: list[str] | None = None, spark=None) -> dict:

@@ -151,7 +151,7 @@ def _binary_eval(
     the ungrouped (evaluate_binary_df, with baselines) and per-group
     (evaluate_binary_grouped) forms — the metric expressions, midrank
     window, and confusion cells exist exactly once, so the two public
-    shapes can never drift apart (review r4). Grouping only changes
+    shapes can never drift apart. Grouping only changes
     the aggregation keys and the midrank window partitioning."""
     lbl, prd = F.col(label_col), F.col(prediction_col)
     df = predictions

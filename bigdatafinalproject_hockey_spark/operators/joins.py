@@ -29,15 +29,13 @@ def join_equi(
     right: DataFrame,
     keys: Sequence[str],
     how: str = "inner",
-    broadcast_right: bool = False,
 ) -> DataFrame:
     """Multi-column equi-join on same-named keys — the reference's
     3-key join (code/experiment.py:372-379) generalized. Joining with
     a key-name list (not a boolean expr) keeps ONE copy of each key
     column in the output, avoiding the duplicate-name re-projection
     dance the reference needs (381-397)."""
-    r = F.broadcast(right) if broadcast_right else right
-    return left.join(r, list(keys), how)
+    return left.join(right, list(keys), how)
 
 
 def join_self_matchup(
@@ -89,7 +87,6 @@ def anti_join_keys(df: DataFrame, keys_df: DataFrame, on: Sequence[str]) -> Data
 def join_star(
     fact: DataFrame,
     dims: Sequence[tuple[DataFrame, Sequence[str]]],
-    broadcast_dims: bool = True,
 ) -> DataFrame:
     """Fact table joined to a chain of dimension tables, each broadcast.
 
@@ -99,8 +96,7 @@ def join_star(
     """
     out = fact
     for dim, keys in dims:
-        d = F.broadcast(dim) if broadcast_dims else dim
-        out = out.join(d, list(keys), "inner")
+        out = out.join(F.broadcast(dim), list(keys), "inner")
     return out
 
 
@@ -153,7 +149,6 @@ def join_range(
     value_col: str,
     lo_col: str = "lo",
     hi_col: str = "hi",
-    broadcast_bands: bool = True,
 ) -> DataFrame:
     """Band (range) join: attach the band whose [lo, hi) interval
     contains ``value_col``.
@@ -165,9 +160,8 @@ def join_range(
     right side, bucket both sides by a common interval grid first so
     the join becomes equi on the bucket id.
     """
-    b = F.broadcast(bands) if broadcast_bands else bands
     cond = (F.col(value_col) >= F.col(lo_col)) & (F.col(value_col) < F.col(hi_col))
-    return left.join(b, cond, "inner")
+    return left.join(F.broadcast(bands), cond, "inner")
 
 
 def join_asof(

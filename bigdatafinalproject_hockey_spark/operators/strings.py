@@ -4,18 +4,19 @@ The reference normalizes raw team names before map lookup:
 whitespace-collapse + trim, and an uppercase/strip-charset fallback
 (reference code/experiment.py:305-316, 344-356).
 
-Each rule comes as a Column and as SQL expression text (``*_sql``)
-for ``selectExpr``/``where``/``F.expr``: an expression string costs the
-JVM one py4j command, a Column call several. ``quote_ident`` and
-``sql_literal`` put names and values into that text.
+Each rule is SQL expression text (``*_sql``) for
+``selectExpr``/``where``/``F.expr``, which Catalyst plans as it plans
+the same Column calls; an expression string costs the JVM one py4j
+command, a Column call several. ``quote_ident`` and ``sql_literal``
+put names and values into that text.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# A run of whitespace, collapsed to one space by normalize_ws_*.
+# A run of whitespace, collapsed to one space by normalize_ws_sql.
 WS_RUN = r"\s+"
 
 
@@ -40,33 +41,22 @@ def sql_literal(value: object) -> str:
     raise TypeError(f"no SQL literal for {type(value).__name__}: {value!r}")
 
 
-def normalize_ws_expr(col: Column | str) -> Column:
-    """trim + collapse internal whitespace to single spaces
-    (reference code/experiment.py:305-307)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.trim(F.regexp_replace(c, WS_RUN, " "))
-
-
 def normalize_ws_sql(expr: str) -> str:
-    """``normalize_ws_expr`` over the SQL expression ``expr``."""
+    """trim + collapse internal whitespace to single spaces, over the
+    SQL expression ``expr`` (reference code/experiment.py:305-307)."""
     return f"trim(regexp_replace({expr}, {sql_literal(WS_RUN)}, ' '))"
 
 
-def strip_charset_expr(col: Column | str, keep: str = "A-Z") -> Column:
-    """Uppercase then strip everything outside ``keep`` — the
-    reference's fallback team-code rule (code/experiment.py:311-316)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_replace(F.upper(c), f"[^{keep}]", "")
-
-
 def strip_charset_sql(expr: str, keep: str = "A-Z") -> str:
-    """``strip_charset_expr`` over the SQL expression ``expr``."""
+    """Uppercase then strip everything outside ``keep``, over the SQL
+    expression ``expr`` — the reference's fallback team-code rule
+    (code/experiment.py:311-316)."""
     return f"regexp_replace(upper({expr}), {sql_literal(f'[^{keep}]')}, '')"
 
 
 def str_normalize_ws(df: DataFrame, col: str, out: str | None = None) -> DataFrame:
-    return df.withColumn(out or col, normalize_ws_expr(col))
+    return df.withColumn(out or col, F.expr(normalize_ws_sql(quote_ident(col))))
 
 
 def str_strip_charset(df: DataFrame, col: str, out: str | None = None) -> DataFrame:
-    return df.withColumn(out or col, strip_charset_expr(col))
+    return df.withColumn(out or col, F.expr(strip_charset_sql(quote_ident(col))))

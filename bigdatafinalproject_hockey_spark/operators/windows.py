@@ -20,136 +20,65 @@ from __future__ import annotations
 
 from collections.abc import Mapping, Sequence
 
-from pyspark.sql import Column, DataFrame, Window, WindowSpec
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from bigdatafinalproject_hockey_spark.operators.strings import quote_ident
 
+# ROWS frames as SQL text. Expanding: every prior row, the current one
+# excluded (leakage-free). Running: every prior row and the current one.
+EXPANDING_FRAME = "UNBOUNDED PRECEDING AND 1 PRECEDING"
+RUNNING_FRAME = "UNBOUNDED PRECEDING AND CURRENT ROW"
 
-def ordered_window(
-    partition_by: Sequence[str], order_by: Sequence[str]
-) -> WindowSpec:
-    """Deterministically ordered window.
+
+def sliding_frame(lookback: int) -> str:
+    """The ROWS frame of the ``lookback`` prior rows, the current one
+    excluded. Spark rejects a frame whose start follows its end only
+    when the plan is analyzed; this rejects it when it is built."""
+    if lookback < 1:
+        raise ValueError(f"sliding frame needs lookback >= 1, got {lookback}")
+    return f"{lookback} PRECEDING AND 1 PRECEDING"
+
+
+def window_sql(
+    partition_by: Sequence[str],
+    order_by: Sequence[str],
+    frame: str | None = None,
+) -> str:
+    """An inline SQL window spec, ``(PARTITION BY .. ORDER BY ..
+    [ROWS BETWEEN frame])``. Spark's expression parser takes no named
+    window, so each ``OVER`` spells its spec out.
 
     The caller must include a unique tiebreaker in ``order_by`` (the
     reference orders by (Date, GameID) where GameID is unique per
     partition, code/experiment.py:418) — otherwise results are
     nondeterministic across runs/partitionings.
     """
-    return Window.partitionBy(*partition_by).orderBy(*[F.col(c) for c in order_by])
-
-
-def win_row_number(
-    df: DataFrame,
-    partition_by: Sequence[str],
-    order_by: Sequence[str],
-    out: str = "row_num",
-) -> DataFrame:
-    """Sequence number within partition (reference code/experiment.py:423-429)."""
-    w = ordered_window(partition_by, order_by)
-    return df.withColumn(out, F.row_number().over(w))
-
-
-def _expanding_frame(include_current: bool) -> tuple[int, int]:
-    """ROWS bounds of the expanding frame: every prior row, and the
-    current one only if ``include_current``."""
-    return Window.unboundedPreceding, 0 if include_current else -1
-
-
-def _sliding_frame(lookback: int, include_current: bool) -> tuple[int, int]:
-    """ROWS bounds of the sliding frame: the ``lookback`` prior rows."""
-    return -lookback, 0 if include_current else -1
-
-
-def _framed(
-    w: WindowSpec,
-    measures: dict[str, Column],
-    start: int,
-    end: int,
-    defaults: Mapping[str, object] | None,
-) -> dict[str, Column]:
-    """Output name → measure over ``w`` framed ROWS ``start..end``. An
-    output named in ``defaults`` reads that value (a literal or a
-    Column) where its frame is empty or all-NULL."""
-    defaults = defaults or {}
-    frame = w.rowsBetween(start, end)
-    out = {}
-    for name, agg in measures.items():
-        col = agg.over(frame)
-        if name in defaults:
-            col = F.coalesce(col, F.lit(defaults[name]))
-        out[name] = col
-    return out
-
-
-def expanding_columns(
-    partition_by: Sequence[str],
-    order_by: Sequence[str],
-    measures: dict[str, Column],
-    include_current: bool = False,
-    defaults: Mapping[str, object] | None = None,
-) -> dict[str, Column]:
-    """``win_expanding``'s output columns by name, for a caller that
-    adds them in one projection with other columns. An output named in
-    ``defaults`` (output name → literal or Column) reads that value
-    where its frame is empty — the reference's per-feature defaults
-    (code/experiment.py:476-494) without a second projection."""
-    w = ordered_window(partition_by, order_by)
-    return _framed(w, measures, *_expanding_frame(include_current), defaults)
-
-
-def sliding_columns(
-    partition_by: Sequence[str],
-    order_by: Sequence[str],
-    measures: dict[str, Column],
-    lookback: int = 5,
-    include_current: bool = False,
-    defaults: Mapping[str, object] | None = None,
-) -> dict[str, Column]:
-    """``win_sliding``'s output columns by name (see
-    ``expanding_columns``)."""
-    w = ordered_window(partition_by, order_by)
-    return _framed(w, measures, *_sliding_frame(lookback, include_current), defaults)
-
-
-def window_sql(
-    partition_by: Sequence[str],
-    order_by: Sequence[str],
-    frame: tuple[int, int] | None = None,
-) -> str:
-    """``ordered_window`` as an inline SQL window spec,
-    ``(PARTITION BY .. ORDER BY .. [ROWS BETWEEN ..])``. Spark's
-    expression parser takes no named window, so each ``OVER`` spells
-    its spec out."""
     spec = (
         f"PARTITION BY {', '.join(map(quote_ident, partition_by))} "
         f"ORDER BY {', '.join(map(quote_ident, order_by))}"
     )
     if frame is not None:
-        start, end = map(_bound_sql, frame)
-        spec += f" ROWS BETWEEN {start} AND {end}"
+        spec += f" ROWS BETWEEN {frame}"
     return f"({spec})"
 
 
-def _bound_sql(offset: int) -> str:
-    """A ``rowsBetween`` bound at or before the current row as SQL
-    frame text."""
-    if offset == Window.unboundedPreceding:
-        return "UNBOUNDED PRECEDING"
-    return f"{-offset} PRECEDING"
-
-
-def _framed_sql(
+def framed_sql(
     partition_by: Sequence[str],
     order_by: Sequence[str],
     measures: Mapping[str, str],
-    frame: tuple[int, int],
-    defaults: Mapping[str, str],
+    frame: str | None = None,
+    defaults: Mapping[str, str] | None = None,
 ) -> list[str]:
-    """``_framed`` as ``selectExpr`` text: ``<measure> OVER (..) AS
-    name`` per output, in ``coalesce(.., default)`` where ``defaults``
-    names it. Measures and defaults are SQL expressions."""
+    """``selectExpr`` text, ``<measure> OVER (..) AS name`` per output
+    name in ``measures``, in ``coalesce(.., default)`` where
+    ``defaults`` names it: the value an empty or all-NULL frame reads
+    (the reference's per-feature defaults, code/experiment.py:476-494,
+    without a second projection). Measures and defaults are SQL
+    expressions; every output shares one spec, so Catalyst plans them
+    as one Window."""
     over = window_sql(partition_by, order_by, frame)
+    defaults = defaults or {}
     out = []
     for name, agg in measures.items():
         expr = f"{agg} OVER {over}"
@@ -159,31 +88,15 @@ def _framed_sql(
     return out
 
 
-def expanding_sql(
+def win_row_number(
+    df: DataFrame,
     partition_by: Sequence[str],
     order_by: Sequence[str],
-    measures: Mapping[str, str],
-    defaults: Mapping[str, str],
-) -> list[str]:
-    """``expanding_columns`` (current row excluded) as ``selectExpr``
-    text; ``measures`` and ``defaults`` map output names to SQL
-    expressions."""
-    return _framed_sql(
-        partition_by, order_by, measures, _expanding_frame(False), defaults
-    )
-
-
-def sliding_sql(
-    partition_by: Sequence[str],
-    order_by: Sequence[str],
-    measures: Mapping[str, str],
-    lookback: int,
-    defaults: Mapping[str, str],
-) -> list[str]:
-    """``sliding_columns`` (current row excluded) as ``selectExpr``
-    text (see ``expanding_sql``)."""
-    return _framed_sql(
-        partition_by, order_by, measures, _sliding_frame(lookback, False), defaults
+    out: str = "row_num",
+) -> DataFrame:
+    """Sequence number within partition (reference code/experiment.py:423-429)."""
+    return df.selectExpr(
+        "*", *framed_sql(partition_by, order_by, {out: "row_number()"})
     )
 
 
@@ -191,22 +104,18 @@ def win_expanding(
     df: DataFrame,
     partition_by: Sequence[str],
     order_by: Sequence[str],
-    measures: dict[str, Column],
-    include_current: bool = False,
+    measures: Mapping[str, str],
 ) -> DataFrame:
-    """Expanding (season-to-date style) aggregates over all PRIOR rows.
+    """Expanding (season-to-date style) aggregates over all PRIOR rows;
+    ``measures`` maps output names to SQL aggregate text.
 
     Frame = ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
     (reference code/experiment.py:416-420, 432-458). First row of each
     partition → NULL (empty frame); to default it in the same
-    projection, add ``expanding_columns`` with ``defaults``.
+    projection, use ``framed_sql`` with ``defaults``.
     """
-    # withColumns appends to the input's attributes without
-    # re-resolving their names — robust to raw-CSV columns containing
-    # dots/spaces (reference results file has "Market_Prob.",
-    # "American Odds", FIXTURES.md §A2)
-    return df.withColumns(
-        expanding_columns(partition_by, order_by, measures, include_current)
+    return df.selectExpr(
+        "*", *framed_sql(partition_by, order_by, measures, EXPANDING_FRAME)
     )
 
 
@@ -214,18 +123,18 @@ def win_sliding(
     df: DataFrame,
     partition_by: Sequence[str],
     order_by: Sequence[str],
-    measures: dict[str, Column],
+    measures: Mapping[str, str],
     lookback: int = 5,
-    include_current: bool = False,
 ) -> DataFrame:
-    """Sliding last-N-rows aggregates, current row excluded by default.
+    """Sliding last-N-rows aggregates, current row excluded; ``measures``
+    maps output names to SQL aggregate text.
 
-    Frame = ROWS BETWEEN -N AND -1, exactly as the reference's
-    last-5-games form features (code/experiment.py:461-472). An empty
-    frame reads NULL (see ``sliding_columns`` for defaults).
+    Frame = ROWS BETWEEN N PRECEDING AND 1 PRECEDING, exactly as the
+    reference's last-5-games form features (code/experiment.py:461-472).
+    An empty frame reads NULL (see ``framed_sql`` for defaults).
     """
-    return df.withColumns(
-        sliding_columns(partition_by, order_by, measures, lookback, include_current)
+    return df.selectExpr(
+        "*", *framed_sql(partition_by, order_by, measures, sliding_frame(lookback))
     )
 
 
@@ -236,10 +145,11 @@ def win_running_sum(
     value_col: str,
     out: str = "running_sum",
 ) -> DataFrame:
-    """Inclusive running total (capability extension; frame ends at 0)."""
-    w = ordered_window(partition_by, order_by)
-    return df.withColumn(
-        out, F.sum(value_col).over(w.rowsBetween(Window.unboundedPreceding, 0))
+    """Inclusive running total (capability extension; frame ends at the
+    current row)."""
+    measure = {out: f"sum({quote_ident(value_col)})"}
+    return df.selectExpr(
+        "*", *framed_sql(partition_by, order_by, measure, RUNNING_FRAME)
     )
 
 
@@ -252,8 +162,8 @@ def win_lag(
     out: str = "prev_value",
 ) -> DataFrame:
     """Previous row's value within partition (extension; NULL on first row)."""
-    w = ordered_window(partition_by, order_by)
-    return df.withColumn(out, F.lag(value_col, offset).over(w))
+    measure = {out: f"lag({quote_ident(value_col)}, {int(offset)})"}
+    return df.selectExpr("*", *framed_sql(partition_by, order_by, measure))
 
 
 def topk_per_group(

@@ -126,10 +126,7 @@ def _team_code_sql(cfg: PipelineConfig, raw: str) -> str:
     """Literal-map lookup with whitespace-normalize + strip-charset
     fallback (reference code/experiment.py:305-316), as SQL text."""
     norm = string_ops.normalize_ws_sql(quote_ident(raw))
-    fallback = string_ops.strip_charset_sql(norm)
-    if not cfg.team_map:
-        return fallback
-    return f"coalesce({lookup_ops.literal_map_sql(cfg.team_map)}[{norm}], {fallback})"
+    return lookup_ops.lookup_sql(cfg.team_map, norm, string_ops.strip_charset_sql(norm))
 
 
 def _clean(
@@ -237,17 +234,18 @@ def add_window_features(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     return df.selectExpr(
         "*",
         f"row_number() OVER {win_ops.window_sql(part, order)} AS game_num",
-        *win_ops.expanding_sql(
+        *win_ops.framed_sql(
             part,
             order,
             {f"hist_{c}": a for c, a in avg.items()},
+            win_ops.EXPANDING_FRAME,
             defaults={f"hist_{c}": d for c, d in default.items()},
         ),
-        *win_ops.sliding_sql(
+        *win_ops.framed_sql(
             part,
             order,
             {f"recent_{c}": a for c, a in avg.items()},
-            lookback=cfg.lookback,
+            win_ops.sliding_frame(cfg.lookback),
             defaults={f"recent_{c}": d for c, d in default.items()},
         ),
     )

@@ -50,9 +50,8 @@ from bigdatafinalproject_hockey_spark.queries.base import register
 )
 def q_clean_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Type-clean ETL stage — the composite of the reference's intake
-    steps, merged per VERDICT.md round-1 item 5 (was three registry
-    entries: rename_col / cast_types / parse_date): parse the M/d/yyyy
-    date string (code/experiment.py:298), rename to engine-friendly names
+    steps (rename, cast, date parse): parse the M/d/yyyy date string
+    (code/experiment.py:298), rename to engine-friendly names
     (code/experiment.py:286-288), and pin numeric types
     (code/experiment.py:290-297). Spark double→long cast truncates
     toward zero; the oracle spells FLOOR (values positive, so equal).
@@ -94,15 +93,13 @@ def q_clean_types(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_filter_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Row-filter ETL stage — composite of the reference's filter
-    shapes, merged per VERDICT.md round-1 item 5 (was five registry
-    entries: filter_notnull / drop_nulls_any / filter_range /
-    filter_eq / filter_compound): NULL-key drop
-    (code/experiment.py:401-402, 555), conjunctive >= bounds (301-302), equality
-    (502-503), and a compound predicate (645-656), applied in
-    sequence. Source-column predicates still reach the parquet scan as
-    PushedFilters (locked in tests/test_plans.py); the NULLIF-derived
-    columns are evaluated scan-side. Each op stays individually
-    exercised in operators/scalar.py + tests/test_modules.py."""
+    shapes: NULL-key drop (code/experiment.py:401-402, 555),
+    conjunctive >= bounds (301-302), equality (502-503), and a compound
+    predicate (645-656), applied in sequence. Source-column predicates
+    still reach the parquet scan as PushedFilters (locked in
+    tests/test_plans.py); the NULLIF-derived columns are evaluated
+    scan-side. Each op stays individually exercised in
+    operators/scalar.py + tests/test_modules.py."""
     df = load_table(spark, "lineitem", sf_dir).select(
         "l_orderkey",
         "l_linenumber",
@@ -137,14 +134,11 @@ def q_filter_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_derive_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Column-derivation ETL stage — composite of the reference's
-    feature steps, merged per VERDICT.md round-1 item 5 (was four
-    registry entries: project_alias / derive_arith / case_when /
-    fill_default): wide aliased re-projection
-    (code/experiment.py:381-397), derived
-    arithmetic (544-552), label binarization (628-633), and
-    literal-default fill (476-494) in one shuffle-free projection
-    chain. Per-row double arithmetic is bit-deterministic — no
-    rounding needed."""
+    feature steps: wide aliased re-projection
+    (code/experiment.py:381-397), derived arithmetic (544-552), label
+    binarization (628-633), and literal-default fill (476-494) in one
+    shuffle-free projection chain. Per-row double arithmetic is
+    bit-deterministic — no rounding needed."""
     df = load_table(spark, "lineitem", sf_dir)
     df = scalar_ops.project_alias(
         df,
@@ -193,10 +187,9 @@ def q_derive_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_str_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String-clean ETL stage — composite of the reference's two
-    string ops, merged per VERDICT.md round-1 item 5 (was
-    str_normalize_ws + str_strip_charset): whitespace collapse + trim
-    (code/experiment.py:305-307; padding injected so the op provably
-    changes something) and uppercase + strip non-[A-Z]
+    string ops (str_normalize_ws, str_strip_charset): whitespace
+    collapse + trim (code/experiment.py:305-307; padding injected so
+    the op provably changes something) and uppercase + strip non-[A-Z]
     (code/experiment.py:311-316), in one scan-side projection."""
     df = load_table(spark, "documents", sf_dir).select(
         "doc_id",
@@ -249,9 +242,7 @@ def q_lookup_with_fallback(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Map hit with regex fallback for misses
     (reference code/experiment.py:311-316, 351-356)."""
     df = load_table(spark, "nation", sf_dir)
-    fallback = F.substring(
-        F.regexp_replace(F.upper(F.col("n_name")), "[^A-Z0-9]", ""), 1, 6
-    )
+    fallback = f"substring({string_ops.strip_charset_sql('n_name', 'A-Z0-9')}, 1, 6)"
     return lookup_ops.lookup_with_fallback(
         df, "n_name", {"NATION_0": "ZZZ", "NATION_7": "QQQ"}, fallback, "nation_code"
     ).select("n_nationkey", "n_name", "nation_code")
@@ -593,8 +584,8 @@ def q_win_expanding_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
         partition_by=["user_id"],
         order_by=["ts", "event_id"],
         measures={
-            "prior_cents": F.sum(cents_expr(F.col("value"))),
-            "prior_n": F.count("value"),
+            "prior_cents": "sum(CAST(round(value * 100, 0) AS BIGINT))",
+            "prior_n": "count(value)",
         },
     )
     avg = (
@@ -631,8 +622,8 @@ def q_win_sliding_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
         partition_by=["user_id"],
         order_by=["ts", "event_id"],
         measures={
-            "last5_cents": F.sum(cents_expr(F.col("value"))),
-            "last5_n": F.count("value"),
+            "last5_cents": "sum(CAST(round(value * 100, 0) AS BIGINT))",
+            "last5_n": "count(value)",
         },
         lookback=5,
     )

@@ -1234,19 +1234,13 @@ def q_pipeline_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         joined,
         partition_by=["o_custkey"],
         order_by=["o_orderdate", "o_orderkey"],
-        measures={
-            "prior_units": F.sum("order_rev_units"),
-            "prior_n": F.count(F.lit(1)),
-        },
+        measures={"prior_units": "sum(order_rev_units)", "prior_n": "count(1)"},
     )
     feat = win_ops.win_sliding(
         feat,
         partition_by=["o_custkey"],
         order_by=["o_orderdate", "o_orderkey"],
-        measures={
-            "last5_qty_sum": F.sum("order_qty"),
-            "last5_n": F.count(F.lit(1)),
-        },
+        measures={"last5_qty_sum": "sum(order_qty)", "last5_n": "count(1)"},
         lookback=5,
     )
     feat = feat.withColumns(

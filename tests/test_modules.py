@@ -2219,3 +2219,63 @@ def test_pq_lloyd_fit_improves_within_cell_recall(spark):
     r_init = recall(pq_codebooks(emb))
     r_fit = recall(pq_codebooks_lloyd(emb))
     assert r_fit > r_init, f"fit did not improve recall: {r_fit} <= {r_init}"
+
+
+# Raw CSV headers may hold spaces, dots and backticks (the reference's
+# results file has "Game Id" and "Market_Prob."); map keys may hold
+# quotes and backslashes.
+KEY, ORDER, VALUE = "k.1", "o id", "na`me"
+ODD_KEY = "  a'b\\c  "
+
+
+def test_operators_accept_awkward_column_names(spark):
+    """The string, lookup and window operators name their inputs and
+    outputs literally: no name is parsed as a path or a quote."""
+    from bigdatafinalproject_hockey_spark.operators import (
+        lookup as lookup_ops,
+        strings as string_ops,
+        windows as win_ops,
+    )
+    from bigdatafinalproject_hockey_spark.operators.strings import quote_ident
+
+    value = quote_ident(VALUE)
+    keys = [ODD_KEY] * 3 + ["x  y"] * 2
+    rows = [(k, i, float(i)) for i, k in enumerate(keys, 1)]
+    df = spark.createDataFrame(rows, [KEY, ORDER, VALUE])
+    part, order = [KEY], [ORDER]
+    df = win_ops.win_row_number(df, part, order, out="r.n")
+    df = win_ops.win_expanding(df, part, order, {"e x": f"sum({value})"})
+    df = win_ops.win_sliding(df, part, order, {"s`x": f"sum({value})"}, lookback=1)
+    df = win_ops.win_running_sum(df, part, order, VALUE, out="run.sum")
+    df = win_ops.win_lag(df, part, order, VALUE, out="p v")
+    df = lookup_ops.map_literal_lookup(df, KEY, {ODD_KEY: "Q'\\"}, "m.hit")
+    df = lookup_ops.lookup_with_fallback(
+        df, KEY, {ODD_KEY: "HIT"}, string_ops.strip_charset_sql(quote_ident(KEY)), "f`b"
+    )
+    df = string_ops.str_normalize_ws(df, KEY, out="n w")
+    df = string_ops.str_strip_charset(df, KEY, out="s.c")
+    got = {r[ORDER]: r.asDict() for r in df.collect()}
+    want = {
+        # o id: (r.n, e x, s`x, run.sum, p v)
+        1: (1, None, None, 1.0, None),
+        2: (2, 1.0, 1.0, 3.0, 1.0),
+        3: (3, 3.0, 2.0, 6.0, 2.0),
+        4: (1, None, None, 4.0, None),
+        5: (2, 4.0, 4.0, 9.0, 4.0),
+    }
+    for o, windowed in want.items():
+        r = got[o]
+        assert (r["r.n"], r["e x"], r["s`x"], r["run.sum"], r["p v"]) == windowed
+        odd = r[KEY] == ODD_KEY
+        assert r["m.hit"] == ("Q'\\" if odd else None)
+        assert r["f`b"] == ("HIT" if odd else "XY")
+        assert r["n w"] == ("a'b\\c" if odd else "x y")
+        assert r["s.c"] == ("ABC" if odd else "XY")
+
+
+@pytest.mark.parametrize("lookback", [0, -3])
+def test_sliding_frame_rejects_lookback_below_one(lookback):
+    from bigdatafinalproject_hockey_spark.operators.windows import sliding_frame
+
+    with pytest.raises(ValueError, match="lookback >= 1"):
+        sliding_frame(lookback)

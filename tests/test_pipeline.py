@@ -297,6 +297,23 @@ def test_cli_job_budget(spark, tmp_path):
     assert 0 < len(jobs) <= CLI_JOB_BUDGET, sorted(jobs)
 
 
+@pytest.mark.parametrize("lookback", ["0", "-3"])
+def test_cli_rejects_lookback_below_one(monkeypatch, capsys, lookback):
+    """A sliding frame needs at least one prior row: the CLI refuses a
+    smaller ``--lookback`` as a usage error, before any session starts."""
+    from bigdatafinalproject_hockey_spark import __main__ as cli
+
+    def no_session(**_):
+        raise AssertionError("a session was started")
+
+    monkeypatch.setattr(cli, "get_session", no_session)
+    argv = ["--events", "e.csv", "--results", "r.csv", "--lookback", lookback]
+    with pytest.raises(SystemExit) as exc:
+        cli.main(argv)
+    assert exc.value.code == 2
+    assert "--lookback must be at least 1" in capsys.readouterr().err
+
+
 def test_run_pipeline_counts_match_frames(pipeline_out):
     """``counts`` comes from one collect and must agree with counting
     each returned frame, baselines included."""
@@ -427,11 +444,9 @@ def test_team_code_quotes_names_and_values(spark, tmp_path):
 PLAN_BUILD_PY4J_BUDGET = 310
 
 
-def test_plan_build_py4j_budget(spark, pipeline_out, monkeypatch):
+def test_plan_build_py4j_budget(spark, pipeline_out, count_py4j):
     """Building the pipeline's plan stays a few wide projections: the
     count of py4j commands it sends is pinned, and it runs no job."""
-    import threading
-
     from bigdatafinalproject_hockey_spark.pipeline import (
         add_window_features,
         build_game_data,
@@ -439,27 +454,17 @@ def test_plan_build_py4j_budget(spark, pipeline_out, monkeypatch):
     )
 
     results, events, cfg = pipeline_out["_inputs"]
-    client = spark.sparkContext._gateway._gateway_client
-    send, caller, sent = client.send_command, threading.get_ident(), []
-
-    def counting(*args, **kwargs):
-        # Finalizers on other threads send garbage-collection commands.
-        if threading.get_ident() == caller:
-            sent.append(args[0])
-        return send(*args, **kwargs)
-
     sc = spark.sparkContext
     sc.setJobGroup("plan", "plan build")
     try:
-        monkeypatch.setattr(client, "send_command", counting)
-        matchups = build_matchups(
-            add_window_features(build_game_data(results, events, cfg), cfg), cfg
+        matchups, n_sent = count_py4j(
+            lambda: build_matchups(
+                add_window_features(build_game_data(results, events, cfg), cfg), cfg
+            )
         )
-        monkeypatch.undo()
     finally:
         sc._jsc.clearJobGroup()
     assert sc.statusTracker().getJobIdsForGroup("plan") == []
-    n_sent = len(sent)
     assert n_sent <= PLAN_BUILD_PY4J_BUDGET
     assert matchups.columns == pipeline_out["matchups"].columns
 

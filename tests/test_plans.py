@@ -52,6 +52,21 @@ def test_expanding_window_single_exchange(spark):
     assert "Window" in plan
 
 
+# Python→JVM commands that building ``win_expanding_avg`` sends once
+# its table's read is resolved: measured 171, plus 25%. Its window
+# measures are one SQL string each; as Column calls over a Window spec
+# they cost 296.
+WIN_EXPANDING_BUILD_PY4J_BUDGET = 214
+
+
+def test_win_expanding_avg_build_py4j_budget(spark, count_py4j):
+    """Building a registry window query stays a few SQL-text calls."""
+    QUERIES["win_expanding_avg"](spark, SF)  # resolve the events read
+    df, n_sent = count_py4j(lambda: QUERIES["win_expanding_avg"](spark, SF))
+    assert n_sent <= WIN_EXPANDING_BUILD_PY4J_BUDGET
+    assert df.columns == ["user_id", "event_id", "prior_avg_value", "prior_avg_filled"]
+
+
 def test_pipeline_windows_share_one_exchange(spark):
     """Both window passes partition by the same key and must reuse ONE
     exchange+sort, not re-shuffle per frame; plus one for the

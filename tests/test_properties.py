@@ -77,7 +77,7 @@ def test_sliding_window_matches_pandas(spark, rows, lookback):
         df,
         partition_by=["k"],
         order_by=["rid"],
-        measures={"m": F.avg("v")},
+        measures={"m": "avg(v)"},
         lookback=lookback,
     )
     got = {r["rid"]: r["m"] for r in out.collect()}
