@@ -10,19 +10,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from bigdatafinalproject_hockey_spark.functions.text import md5_fingerprint_expr
+from bigdatafinalproject_hockey_spark.functions.text import (
+    md5_fingerprint_expr,
+    md5_fingerprint_sql,
+)
+from bigdatafinalproject_hockey_spark.operators.strings import quote_ident
 
 
 def dedup_exact_groups(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """One row per distinct normalized text: the kept (minimum) id, the
     duplicate count, and the fingerprint."""
     return (
-        df.select(F.col(id_col), md5_fingerprint_expr(text_col).alias("fp"))
+        df.selectExpr(quote_ident(id_col), f"{md5_fingerprint_sql(text_col)} AS fp")
         .groupBy("fp")
-        .agg(
-            F.min(id_col).alias("keep_id"),
-            F.count(F.lit(1)).alias("n_copies"),
-        )
+        .agg(F.expr(f"min({quote_ident(id_col)}) AS keep_id"), F.expr("count(1) AS n_copies"))
     )
 
 

@@ -73,7 +73,7 @@ def _minhash_coeffs(num_hashes: int) -> tuple[list[int], list[int]]:
     return a, b
 
 
-def shingles_expr(col, n: int = 3, distinct: bool = True):
+def shingles_expr(col: str, n: int = 3, distinct: bool = True):
     """Word n-gram shingles from the token array.
 
     Built by zip_with-ing n-1 shifted copies of the token array —
@@ -319,7 +319,7 @@ def minhash_candidate_pairs(
     # reuse AND compiled once — a single inlined mega-expression made
     # Janino compilation dominate cold-query latency).
     toks = ensure_parallelism(df).select(
-        F.col(id_col).alias("doc"), tokens_expr(F.col(text_col)).alias("tk")
+        F.col(id_col).alias("doc"), tokens_expr(text_col).alias("tk")
     )
     th = toks.select("doc", F.transform("tk", lambda t: F.xxhash64(t)).alias("th"))
     hashed = th.select(
@@ -363,7 +363,7 @@ def _portable_signatures(
     max63 = F.lit((1 << 63) - 1).cast("long")
     shingled = ensure_parallelism(df).select(
         F.col(id_col).alias("doc"),
-        shingles_expr(F.col(text_col), shingle_n).alias("shs"),
+        shingles_expr(text_col, shingle_n).alias("shs"),
     )
     hashed = shingled.select(
         "doc",

@@ -65,7 +65,7 @@ def shingle_fingerprints(
 
     Docs shorter than k tokens emit nothing. Scan-local — the
     tokenize/slice/md5 pipeline is all built-in expressions."""
-    toks = tokens_expr(F.col(text_col))
+    toks = tokens_expr(text_col)
     npos = (F.size(toks) - F.lit(k - 1)).cast("int")
     # Guard npos <= 0: sequence(0, negative) DESCENDS in Spark and
     # would fabricate positions (same guard as q_dedup_segments).
@@ -233,7 +233,7 @@ def remove_repeated_spans(
         )
         side = side.join(hub, "doc", "full")
     base = ensure_parallelism(df).select(
-        F.col(id_col).alias("doc"), tokens_expr(F.col(text_col)).alias("toks")
+        F.col(id_col).alias("doc"), tokens_expr(text_col).alias("toks")
     )
     extra = (
         [

@@ -47,6 +47,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from bigdatafinalproject_hockey_spark.operators.strings import quote_ident, sql_literal
+
 # Tags whose entire subtree carries no corpus text.
 SKIP_TAGS = frozenset({"script", "style", "head", "noscript", "template"})
 
@@ -336,9 +338,9 @@ CLEAN_NFKC_SUFFIX = " caf\u00e9 five 52 ok"
 DIRTY_NFKC_N_STRIPPED = 2
 
 
-def dirty_text_expr(text_col: str = "text") -> Column:
-    return F.concat(F.col(text_col), F.lit(DIRTY_SUFFIX))
+def dirty_text_sql(text_col: str = "text") -> str:
+    return f"concat({quote_ident(text_col)}, {sql_literal(DIRTY_SUFFIX)})"
 
 
-def dirty_nfkc_text_expr(text_col: str = "text") -> Column:
-    return F.concat(F.col(text_col), F.lit(DIRTY_NFKC_SUFFIX))
+def dirty_nfkc_text_sql(text_col: str = "text") -> str:
+    return f"concat({quote_ident(text_col)}, {sql_literal(DIRTY_NFKC_SUFFIX)})"

@@ -5,6 +5,12 @@ quality scoring, language-ID heuristics, fingerprinting. All built-in
 Catalyst expressions (split/regexp/size/aggregate) — JVM-side,
 codegen'd, no Python in the row path, so they stream through 100 TB
 of text at scan speed.
+
+The helpers take column names. The tokenizer and the fingerprint are
+Spark SQL text (``token_list_sql``, ``md5_fingerprint_sql``) for
+``selectExpr`` bodies; their ``*_expr`` forms are one ``F.expr`` over
+that text, which costs the JVM a few py4j commands where the same
+Column calls cost dozens.
 """
 
 from __future__ import annotations
@@ -13,6 +19,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from bigdatafinalproject_hockey_spark.operators.strings import normalize_ws_sql, quote_ident
 
 # Tiny built-in stopword lists for the language-ID heuristic. Real
 # pipelines would load per-language lists; the mechanism (token-set
@@ -25,8 +33,10 @@ STOPWORDS = {
 }
 
 
-def tokens_expr(col: Column | str) -> Column:
-    """Lowercase + regex-split + drop empty tokens.
+def token_list_sql(col: str) -> str:
+    """Spark SQL text of column ``col``'s token list: lowercase,
+    regex-split, empty tokens dropped. The one Spark tokenizer; the
+    ``*_expr`` helpers below are built on it.
 
     Empty-string filtering matters: leading/trailing separators yield
     empty tokens in both Spark and DuckDB; filtering keeps the two
@@ -35,21 +45,24 @@ def tokens_expr(col: Column | str) -> Column:
     gives ``i`` alone, and :func:`tokens_sql` rewrites U+0130 first to
     match.
     """
-    c = F.col(col) if isinstance(col, str) else col
-    return F.filter(F.split(F.lower(c), "[^a-z0-9]+"), lambda x: x != F.lit(""))
+    return f"filter(split(lower({quote_ident(col)}), '[^a-z0-9]+'), x -> x != '')"
 
 
 def tokens_sql(c: str) -> str:
     """DuckDB fragment computing the same token list as
-    :func:`tokens_expr` over SQL expression ``c``."""
+    :func:`token_list_sql` over SQL expression ``c``."""
     return (
         f"list_filter(string_split_regex(lower(replace({c}, chr(304), "
         "'i' || chr(775))), '[^a-z0-9]+'), x -> x <> '')"
     )
 
 
-def token_count_expr(col: Column | str) -> Column:
-    return F.size(tokens_expr(col))
+def tokens_expr(col: str) -> Column:
+    return F.expr(token_list_sql(col))
+
+
+def token_count_expr(col: str) -> Column:
+    return F.expr(f"size({token_list_sql(col)})")
 
 
 def bigrams_expr(toks: Column) -> Column:
@@ -69,22 +82,22 @@ def bigrams_expr(toks: Column) -> Column:
     ).otherwise(F.array().cast("array<string>"))
 
 
-def distinct_tokens_expr(col: Column | str) -> Column:
-    return F.array_distinct(tokens_expr(col))
+def distinct_tokens_expr(col: str) -> Column:
+    return F.expr(f"array_distinct({token_list_sql(col)})")
 
 
-def stopword_hits_expr(col: Column | str, stopwords: Sequence[str]) -> Column:
+def stopword_hits_expr(col: str, stopwords: Sequence[str]) -> Column:
     """Count of tokens that are stopwords (not distinct — frequency counts)."""
     toks = tokens_expr(col)
     return F.size(F.filter(toks, lambda x: x.isin(*[str(s) for s in stopwords])))
 
 
-def stopword_ratio_expr(col: Column | str, stopwords: Sequence[str]) -> Column:
+def stopword_ratio_expr(col: str, stopwords: Sequence[str]) -> Column:
     n = token_count_expr(col)
     return F.when(n > 0, stopword_hits_expr(col, stopwords) / n).otherwise(F.lit(0.0))
 
 
-def avg_token_len_expr(col: Column | str) -> Column:
+def avg_token_len_expr(col: str) -> Column:
     toks = tokens_expr(col)
     total = F.aggregate(toks, F.lit(0), lambda acc, x: acc + F.length(x))
     return F.when(F.size(toks) > 0, total.cast("double") / F.size(toks)).otherwise(
@@ -92,28 +105,32 @@ def avg_token_len_expr(col: Column | str) -> Column:
     )
 
 
-def digit_ratio_expr(col: Column | str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
+def digit_ratio_expr(col: str) -> Column:
+    c = F.col(col)
     n_digit = F.length(c) - F.length(F.regexp_replace(c, r"[0-9]", ""))
     return F.when(F.length(c) > 0, n_digit.cast("double") / F.length(c)).otherwise(
         F.lit(0.0)
     )
 
 
-def md5_fingerprint_expr(col: Column | str) -> Column:
-    """Whole-document fingerprint of the whitespace-normalized text —
-    the exact-dedup key. MD5 is available verbatim in both Spark and
-    ANSI-ish oracles, so the fingerprint itself is checkable."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.md5(F.trim(F.regexp_replace(c, r"\s+", " ")))
+def md5_fingerprint_sql(col: str) -> str:
+    """Spark SQL text of the whole-document fingerprint of column
+    ``col``'s whitespace-normalized text — the exact-dedup key. MD5 is
+    available verbatim in both Spark and ANSI-ish oracles, so the
+    fingerprint itself is checkable."""
+    return f"md5({normalize_ws_sql(quote_ident(col))})"
 
 
-def rolling_hash_expr(col: Column | str, base: int = 31, mod: int = 1_000_000_007) -> Column:
+def md5_fingerprint_expr(col: str) -> Column:
+    return F.expr(md5_fingerprint_sql(col))
+
+
+def rolling_hash_expr(col: str, base: int = 31, mod: int = 1_000_000_007) -> Column:
     """Polynomial rolling hash over characters (Rabin-Karp style) —
     the classic document-fingerprint primitive, computed JVM-side with
     a higher-order aggregate over the char array. Deterministic but
     engine-specific reduce; checked rows-only."""
-    c = F.col(col) if isinstance(col, str) else col
+    c = F.col(col)
     chars = F.split(c, "")
     return F.aggregate(
         F.filter(chars, lambda x: x != F.lit("")),
@@ -131,7 +148,7 @@ def rolling_hash_expr(col: Column | str, base: int = 31, mod: int = 1_000_000_00
 BPE_PRETOKEN_PATTERN = r" ?[a-zA-Z]+| ?[0-9]+| ?[^a-zA-Z0-9 ]+"
 
 
-def bpe_pretoken_count_expr(col: Column | str) -> Column:
+def bpe_pretoken_count_expr(col: str) -> Column:
     """Count of BPE-style pretokens (JVM-side regexp_extract_all)."""
-    c = F.col(col) if isinstance(col, str) else col
+    c = F.col(col)
     return F.size(F.regexp_extract_all(c, F.lit(BPE_PRETOKEN_PATTERN), 0))

@@ -20,8 +20,7 @@ from __future__ import annotations
 
 from collections.abc import Mapping, Sequence
 
-from pyspark.sql import Column, DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from bigdatafinalproject_hockey_spark.operators.strings import quote_ident
 
@@ -169,17 +168,17 @@ def win_lag(
 def topk_per_group(
     df: DataFrame,
     partition_by: Sequence[str],
-    order_by: Sequence[Column],
+    order_by: str,
     k: int,
     rank_col: str = "rnk",
 ) -> DataFrame:
     """Top-K rows per group via row_number — the distributed form of the
     reference's driver-side top-10 (code/experiment.py:45-52).
-
-    ``order_by`` must break ties deterministically.
+    ``order_by`` is ORDER BY text (``"score DESC, id"``) and must break
+    ties deterministically.
     """
-    w = Window.partitionBy(*partition_by).orderBy(*order_by)
-    return (
-        df.withColumn(rank_col, F.row_number().over(w))
-        .filter(F.col(rank_col) <= k)
+    spec = f"PARTITION BY {', '.join(map(quote_ident, partition_by))} ORDER BY {order_by}"
+    rank = quote_ident(rank_col)
+    return df.selectExpr("*", f"row_number() OVER ({spec}) AS {rank}").where(
+        f"{rank} <= {int(k)}"
     )

@@ -16,12 +16,6 @@ from pyspark.sql import functions as F
 from bigdatafinalproject_hockey_spark import sidecar
 from bigdatafinalproject_hockey_spark.catalog import SCHEMAS, load_table
 from bigdatafinalproject_hockey_spark.functions.numeric import cents_expr
-from bigdatafinalproject_hockey_spark.ml import (
-    evaluate_binary_df,
-    evaluate_model,
-    feature_importances_topk,
-    train_pipeline,
-)
 from bigdatafinalproject_hockey_spark.operators.sampling import split_temporal
 from bigdatafinalproject_hockey_spark.queries.base import register
 from bigdatafinalproject_hockey_spark.sources.csv import scan_csv, sink_csv
@@ -233,6 +227,12 @@ def _ml_train_eval(spark: SparkSession, sf_dir: str, kind: str) -> DataFrame:
     report their top feature importance (reference
     code/experiment.py:39-54). Returns one metrics row built on the
     driver, so its plan has no exchange."""
+    from bigdatafinalproject_hockey_spark.ml import (
+        evaluate_model,
+        feature_importances_topk,
+        train_pipeline,
+    )
+
     orders = load_table(spark, "orders", sf_dir)
     li = load_table(spark, "lineitem", sf_dir)
     per_order = li.groupBy("l_orderkey").agg(
@@ -461,6 +461,8 @@ def q_ml_eval_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
     Feature/score arithmetic is integer-exact (cents, counts, integral
     quantity sums), so score ordering, ranks, and every metric are
     bit-identical across engines before the final 6-dp round."""
+    from bigdatafinalproject_hockey_spark.ml import evaluate_binary_df
+
     _train, test = split_temporal(
         _ml_labeled_data(spark, sf_dir), "order_year"
     )
@@ -831,7 +833,7 @@ _PR_THRESHOLDS = [float(t) for t in range(0, 1000, 100)]
 
 @register(
     "ml_eval_pr_curve",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH {_ML_TEST_CTE},
     th AS (SELECT unnest([{", ".join(str(t) for t in _PR_THRESHOLDS)}])
              AS threshold),

@@ -21,6 +21,7 @@ from bigdatafinalproject_hockey_spark.functions.numeric import (
     fixed_point_sum,
     fixed_point_sum_sql,
 )
+from bigdatafinalproject_hockey_spark.operators.strings import sql_literal
 from bigdatafinalproject_hockey_spark.queries.base import register
 
 _EVENT_TYPES = ["click", "view", "purchase", "signup", "error"]
@@ -28,7 +29,7 @@ _EVENT_TYPES = ["click", "view", "purchase", "signup", "error"]
 
 @register(
     "agg_pivot",
-    oracle=f"""
+    oracle=lambda: f"""
     SELECT user_id,
            {", ".join(
                f"COALESCE(CAST(SUM(CASE WHEN event_type = '{t}' THEN "
@@ -272,7 +273,7 @@ def q_str_fuzzy_match(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stream_stream_join",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH clicks AS (
       SELECT user_id, ts AS click_ts, event_id AS click_id
       FROM events WHERE event_type = 'click'
@@ -378,7 +379,7 @@ def q_win_first_last(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "join_full_outer",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH c AS (
       SELECT user_id, {fixed_point_sum_sql("value")} AS click_total
       FROM events WHERE event_type = 'click' GROUP BY user_id
@@ -829,7 +830,7 @@ def _pagerank_sql(iters: int = 3) -> str:
     )
 
 
-@register("graph_pagerank", oracle=_pagerank_sql(3))
+@register("graph_pagerank", oracle=lambda: _pagerank_sql(3))
 def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Integer fixed-point PageRank over the supplier co-purchase
     graph — the iterative-algorithm tier beyond connected components
@@ -1359,21 +1360,18 @@ def q_agg_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial aggregation collapses almost everything map-side). Top
     bin is open-ended via LEAST (outlier-safe). Money in fixed-point
     cents."""
-    orders = load_table(spark, "orders", sf_dir)
-    bin_col = F.least(
-        F.floor(F.col("o_totalprice") / _HIST_WIDTH).cast("long"),
-        F.lit(_HIST_BINS - 1),
-    )
+    width = sql_literal(_HIST_WIDTH)
+    bin_sql = f"least(CAST(floor(o_totalprice / {width}) AS BIGINT), {_HIST_BINS - 1})"
     return (
-        orders.select(
-            bin_col.alias("bin"),
-            (bin_col * _HIST_WIDTH).alias("bin_lo"),
-            "o_totalprice",
-        )
+        load_table(spark, "orders", sf_dir)
+        .selectExpr(f"{bin_sql} AS bin", f"{bin_sql} * {width} AS bin_lo", "o_totalprice")
         .groupBy("bin", "bin_lo")
         .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            fixed_point_sum(F.col("o_totalprice")).alias("total_price"),
+            F.expr("count(1) AS n_orders"),
+            F.expr(
+                "CAST(sum(CAST(round(o_totalprice * 100, 0) AS BIGINT)) AS DOUBLE)"
+                " / 100.0D AS total_price"
+            ),
         )
     )
 
@@ -1486,7 +1484,7 @@ def q_events_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stream_stream_left_outer",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH clicks AS (
       SELECT user_id, ts AS click_ts, event_id AS click_id
       FROM events WHERE event_type = 'click'

@@ -255,7 +255,7 @@ def q_lookup_with_fallback(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "agg_group_multi",
-    oracle=f"""
+    oracle=lambda: f"""
     SELECT l_returnflag, l_linestatus,
            SUM(l_quantity) AS sum_qty,
            {fixed_point_sum_sql("l_extendedprice", 100)} AS sum_base_price,
@@ -390,15 +390,15 @@ def q_join_equi_3key(spark: SparkSession, sf_dir: str) -> DataFrame:
     grouped = agg_ops.agg_group_multi(
         li,
         keys,
-        {"group_qty": F.sum("l_quantity"), "group_rev": F.count(F.lit(1))},
+        {"group_qty": F.expr("sum(l_quantity)"), "group_rev": F.expr("count(1)")},
     )
     joined = join_ops.join_equi(li, grouped, keys)
-    return joined.select(*keys, "l_linenumber", "group_qty", "group_rev")
+    return joined.selectExpr(*keys, "l_linenumber", "group_qty", "group_rev")
 
 
 @register(
     "join_star",
-    oracle=f"""
+    oracle=lambda: f"""
     SELECT n_name,
            {fixed_point_sum_sql("l_extendedprice * (1 - l_discount)", 10000)} AS revenue,
            COUNT(*) AS n_items
@@ -588,14 +588,12 @@ def q_win_expanding_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
             "prior_n": "count(value)",
         },
     )
-    avg = (
-        F.col("prior_cents").cast("double") / F.col("prior_n").cast("double") / 100.0
-    )
-    return df.select(
+    avg = "CAST(prior_cents AS DOUBLE) / CAST(prior_n AS DOUBLE) / 100.0D"
+    return df.selectExpr(
         "user_id",
         "event_id",
-        avg.alias("prior_avg_value"),
-        F.coalesce(avg, F.lit(0.0)).alias("prior_avg_filled"),
+        f"{avg} AS prior_avg_value",
+        f"coalesce({avg}, 0.0D) AS prior_avg_filled",
     )
 
 
@@ -698,7 +696,7 @@ def q_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's driver-side top-10 (code/experiment.py:45-52)."""
     df = load_table(spark, "events", sf_dir)
     df = win_ops.topk_per_group(
-        df, ["user_id"], [F.col("value").desc(), F.col("event_id")], k=3
+        df, ["user_id"], "value DESC, event_id", k=3
     )
     return df.select("user_id", "event_id", "value", "rnk")
 
@@ -820,7 +818,7 @@ def q_split_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sample_stratified",
-    oracle=f"""
+    oracle=lambda: f"""
     SELECT doc_id, lang FROM documents
     WHERE CAST(({portable_hash64_sql("CAST(doc_id AS VARCHAR) || ':strat'")} >> 11) AS DOUBLE)
           / 9007199254740992.0

@@ -30,6 +30,7 @@ from bigdatafinalproject_hockey_spark.functions.hashing import (
 from bigdatafinalproject_hockey_spark.functions.text import (
     bigrams_expr,
     md5_fingerprint_expr,
+    token_count_expr,
     tokens_expr,
     tokens_sql,
 )
@@ -82,7 +83,7 @@ def q_text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side, and the only shuffles are the two hash aggregations.
     Token-less documents drop out (no tokens to score)."""
     docs = load_table(spark, "documents", sf_dir)
-    tk = docs.select("doc_id", F.explode(tokens_expr(F.col("text"))).alias("token"))
+    tk = docs.select("doc_id", F.explode(tokens_expr("text")).alias("token"))
     vocab = tk.groupBy("token").agg(F.count(F.lit(1)).alias("tf"))
     tot = vocab.agg(F.sum("tf").alias("corpus_n"))
     vw = vocab.crossJoin(F.broadcast(tot)).select(
@@ -148,7 +149,7 @@ def _tertile_ctes() -> str:
 
 @register(
     "quality_tertile_split",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH {_unigram_lang_ctes("documents")},
     {_tertile_ctes()}
     SELECT doc_id, lang, n_tokens, avg_logprob, tile, split FROM qtiled
@@ -188,7 +189,7 @@ def _tertile_tiled(docs: DataFrame) -> DataFrame:
     avg_logprob, tile, split) — shared by ``quality_tertile_split``
     (emits it) and ``sample_tertile_mix`` (samples from it)."""
     tk = docs.select(
-        "doc_id", "lang", F.explode(tokens_expr(F.col("text"))).alias("token")
+        "doc_id", "lang", F.explode(tokens_expr("text")).alias("token")
     )
     vocab = tk.groupBy("lang", "token").agg(F.count(F.lit(1)).alias("tf"))
     tot = vocab.groupBy("lang").agg(F.sum("tf").alias("lang_n"))
@@ -374,7 +375,7 @@ def _rep_ratio_frame(tkdf: DataFrame) -> DataFrame:
 
 @register(
     "text_repetition_ngram_profile",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH rtk0 AS (
       SELECT doc_id, {tokens_sql("text")} AS tk FROM documents
     ),
@@ -417,7 +418,7 @@ def q_text_repetition_ngram_profile(
     win. Full value-hash oracle (6-dp-rounded ratios)."""
     docs = load_table(spark, "documents", sf_dir)
     return _rep_ratio_frame(
-        docs.select("doc_id", tokens_expr(F.col("text")).alias("tk"))
+        docs.select("doc_id", tokens_expr("text").alias("tk"))
     )
 
 
@@ -463,7 +464,7 @@ def _tertile_mix_frame(docs: DataFrame) -> DataFrame:
 
 @register(
     "sample_tertile_mix",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH {_unigram_lang_ctes("documents")},
     {_tertile_ctes()},
     {_tertile_mix_ctes()}
@@ -742,7 +743,7 @@ def _gopher_frame(
     from operator import and_
 
     tk = docs.select(
-        "doc_id", F.explode(tokens_expr(F.col("text"))).alias("token")
+        "doc_id", F.explode(tokens_expr("text")).alias("token")
     )
     c = tk.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("cnt"))
     t = c.groupBy("doc_id").agg(
@@ -774,7 +775,7 @@ def _gopher_frame(
     )
     bg = docs.select(
         "doc_id",
-        F.explode(bigrams_expr(tokens_expr(F.col("text")))).alias("b"),
+        F.explode(bigrams_expr(tokens_expr("text"))).alias("b"),
     )
     bc = bg.groupBy("doc_id", "b").agg(F.count(F.lit(1)).alias("cnt"))
     bt = bc.groupBy("doc_id").agg(
@@ -787,7 +788,7 @@ def _gopher_frame(
     # prefix / ellipsis suffix, count symbol chars. All scan-local
     # expressions; the leg ships 5 metadata ints per doc into the
     # doc-keyed merge, never the page text.
-    toks = tokens_expr(F.col("text"))
+    toks = tokens_expr("text")
     w = _GOPHER_LINE_W
     nlines = F.ceil(F.size(toks) / F.lit(float(w))).cast("int")
     bp = F.col("doc_id") % 4 + 1
@@ -848,7 +849,7 @@ def _gopher_frame(
         F.concat(F.col("tk"), F.flatten(F.array_repeat(blk, n_reps))),
     ).otherwise(F.col("tk"))
     rep = _rep_ratio_frame(
-        docs.select("doc_id", tokens_expr(F.col("text")).alias("tk"))
+        docs.select("doc_id", tokens_expr("text").alias("tk"))
         .select("doc_id", rtk.alias("tk"))
     ).drop("n_chars")
     j = (
@@ -931,7 +932,7 @@ def _gopher_frame(
 
 @register(
     "filter_gopher_rules",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH {_gopher_ctes("documents")}
     SELECT * FROM gopher
     """,
@@ -978,7 +979,7 @@ def q_filter_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_bigram_logprob",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH t AS (
       SELECT doc_id, {tokens_sql("text")} AS toks FROM documents
     ),
@@ -1011,7 +1012,7 @@ def q_text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     onto the instance stream; shuffles only for the model-building
     aggregations. Docs with <2 tokens drop out."""
     docs = load_table(spark, "documents", sf_dir)
-    bgs = bigrams_expr(tokens_expr(F.col("text")))
+    bgs = bigrams_expr(tokens_expr("text"))
     inst = docs.select("doc_id", F.explode(bgs).alias("bigram"))
     bgc = inst.groupBy("bigram").agg(F.count(F.lit(1)).alias("c_bg"))
     hist = bgc.groupBy(
@@ -1043,7 +1044,7 @@ _SQL_3GRAMS = (
 
 @register(
     "text_contamination",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH t AS (
       SELECT doc_id, {tokens_sql("text")} AS toks FROM documents
     ),
@@ -1074,7 +1075,7 @@ def q_text_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     wide exchange is the per-doc hit count."""
     docs = load_table(spark, "documents", sf_dir)
     sh = docs.select(
-        "doc_id", shingles_expr(F.col("text"), 3).alias("grams")
+        "doc_id", shingles_expr("text", 3).alias("grams")
     )
     bench = (
         sh.filter(F.col("doc_id") < 10)
@@ -1150,10 +1151,10 @@ def _decon_scores(
     from the scored corpus (production benchmark sets are external to
     the pipeline entirely)."""
     sh = df.select(
-        "doc_id", shingles_expr(F.col("text"), 3).alias("grams")
+        "doc_id", shingles_expr("text", 3).alias("grams")
     )
     bsh = sh if bench_df is None else bench_df.select(
-        "doc_id", shingles_expr(F.col("text"), 3).alias("grams")
+        "doc_id", shingles_expr("text", 3).alias("grams")
     )
     bench = (
         bsh.filter(F.col("doc_id") < 10)
@@ -1264,7 +1265,7 @@ def _decon_ctes(
 
 @register(
     "decontaminate_corpus",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH {_decon_ctes("documents")}
     SELECT doc_id, n_grams, n_contaminated, contamination_ratio
     FROM decon
@@ -1303,7 +1304,7 @@ def q_decontaminate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_tfidf_top_terms",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH tk AS (
       SELECT doc_id, unnest({tokens_sql("text")}) AS token
       FROM documents
@@ -1331,7 +1332,7 @@ def q_text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     one row_number window. Scores are rounded before ranking with a
     token tiebreaker so the selected rows are engine-stable."""
     docs = load_table(spark, "documents", sf_dir)
-    tk = docs.select("doc_id", F.explode(tokens_expr(F.col("text"))).alias("token"))
+    tk = docs.select("doc_id", F.explode(tokens_expr("text")).alias("token"))
     tf = tk.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = tf.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
     ndocs = docs.agg(F.count(F.lit(1)).alias("n_docs"))
@@ -1348,7 +1349,7 @@ def q_text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     top = topk_per_group(
-        scored, ["doc_id"], [F.col("score").desc(), F.col("token")], 3
+        scored, ["doc_id"], "score DESC, token", 3
     )
     return top.select("doc_id", "token", F.col("tf").cast("long").alias("tf"),
                       "score", "rnk")
@@ -1361,7 +1362,7 @@ def q_text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_segments",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH t AS (
       SELECT doc_id, {tokens_sql("text")} AS toks FROM documents
     ),
@@ -1397,7 +1398,7 @@ def q_dedup_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-shuffle shape as exact doc-level dedup, just at segment
     granularity."""
     docs = load_table(spark, "documents", sf_dir)
-    toks = tokens_expr(F.col("text"))
+    toks = tokens_expr("text")
     nseg = F.ceil(F.size(toks) / F.lit(20)).cast("int")
     # Guard nseg=0: sequence(0, -1) is DESCENDING in Spark ([0, -1]),
     # which would fabricate two segments for a token-less doc.
@@ -1670,7 +1671,7 @@ _SQL_QUOTA = (
 
 @register(
     "pipeline_training_mix",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH t AS (
       SELECT doc_id, lang,
              len({tokens_sql("text")}) AS n_tokens,
@@ -1707,7 +1708,7 @@ def q_pipeline_training_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = docs.select(
         "doc_id",
         "lang",
-        F.size(tokens_expr(F.col("text"))).alias("n_tokens"),
+        token_count_expr("text").alias("n_tokens"),
         F.md5(F.col("doc_id").cast("string")).alias("h"),
     )
     w = (
@@ -1728,7 +1729,7 @@ def q_pipeline_training_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sample_temperature",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH c AS (SELECT source, COUNT(*) AS n_g FROM documents GROUP BY source),
     w AS (
       SELECT source, n_g,
@@ -1909,7 +1910,7 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         (F.col("doc_id") % _PACK_SHARDS).alias("shard"),
         "doc_id",
-        F.size(tokens_expr("text")).cast("long").alias("n_tokens"),
+        token_count_expr("text").cast("long").alias("n_tokens"),
     )
     return pack_sequences(
         docs,
@@ -1962,7 +1963,7 @@ def q_pack_efficiency_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         (F.col("doc_id") % _PACK_SHARDS).alias("shard"),
         "doc_id",
-        F.size(tokens_expr("text")).cast("long").alias("n_tokens"),
+        token_count_expr("text").cast("long").alias("n_tokens"),
     )
     packed = pack_sequences(
         docs,
@@ -2009,7 +2010,7 @@ def q_cap_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     return topk_per_group(
         docs.select("source", "doc_id", "lang", "n_chars"),
         partition_by=["source"],
-        order_by=[F.col("n_chars").desc(), F.col("doc_id")],
+        order_by="n_chars DESC, doc_id",
         k=40,
         rank_col="rnk",
     ).select(
@@ -2026,7 +2027,7 @@ _FP_SQL = "md5(trim(regexp_replace({c}, '\\s+', ' ', 'g')))"
 
 @register(
     "dedup_incremental",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH base AS (SELECT * FROM documents WHERE doc_id < 250),
     fresh AS (SELECT * FROM documents WHERE doc_id >= 250),
     delta AS (
@@ -2088,7 +2089,7 @@ _DRIFT_VOCAB = 2000
 
 @register(
     "corpus_drift",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH tk AS (
       SELECT source, unnest({tokens_sql("text")}) AS token
       FROM documents
@@ -2148,7 +2149,7 @@ def q_corpus_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, "documents", sf_dir)
     tk = docs.select(
-        "source", F.explode(tokens_expr(F.col("text"))).alias("token")
+        "source", F.explode(tokens_expr("text")).alias("token")
     )
     c_all = tk.groupBy("token").agg(F.count(F.lit(1)).alias("c_all"))
     vocab = c_all.orderBy(F.desc("c_all"), F.asc("token")).limit(_DRIFT_VOCAB)
@@ -2202,7 +2203,7 @@ _CHUNK_S = 48   # stride (overlap = W - S = 16)
 
 @register(
     "chunk_overlap",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH base AS (
       SELECT doc_id, {tokens_sql("text")} AS toks,
              len({tokens_sql("text")}) AS n
@@ -2241,8 +2242,8 @@ def q_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir)
     base = docs.select(
         "doc_id",
-        tokens_expr(F.col("text")).alias("toks"),
-        F.size(tokens_expr(F.col("text"))).alias("n"),
+        tokens_expr("text").alias("toks"),
+        token_count_expr("text").alias("n"),
     )
     nc = base.withColumn(
         "n_chunks",
@@ -2275,7 +2276,7 @@ _TOKENIZE_B = 64   # OOV hash buckets (power of two: id = V + low bits of hash)
 
 @register(
     "tokenize_to_ids",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH tok AS (
       SELECT doc_id,
              unnest(range(len(tk))) AS pos,
@@ -2356,7 +2357,7 @@ _QC_WEIGHTS = [
 
 @register(
     "text_quality_classifier",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH tk AS (
       SELECT doc_id, {tokens_sql("text")} AS tk FROM documents
     )
@@ -2532,7 +2533,7 @@ def _quality_units_sql(tk: str) -> str:
 
 @register(
     "pipeline_incremental_curation",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH store AS (SELECT doc_id, text, source FROM documents
                    WHERE doc_id % 10 < 8),
     fresh AS (SELECT doc_id, text, source FROM documents
@@ -2761,7 +2762,7 @@ def q_ts_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_bigrams_udtf",
-    oracle=f"""
+    oracle=lambda: f"""
     SELECT doc_id, CAST(i - 1 AS INT) AS pos,
            list_extract(toks, i) || ' ' || list_extract(toks, i + 1)
              AS bigram
@@ -2999,7 +3000,7 @@ def _span_cte_sql(
 
 @register(
     "dedup_substring",
-    oracle=_span_cte_sql()
+    oracle=lambda: _span_cte_sql()
     + """
     SELECT doc_a, doc_b, start_a, start_b, span_len FROM spans
     """,
@@ -3091,7 +3092,7 @@ def q_reshard_training(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         (F.col("doc_id") % _PACK_SHARDS).alias("shard"),
         "doc_id",
-        F.size(tokens_expr("text")).cast("long").alias("n_tokens"),
+        token_count_expr("text").cast("long").alias("n_tokens"),
     )
     packed = pack_sequences(
         docs,
@@ -3183,7 +3184,7 @@ _REWRITE_CTES = """,
 
 @register(
     "dedup_substring_rewrite",
-    oracle=_span_cte_sql()
+    oracle=lambda: _span_cte_sql()
     + _REWRITE_CTES
     + f""",
     hubfp AS (
@@ -3241,7 +3242,7 @@ def q_dedup_substring_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_substring_rewrite_cheap",
-    oracle=_span_cte_sql()
+    oracle=lambda: _span_cte_sql()
     + _REWRITE_CTES
     + """
     SELECT doc, n_tokens, n_removed, dtext AS clean_text FROM rw
@@ -3310,7 +3311,7 @@ def _decon_redact_oracle() -> str:
     )
 
 
-@register("decontaminate_redact", oracle=_decon_redact_oracle())
+@register("decontaminate_redact", oracle=lambda: _decon_redact_oracle())
 def q_decontaminate_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decontamination by SPAN REDACTION (round 12) — the surgical
     alternative to ``decontaminate_corpus``'s whole-doc drop (the two
@@ -3345,7 +3346,7 @@ def q_decontaminate_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, "documents", sf_dir)
     sh = docs.select(
-        "doc_id", shingles_expr(F.col("text"), 3).alias("grams")
+        "doc_id", shingles_expr("text", 3).alias("grams")
     )
     bench = (
         sh.filter(F.col("doc_id") < 10)
@@ -3356,7 +3357,7 @@ def q_decontaminate_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     pos3 = scored.select(
         F.col("doc_id").alias("doc"),
         F.posexplode(
-            shingles_expr(F.col("text"), 3, distinct=False)
+            shingles_expr("text", 3, distinct=False)
         ).alias("pos", "g"),
     )
     cuts = pos3.join(F.broadcast(bench), "g").select(
@@ -3366,7 +3367,7 @@ def q_decontaminate_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     base = ensure_parallelism(scored).select(
         F.col("doc_id").alias("doc"),
-        tokens_expr(F.col("text")).alias("toks"),
+        tokens_expr("text").alias("toks"),
     )
     out = rebuild_without_intervals(
         base, merge_cut_intervals(cuts), removed_alias="n_redacted"
@@ -3395,7 +3396,7 @@ _WEB_PIPE_PREFIX = f"""
 
 @register(
     "pipeline_web_curation",
-    oracle=_span_cte_sql(source="gated", prefix=_WEB_PIPE_PREFIX)
+    oracle=lambda: _span_cte_sql(source="gated", prefix=_WEB_PIPE_PREFIX)
     + """
     SELECT doc_a, doc_b, start_a, start_b, span_len FROM spans
     """,
@@ -3433,7 +3434,7 @@ def q_pipeline_web_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ex = extract_html_text_batched(docs, "html", "doc_id")
     gated = ex.filter(
-        (F.size(tokens_expr("clean_text")) >= 20)
+        (token_count_expr("clean_text") >= 20)
         & (
             F.col("n_blocks_dropped") * 2
             < F.col("n_blocks_kept") + F.col("n_blocks_dropped")
@@ -3758,7 +3759,7 @@ def _web_to_shards_oracle() -> str:
     )
 
 
-@register("pipeline_web_to_shards", oracle=_web_to_shards_oracle())
+@register("pipeline_web_to_shards", oracle=lambda: _web_to_shards_oracle())
 def q_pipeline_web_to_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The COMPLETE web-corpus day-0-to-training-shards pipeline
     (round 11; VERDICT r10 item 2; decontamination added round 12,
@@ -3853,7 +3854,7 @@ def q_pipeline_web_to_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ex = extract_html_text_batched(docs, "html", "doc_id")
     gated = ex.filter(
-        (F.size(tokens_expr("clean_text")) >= 20)
+        (token_count_expr("clean_text") >= 20)
         & (
             F.col("n_blocks_dropped") * 2
             < F.col("n_blocks_kept") + F.col("n_blocks_dropped")
@@ -3989,14 +3990,15 @@ def q_pipeline_web_to_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _register_text_normalize_unicode() -> None:
-    # Oracle is built from the SAME constants as the Spark fixture, so
-    # the two can never drift: expected = text || CLEAN_SUFFIX.
-    from bigdatafinalproject_hockey_spark.extraction import (
-        CLEAN_SUFFIX,
-        DIRTY_N_STRIPPED,
-    )
+    def oracle() -> str:
+        # Built from the SAME constants as the Spark fixture, so the
+        # two can never drift: expected = text || CLEAN_SUFFIX.
+        from bigdatafinalproject_hockey_spark.extraction import (
+            CLEAN_SUFFIX,
+            DIRTY_N_STRIPPED,
+        )
 
-    oracle = f"""
+        return f"""
     SELECT doc_id,
            text || '{CLEAN_SUFFIX}' AS norm_text,
            CAST({DIRTY_N_STRIPPED} AS INTEGER) AS n_stripped
@@ -4028,12 +4030,12 @@ def _register_text_normalize_unicode() -> None:
         arbitrary-unicode totality) is pinned by hypothesis property
         tests."""
         from bigdatafinalproject_hockey_spark.extraction import (
-            dirty_text_expr,
+            dirty_text_sql,
             normalize_unicode_batched,
         )
 
-        docs = load_table(spark, "documents", sf_dir).select(
-            "doc_id", dirty_text_expr("text").alias("text")
+        docs = load_table(spark, "documents", sf_dir).selectExpr(
+            "doc_id", f"{dirty_text_sql('text')} AS text"
         )
         return normalize_unicode_batched(docs, "text", "doc_id")
 
@@ -4042,12 +4044,13 @@ _register_text_normalize_unicode()
 
 
 def _register_text_normalize_nfkc() -> None:
-    from bigdatafinalproject_hockey_spark.extraction import (
-        CLEAN_NFKC_SUFFIX,
-        DIRTY_NFKC_N_STRIPPED,
-    )
+    def oracle() -> str:
+        from bigdatafinalproject_hockey_spark.extraction import (
+            CLEAN_NFKC_SUFFIX,
+            DIRTY_NFKC_N_STRIPPED,
+        )
 
-    oracle = f"""
+        return f"""
     SELECT doc_id,
            text || '{CLEAN_NFKC_SUFFIX}' AS norm_text,
            CAST({DIRTY_NFKC_N_STRIPPED} AS INTEGER) AS n_stripped
@@ -4076,12 +4079,12 @@ def _register_text_normalize_nfkc() -> None:
         exactly 2 stripped marks), giving a full value-hash oracle
         from shared constants."""
         from bigdatafinalproject_hockey_spark.extraction import (
-            dirty_nfkc_text_expr,
+            dirty_nfkc_text_sql,
             normalize_unicode_batched,
         )
 
-        docs = load_table(spark, "documents", sf_dir).select(
-            "doc_id", dirty_nfkc_text_expr("text").alias("text")
+        docs = load_table(spark, "documents", sf_dir).selectExpr(
+            "doc_id", f"{dirty_nfkc_text_sql('text')} AS text"
         )
         return normalize_unicode_batched(
             docs, "text", "doc_id", form="NFKC"
@@ -4093,7 +4096,7 @@ _register_text_normalize_nfkc()
 
 @register(
     "filter_url_blocklist",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH {_url_ctes("documents")}
     SELECT doc_id, url, canon_url, domain FROM ukept
     """,
@@ -4139,7 +4142,7 @@ def q_filter_url_blocklist(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "bpe_learn_merge",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH RECURSIVE occ AS (
       SELECT unnest({tokens_sql("text")}) AS tok FROM documents
     ),
@@ -4451,7 +4454,7 @@ def _bpe_learn_iters(
     return ch, bests
 
 
-@register("bpe_learn_vocab", oracle=_bpe_vocab_oracle(_BPE_K))
+@register("bpe_learn_vocab", oracle=lambda: _bpe_vocab_oracle(_BPE_K))
 def q_bpe_learn_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FULL BPE merge-table learning (round 11; VERDICT r10 item 1 —
     Sennrich et al. 2016, public method): iterates the single-step
@@ -4604,7 +4607,7 @@ def _bpe_apply_oracle(k: int) -> str:
     )
 
 
-@register("tokenize_bpe_corpus", oracle=_bpe_apply_oracle(_BPE_K))
+@register("tokenize_bpe_corpus", oracle=lambda: _bpe_apply_oracle(_BPE_K))
 def q_tokenize_bpe_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE ENCODE — the apply half of learned subword tokenization
     (round 11): train the k=8 merge table (the shared ``_bpe_learn``
@@ -4788,7 +4791,7 @@ def _bpe_delta_oracle(k: int) -> str:
     return "".join(parts)
 
 
-@register("tokenize_bpe_delta", oracle=_bpe_delta_oracle(_BPE_K))
+@register("tokenize_bpe_delta", oracle=lambda: _bpe_delta_oracle(_BPE_K))
 def q_tokenize_bpe_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE delta encode — tokenize NEW text against a FROZEN merge
     table (round 12; VERDICT r11 item 1), completing the tokenizer
@@ -4924,7 +4927,7 @@ def _bpe_extend_oracle(k: int, k2: int) -> str:
     return "".join(parts)
 
 
-@register("bpe_vocab_extend", oracle=_bpe_extend_oracle(_BPE_K, _BPE_EXT_K))
+@register("bpe_vocab_extend", oracle=lambda: _bpe_extend_oracle(_BPE_K, _BPE_EXT_K))
 def q_bpe_vocab_extend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE vocabulary EXTENSION (round 12) — continued merge learning
     on a GROWN corpus with the day-0 merges frozen as a prefix,

@@ -39,19 +39,18 @@ from bigdatafinalproject_hockey_spark.functions.text import (
     bpe_pretoken_count_expr,
     digit_ratio_expr,
     md5_fingerprint_expr,
+    md5_fingerprint_sql,
     stopword_ratio_expr,
     token_count_expr,
+    token_list_sql,
     tokens_sql,
-)
-from bigdatafinalproject_hockey_spark.multimodal import (
-    attach_binary_payload,
-    extract_features_batched,
 )
 from bigdatafinalproject_hockey_spark.operators import (
     sampling as sample_ops,
     scalar as scalar_ops,
     windows as win_ops,
 )
+from bigdatafinalproject_hockey_spark.operators.strings import sql_literal
 from bigdatafinalproject_hockey_spark.queries.base import register
 from bigdatafinalproject_hockey_spark.similarity import (
     ann_lsh_near_pairs,
@@ -78,10 +77,7 @@ from bigdatafinalproject_hockey_spark.similarity import (
 )
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup groups on normalized-text fingerprint (hash groupBy)."""
-    docs = load_table(spark, "documents", sf_dir)
-    return dedup_exact_groups(docs, "text", "doc_id").select(
-        "fp", "keep_id", "n_copies"
-    )
+    return dedup_exact_groups(load_table(spark, "documents", sf_dir), "text", "doc_id")
 
 
 # DuckDB oracle fragments shared by the dedup oracles below. An oracle
@@ -159,7 +155,7 @@ def _keep_best(docs: DataFrame, comps: DataFrame) -> DataFrame:
     best = win_ops.topk_per_group(
         comps.join(quality, "doc_id"),
         ["component_id"],
-        [F.col("n_tokens").desc(), F.col("doc_id").asc()],
+        "n_tokens DESC, doc_id",
         1,
     )
     return best.select(
@@ -287,7 +283,7 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_keep_best_minhash",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH RECURSIVE {minhash_lsh_cte_sql()},
     pairs AS (
       SELECT doc_a, doc_b FROM near WHERE jaccard_dist <= 0.5
@@ -341,7 +337,7 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_minhash_lsh_portable",
-    oracle=minhash_lsh_oracle_sql(shingle_n=3, max_jaccard_distance=0.5),
+    oracle=lambda: minhash_lsh_oracle_sql(shingle_n=3, max_jaccard_distance=0.5),
 )
 def q_dedup_minhash_lsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The flagship MinHash+LSH dedup pipeline with engine-portable
@@ -356,7 +352,7 @@ def q_dedup_minhash_lsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("dedup_simhash", oracle=simhash_oracle_sql(max_hamming=3))
+@register("dedup_simhash", oracle=lambda: simhash_oracle_sql(max_hamming=3))
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash fingerprint near-dup pairs within hamming distance 3 —
     the production radius for 64-bit fingerprints (Manku, Jain & Sarma,
@@ -374,7 +370,7 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_incremental_near",
-    oracle=minhash_incremental_oracle_sql(
+    oracle=lambda: minhash_incremental_oracle_sql(
         split_id=400, shingle_n=3, max_jaccard_distance=0.5
     ),
 )
@@ -395,7 +391,7 @@ def q_dedup_incremental_near(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_embedding_cosine",
-    oracle=cosine_lsh_oracle_sql(min_cosine=0.3),
+    oracle=lambda: cosine_lsh_oracle_sql(min_cosine=0.3),
 )
 def q_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs ≥ 0.3 via deterministic banded
@@ -443,7 +439,7 @@ def q_sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sim_ann_lsh",
-    oracle=ann_lsh_oracle_sql(bucket_length=1.0, max_l2=1.2),
+    oracle=lambda: ann_lsh_oracle_sql(bucket_length=1.0, max_l2=1.2),
 )
 def q_sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Random-projection (p-stable) LSH approximate near-neighbor
@@ -502,7 +498,7 @@ def q_sim_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("votes"))
     )
     pred = win_ops.topk_per_group(
-        votes, ["query_id"], [F.col("votes").desc(), F.col("label")], 1
+        votes, ["query_id"], "votes DESC, label", 1
     )
     return pred.select(
         "query_id",
@@ -518,7 +514,7 @@ def q_sim_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_token_count",
-    oracle=f"""
+    oracle=lambda: f"""
     SELECT doc_id,
            CAST(len({tokens_sql("text")}) AS BIGINT) AS n_tokens,
            CAST(length(text) AS BIGINT) AS n_chars_actual
@@ -527,17 +523,16 @@ def q_sim_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token + char counts (whitespace/regex tokenizer, scan-side)."""
-    docs = load_table(spark, "documents", sf_dir)
-    return docs.select(
+    return load_table(spark, "documents", sf_dir).selectExpr(
         "doc_id",
-        token_count_expr("text").cast("long").alias("n_tokens"),
-        F.length("text").cast("long").alias("n_chars_actual"),
+        f"CAST(size({token_list_sql('text')}) AS BIGINT) AS n_tokens",
+        "CAST(length(text) AS BIGINT) AS n_chars_actual",
     )
 
 
 @register(
     "text_repetition_score",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH tk AS (
       SELECT doc_id, unnest({tokens_sql("text")}) AS token
       FROM documents
@@ -564,7 +559,7 @@ def q_text_repetition_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, "documents", sf_dir)
     cnt = (
-        docs.select("doc_id", F.explode(tokens_expr(F.col("text"))).alias("token"))
+        docs.select("doc_id", F.explode(tokens_expr("text")).alias("token"))
         .groupBy("doc_id", "token")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -607,7 +602,7 @@ def q_agg_quantile_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_top_tokens",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH tk AS (
       SELECT doc_id, unnest({tokens_sql("text")}) AS token
       FROM documents
@@ -634,7 +629,7 @@ def q_text_top_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     from bigdatafinalproject_hockey_spark.functions.text import tokens_expr
 
     docs = load_table(spark, "documents", sf_dir)
-    tk = docs.select("doc_id", F.explode(tokens_expr(F.col("text"))).alias("token"))
+    tk = docs.select("doc_id", F.explode(tokens_expr("text")).alias("token"))
     stats = tk.groupBy("token").agg(
         F.count(F.lit(1)).cast("long").alias("tf"),
         F.countDistinct("doc_id").cast("long").alias("df"),
@@ -672,7 +667,7 @@ _EN_STOP_SQL = "['the', 'a', 'of', 'and', 'to', 'in', 'is', 'value']"
 
 @register(
     "text_quality_score",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH t AS (
       SELECT doc_id, text, {tokens_sql("text")} AS toks
       FROM documents
@@ -706,7 +701,7 @@ def q_text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_lang_id",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH t AS (
       SELECT doc_id, lang, {tokens_sql("text")} AS toks
       FROM documents
@@ -755,7 +750,7 @@ def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "pipeline_document_curation",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH t AS (
       SELECT doc_id, lang, text, {tokens_sql("text")} AS toks
       FROM documents
@@ -804,44 +799,38 @@ def q_pipeline_document_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint window — at 100 TB that is one shuffle keyed by a
     uniformly-distributed md5, no skew. Filters run BEFORE the
     shuffle, so rejected docs never move."""
-    docs = load_table(spark, "documents", sf_dir)
-    from pyspark.sql import Window
-
-    from bigdatafinalproject_hockey_spark.functions.text import tokens_expr
-
-    t = docs.select("doc_id", "lang", "text", tokens_expr(F.col("text")).alias("toks"))
-    n = F.size("toks")
-    stop_hits = F.size(
-        F.filter(F.col("toks"), lambda x: x.isin(*STOPWORDS["en"]))
-    )
-    m = t.select(
-        "doc_id",
-        "lang",
-        n.cast("long").alias("n_tokens"),
-        F.when(n > 0, stop_hits / n).otherwise(F.lit(0.0)).alias("stop_r"),
-        F.when(
-            n > 0,
-            F.lit(1.0) - F.size(F.array_distinct("toks")).cast("double") / n,
+    stop_in = ", ".join(map(sql_literal, STOPWORDS["en"]))
+    h = "md5(CAST(doc_id AS STRING))"
+    bucket = f"(ascii(substring({h}, 1, 1)) * 256 + ascii(substring({h}, 2, 1))) % 100"
+    return (
+        load_table(spark, "documents", sf_dir)
+        .selectExpr(
+            "doc_id",
+            "lang",
+            f"{token_list_sql('text')} AS toks",
+            f"{md5_fingerprint_sql('text')} AS fp",
         )
-        .otherwise(F.lit(0.0))
-        .alias("dup_r"),
-        md5_fingerprint_expr("text").alias("fp"),
-    )
-    kept = m.filter(
-        (F.col("n_tokens") >= 20) & (F.col("stop_r") >= 0.05) & (F.col("dup_r") <= 0.65)
-    )
-    surv = kept.withColumn(
-        "rn", F.row_number().over(Window.partitionBy("fp").orderBy("doc_id"))
-    ).filter(F.col("rn") == 1)
-    h = F.md5(F.col("doc_id").cast("string"))
-    bucket = (F.ascii(F.substring(h, 1, 1)) * 256 + F.ascii(F.substring(h, 2, 1))) % 100
-    return surv.select(
-        "doc_id",
-        "lang",
-        "n_tokens",
-        round6(F.col("stop_r")).alias("stopword_ratio"),
-        round6(F.col("dup_r")).alias("dup_token_ratio"),
-        F.when(bucket < 90, "train").otherwise("heldout").alias("split"),
+        .selectExpr(
+            "doc_id",
+            "lang",
+            "CAST(size(toks) AS BIGINT) AS n_tokens",
+            f"CASE WHEN size(toks) > 0 THEN size(filter(toks, x -> x IN ({stop_in})))"
+            " / size(toks) ELSE 0.0D END AS stop_r",
+            "CASE WHEN size(toks) > 0 THEN 1.0D - CAST(size(array_distinct(toks)) AS DOUBLE)"
+            " / size(toks) ELSE 0.0D END AS dup_r",
+            "fp",
+        )
+        .where("n_tokens >= 20 AND stop_r >= 0.05D AND dup_r <= 0.65D")
+        .selectExpr("*", f"row_number() OVER {win_ops.window_sql(['fp'], ['doc_id'])} AS rn")
+        .where("rn = 1")
+        .selectExpr(
+            "doc_id",
+            "lang",
+            "n_tokens",
+            "round(stop_r, 6) AS stopword_ratio",
+            "round(dup_r, 6) AS dup_token_ratio",
+            f"CASE WHEN {bucket} < 90 THEN 'train' ELSE 'heldout' END AS split",
+        )
     )
 
 
@@ -915,6 +904,8 @@ def q_array_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary-payload metadata: byte length + content hash of the
     media column (utf-8 text standing in for image/audio bytes)."""
+    from bigdatafinalproject_hockey_spark.multimodal import attach_binary_payload
+
     docs = load_table(spark, "documents", sf_dir)
     media = attach_binary_payload(docs, "text", "doc_id")
     return media.select("doc_id", "n_bytes", "content_md5")
@@ -945,7 +936,7 @@ def q_multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract instead of a latent divergence; this DuckDB has no blob
     substring/md5 to frame true bytes. A no-op on the fixtures
     (asserted ASCII-only in tests/test_modules.py)."""
-    from bigdatafinalproject_hockey_spark.multimodal import sample_frames_batched
+    from bigdatafinalproject_hockey_spark.multimodal import attach_binary_payload, sample_frames_batched
 
     docs = load_table(spark, "documents", sf_dir).filter(
         F.octet_length("text") == F.length("text")
@@ -975,7 +966,7 @@ def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     Python path cycles BYTES, the oracle repeats CHARACTERS; see
     multimodal_frame_sample). Empty payloads are exercised by unit
     tests instead."""
-    from bigdatafinalproject_hockey_spark.multimodal import resize_batched
+    from bigdatafinalproject_hockey_spark.multimodal import attach_binary_payload, resize_batched
 
     docs = load_table(spark, "documents", sf_dir).filter(
         (F.length("text") > 0) & (F.octet_length("text") == F.length("text"))
@@ -1010,6 +1001,8 @@ def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arrow-batched feature extraction over binary payloads via
     mapInPandas (deterministic fake for the codec step)."""
+    from bigdatafinalproject_hockey_spark.multimodal import attach_binary_payload, extract_features_batched
+
     docs = load_table(spark, "documents", sf_dir)
     media = attach_binary_payload(docs, "text", "doc_id")
     return extract_features_batched(media)
@@ -1339,7 +1332,7 @@ def q_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sim_hybrid_rrf",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
     q AS (SELECT vec_id AS query_id, emb AS qemb FROM e WHERE vec_id < 20),
     dense_all AS (
@@ -1423,7 +1416,7 @@ def q_sim_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir)
     tk = docs.select(
         "doc_id",
-        F.explode(F.array_distinct(tokens_expr(F.col("text")))).alias("token"),
+        F.explode(F.array_distinct(tokens_expr("text"))).alias("token"),
     )
     qtk = tk.filter(F.col("doc_id") < 20).select(
         F.col("doc_id").alias("query_id"), "token"
@@ -1435,7 +1428,7 @@ def q_sim_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"))
     )
     sparse = topk_per_group(
-        ov, ["query_id"], [F.col("n").desc(), F.col("doc_id")], 20
+        ov, ["query_id"], "n DESC, doc_id", 20
     ).select("query_id", "doc_id", F.col("rnk").alias("rnk_s"))
     fused = dense.join(sparse, ["query_id", "doc_id"], "full_outer").select(
         "query_id",
@@ -1448,7 +1441,7 @@ def q_sim_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("score_units"),
     )
     top = topk_per_group(
-        fused, ["query_id"], [F.col("score_units").desc(), F.col("doc_id")], 5
+        fused, ["query_id"], "score_units DESC, doc_id", 5
     )
     return top.select(
         "query_id", "doc_id", "score_units", F.col("rnk").cast("long").alias("rnk")
@@ -1508,7 +1501,7 @@ def q_multimodal_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the identical contract."""
     from pyspark.sql import Window
 
-    from bigdatafinalproject_hockey_spark.multimodal import phash_batched
+    from bigdatafinalproject_hockey_spark.multimodal import attach_binary_payload, phash_batched
 
     docs = load_table(spark, "documents", sf_dir)
     media = attach_binary_payload(docs, "text", "doc_id")

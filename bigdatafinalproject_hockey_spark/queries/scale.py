@@ -76,7 +76,7 @@ from bigdatafinalproject_hockey_spark.streaming import (
 
 @register(
     "join_asof",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH clicks AS (
       SELECT user_id, ts, event_id FROM events WHERE event_type = 'click'
     ),
@@ -113,7 +113,7 @@ def q_join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "join_range",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH bands AS (
       SELECT i AS band_id, i * 50000.0 AS lo, (i + 1) * 50000.0 AS hi
       FROM range(0, 10) t(i)
@@ -169,7 +169,7 @@ def q_agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return agg_ops.agg_rollup(
         li,
         ["l_returnflag", "l_linestatus"],
-        {"n_rows": F.count(F.lit(1)), "sum_qty": F.sum("l_quantity")},
+        {"n_rows": F.expr("count(1)"), "sum_qty": F.expr("sum(l_quantity)")},
     )
 
 
@@ -289,7 +289,7 @@ _IVF_ASSIGN_CTE = f"""
 
 @register(
     "sim_ann_ivf",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH {_IVF_ASSIGN_CTE},
     q AS (
       SELECT e.vec_id AS query_id, emb AS qemb, a.cell
@@ -336,7 +336,7 @@ def _ivf_centroids(emb: DataFrame) -> DataFrame:
 
 @register(
     "sim_ann_ivf_multiprobe",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH {_IVF_ASSIGN_CTE},
     qprobe AS (
       SELECT vec_id AS query_id, cent_id AS cell
@@ -376,7 +376,7 @@ def q_sim_ann_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ann_recall_eval",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH {_IVF_ASSIGN_CTE},
     q AS (SELECT vec_id AS query_id, emb AS qemb FROM e WHERE vec_id < 20),
     bf_all AS (
@@ -463,7 +463,7 @@ def q_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_semantic",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH {_IVF_ASSIGN_CTE},
     pairs AS (
       SELECT b.vec_id AS dup_id
@@ -566,7 +566,7 @@ def _emb_signkeys_bucketed(
 
 @register(
     "dedup_semantic_scaled",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH {bucketed_ivf_assign_cte(centroid_stride=50)},
     pairs AS (
       SELECT b.vec_id AS dup_id
@@ -614,7 +614,7 @@ def q_dedup_semantic_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_semantic_autokey",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH {bucketed_ivf_assign_cte_autokey(centroid_stride=50)},
     pairs AS (
       SELECT b.vec_id AS dup_id
@@ -821,7 +821,7 @@ def q_sim_ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sim_ann_ivfpq",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH {_IVF_ASSIGN_CTE},
     {_PQ_CHAIN},
     {_ivfpq_adc_ctes()}
@@ -914,7 +914,7 @@ def _pq_fitted_codebook_sidecar(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sim_ann_ivfpq_fitted",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH {_IVF_ASSIGN_CTE},
     {_PQ_SUB.format(src="e")},
     {pq_lloyd_cte(iterations=2)},
@@ -952,7 +952,7 @@ def q_sim_ann_ivfpq_fitted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sim_ann_ivfpq_multiprobe",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH {_IVF_ASSIGN_CTE},
     {_PQ_CHAIN},
     {_ivfpq_adc_ctes(nprobe=2)}
@@ -982,7 +982,7 @@ def q_sim_ann_ivfpq_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sim_ann_ivfpq_rerank",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH {_IVF_ASSIGN_CTE},
     {_PQ_CHAIN},
     {_ivfpq_adc_ctes()},
@@ -1020,7 +1020,7 @@ def q_sim_ann_ivfpq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ann_recall_eval_pq",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH {_IVF_ASSIGN_CTE},
     {_PQ_CHAIN},
     {_ivfpq_adc_ctes()},
@@ -1142,7 +1142,7 @@ def q_ann_recall_eval_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     rr = topk_per_group(
-        scored, ["query_id"], [F.col("cosine").desc(), F.col("neighbor_id")], 5
+        scored, ["query_id"], "cosine DESC, neighbor_id", 5
     ).select("query_id", "neighbor_id", F.lit(1).alias("hit_rr"))
     return (
         bf.join(F.broadcast(pq), ["query_id", "neighbor_id"], "left")
@@ -1159,7 +1159,7 @@ def q_ann_recall_eval_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ann_index_delta",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH params AS (SELECT (COUNT(*) * 4) // 5 AS cut FROM embeddings),
     e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
     base AS (SELECT * FROM e WHERE vec_id < (SELECT cut FROM params)),
@@ -1249,7 +1249,7 @@ def q_ann_index_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "pipeline_embedding_curation",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH {bucketed_ivf_assign_cte_autokey(centroid_stride=50)},
     pairs AS (
       SELECT b.vec_id AS dup_id
@@ -1354,7 +1354,7 @@ def q_pipeline_embedding_curation(spark: SparkSession, sf_dir: str) -> DataFrame
 
 @register(
     "sim_ann_ivfpq_residual",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH {_IVF_ASSIGN_CTE},
     resid AS (
       SELECT a.vec_id, a.cell,
@@ -1441,7 +1441,7 @@ def q_codebook_kmeans_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ml_centroid_classify",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH e AS (
       SELECT vec_id, label, embedding::DOUBLE[] AS emb FROM embeddings
     ),
@@ -1497,7 +1497,7 @@ def q_ml_centroid_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "stream_stateful_totals",
-    oracle=f"""
+    oracle=lambda: f"""
     SELECT user_id,
            COUNT(*) AS n_events,
            {fixed_point_sum_sql("value")} AS sum_value
@@ -1517,7 +1517,7 @@ def q_stream_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "join_bloom_pruned",
-    oracle=f"""
+    oracle=lambda: f"""
     SELECT o_orderpriority,
            COUNT(*) AS n_items,
            {fixed_point_sum_sql("l_extendedprice")} AS revenue
@@ -1566,7 +1566,7 @@ def q_join_bloom_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "mv_incremental_agg",
-    oracle=f"""
+    oracle=lambda: f"""
     SELECT user_id,
            COUNT(*) AS n_events,
            {fixed_point_sum_sql("value")} AS sum_value
@@ -1637,7 +1637,7 @@ def _register_stream_stateful_totals_tws() -> None:
 
     @register(
         "stream_stateful_totals_tws",
-        oracle=f"""
+        oracle=lambda: f"""
     SELECT user_id,
            COUNT(*) AS n_events,
            {fixed_point_sum_sql("value")} AS sum_value
@@ -1756,7 +1756,7 @@ def q_scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "join_skew_salted",
-    oracle=f"""
+    oracle=lambda: f"""
     SELECT o_orderpriority,
            COUNT(*) AS n_items,
            {fixed_point_sum_sql("l_extendedprice")} AS revenue
@@ -1798,7 +1798,7 @@ def q_join_skew_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "join_bucketed",
-    oracle=f"""
+    oracle=lambda: f"""
     SELECT o_orderpriority,
            COUNT(*) AS n_items,
            {fixed_point_sum_sql("l_extendedprice")} AS revenue
@@ -1933,7 +1933,7 @@ def q_merge_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "join_scd2_pointintime",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH {_SCD2_CUR_CTE},
     {_SCD2_CHG_CTES},
     hist AS (
@@ -2013,7 +2013,7 @@ def _zorder_sql() -> str:
     """
 
 
-@register("sort_zorder", oracle=_zorder_sql())
+@register("sort_zorder", oracle=lambda: _zorder_sql())
 def q_sort_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order (Morton) clustering of orders on (customer, price-band)
     — the multi-dimensional data-skipping layout (Delta/Iceberg
@@ -2082,7 +2082,7 @@ def _orders_clustered(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
 
 @register(
     "scan_files_pruned",
-    oracle=f"""
+    oracle=lambda: f"""
     SELECT o_orderstatus,
            COUNT(*) AS n_orders,
            {fixed_point_sum_sql("o_totalprice")} AS revenue
@@ -2164,7 +2164,7 @@ def _lineitem_rowgroup_clustered(spark: SparkSession, sf_dir: str) -> str:
 
 @register(
     "scan_rowgroups_pruned",
-    oracle=f"""
+    oracle=lambda: f"""
     SELECT l_returnflag,
            COUNT(*) AS n_rows,
            {fixed_point_sum_sql("l_quantity")} AS sum_qty,
@@ -2565,7 +2565,7 @@ def q_mv_incremental_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "join_asof_nearest",
-    oracle=f"""
+    oracle=lambda: f"""
     WITH clicks AS (
       SELECT user_id, ts, event_id FROM events WHERE event_type = 'click'
     ),

@@ -6,7 +6,21 @@ We instead enable AQE so shuffle sizing is adaptive (the modern
 replacement for a hand-tuned partition count), pin the session
 timezone to UTC (so results are comparable against UTC-naive engines
 like DuckDB), lower the file open cost so an input of a few MB scans
-on every core, and enable Arrow for any pandas exchange.
+on every core, keep a session's generated code compiled, and enable
+Arrow for any pandas exchange.
+
+Spark compiles each generated class (whole-stage and expression code)
+with Janino and keeps 100 of them per JVM by default
+(``spark.sql.codegen.cache.maxEntries``). The registry's working set is
+larger: one pass of perfbench's 11-query ``driver_mix`` generates
+93-94 distinct classes, so at the default every later pass recompiled
+21-49 of them (76-124 ms of compile time a pass). ``get_session`` keeps
+1000, ten times that set, so a session that reruns a few dozen queries
+compiles nothing after their first run. The whole registry at sf0.001
+generates ~2,840 classes in one sweep; a sweep runs each query once,
+so holding all of them would buy nothing. It is a static conf: it
+holds only in a JVM that ``get_session`` starts, and a session built
+elsewhere keeps Spark's default.
 
 This is the only module that writes session conf. ``pin`` brings a
 session built elsewhere (the driver's plain one) to ``PINNED_CONF``;
@@ -79,6 +93,8 @@ def get_session(
         # Parquet tables of one small file still plan one split, and
         # at production file sizes the 128 MB split cap governs.
         "spark.sql.files.openCostInBytes": "1m",
+        # Keep a session's generated classes compiled (module docstring).
+        "spark.sql.codegen.cache.maxEntries": "1000",
         **PINNED_CONF,
         # Arrow for pandas_udf / toPandas / createDataFrame paths.
         "spark.sql.execution.arrow.pyspark.enabled": "true",

@@ -192,7 +192,7 @@ def brute_force_cosine_topk(
         ).alias("cosine"),
     )
     top = topk_per_group(
-        scored, ["query_id"], [F.col("cosine").desc(), F.col("neighbor_id")], k
+        scored, ["query_id"], "cosine DESC, neighbor_id", k
     )
     return top.select(
         "query_id", "neighbor_id", "cosine", F.col("rnk").cast("long").alias("rnk")
@@ -349,7 +349,7 @@ def ivf_cosine_topk(
         F.round(cosine_expr(F.col("emb"), F.col("cemb")), round_decimals).alias("cs"),
     )
     q = topk_per_group(
-        q_scored, ["vid"], [F.col("cs").desc(), F.col("cent_id")], nprobe
+        q_scored, ["vid"], "cs DESC, cent_id", nprobe
     ).select(
         F.col("vid").alias("query_id"),
         F.col("emb").alias("qemb"),
@@ -381,7 +381,7 @@ def ivf_cosine_topk(
         ).alias("cosine"),
     )
     top = topk_per_group(
-        cand, ["query_id"], [F.col("cosine").desc(), F.col("neighbor_id")], k
+        cand, ["query_id"], "cosine DESC, neighbor_id", k
     )
     return top.select(
         "query_id", "neighbor_id", "cosine", F.col("rnk").cast("long").alias("rnk")
@@ -1286,7 +1286,7 @@ def pq_adc_topk(
         .agg(F.sum("d_fp").alias("adc_fp"))
     )
     top = topk_per_group(
-        adc, ["query_id"], [F.col("adc_fp").asc(), F.col("neighbor_id")], k
+        adc, ["query_id"], "adc_fp, neighbor_id", k
     )
     return top.select(
         "query_id", "neighbor_id", "adc_fp", F.col("rnk").cast("long").alias("rnk")
@@ -1425,7 +1425,7 @@ def ivfpq_topk(
             F.round(cosine_expr(F.col("qemb"), F.col("cemb")), 6).alias("cs"),
         )
         q_cells = topk_per_group(
-            q_scored, ["query_id"], [F.col("cs").desc(), F.col("cent_id")], nprobe
+            q_scored, ["query_id"], "cs DESC, cent_id", nprobe
         ).select("query_id", F.col("cent_id").alias("cell"))
     cand = (
         F.broadcast(q_cells)
@@ -1484,7 +1484,7 @@ def ivfpq_topk(
         adc_fp.alias("adc_fp"),
     )
     top = topk_per_group(
-        adc, ["query_id"], [F.col("adc_fp").asc(), F.col("neighbor_id")], k
+        adc, ["query_id"], "adc_fp, neighbor_id", k
     )
     return top.select(
         "query_id", "neighbor_id", "adc_fp", F.col("rnk").cast("long").alias("rnk")
@@ -1544,7 +1544,7 @@ def ivfpq_rerank_topk(
         )
     )
     top = topk_per_group(
-        scored, ["query_id"], [F.col("cosine").desc(), F.col("neighbor_id")], k
+        scored, ["query_id"], "cosine DESC, neighbor_id", k
     )
     return top.select(
         "query_id", "neighbor_id", "cosine", F.col("rnk").cast("long").alias("rnk")
@@ -1670,7 +1670,7 @@ def ivfpq_residual_topk(
         .agg(F.sum("d_fp").alias("adc_fp"))
     )
     top = topk_per_group(
-        adc, ["query_id"], [F.col("adc_fp").asc(), F.col("neighbor_id")], k
+        adc, ["query_id"], "adc_fp, neighbor_id", k
     )
     return top.select(
         "query_id", "neighbor_id", "adc_fp", F.col("rnk").cast("long").alias("rnk")

@@ -31,6 +31,7 @@ from pyspark.sql import types as T
 from bigdatafinalproject_hockey_spark import sidecar
 from bigdatafinalproject_hockey_spark.catalog import _footer_paths, events_source
 from bigdatafinalproject_hockey_spark.functions.numeric import cents_expr
+from bigdatafinalproject_hockey_spark.operators.strings import quote_ident, sql_literal
 from bigdatafinalproject_hockey_spark.session import with_conf
 
 
@@ -604,19 +605,22 @@ def sessionize(
     works identically on batch and streaming inputs. One row per
     (user, session): bounds, event count, fixed-point value sum."""
     return (
-        events.groupBy(F.session_window("ts", gap), user_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(cents_expr(F.col("value"))).alias("value_cents"),
-            F.min("ts").alias("first_ts"),
-            F.max("ts").alias("last_ts"),
+        events.groupBy(
+            F.expr(f"session_window(ts, {sql_literal(gap)}) AS session_window"),
+            F.expr(quote_ident(user_col)),
         )
-        .select(
-            F.col(user_col),
+        .agg(
+            F.expr("count(1) AS n_events"),
+            F.expr("sum(CAST(round(value * 100, 0) AS BIGINT)) AS value_cents"),
+            F.expr("min(ts) AS first_ts"),
+            F.expr("max(ts) AS last_ts"),
+        )
+        .selectExpr(
+            quote_ident(user_col),
             "first_ts",
             "last_ts",
             "n_events",
-            (F.col("value_cents").cast("double") / 100.0).alias("sum_value"),
+            "CAST(value_cents AS DOUBLE) / 100.0D AS sum_value",
         )
     )
 

@@ -371,7 +371,7 @@ def test_substring_boilerplate_division_of_labor(spark):
     # segment 1 (tokens 20..39) is the identical boilerplate in all 7
     # docs -> corpus-wide first-occurrence keeps 1, removes 6 (the
     # same chunking/window shape as q_dedup_segments).
-    toks = tokens_expr(F.col("text"))
+    toks = tokens_expr("text")
     nseg = F.ceil(F.size(toks) / F.lit(20)).cast("int")
     idx = F.when(nseg > 0, F.sequence(F.lit(0), nseg - 1)).otherwise(
         F.array().cast("array<int>")

@@ -34,6 +34,8 @@ DRIVER_MIX = (
     "scan_csv_roundtrip",
     "scan_jsonl_roundtrip",
 )
+# Its curation calls.
+DRIVER_MIX_CURATION = ("pipeline_document_curation", "text_normalize_unicode")
 
 
 def _nanos_events(tmp_path) -> str:
@@ -75,6 +77,29 @@ def test_registry_calls_leave_caller_conf_alone(spark, tmp_path):
     for name, call in calls:
         call()
         assert spark.conf.getAll == before, (name, _conf_diff(before, spark.conf.getAll))
+
+
+def test_get_session_keeps_generated_code_compiled(spark):
+    """``get_session`` raises Spark's 100-class codegen cache; the
+    ``driver_mix`` working set (~94 classes) overflows the default."""
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1000"
+
+
+def test_driver_mix_second_round_compiles_nothing(spark):
+    """Rerunning the ``driver_mix`` calls in one session compiles no
+    generated class: every class of the first round is still cached."""
+    from bigdatafinalproject_hockey_spark.queries import QUERIES
+
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def run_round():
+        for name in (*DRIVER_MIX, *DRIVER_MIX_CURATION):
+            QUERIES[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
+
+    run_round()
+    before = compiles.getCount()
+    run_round()
+    assert compiles.getCount() == before
 
 
 def test_concurrent_callers_match_oracle(spark):
